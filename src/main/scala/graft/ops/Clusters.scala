@@ -1,6 +1,9 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -14,10 +17,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Beyond", SoCC'14): every iteration is two shuffles on DataFrames
   * (a groupBy-min and a self-join on the same key, so the exchange is
   * reused), the edge list only ever shrinks toward the star form
-  * (u → component-min), and convergence is O(log n) rounds — the
-  * driver loops over ROUNDS, never over edges. At 100 TB the per-round
-  * cost is a hash aggregate + hash join on the candidate-pair table,
-  * which LSH has already made sub-quadratic in the corpus.
+  * (u → component-min), and convergence is O(log n) rounds. At 100 TB
+  * the per-round cost is a hash aggregate + hash join on the
+  * candidate-pair table, which LSH has already made sub-quadratic in
+  * the corpus. Once the edge list fits a fixed driver budget, the
+  * driver finishes with union-find (see [[connectedComponents]]).
   */
 object Clusters {
 
@@ -48,6 +52,15 @@ object Clusters {
       .distinct()
   }
 
+  /** Edge-list size at or below which [[connectedComponents]] stops the
+    * star rounds and finishes on the driver. Same order as the engine's
+    * other driver-side limits (`EM.collectPatterns` and
+    * `Scoring.calibrationStats` cap their collects at 100,000 rows).
+    */
+  private[graft] val DriverFinishEdges: Long = 100000L
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Connected components over an undirected pair list. Input: any
     * DataFrame whose first two columns are the edge endpoints (ids of
     * one orderable, hash-joinable type). Returns the star edge list
@@ -55,33 +68,54 @@ object Clusters {
     * minima) and isolated nodes are absent; see [[resolveDuplicates]]
     * for the full labeling.
     *
-    * The driver loop runs until the edge set reaches a fixpoint
-    * (checked with `except` — an exact, not probabilistic, test) or
-    * `maxRounds`, whichever first. Each round is CHECKPOINTED, not
-    * merely persisted: a cached plan still nests every previous
-    * round's plan inside its task binary, so task (de)serialization
-    * grows exponentially with the round count — the job appears to
-    * hang by round ~10 even on toy graphs. `localCheckpoint` cuts the
-    * lineage to the materialized blocks (on a real cluster with
-    * executor churn, point `spark.sparkContext.setCheckpointDir` at
-    * durable storage and swap in `checkpoint(true)`).
+    * Every round checkpoints its edge list and counts it in the same
+    * job. Once that count is at or below [[DriverFinishEdges]] (100,000
+    * edges) the edges are collected ONCE and the driver finishes with
+    * union-find, returning the same star edge list the rounds reach at
+    * their fixpoint: each non-root node paired with its component
+    * minimum under Catalyst's ordering for the id type. Small graphs
+    * therefore run no star round at all, and large ones skip the long
+    * tail of small, late rounds; the job count no longer grows with the
+    * graph's diameter.
+    *
+    * Above the budget the distributed rounds run until the edge set
+    * reaches a fixpoint (checked with `except` — an exact, not
+    * probabilistic, test), the count drops to the budget, or
+    * `maxRounds` rounds have run, whichever first. `maxRounds` bounds
+    * these distributed rounds only: the driver finish always converges.
+    * Each round is CHECKPOINTED, not merely persisted: a cached plan
+    * still nests every previous round's plan inside its task binary, so
+    * task (de)serialization grows exponentially with the round count —
+    * the job appears to hang by round ~10 even on toy graphs.
+    * `localCheckpoint` cuts the lineage to the materialized blocks (on a
+    * real cluster with executor churn, point
+    * `spark.sparkContext.setCheckpointDir` at durable storage and swap
+    * in `checkpoint(true)`). The "did NOT converge" warning can fire
+    * only on this path: when `maxRounds` runs out with more edges left
+    * than the budget.
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 25): DataFrame = {
+      maxRounds: Int = 25): DataFrame =
+    connectedComponents(pairs, srcCol, dstCol, maxRounds, DriverFinishEdges)
+
+  /** [[connectedComponents]] with an explicit driver budget; a negative
+    * budget keeps every round distributed.
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, srcCol: String,
+      dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame = {
     // Materialization and the convergence count are ONE job per round
-    // (round-16; the count is taken from the checkpoint job itself via
-    // the bridge — round-15 had already dropped the re-count of the
-    // previous round, this drops the re-count of the current one). At
-    // model-scale edge sets the per-round cost IS scheduled-job
-    // overhead, so the loop is down to 1 job/round + the except test
-    // only on a count match.
+    // (the count is taken from the checkpoint job itself via the
+    // bridge). At model-scale edge sets the per-round cost IS
+    // scheduled-job overhead, so the loop is down to 1 job/round + the
+    // except test only on a count match, and the driver finish cuts
+    // the rounds themselves.
     var (edges, edgeCount, edgeRdd) = Bridge.localCheckpointWithCount(
       pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct())
     var round = 0
     var converged = false
-    while (!converged && round < maxRounds) {
+    while (!converged && edgeCount > driverBudget && round < maxRounds) {
       // NOTE: one star round per materialization is the measured
       // optimum — both star ops reference their input DataFrame
       // multiple times (or/mins), so fusing two lazy rounds recomputes
@@ -100,16 +134,57 @@ object Clusters {
       edgeRdd = nextRdd
       round += 1
     }
-    // An unconverged edge list is not star-form: a node may still carry
-    // multiple labels, which would FAN OUT a downstream left join into
-    // duplicate rows per id. Warn loudly (callers that need hard
-    // failure can raise maxRounds or check themselves); consumers in
-    // this package also aggregate min-per-id defensively.
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"connectedComponents did NOT converge within $maxRounds rounds; " +
+    if (edgeCount <= driverBudget) {
+      log.info(s"connectedComponents: driver finish over $edgeCount edges " +
+        s"after $round star rounds")
+      finishOnDriver(edges, edgeRdd)
+    } else {
+      // An unconverged edge list is not star-form: a node may still
+      // carry multiple labels, which would FAN OUT a downstream left
+      // join into duplicate rows per id. Warn loudly (callers that need
+      // hard failure can raise maxRounds or check themselves);
+      // consumers in this package also aggregate min-per-id
+      // defensively.
+      if (!converged)
+        log.warn(s"connectedComponents did NOT converge within $maxRounds rounds; " +
           "labels may be non-minimal and non-unique per node")
-    edges
+      edges
+    }
+  }
+
+  /** Union-find over the collected edge list. Ids are sorted once with
+    * Catalyst's ordering for their type, so index order IS value order:
+    * union keeps the smaller index as root, which makes every root its
+    * component's minimum, and ids are looked up by binary search, so
+    * every key compares by value (binary ids included, which a hash map
+    * would key by array identity). Output: the fixpoint star edge list,
+    * `(node, component minimum)` per non-root node, as a local frame
+    * with the schema of `edges`.
+    */
+  private def finishOnDriver(edges: DataFrame, edgeRdd: RDD[InternalRow]): DataFrame = {
+    val idType = edges.schema.head.dataType
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val rows = edgeRdd.collect()
+    edgeRdd.unpersist(blocking = false)
+    val ends = rows.flatMap(r => Array(r.get(0, idType), r.get(1, idType)))
+    val sorted = ends.sorted(ord)
+    val distinct = sorted.indices
+      .filter(i => i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0)
+      .map(sorted).toArray
+    val parent = Array.range(0, distinct.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    ends.grouped(2).foreach { case Array(a, b) =>
+      val ra = find(java.util.Arrays.binarySearch(distinct, a, ord))
+      val rb = find(java.util.Arrays.binarySearch(distinct, b, ord))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Bridge.localFrame(edges, distinct.indices.collect {
+      case i if find(i) != i => InternalRow(distinct(i), distinct(find(i)))
+    })
   }
 
   /** Full duplicate resolution: every id in `ids` labeled with its
@@ -119,15 +194,15 @@ object Clusters {
     */
   def resolveDuplicates(ids: DataFrame, idCol: String, pairs: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
-      maxRounds: Int = 25): DataFrame = {
-    // min-per-id aggregation is a no-op on a converged (star-form)
-    // edge list — one label per node — but guarantees the left join
-    // below cannot fan out duplicate id rows if maxRounds was
-    // exhausted first; the groupBy and the join hash-partition on the
-    // same key, so the extra exchange is reused.
-    val labels = connectedComponents(pairs, srcCol, dstCol, maxRounds)
-      .select(col("src").as(idCol), col("dst").as("__cid"))
-      .groupBy(idCol).agg(min("__cid").as("__cid"))
+      maxRounds: Int = 25): DataFrame =
+    resolveDuplicates(ids, idCol, pairs, srcCol, dstCol, maxRounds, DriverFinishEdges)
+
+  /** [[resolveDuplicates]] with an explicit driver budget (see
+    * [[connectedComponents]]).
+    */
+  private[graft] def resolveDuplicates(ids: DataFrame, idCol: String, pairs: DataFrame,
+      srcCol: String, dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame = {
+    val labels = componentLabels(pairs, idCol, srcCol, dstCol, maxRounds, driverBudget)
     ids.select(col(idCol))
       .join(labels, Seq(idCol), "left")
       .select(col(idCol),
@@ -151,9 +226,8 @@ object Clusters {
   def resolveDuplicatesBy(ids: DataFrame, idCol: String, quality: Column,
       pairs: DataFrame, srcCol: String = "id_a", dstCol: String = "id_b",
       maxRounds: Int = 25): DataFrame = {
-    val labels = connectedComponents(pairs, srcCol, dstCol, maxRounds)
-      .select(col("src").as(idCol), col("dst").as("__cid"))
-      .groupBy(idCol).agg(min("__cid").as("__cid"))
+    val labels = componentLabels(pairs, idCol, srcCol, dstCol, maxRounds,
+      DriverFinishEdges)
     val labeled = ids
       .join(labels, Seq(idCol), "left")
       .select(col(idCol),
@@ -172,6 +246,19 @@ object Clusters {
       .select(col(idCol), col("cluster_id"),
         (col(idCol) === col("__keep_id")).as("keep"))
   }
+
+  /** `(idCol, __cid)`: one component label per non-root node. The
+    * min-per-id aggregation is a no-op on a converged (star-form) edge
+    * list — one label per node — but guarantees a join on these labels
+    * cannot fan out duplicate id rows if maxRounds was exhausted first;
+    * the groupBy and the join hash-partition on the same key, so the
+    * extra exchange is reused.
+    */
+  private def componentLabels(pairs: DataFrame, idCol: String, srcCol: String,
+      dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame =
+    connectedComponents(pairs, srcCol, dstCol, maxRounds, driverBudget)
+      .select(col("src").as(idCol), col("dst").as("__cid"))
+      .groupBy(idCol).agg(min("__cid").as("__cid"))
 
   /** RAND INDEX between two clusterings of the same ids — the
     * agreement metric for validating one dedup pass against another

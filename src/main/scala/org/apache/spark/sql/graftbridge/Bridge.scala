@@ -4,6 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -45,5 +47,15 @@ object Bridge {
     val out = CDataset.ofRows(cds.sparkSession,
       LogicalRDD.fromDataset(rdd, cds, isStreaming = false))
     (out, n, rdd)
+  }
+
+  /** A frame over driver-held rows in Catalyst's internal form (a
+    * `LocalRelation`), with the schema of `like`. For loops that finish
+    * model-sized state on the driver and hand it back to the plan.
+    */
+  def localFrame(like: DataFrame, rows: Seq[InternalRow]): DataFrame = {
+    val cds = like.asInstanceOf[CDataset[Row]]
+    CDataset.ofRows(cds.sparkSession,
+      LocalRelation(DataTypeUtils.toAttributes(like.schema), rows))
   }
 }

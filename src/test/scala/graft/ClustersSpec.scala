@@ -40,12 +40,78 @@ class ClustersSpec extends SparkSpec {
 
   test("resolveDuplicates: unconverged labels still yield ONE row per id") {
     val ids = Seq(1L, 2L, 3L).toDF("doc_id")
-    // maxRounds = 0 leaves the raw (multi-label) edge list: node 1
-    // carries labels 2 AND 3. The defensive min-per-id aggregate must
-    // keep the join from fanning out duplicate id rows.
+    // maxRounds = 0 on the star-round path (driver budget -1, so the
+    // driver finish cannot converge it) leaves the raw (multi-label)
+    // edge list: node 1 carries labels 2 AND 3. The defensive
+    // min-per-id aggregate must keep the join from fanning out
+    // duplicate id rows.
     val pairs = Seq((1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
-    val got = Clusters.resolveDuplicates(ids, "doc_id", pairs, maxRounds = 0).collect()
+    val got = Clusters.resolveDuplicates(ids, "doc_id", pairs, "id_a", "id_b",
+      maxRounds = 0, driverBudget = -1L).collect()
     assert(got.map(_.getAs[Long]("doc_id")).toSeq.sorted == Seq(1L, 2L, 3L))
+  }
+
+  /** The star edge list as a set of `(src, dst)`, binary ids as byte
+    * sequences so they compare by value. Budget -1 keeps every round
+    * distributed; `Long.MaxValue` finishes on the driver before any
+    * star round.
+    */
+  private def starEdges(pairs: org.apache.spark.sql.DataFrame,
+      driverBudget: Long): Set[(Any, Any)] = {
+    def value(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    Clusters.connectedComponents(pairs, pairs.columns(0), pairs.columns(1),
+        maxRounds = 200, driverBudget = driverBudget)
+      .collect().map(r => (value(r.get(0)), value(r.get(1)))).toSet
+  }
+
+  test("connectedComponents: driver finish equals the star-round fixpoint") {
+    val random = for (seed <- Seq(1, 2, 3)) yield {
+      val rnd = new scala.util.Random(seed)
+      // 150 ids, 120 edges: many small components, self-loops and
+      // duplicate/reversed edges occur by chance
+      Seq.fill(120)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+    }
+    // a path of length 80 given large-id-first, which needs many rounds
+    val path = (1L to 80L).map(i => (i + 1, i))
+    // duplicate and reversed edges plus self-loops, explicitly
+    val messy = Seq((5L, 5L), (1L, 2L), (2L, 1L), (1L, 2L), (3L, 4L), (4L, 3L),
+      (4L, 4L), (9L, 3L), (7L, 7L))
+    for ((g, i) <- (random :+ path :+ messy).zipWithIndex) {
+      val longs = g.toDF("a", "b")
+      // unpadded strings: "n10" < "n9", so the component minimum must
+      // follow string order, not numeric order
+      val strings = g.map { case (a, b) => (s"n$a", s"n$b") }.toDF("a", "b")
+      for ((df, kind) <- Seq(longs -> "Long", strings -> "String")) {
+        val rounds = starEdges(df, driverBudget = -1L)
+        val driver = starEdges(df, driverBudget = Long.MaxValue)
+        assert(rounds.nonEmpty, s"graph $i ($kind): no edges")
+        assert(driver == rounds, s"graph $i ($kind): driver finish diverged")
+        // star form: one label per non-root node
+        assert(driver.map(_._1).size == driver.size, s"graph $i ($kind): not a star")
+      }
+    }
+    // binary ids compare by value on the driver, not by array identity
+    val bytes = (path ++ messy).map { case (a, b) =>
+      (BigInt(a).toByteArray, BigInt(b).toByteArray) }.toDF("a", "b")
+    assert(starEdges(bytes, Long.MaxValue) == starEdges(bytes, -1L))
+  }
+
+  test("gridCluster: job count does not grow with the graph's diameter") {
+    import org.apache.spark.sql.functions.col
+    // a row of n core cells (4 points each) along x: a path graph of
+    // diameter n - 1 under 8-neighborhood adjacency
+    def chain(n: Int) = (0 until n).flatMap { c =>
+      Seq.fill(4)(((c * 50000 + 25000) / 1e6 - 1.0, 0.025)) }.toDF("x", "y")
+    def jobs(n: Int): Int = countJobs {
+      val got = Clusters.gridCluster(chain(n), col("x"), col("y"),
+        cellMicro = 50000L, minPts = 4L).collect()
+      assert(got.length == n && got.map(_.getLong(3)).distinct.length == 1)
+    }._1
+    jobs(3) // warm-up
+    assert(jobs(3) == jobs(40))
   }
 
   test("connectedComponents: empty pair list → all singletons") {
@@ -220,6 +286,32 @@ class ClustersSpec extends SparkSpec {
     assert(count(rand.toDF("u", "v")) == brute && brute > 0)
   }
 
+  /** Spark jobs started while `body` runs, with their short call sites. */
+  private def countJobs(body: => Unit): (Int, Seq[String]) = {
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet()
+        sites.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener delivery is async: poll until the count is stable
+      var (prev, stable) = (-1, 0)
+      while (stable < 3) {
+        Thread.sleep(100)
+        val cur = counter.get()
+        if (cur == prev) stable += 1 else { prev = cur; stable = 0 }
+      }
+      import scala.jdk.CollectionConverters._
+      (counter.get(), sites.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("pageRank rounds: single action per round, no per-round driver sync") {
     // Round-structure regression for the round-5 verdict finding: a
     // separate danglingMass `.head` per round both blocked the driver
@@ -230,30 +322,8 @@ class ClustersSpec extends SparkSpec {
     // `head`/`collect` callsite from Graphs, and the per-round job
     // count must stay bounded by the round's fixed stage structure.
     val edges = (1L to 200L).map(i => (i % 20, i % 13)).toDF("src", "dst")
-    def run(iters: Int): (Int, Seq[String]) = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet()
-          sites.add(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        graft.ops.Graphs.pageRankExact(edges, iterations = iters).count()
-        // listener delivery is async: poll until the count is stable
-        var (prev, stable) = (-1, 0)
-        while (stable < 3) {
-          Thread.sleep(100)
-          val cur = counter.get()
-          if (cur == prev) stable += 1 else { prev = cur; stable = 0 }
-        }
-        import scala.jdk.CollectionConverters._
-        (counter.get(), sites.asScala.toSeq)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def run(iters: Int): (Int, Seq[String]) =
+      countJobs(graft.ops.Graphs.pageRankExact(edges, iterations = iters).count())
     val (jobs2, sites2) = run(2)
     val (jobs4, sites4) = run(4)
     val badSites = (sites2 ++ sites4).filter(s =>
