@@ -44,7 +44,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // Per-SCALE persistence: a full run at a non-default scale dir
     // (the sf1 ladder fixture) must not clobber the sf0.1 trend
@@ -55,44 +54,12 @@ object Bench {
     val persistPath =
       if (sfDir == "/root/testdata/sf0.1") "docs/BENCH_full_latest.json"
       else s"docs/BENCH_full_latest_${sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_", "")}.json"
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // Round-15 SPILL_PROBE finding (docs/SPILL_PROBE_r15.json): at
-        // the 0.5B-pair rung the planner's sort-merge fallback SORTS
-        // the pair stream — the measured spill crossover (59 GB memory
-        // spilled, throughput halved). Preferring shuffled hash join
-        // when its size conditions hold (the optimization guide's
-        // baseline posture) removed the sort and, with partitions
-        // sized to the data, ran 11.8M pairs/s with zero spill.
-        // Broadcast still wins where it applies; this is scale-neutral
-        // (strategy only changes where SHJ's safety conditions hold).
-        // SPARK_GRAFT_PREFER_SMJ=1 restores the Spark default.
-        .config("spark.sql.join.preferSortMergeJoin",
-          sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // Shuffle spill on this VM's virtio disk is burst-throttled;
-        // tmpfs keeps shuffle-heavy queries off the device entirely.
-        .config("spark.local.dir", "/dev/shm/graft-spark")
-        .config("spark.ui.enabled", "false")
-        // The round-4 bench died mid-run with executor exit 56
-        // (HEARTBEAT_FAILURE): on this shared VM a driver GC pause can
-        // starve the in-process heartbeat RPC long enough to trip the
-        // default 10s interval. Wider spacing + a long network timeout
-        // keep a stalled-but-alive JVM from shooting itself.
-        .config("spark.executor.heartbeatInterval", "60s")
-        .config("spark.network.timeout", "600s")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = build()
+    var spark = GraftSession.build("graft-bench")
     // Self-heal: if something stopped the context (e.g. a test-path
     // stop() or an executor self-exit that didn't kill the JVM),
     // rebuild instead of failing every remaining query.
     def sess(): SparkSession = {
-      if (spark.sparkContext.isStopped) spark = build()
+      if (spark.sparkContext.isStopped) spark = GraftSession.build("graft-bench")
       spark
     }
 

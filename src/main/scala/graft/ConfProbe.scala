@@ -1,31 +1,36 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
-/** Same-JVM interleaved A/B of RUNTIME SQL confs over a query list —
-  * the [[SpillProbe]] weather-cancelling design generalized (round-16,
-  * VERDICT item 6): per pass, each query runs once under every
-  * variant, variant order alternating per pass, so co-tenant load hits
-  * both sides of every ratio equally. Job counts ride along because
-  * the hypothesis under test for the model-scale graph loops is that
-  * per-job/stage AQE re-planning overhead — not dataflow — dominates
-  * at sf0.1.
+/** Same-JVM interleaved A/B of RUNTIME SQL confs over a query list
+  * (round-16, VERDICT item 6): per pass, each query runs once under
+  * every variant, variant order alternating per pass, so co-tenant
+  * load hits both sides of every ratio equally. Each run also reports
+  * its jobs, spill and shuffle bytes from the shared
+  * [[graft.util.StageLog]], so a winning variant is attributed to the
+  * work it removed, not just to a wall-clock delta.
   *
   * Usage:
   *   runMain graft.ConfProbe q_a,q_b [sfDir] [passes=3] [variants]
   * where variants is `name:k=v(,k=v)*(;name:…)*`, default
-  * `base:;noaqe:spark.sql.adaptive.enabled=false`.
-  * Prints one JSON line per (query, variant) with medians + the
-  * per-query ratio table.
+  * `base:;noaqe:spark.sql.adaptive.enabled=false`. Each variant's confs
+  * are set on the [[GraftSession]] session with `spark.conf.set`, and
+  * every key any variant touches is restored before the next run.
+  * Prints one JSON line per (query, variant, pass) and a summary line
+  * with medians and per-query ratios to the first variant.
+  *
+  * The q_pattern_counts spill crossover (docs/SPILL_PROBE_r15*.json:
+  * per-pair throughput halves between 8 and 16 customer replicas) is
+  * re-measured on the replica fixture with the variant string below —
+  * sort-merge join vs the session's shuffled-hash posture, more
+  * shuffle partitions (smaller per-task sort runs), and a 16m AQE
+  * advisory partition size (smaller coalesced partitions):
+  * {{{
+  *   sbt "runMain graft.FixtureBuild pairs 16"
+  *   sbt "runMain graft.ConfProbe q_pattern_counts /tmp/graft_scale_pairs_r16 3 \"base:;smj:spark.sql.join.preferSortMergeJoin=true;p128:spark.sql.shuffle.partitions=128;adv16m:spark.sql.adaptive.advisoryPartitionSizeInBytes=16m;p128adv16m:spark.sql.shuffle.partitions=128,spark.sql.adaptive.advisoryPartitionSizeInBytes=16m\""
+  * }}}
+  * The variant string is double-quoted inside the sbt command, which
+  * sbt would otherwise split at each `;`.
   */
 object ConfProbe {
-
-  private class JobCount extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    def reset(): Int = jobs.getAndSet(0)
-  }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -43,21 +48,9 @@ object ConfProbe {
     // before each run so variants don't leak into each other
     val touched = variants.flatMap(_._2.keys).distinct
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jc = new JobCount
-    spark.sparkContext.addSparkListener(jc)
+    val spark = GraftSession.build("graft-conf-probe")
+    val log = new graft.util.StageLog
+    spark.sparkContext.addSparkListener(log)
     val defaults = touched.map(k => k -> spark.conf.getOption(k)).toMap
 
     val times = scala.collection.mutable.Map[(String, String), List[Double]]()
@@ -74,14 +67,15 @@ object ConfProbe {
         })
         conf.foreach { case (k, v) => spark.conf.set(k, v) }
         names.foreach { n =>
-          jc.reset()
+          log.drain()
           val t0 = System.nanoTime()
           val rows = SparkEntry.queries(n)(spark, sfDir).count()
           val sec = (System.nanoTime() - t0) / 1e9
-          val j = jc.reset()
+          val (stages, j) = log.drain()
           times((n, vn)) = sec :: times((n, vn))
           jobs((n, vn)) = j
-          println(f"""{"metric":"conf_probe_run","q":"$n","variant":"$vn","pass":$pass,"sec":$sec%.3f,"jobs":$j,"rows":$rows}""")
+          def mb(f: log.Stage => Long) = stages.map(f).sum >> 20
+          println(f"""{"metric":"conf_probe_run","q":"$n","variant":"$vn","pass":$pass,"sec":$sec%.3f,"jobs":$j,"rows":$rows,"spill_disk_mb":${mb(_.diskSpill)},"spill_mem_mb":${mb(_.memSpill)},"shuffle_read_mb":${mb(_.shuffleRead)},"shuffle_write_mb":${mb(_.shuffleWrite)}}""")
         }
       }
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus curation demo — the pipeline a user of
@@ -29,20 +28,13 @@ import org.apache.spark.sql.functions._
   * times. Every stage is a lazy DataFrame plan — the funnel counts
   * are the only actions.
   *
-  * Usage: `sbt "runMain graft.CorpusDemo [sfDir]"` (SPARK_GRAFT_CPUS
-  * sizes the session; artifact: docs/CORPUS_E2E_r06.md).
+  * Usage: `sbt "runMain graft.CorpusDemo [sfDir]"` (artifact:
+  * docs/CORPUS_E2E_r06.md).
   */
 object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-corpus-demo")
 
     // 0. Unicode canonicalization FIRST: every downstream digest,
     //    shingle, and comparator is byte-level, so composed/decomposed

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: run one named query from [[SparkEntry.queries]],
   * print its formatted physical plan and wall time.
   *
@@ -11,29 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_NO_BROADCAST=1 forces the shuffled join path —
-      // for inspecting the plan shape LARGE sides would take (small
-      // local tables otherwise broadcast, hiding bucketing/skew
-      // behavior).
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")) "-1" else "10485760")
-      // Mirror the engine's bench/oracle join posture (round-15
-      // SPILL_PROBE finding; see Bench.scala) so measured plans are
-      // the plans the bench actually runs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Shuffle spill on this VM's virtio disk is burst-throttled;
-      // tmpfs keeps shuffle-heavy queries off the device entirely.
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-explain")
     // comma-separated names: run sequentially in ONE session (to
     // reproduce cross-query interactions); plan printed for the last.
     val names = name.split(",").toSeq

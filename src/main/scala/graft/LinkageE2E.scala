@@ -34,8 +34,9 @@ import graft.linkage._
   * Blocking: two passes (name prefix; nation × balance band), key
   * cardinality scaled with `repl` — see the rules comment in [[main]].
   * Run: `sbt "runMain graft.LinkageE2E"` (SPARK_GRAFT_CPUS to size;
-  * SPARK_GRAFT_LOCAL_DIR to put shuffle/checkpoint scratch on real
-  * disk for the NCVR shape).
+  * Spark's SPARK_LOCAL_DIRS to put shuffle/checkpoint scratch on real
+  * disk for the NCVR shape, where RAM-backed /dev/shm would compete
+  * with the heap).
   */
 object LinkageE2E {
 
@@ -120,22 +121,7 @@ object LinkageE2E {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // /dev/shm is RAM-backed — right for the 150k shape's shuffle,
-      // wrong for NCVR scale where checkpoint+shuffle bytes would
-      // compete with the heap for the same physical RAM; big runs
-      // override to real disk.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-linkage-e2e")
     val tTotal0 = System.nanoTime()
 
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -197,7 +183,7 @@ object LinkageE2E {
     val salts = Blocking.recommendSalts(
       a, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
       b, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
-      targetParallelism = cpus.toInt)
+      targetParallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt)
     println(s"recommended hotKeySalts for pass 2: $salts")
     val (ids, tBlock) = timed("blocking") {
       Blocking.extractBlocks(a, b, "rec_id", "rec_id", rules,

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stdin-driven single-query timer — one half of the PAIRED bench
   * (tools/paired_bench.py, round-14 VERDICT item 1). Co-tenant VM
   * noise has repeatedly made round-over-round bench totals
@@ -23,20 +21,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PairedRunner {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Mirrors Bench's engine posture (round-15 SPILL_PROBE — see
-      // Bench.scala) so paired deltas attribute CODE, not conf drift.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-paired-runner")
     spark.sparkContext.setLogLevel("ERROR")
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
     var line = in.readLine()

@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Per-query profiler (round-15 optimization instrument, guide §1):
-  * run named queries from [[SparkEntry.queries]] with a stage-level
-  * listener and print, per run, the wall time plus every completed
+  * run named queries from [[SparkEntry.queries]] with the shared
+  * [[graft.util.StageLog]] listener and print, per run, the wall time plus every completed
   * stage's task count, wall, shuffle read/write and spill bytes — the
   * Spark-UI stage table as one JSON line per query, since the UI is
   * disabled on this box. Also counts JOBS per query run: a query that
@@ -18,56 +15,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Profile {
 
-  private class StageLog extends SparkListener {
-    case class Row(id: Int, tasks: Int, ms: Long, spillDisk: Long, spillMem: Long,
-        shuffleRead: Long, shuffleWrite: Long, input: Long, records: Long)
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val info = sc.stageInfo
-      val ms = (for {s <- info.submissionTime; c <- info.completionTime} yield c - s)
-        .getOrElse(0L)
-      val tm = info.taskMetrics
-      rows.add(Row(info.stageId, info.numTasks, ms, tm.diskBytesSpilled,
-        tm.memoryBytesSpilled,
-        tm.shuffleReadMetrics.totalBytesRead, tm.shuffleWriteMetrics.bytesWritten,
-        tm.inputMetrics.bytesRead, tm.outputMetrics.recordsWritten))
-    }
-    def drain(): (Seq[Row], Int) = {
-      Thread.sleep(500)
-      val out = scala.collection.mutable.ArrayBuffer[Row]()
-      var r = rows.poll()
-      while (r != null) { out += r; r = rows.poll() }
-      (out.toSeq, jobs.getAndSet(0))
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS: probe the deployment guidance
-      // (size partitions so a task's working set fits — the
-      // SPILL_PROBE_r15 remedy) without oversubscribing local threads.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      // Mirror the engine's bench/oracle join posture (round-15
-      // SPILL_PROBE finding; see Bench.scala) so measured plans are
-      // the plans the bench actually runs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val log = new StageLog
+    val spark = GraftSession.build("graft-profile")
+    val log = new graft.util.StageLog
     spark.sparkContext.addSparkListener(log)
     names.foreach { n =>
       (1 to runs).foreach { r =>
@@ -77,9 +30,9 @@ object Profile {
         val sec = (System.nanoTime() - t0) / 1e9
         val (stages, jobs) = log.drain()
         if (r == runs) {
-          val stageJson = stages.sortBy(_.id).filter(s => s.ms >= 100)
+          val stageJson = stages.sortBy(_.id).filter(s => s.wallMs >= 100)
             .map { s =>
-              f"""{"id":${s.id},"tasks":${s.tasks},"sec":${s.ms / 1000.0}%.2f,"in_mb":${s.input >> 20},"shR_mb":${s.shuffleRead >> 20},"shW_mb":${s.shuffleWrite >> 20},"spill_mb":${s.spillDisk >> 20},"spill_mem_mb":${s.spillMem >> 20}}"""
+              f"""{"id":${s.id},"tasks":${s.tasks},"sec":${s.wallMs / 1000.0}%.2f,"in_mb":${s.input >> 20},"shR_mb":${s.shuffleRead >> 20},"shW_mb":${s.shuffleWrite >> 20},"spill_mb":${s.diskSpill >> 20},"spill_mem_mb":${s.memSpill >> 20}}"""
             }.mkString("[", ",", "]")
           println(f"""{"q":"$n","run":$r,"sec":$sec%.2f,"rows":$cnt,"jobs":$jobs,"n_stages":${stages.size},"stages_over_100ms":$stageJson}""")
         } else

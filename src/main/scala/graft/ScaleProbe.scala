@@ -393,18 +393,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      // Same self-exit guard as Bench/Verify (round-4 exit 56): the
-      // probe is the shuffle-heaviest entry point of the three.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-scale-probe")
     buildFixture(spark)
     // Fixture-only mode: (re)build the scale dir for the bench/oracle
     // ladder without the ~30 min probe pass.

@@ -45,8 +45,10 @@ object Sf10Probe {
   private val BaseDir = "/root/testdata/sf0.1"
   private val DedupDir = "/tmp/graft_scale_sf10_docs"
   private val DedupReplicas = 100
-  private val PairsDir = "/tmp/graft_scale_pairs2b"
   private val PairsReplicas = 32
+  private val PairsDir = pairsDir(PairsReplicas)
+
+  private def pairsDir(replicas: Int): String = s"/tmp/graft_scale_pairs_r$replicas"
 
   private val DedupQueries = Seq(
     "q_jaccard_prefix", "q_minhash_lsh", "q_winnow", "q_novelty")
@@ -78,40 +80,37 @@ object Sf10Probe {
         .write.mode("overwrite").parquet(s"$DedupDir/documents.parquet")
       dedupDone.createNewFile()
     }
-    val pairsDone = new java.io.File(s"$PairsDir/_DONE_v1")
-    if (!pairsDone.exists) {
-      // key-offset-free replicas: blocking keys keep FIXED cardinality
-      // (the quadratic contract), only the id moves.
+    buildPairs(spark, PairsReplicas)
+  }
+
+  /** `replicas` copies of the sf0.1 customer table: key-offset-free
+    * replicas, so blocking keys keep FIXED cardinality (the quadratic
+    * contract) and only the id moves — candidate pairs grow as
+    * replicas² × the sf0.1 count (about 2.02M). Also built alone by
+    * `FixtureBuild pairs <replicas>` for a [[ConfProbe]] run of
+    * q_pattern_counts at that rung. Returns the fixture dir.
+    */
+  private[graft] def buildPairs(spark: SparkSession, replicas: Int): String = {
+    val dir = pairsDir(replicas)
+    val done = new java.io.File(s"$dir/_DONE_v1")
+    if (!done.exists) {
       val customer = spark.read.parquet(s"$BaseDir/customer.parquet")
       val maxCustKey = customer.agg(max("c_custkey")).head.getAs[Number](0).longValue
       require(maxCustKey < 15000L,
         s"sf0.1 customer max c_custkey $maxCustKey >= replica stride 15000 — regenerated fixture needs a larger stride")
       customer
-        .withColumn("__r", explode(sequence(lit(0), lit(PairsReplicas - 1))))
+        .withColumn("__r", explode(sequence(lit(0), lit(replicas - 1))))
         .withColumn("c_custkey", col("c_custkey") + col("__r") * 15000L)
         .drop("__r")
         .repartition(32)
-        .write.mode("overwrite").parquet(s"$PairsDir/customer.parquet")
-      pairsDone.createNewFile()
+        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      done.createNewFile()
     }
+    dir
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // Mirror the engine's bench/oracle join posture (round-15
-      // SPILL_PROBE finding; see Bench.scala) so measured plans are
-      // the plans the bench actually runs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-sf10-probe")
     buildFixtures(spark)
     val log = new graft.util.StageLog
     spark.sparkContext.addSparkListener(log)
@@ -129,7 +128,7 @@ object Sf10Probe {
         // violations channel that drives the exit code.
         if (err.nonEmpty) violations += s"$name failed: $err"
         val sec = (System.nanoTime() - t0) / 1e9
-        val stages = log.drain()
+        val (stages, _) = log.drain()
         log.singleTaskViolations(stages).foreach { s =>
           violations += s"$name stage ${s.id} single-task ${s.runMs / 1000}s"
         }

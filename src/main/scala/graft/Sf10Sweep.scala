@@ -158,21 +158,7 @@ object Sf10Sweep {
       .filter { case (n, _) => SparkEntry.queries.contains(n) }
     val picked = ranked.filterNot(r => Excluded.contains(r._1)).take(topN)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // Mirror the engine's bench/oracle join posture (round-15
-      // SPILL_PROBE finding; see Bench.scala) so measured plans are
-      // the plans the bench actually runs.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-sf10-sweep")
     buildFixture(spark)
     val log = new graft.util.StageLog
     spark.sparkContext.addSparkListener(log)
@@ -186,7 +172,7 @@ object Sf10Sweep {
         catch { case e: Throwable => (-1L, e.getClass.getSimpleName) }
       val sec = (System.nanoTime() - t0) / 1e9
       if (err.nonEmpty) violations += s"$name failed: $err"
-      val stages = log.drain()
+      val (stages, _) = log.drain()
       log.singleTaskViolations(stages).foreach { s =>
         violations += s"$name stage ${s.id} single-task ${s.runMs / 1000}s"
       }

@@ -3337,8 +3337,9 @@ object SparkEntry {
     */
   private def qMinhashRecall(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    // Each pipeline re-derives the shingle sets from the scan. ShareProbe
-    // re-measured the tradeoff at sf1 (r12, the verdict's watch item):
+    // Each pipeline re-derives the shingle sets from the scan. The
+    // tradeoff was re-measured at sf1 (r12, the verdict's watch item;
+    // docs/ROUND12_NOTES.md):
     // rederive 12.0 s vs checkpoint-shared 11.4 s vs cache-shared 19.4 s
     // (sf0.1 same day: 6.6 / 5.8 / 7.4; r11 calm: 5.6 / 6.4 / 13.4) —
     // rederive and localCheckpoint are within run-to-run noise of each

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,30 +8,7 @@ object Verify {
     // Optional third arg: comma-separated query names — builder-side
     // fast iteration on a subset (the driver always passes two args).
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Mirrors Bench's engine posture (round-15 SPILL_PROBE — see
-      // Bench.scala): the oracle gate certifies results under the SAME
-      // join strategies the bench runs with.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
-      // events.parquet carries timestamp[ns]; Spark 4 rejects NANOS
-      // unless read as long (queries convert explicitly when needed).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Shuffle spill on this VM's virtio disk is burst-throttled;
-      // tmpfs keeps shuffle-heavy queries off the device entirely.
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same self-exit guard as Bench: wide heartbeat spacing so a
-      // driver GC pause can't trip the in-process executor's
-      // heartbeat-failure suicide (exit 56, lost round 4's bench).
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // coalesce(1) keeps driver-side dumps tidy, but at the sf1 ladder a
     // 202M-row pair table through ONE write task is the bottleneck —

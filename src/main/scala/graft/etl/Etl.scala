@@ -34,16 +34,6 @@ object Etl {
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Register as a temp view (reference: `create table ... as select`,
-    * scratch.R:155-156 — a view, not a copy: at 100 TB you re-scan
-    * parquet, you don't duplicate it).
-    */
-  def registerTable(spark: SparkSession, path: String, name: String): DataFrame = {
-    val df = readPartitioned(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
   /** DYNAMIC partition overwrite: replaces ONLY the hive partitions
     * present in `df`, leaving every other partition untouched — the
     * idempotent re-run primitive of a partitioned 100 TB pipeline

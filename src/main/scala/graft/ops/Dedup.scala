@@ -664,9 +664,6 @@ object Dedup {
   def minhashMix(h: Column, i: Int): Column =
     pmod(h * lit(2 * i + 1001L) + lit(i * 9176L + 17L), lit(MhP))
 
-  def minhashMixSql(hExpr: String, i: Int): String =
-    s"(($hExpr) * ${2 * i + 1001L} + ${i * 9176L + 17L}) % $MhP"
-
   /** MinHash signature columns over a PRE-HASHED shingle array
     * (array<long> of [[shingleBaseHash]] values — materialize it once
     * so the MD5 pass isn't repeated per permutation):
@@ -676,17 +673,6 @@ object Dedup {
     (0 until k).map { i =>
       s"sig_$i" -> array_min(transform(hashCol, h => minhashMix(h, i)))
     }
-
-  /** LSH band digests over a minhash signature: band_j = md5 of the
-    * r signatures in band j joined with '|'.
-    */
-  def lshBands(sigCols: Seq[String], bands: Int): Seq[(String, Column)] = {
-    require(sigCols.size % bands == 0, "k must be divisible by bands")
-    val r = sigCols.size / bands
-    (0 until bands).map { j =>
-      s"band_$j" -> md5(concat_ws("|", sigCols.slice(j * r, j * r + r).map(col): _*))
-    }
-  }
 
   /** MinHash-LSH candidate pairs from a prepared (id, sh) shingle-set
     * table (see [[shingleSets]]). Output (id_a, id_b) distinct,

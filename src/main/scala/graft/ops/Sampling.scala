@@ -38,10 +38,6 @@ object Sampling {
   def hashBucketPpm(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 15), 16, 10).cast("long") % 1000000L
 
-  /** DuckDB mirror of [[hashBucketPpm]]. */
-  def hashBucketPpmSql(keyExpr: String): String =
-    s"CAST(('0x' || substr(md5(CAST($keyExpr AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000"
-
   /** Class-balanced downsampling — thin every class to (about) the
     * size of the RAREST class, the standard rebalance before training
     * a classifier on skewed labels. Deliberately NOT an exact
@@ -364,21 +360,6 @@ object Sampling {
           16, 10).cast("long").as("w"),
         s.cast("long").as("s")))).getField("s")
   }
-
-  /** DuckDB mirror of [[rendezvousShard]]: `arg_max` over the unnested
-    * shard range (md5 weights are distinct in practice, so the argmax
-    * is unique and tie order never fires). Emits a correlated-ready
-    * scalar expression pattern — use as
-    * `SELECT key, (SELECT arg_max(...) ...)`, or the unnest+group
-    * form this helper returns for a whole-relation assignment over a
-    * CTE `k(key)`.
-    */
-  def rendezvousShardSql(nShards: Int): String =
-    s"""SELECT key,
-       |  arg_max(s, CAST(('0x' || substr(md5(CAST(key AS VARCHAR) || ':' ||
-       |    CAST(s AS VARCHAR)), 1, 15)) AS BIGINT)) AS shard
-       |FROM k, UNNEST(range(0, $nShards)) AS u(s)
-       |GROUP BY key""".stripMargin
 
   /** DuckDB mirror of [[apportionTokens]] over a CTE `tok(source,
     * tokens)`: HUGEINT carries the product exactly; `//`/`%` are the

@@ -1,31 +1,37 @@
 package graft.util
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Shared per-stage evidence listener for the scale probes
-  * ([[graft.Sf10Probe]], [[graft.Sf10Sweep]]) — one implementation of
-  * the stage log, the single-task-violation rule and the top-stage
-  * selection, so a metric fix lands in every probe at once (the
-  * round-15 wall-vs-run fix had to be applied twice; round-15 ADVICE).
+/** The one per-stage evidence listener of the engine's mains
+  * ([[graft.Profile]], [[graft.ConfProbe]], [[graft.Sf10Probe]],
+  * [[graft.Sf10Sweep]]) — one implementation of the stage log, the job
+  * counter, the single-task-violation rule and the top-stage selection,
+  * so a metric fix lands in every probe at once.
   *
   * Metrics per completed stage: task count, WALL ms (submission →
   * completion — for a 1-task stage queued behind a saturated executor
   * this is mostly FIFO wait), executor RUN ms (what the tasks actually
-  * executed — the quantity the scale contracts are about), and
-  * memory/disk spill bytes (the SPILL_PROBE_r15 working-set-envelope
-  * evidence: a stage whose tasks exceed the per-task working-set
-  * budget shows up here, not in wall time, long before it falls over).
+  * executed — the quantity the scale contracts are about), memory/disk
+  * spill bytes (the SPILL_PROBE_r15 working-set-envelope evidence: a
+  * stage whose tasks exceed the per-task working-set budget shows up
+  * here, not in wall time, long before it falls over), shuffle
+  * read/write bytes and input bytes. Jobs are counted as they start: a
+  * query that fires many actions at construction (eager
+  * localCheckpoint rounds) shows its fixed per-action overhead there.
   */
 class StageLog extends SparkListener {
 
-  /** (stageId, numTasks, wallMs, runMs, memSpillBytes, diskSpillBytes) */
   final case class Stage(id: Int, tasks: Int, wallMs: Long, runMs: Long,
-      memSpill: Long, diskSpill: Long) {
+      memSpill: Long, diskSpill: Long,
+      shuffleRead: Long, shuffleWrite: Long, input: Long) {
     def json: String =
       s"""{"id":$id,"tasks":$tasks,"sec":${wallMs / 1000.0},"run_sec":${runMs / 1000.0},"spill_mem_mb":${memSpill >> 20},"spill_disk_mb":${diskSpill >> 20}}"""
   }
 
   private val rows = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val info = sc.stageInfo
@@ -33,18 +39,21 @@ class StageLog extends SparkListener {
       .getOrElse(0L)
     val tm = info.taskMetrics
     rows.add(Stage(info.stageId, info.numTasks, ms, tm.executorRunTime,
-      tm.memoryBytesSpilled, tm.diskBytesSpilled))
+      tm.memoryBytesSpilled, tm.diskBytesSpilled,
+      tm.shuffleReadMetrics.totalBytesRead, tm.shuffleWriteMetrics.bytesWritten,
+      tm.inputMetrics.bytesRead))
   }
 
-  /** Snapshot and clear; sleeps briefly first so the async listener
+  /** Snapshot and clear: the stages completed and the jobs started
+    * since the last call. Sleeps briefly first so the async listener
     * bus flushes the just-finished query's events.
     */
-  def drain(): Seq[Stage] = {
+  def drain(): (Seq[Stage], Int) = {
     Thread.sleep(700)
     val out = scala.collection.mutable.ArrayBuffer[Stage]()
     var r = rows.poll()
     while (r != null) { out += r; r = rows.poll() }
-    out.toSeq
+    (out.toSeq, jobs.getAndSet(0))
   }
 
   /** The probes' hard assertion: a single-task stage that EXECUTED for

@@ -4,21 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs (one JVM-wide session; suites are
-  * cheap to run against it).
+  * cheap to run against it). Built by [[GraftSession]], so the specs
+  * run under the posture Verify and Bench run under, on 4 cores.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build("graft-test", cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -67,11 +67,10 @@ JVM_FLAGS = sum((['--add-opens', f'{p}=ALL-UNNAMED'] for p in OPENS), []) + [
 
 def start(classes):
     cp = f'{runner_dir}:{classes}:{SPARK_JARS}'
-    env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get('SPARK_GRAFT_CPUS', '16'))
     return subprocess.Popen(
         ['java', '-Xmx24g'] + JVM_FLAGS + ['-cp', cp, 'graft.PairedRunner'],
         stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL, text=True, bufsize=1, env=env)
+        stderr=subprocess.DEVNULL, text=True, bufsize=1)
 
 
 def ask(proc, line):

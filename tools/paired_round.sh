@@ -31,7 +31,7 @@ if [ -d "$SNAP/classes" ]; then
   BASE_SHA=$(cat "$SNAP/GIT_SHA" 2>/dev/null || echo unknown)
   CUR_SHA=$(git rev-parse --short HEAD 2>/dev/null || echo worktree)
   echo "paired bench: baseline $BASE_SHA vs current $CUR_SHA -> $OUT" >&2
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" python3 tools/paired_bench.py \
+  python3 tools/paired_bench.py \
     "$SNAP/classes" /root/testdata/sf0.1 "$PASSES" "$OUT"
 else
   echo "paired bench: no baseline snapshot at $SNAP — bootstrap round, snapshotting only" >&2
