@@ -97,7 +97,7 @@ object LinkageDemo {
     val unsalted = blocks(0)
     // True MULTISET identity: compare (pair → multiplicity) frames —
     // except() over the grouped counts is exact even if a salting bug
-    // broke extractBlocks' distinct SYMMETRICALLY on both sides
+    // broke extractBlocks' pass disjointness SYMMETRICALLY on both sides
     // (count-plus-set equality alone cannot tell {x,x,y} from
     // {x,y,y}; round-15 ADVICE). The unsalted re-run is a demo-only
     // double-compute; the spec-level identity (LinkageSpec) checks

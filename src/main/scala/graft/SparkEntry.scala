@@ -153,9 +153,8 @@ object SparkEntry {
   /** Customer self-linkage blocking: one two-key equi pass + one
     * computed-key pass (the scale rewrite of the reference's prefix
     * predicate pass, scratch.R:25). `selfLinkage = true` pushes the
-    * canonical `id_left < id_right` into each pass, BELOW the
-    * union+distinct — the dedup shuffle carries half the rows a
-    * post-hoc filter would.
+    * canonical `id_left < id_right` into each (disjoint) pass, so no
+    * pass emits the second orientation of a pair.
     */
   private val customerBlockingRules = BlockingRules(Seq(
     EquiKeys(Map("c_nationkey" -> "c_nationkey", "c_mktsegment" -> "c_mktsegment")),
@@ -179,7 +178,7 @@ object SparkEntry {
   private def customerBlockingSized(c: DataFrame): (DataFrame, Option[Long]) = {
     val est = Blocking.estimatePairs(c, c, customerBlockingRules, selfLinkage = true)
     (Blocking.extractBlocks(c, c, "c_custkey", "c_custkey", customerBlockingRules,
-      selfLinkage = true, estimatedPairs = est), est)
+      selfLinkage = true), est)
   }
 
   private val customerBlockingOracle: String =
@@ -270,8 +269,7 @@ object SparkEntry {
     val p = t(s, dir, "part")
     val rules = BlockingRules(Seq(EquiKeys("p_brand")))
     val est = Blocking.estimatePairs(p, p, rules)
-    val ids = Blocking.extractBlocks(p, p, "p_partkey", "p_partkey", rules,
-      estimatedPairs = est)
+    val ids = Blocking.extractBlocks(p, p, "p_partkey", "p_partkey", rules)
     val pairs = Pairs.computePairsDataset(p, p, "p_partkey", "p_partkey", ids, est)
     Comparators.doComparisons(pairs, Comparators.jaroWinkler(Seq("p_name")))
       .groupBy("p_name").agg(count(lit(1)).as("n"))

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   *
   *   - The reference `collect()`s every pass to the driver and dedups
   *     in driver memory (R/linking.R:35-37) — a non-starter at 100 TB.
-  *     Here the whole thing is ONE lazy plan:
-  *     `passes.reduce(unionByName).dropDuplicates` — same result set,
-  *     dedup runs as a distributed hash aggregate on the pair ids, and
-  *     Catalyst prunes each pass's scan down to (blocking key, id).
+  *     Here the whole thing is ONE lazy plan of DISJOINT passes: pass
+  *     `k` keeps only the pairs no earlier pass's condition matches,
+  *     so `passes.reduce(unionByName)` is already duplicate-free and
+  *     no pair-scale dedup shuffle runs. Same result set as the
+  *     reference's union + distinct under the unique-id contract (see
+  *     [[Blocking.extractBlocks]]), and Catalyst prunes each pass's
+  *     scan down to (blocking keys, earlier passes' keys, id).
   *
   *   - A raw predicate pass is a cross join (R/linking.R:28-29), which
   *     no optimizer can save at scale. `ComputedKeys` lets the caller
@@ -87,13 +90,24 @@ object Blocking {
     * DataFrame of (uniqueIdA_left, uniqueIdB_right) — one plan, no
     * driver materialization.
     *
+    * DISJOINT PASSES. Pass `k` keeps only the pairs that no earlier
+    * pass's condition matches (`NOT coalesce(cond_j, false)` for every
+    * `j < k`, a NULL condition being no match, as in the join), so
+    * every (rowA, rowB) combination comes from its FIRST matching
+    * pass only, and the passes are concatenated with `unionByName` —
+    * no distinct, no pair-scale dedup shuffle. The exclusion is
+    * Splink's rule for sequential blocking rules. It yields the
+    * reference's union + distinct pair set under the UNIQUE-ID
+    * CONTRACT: `uniqueIdA` is unique in `dataA` and `uniqueIdB` in
+    * `dataB`, so a row combination and its id pair are one and the
+    * same (the single-pass case has always relied on this). The cost
+    * is that pass `k`'s join carries the columns earlier conditions
+    * read, and evaluates them once per pair it produces.
+    *
     * `selfLinkage = true` canonicalizes SELF-linkage pairs
-    * (`id_left < id_right`) inside each pass, BEFORE the union +
-    * distinct — a post-hoc filter would let the distinct's exchange
-    * shuffle both orientations of every pair (2× the rows it needs;
-    * Catalyst cannot push a filter through `dropDuplicates` because
-    * deduplication is not filter-commutative in general). Only valid
-    * when A and B are the same table with comparable ids.
+    * (`id_left < id_right`) inside each pass, so no pass ever emits
+    * the second orientation of a pair. Only valid when A and B are
+    * the same table with comparable ids.
     *
     * SCALE CONTRACT for blocking keys: per-bucket pair count is
     * quadratic in bucket size, so keys whose CARDINALITY IS FIXED as
@@ -118,58 +132,6 @@ object Blocking {
     * shuffling the right side `hotKeySalts`×. Leave it 0 for
     * high-cardinality keys where AQE suffices.
     */
-  /** UPPER-BOUND estimate of the blocked candidate-pair count: the sum
-    * over passes of `Σ_k cntA(k)·cntB(k)` (equi/computed passes via
-    * [[graft.ops.Profiling.joinSizeEstimate]]; `nA·nB` for a raw
-    * predicate pass), halved for self-linkage (the `id_left <
-    * id_right` canon keeps one orientation). Pass overlap is
-    * double-counted — fine for its one purpose, sizing pair-scale
-    * exchanges ([[graft.util.Parallelism.pairPartitions]]; a high
-    * estimate only means smaller tasks).
-    *
-    * Cost: one dimension-scale pre-flight job per pass (two per-key
-    * count aggs + a key join + a 1-row collect), run ONLY when the
-    * combined input passes [[graft.util.Parallelism.scanBytesAtLeast]]
-    * at 2 MiB — the local bench inputs (sf0.1 customer 315 KB, part
-    * 180 KB) sit 6×+ under the gate, so driver-comparable plans carry
-    * zero extra jobs and stay byte-identical, while the 2B-pair probe
-    * fixture (7.9 MB) and anything bigger pre-flights. Returns None
-    * when gated off.
-    */
-  def estimatePairs(
-      dataA: DataFrame,
-      dataB: DataFrame,
-      rules: BlockingRules,
-      selfLinkage: Boolean = false): Option[Long] = {
-    val gateBytes = 2L * 1024 * 1024
-    if (!graft.util.Parallelism.scanBytesAtLeast(dataA, gateBytes) &&
-        !graft.util.Parallelism.scanBytesAtLeast(dataB, gateBytes)) return None
-    val a = Suffix.addSuffix(dataA, "_left")
-    val b = Suffix.addSuffix(dataB, "_right")
-    val total = rules.passes.map {
-      case EquiKeys(keys) =>
-        val lk = struct(keys.keys.toSeq.sorted.map(k => a(Suffix.addSuffix(k, "_left"))): _*)
-        val rk = struct(keys.toSeq.sortBy(_._1).map { case (_, r) =>
-          b(Suffix.addSuffix(r, "_right")) }: _*)
-        estimateOnePass(a, lk, b, rk)
-      case ComputedKeys(keys) =>
-        estimateOnePass(
-          a, struct(keys.map(_._2): _*),
-          b, struct(keys.map(_._3): _*))
-      case Predicate(_) =>
-        dataA.count() * dataB.count() // cross-join pass: every pair forms
-    }.sum
-    Some(if (selfLinkage) total / 2 else total)
-  }
-
-  private def estimateOnePass(a: DataFrame, leftKey: Column,
-      b: DataFrame, rightKey: Column): Long = {
-    val row = graft.ops.Profiling
-      .joinSizeEstimate(a, leftKey, b, rightKey, "estimatePairs").head()
-    if (row.isNullAt(row.fieldIndex("n_join_rows"))) 0L
-    else row.getAs[Long]("n_join_rows")
-  }
-
   def extractBlocks(
       dataA: DataFrame,
       dataB: DataFrame,
@@ -177,8 +139,7 @@ object Blocking {
       uniqueIdB: String,
       rules: BlockingRules,
       selfLinkage: Boolean = false,
-      hotKeySalts: Int = 0,
-      estimatedPairs: Option[Long] = None): DataFrame = {
+      hotKeySalts: Int = 0): DataFrame = {
     val a = graft.util.Parallelism.ensure(Suffix.addSuffix(dataA, "_left"))
     val b = Suffix.addSuffix(dataB, "_right")
     val idL = Suffix.addSuffix(uniqueIdA, "_left")
@@ -198,9 +159,7 @@ object Blocking {
       }
 
     // Self-linkage canonicalization applied per pass: the `<` becomes a
-    // join-condition conjunct (or a pre-distinct filter on the cross
-    // join), halving the rows every downstream exchange — including
-    // the dedup shuffle — has to carry.
+    // join-condition conjunct (or a filter on the cross join).
     def canon(pairIds: DataFrame): DataFrame =
       if (selfLinkage) pairIds.filter(col(idL) < col(idR)) else pairIds
 
@@ -217,58 +176,47 @@ object Blocking {
         sl.join(sr, cond && col("__salt_l") === col("__salt_r"), "inner")
       } else l.join(r, cond, "inner")
 
-    val passes: Seq[DataFrame] = rules.passes.map {
-      case EquiKeys(keys) =>
-        // Null keys never match in an equi-join (NULL = NULL is NULL) —
-        // same as the reference's SQL inner join.
-        val cond = keys.map { case (l, r) =>
-          a(Suffix.addSuffix(l, "_left")) === b(Suffix.addSuffix(r, "_right"))
-        }.reduce(_ && _)
-        canon(saltedEqui(a, b, cond).select(col(idL), col(idR)))
+    // A pass's condition over one joined (rowA, rowB) pair, by the
+    // suffixed column names both sides carry after any join; NULL
+    // counts as no match, exactly as the pass's join or filter drops it.
+    def matches(pass: BlockingPass): Column = coalesce(pass match {
+      case EquiKeys(keys) => keys.map { case (l, r) =>
+        col(Suffix.addSuffix(l, "_left")) === col(Suffix.addSuffix(r, "_right"))
+      }.reduce(_ && _)
+      case ComputedKeys(keys) => keys.map { case (_, le, re) => le === re }.reduce(_ && _)
+      case Predicate(condition) => condition
+    }, lit(false))
 
-      case ComputedKeys(keys) =>
-        // Project the computed keys on each side first so the join is a
-        // plain shuffled equi-join on materialized key columns.
-        val ak = keys.foldLeft(a) { case (df, (n, le, _)) => df.withColumn(s"__bk_$n", le) }
-        val bk = keys.foldLeft(b) { case (df, (n, _, re)) => df.withColumn(s"__bk2_$n", re) }
-        val cond = keys.map { case (n, _, _) => ak(s"__bk_$n") === bk(s"__bk2_$n") }.reduce(_ && _)
-        canon(saltedEqui(ak, bk, cond).select(col(idL), col(idR)))
+    val passes: Seq[DataFrame] = rules.passes.zipWithIndex.map { case (pass, k) =>
+      // Drops the pairs an earlier pass produces.
+      def fresh(joined: DataFrame): DataFrame =
+        rules.passes.take(k).map(p => !matches(p)).reduceOption(_ && _)
+          .fold(joined)(joined.filter)
+      pass match {
+        case EquiKeys(keys) =>
+          // Null keys never match in an equi-join (NULL = NULL is NULL) —
+          // same as the reference's SQL inner join.
+          val cond = keys.map { case (l, r) =>
+            a(Suffix.addSuffix(l, "_left")) === b(Suffix.addSuffix(r, "_right"))
+          }.reduce(_ && _)
+          canon(fresh(saltedEqui(a, b, cond)).select(col(idL), col(idR)))
 
-      case Predicate(condition) =>
-        canon(a.crossJoin(b).filter(condition).select(col(idL), col(idR)))
-    }
+        case ComputedKeys(keys) =>
+          // Project the computed keys on each side first so the join is a
+          // plain shuffled equi-join on materialized key columns.
+          val ak = keys.foldLeft(a) { case (df, (n, le, _)) => df.withColumn(s"__bk_$n", le) }
+          val bk = keys.foldLeft(b) { case (df, (n, _, re)) => df.withColumn(s"__bk2_$n", re) }
+          val cond = keys.map { case (n, _, _) => ak(s"__bk_$n") === bk(s"__bk2_$n") }.reduce(_ && _)
+          canon(fresh(saltedEqui(ak, bk, cond)).select(col(idL), col(idR)))
 
-    // union-all + distinct == the reference's bind_rows + distinct
-    // (R/linking.R:36-37), kept distributed. A single equi/computed-key
-    // pass already yields unique pairs (each (rowA, rowB) combination
-    // appears at most once in one join), so the distinct — a full
-    // shuffle of the pair table — is skipped when it cannot change the
-    // result.
-    val singlePassUnique = rules.passes.sizeIs == 1 && (rules.passes.head match {
-      case _: EquiKeys | _: ComputedKeys | _: Predicate => true
-    })
-    val unioned = passes.reduce(_ unionByName _)
-    if (singlePassUnique) unioned
-    else {
-      // Pair-scale dedup exchange sizing (round-16, SPILL_PROBE_r15):
-      // at the 2B-pair rung the distinct's final aggregate at the
-      // session default width (= cores on the local bench) put ~65M
-      // pairs in one task — far over the measured 4M-pairs/task
-      // spill envelope. With a caller-supplied estimate
-      // ([[estimatePairs]]) above the envelope, the dedup shuffle is
-      // keyed explicitly at the derived width; below it (every
-      // bench-scale run) the plan is untouched. The explicit keyed
-      // repartition trades map-side partial dedup for the sized final
-      // aggregate — the right trade exactly when tasks would
-      // otherwise spill, which is the only time it fires.
-      val spark = dataA.sparkSession
-      val dflt = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      estimatedPairs.map(graft.util.Parallelism.pairPartitions(spark, _))
-        .filter(_ > dflt) match {
-        case Some(n) => unioned.repartition(n, col(idL), col(idR)).dropDuplicates(idL, idR)
-        case None => unioned.dropDuplicates(idL, idR)
+        case Predicate(condition) =>
+          canon(fresh(a.crossJoin(b).filter(condition)).select(col(idL), col(idR)))
       }
     }
+
+    // Disjoint passes: union-all already equals the reference's
+    // bind_rows + distinct (R/linking.R:36-37).
+    passes.reduce(_ unionByName _)
   }
 
   /** Blocking quality metrics — the two numbers every blocking scheme
@@ -303,10 +251,80 @@ object Blocking {
         col("n_hits").cast("double") / col("n_truth"))
   }
 
+  /** Pair-generation work of one equi pass, measured from the key
+    * counts: `(Σ_k cntL·cntR, max_k cntL·cntR)` over the keys both
+    * sides share, or None when they share none.
+    *
+    * One keyed aggregate over the tagged union of both sides' keys
+    * (per key: left rows, right rows), then a global `sum`/`max` of
+    * the per-key products as `decimal(38,0)` — the two pre-flight
+    * numbers in one codegen'd hash-aggregate pipeline and one 1-row
+    * collect, without a key join. NULL keys are dropped, as an
+    * equi-join drops them; keys on one side only contribute a zero
+    * product. [[graft.ops.Profiling.joinSizeEstimate]] is the same
+    * forecast as a reporting table (shared-key count, top key).
+    */
+  private def pairWork(left: DataFrame, leftKey: Column,
+      right: DataFrame, rightKey: Column): Option[(Long, Long)] = {
+    val dec = "decimal(38,0)"
+    val keys = left.select(leftKey.as("__k"), lit(1L).as("__l"), lit(0L).as("__r"))
+      .union(right.select(rightKey.as("__k"), lit(0L).as("__l"), lit(1L).as("__r")))
+    val row = keys.filter(col("__k").isNotNull)
+      .groupBy(col("__k")).agg(sum(col("__l")).as("__ln"), sum(col("__r")).as("__rn"))
+      .select((col("__ln").cast(dec) * col("__rn").cast(dec)).as("__c"))
+      .agg(sum(col("__c")).cast("long"), max(col("__c")).cast("long"))
+      .head()
+    if (row.isNullAt(0) || row.getLong(0) <= 0) None
+    else Some((row.getLong(0), row.getLong(1)))
+  }
+
+  /** UPPER-BOUND estimate of the blocked candidate-pair count: the sum
+    * over passes of `Σ_k cntA(k)·cntB(k)` (equi/computed passes via
+    * [[pairWork]]; `nA·nB` for a raw predicate pass), halved for
+    * self-linkage (the `id_left < id_right` canon keeps one
+    * orientation). Pass overlap is double-counted — fine for its one
+    * purpose, sizing pair-scale exchanges
+    * ([[graft.util.Parallelism.pairPartitions]] via
+    * [[Pairs.computePairsDataset]]; a high estimate only means smaller
+    * tasks).
+    *
+    * Cost: one dimension-scale pre-flight job per pass (one keyed
+    * count aggregate + a 1-row collect), run ONLY when the combined
+    * input passes [[graft.util.Parallelism.scanBytesAtLeast]] at
+    * 2 MiB — the local bench inputs (sf0.1 customer 315 KB, part
+    * 180 KB) sit 6×+ under the gate, so driver-comparable plans carry
+    * zero extra jobs and stay byte-identical, while the 2B-pair probe
+    * fixture (7.9 MB) and anything bigger pre-flights. Returns None
+    * when gated off.
+    */
+  def estimatePairs(
+      dataA: DataFrame,
+      dataB: DataFrame,
+      rules: BlockingRules,
+      selfLinkage: Boolean = false): Option[Long] = {
+    val gateBytes = 2L * 1024 * 1024
+    if (!graft.util.Parallelism.scanBytesAtLeast(dataA, gateBytes) &&
+        !graft.util.Parallelism.scanBytesAtLeast(dataB, gateBytes)) return None
+    val a = Suffix.addSuffix(dataA, "_left")
+    val b = Suffix.addSuffix(dataB, "_right")
+    def work(lk: Column, rk: Column): Long = pairWork(a, lk, b, rk).fold(0L)(_._1)
+    val total = rules.passes.map {
+      case EquiKeys(keys) =>
+        val sorted = keys.toSeq.sortBy(_._1)
+        work(struct(sorted.map { case (l, _) => a(Suffix.addSuffix(l, "_left")) }: _*),
+          struct(sorted.map { case (_, r) => b(Suffix.addSuffix(r, "_right")) }: _*))
+      case ComputedKeys(keys) =>
+        work(struct(keys.map(_._2): _*), struct(keys.map(_._3): _*))
+      case Predicate(_) =>
+        dataA.count() * dataB.count() // cross-join pass: every pair forms
+    }.sum
+    Some(if (selfLinkage) total / 2 else total)
+  }
+
   /** MEASURED salt-count recommendation for a blocking pass — the
-    * bridge from [[graft.ops.Profiling.joinSizeEstimate]]'s skew
-    * forecast to [[extractBlocks]]' `hotKeySalts` knob, so the salt
-    * count is a pre-flight computation instead of a guess.
+    * bridge from the per-key pair-work forecast ([[pairWork]]) to
+    * [[extractBlocks]]' `hotKeySalts` knob, so the salt count is a
+    * pre-flight computation instead of a guess.
     *
     * Model: per-key pair GENERATION work is `cntL·cntR` and a key's
     * group runs in ONE task unsalted (AQE splits partitions by size,
@@ -325,28 +343,20 @@ object Blocking {
     * tiny-cardinality uniform key (k uniform groups ⇒ s ≈ P/k, giving
     * k·s ≈ P work units).
     *
-    * Cost: two per-key count aggs + a key join, one 1-row collect —
-    * the same pre-flight job as [[graft.ops.Profiling.joinSizeEstimate]],
-    * far cheaper than the pair generation it sizes. Pass the SAME key
-    * expressions the blocking pass will use (left and right sides).
-    * Identity of the pair set under any salt count is spec-proved
-    * (LinkageSpec); this helper only picks the parallelism.
+    * Cost: one keyed count aggregate over both sides' keys and a
+    * 1-row collect, far cheaper than the pair generation it sizes.
+    * Pass the SAME key expressions the blocking pass will use (left
+    * and right sides). Identity of the pair set under any salt count
+    * is spec-proved (LinkageSpec); this helper only picks the
+    * parallelism.
     */
   def recommendSalts(left: DataFrame, leftKey: Column,
       right: DataFrame, rightKey: Column, targetParallelism: Int): Int = {
     require(targetParallelism > 0,
       s"targetParallelism must be positive, got $targetParallelism")
-    val row = graft.ops.Profiling
-      .joinSizeEstimate(left, leftKey, right, rightKey, "recommendSalts").head()
-    if (row.isNullAt(row.fieldIndex("n_join_rows"))) 0 // no shared keys
-    else {
-      val total = row.getAs[Long]("n_join_rows")
-      val top = row.getAs[Long]("top_key_rows")
-      if (total <= 0) 0
-      else {
-        val s = math.ceil(targetParallelism.toDouble * top / total).toInt
-        if (s <= 1) 0 else math.min(s, targetParallelism)
-      }
+    pairWork(left, leftKey, right, rightKey).fold(0) { case (total, top) =>
+      val s = math.ceil(targetParallelism.toDouble * top / total).toInt
+      if (s <= 1) 0 else math.min(s, targetParallelism)
     }
   }
 

@@ -93,14 +93,31 @@ object Scoring {
   }
 
   /** Precision per rounded weight band — the reference's calibration
-    * table (scratch.R:137-139).
+    * table (scratch.R:137-139): (weight_band, precision, n), ascending
+    * by band, NULL band first.
+    *
+    * Computed eagerly and returned as a local frame. The table has one
+    * row per distinct rounded weight (≤ #patterns, the
+    * [[calibrationStats]] contract, enforced the same way with
+    * `take(maxBands + 1)`), so it is ordered on the driver instead of
+    * by a range-partition sample job and a distributed sort. Grouping
+    * normalizes -0.0 and NaN, so `Double` total order is Spark's.
     */
-  def precisionByBand(withTruth: DataFrame): DataFrame =
-    withTruth
+  def precisionByBand(withTruth: DataFrame, maxBands: Int = 100000): DataFrame = {
+    val bands = withTruth
       .withColumn("weight_band", round(col("weight")))
       .groupBy("weight_band")
       .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
-      .orderBy("weight_band")
+    val rows = bands.take(maxBands + 1)
+    require(rows.length <= maxBands,
+      s"precisionByBand: more than $maxBands distinct weight bands — the " +
+        "weight column looks like a continuous per-pair score, not a " +
+        "pattern-pure Fellegi-Sunter weight.")
+    val byBand = rows.sortBy(r => Option.unless(r.isNullAt(0))(r.getDouble(0)))(
+      Ordering.Option(Ordering.Double.TotalOrdering))
+    withTruth.sparkSession.createDataFrame(
+      java.util.Arrays.asList(byBand: _*), bands.schema)
+  }
 
   /** Fitted logistic calibration weight → P(match): intercept + slope
     * with a closed-form predictor usable as a plain Column (codegen'd

@@ -87,27 +87,29 @@ object UProbs {
     a.crossJoin(b)
   }
 
-  /** Long-form per-(field, level) sample frequencies
-    * (reference: scratch.R:73-83): evaluate comparators over sampled
-    * pairs, pivot to (name, value), drop NULL levels, count, and take
-    * the within-field fraction. Returns (name, value, n, p).
-    *
-    * The pivot uses the built-in `stack` generator (R1); the fraction
-    * is a window sum over the tiny (field, level) count table (A3).
+  /** Per-(field, level) sample counts (reference: scratch.R:73-83):
+    * evaluate comparators over sampled pairs, pivot to (name, value),
+    * drop NULL levels, count. Returns (name, value, n) — at most
+    * Σ-levels rows. The pivot uses the built-in `stack` generator (R1).
     */
-  def uProbsLong(sampledPairs: DataFrame, comparators: Seq[Comparator]): DataFrame = {
+  def uCounts(sampledPairs: DataFrame, comparators: Seq[Comparator]): DataFrame = {
     val compared = Comparators.doComparisons(sampledPairs, comparators)
     val stackArgs = comparators
       .map(c => s"'${c.name}', `${c.name}`")
       .mkString(", ")
-    val long = compared.selectExpr(
-      s"stack(${comparators.size}, $stackArgs) as (name, value)")
-    long
+    compared.selectExpr(s"stack(${comparators.size}, $stackArgs) as (name, value)")
       .filter(col("value").isNotNull)
       .groupBy("name", "value")
       .agg(count(lit(1)).as("n"))
-      .withColumn("p", col("n") / sum("n").over(Window.partitionBy("name")))
   }
+
+  /** Long-form per-(field, level) sample frequencies: [[uCounts]] plus
+    * the within-field fraction `p`, a window sum over the tiny
+    * (field, level) count table (A3). Returns (name, value, n, p).
+    */
+  def uProbsLong(sampledPairs: DataFrame, comparators: Seq[Comparator]): DataFrame =
+    uCounts(sampledPairs, comparators)
+      .withColumn("p", col("n") / sum("n").over(Window.partitionBy("name")))
 
   /** Deterministic sampled pairs joined DIRECTLY on numeric key
     * columns: LCG picks land in the key's ACTUAL domain
@@ -158,6 +160,10 @@ object UProbs {
     * use [[samplePairsByCross]] + [[uProbsLong]] directly, or accept
     * the single-partition sort of [[withSyntheticId]] on a
     * driver-sized slice.
+    *
+    * The (name, value, n) counts are collected (at most Σ-levels
+    * rows) and divided on the driver: the same `n / Σ n` doubles as
+    * [[uProbsLong]]'s window, without its sort and exchange.
     */
   def calculateUProbs(
       dataA: DataFrame,
@@ -167,7 +173,13 @@ object UProbs {
       comparators: Seq[Comparator],
       size: Long = 1000000L,
       seed: Long = 42L): Map[String, Map[String, Double]] =
-    toNestedMap(uProbsLong(samplePairsByKey(dataA, dataB, idColA, idColB, size, seed), comparators))
+    uCounts(samplePairsByKey(dataA, dataB, idColA, idColB, size, seed), comparators)
+      .collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (name, rows) =>
+        val total = rows.map(_.getLong(2)).sum
+        name -> rows.map(r => r.getString(1) -> r.getLong(2).toDouble / total.toDouble).toMap
+      }
 
   /** Collect the long frequency table to field → (level → p)
     * (reference: scratch.R:85-96).

@@ -286,32 +286,6 @@ class ClustersSpec extends SparkSpec {
     assert(count(rand.toDF("u", "v")) == brute && brute > 0)
   }
 
-  /** Spark jobs started while `body` runs, with their short call sites. */
-  private def countJobs(body: => Unit): (Int, Seq[String]) = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet()
-        sites.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener delivery is async: poll until the count is stable
-      var (prev, stable) = (-1, 0)
-      while (stable < 3) {
-        Thread.sleep(100)
-        val cur = counter.get()
-        if (cur == prev) stable += 1 else { prev = cur; stable = 0 }
-      }
-      import scala.jdk.CollectionConverters._
-      (counter.get(), sites.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("pageRank rounds: single action per round, no per-round driver sync") {
     // Round-structure regression for the round-5 verdict finding: a
     // separate danglingMass `.head` per round both blocked the driver

@@ -176,6 +176,175 @@ class LinkageSpec extends SparkSpec {
       BlockingRules(Seq(EquiKeys("k")))).count() == 1L)
   }
 
+  /** Seeded random table with unique ids, a NULL-bearing low-cardinality
+    * key, a NULL-bearing name and a numeric value — overlapping passes
+    * over it share many pairs.
+    */
+  private def randomPeople(seed: Long, n: Int, idBase: Long) = {
+    val r = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      (idBase + 3L * i,
+        Option.when(r.nextInt(6) != 0)(r.nextInt(5)),
+        Option.when(r.nextInt(8) != 0)(s"${"abc" (r.nextInt(3))}${r.nextInt(4)}"),
+        r.nextInt(12).toDouble / 4)
+    }.toDF("id", "k", "name", "v")
+  }
+
+  test("blocking: disjoint passes equal the union + distinct of the single passes") {
+    val passes = Seq(
+      // NULL on either k makes this condition NULL: a later pass must
+      // still keep such pairs (NOT coalesce(cond, false)).
+      Predicate(col("k_left") + 1 === col("k_right") || abs(col("v_left") - col("v_right")) < 0.3),
+      EquiKeys("k"),
+      ComputedKeys(Seq(("n1", substring(col("name_left"), 1, 1), substring(col("name_right"), 1, 1)))),
+      EquiKeys(Map("k" -> "k", "name" -> "name")))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    for (seed <- Seq(1L, 2L); self <- Seq(false, true)) {
+      val a = randomPeople(seed, 50, 1L)
+      val b = if (self) a else randomPeople(seed + 100, 40, 1000L)
+      // The union + distinct of the passes, each run on its own.
+      val single = passes.map(p => Blocking.extractBlocks(a, b, "id", "id",
+        BlockingRules(Seq(p)), selfLinkage = self))
+      val reference = pairs(single.reduce(_ union _).distinct())
+      assert(single.map(pairs(_).size).sum > reference.size, s"passes do not overlap at seed $seed")
+      for (salts <- Seq(0, 7); order <- Seq(passes, passes.reverse)) {
+        val got = pairs(Blocking.extractBlocks(a, b, "id", "id", BlockingRules(order),
+          selfLinkage = self, hotKeySalts = salts))
+        val what = s"seed $seed, self $self, salts $salts, ${BlockingRules(order)}"
+        assert(got.size == got.toSet.size, s"duplicate pairs: $what")
+        assert(got.toSet == reference.toSet, what)
+      }
+    }
+  }
+
+  test("blocking: a multi-pass extractBlocks has no Exchange above its Union") {
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val a = randomPeople(3L, 30, 1L)
+    val df = Blocking.extractBlocks(a, a, "id", "id", BlockingRules(Seq(
+      EquiKeys("k"),
+      ComputedKeys(Seq(("n1", substring(col("name_left"), 1, 1), substring(col("name_right"), 1, 1)))),
+      Predicate(abs(col("v_left") - col("v_right")) < 0.3))), selfLinkage = true)
+    assert(df.collect().nonEmpty)
+    // The final adaptive plan, through its query stages (leaves to
+    // TreeNode traversal): the path from the root to each Union.
+    def unionPaths(p: SparkPlan, above: Seq[SparkPlan]): Seq[Seq[SparkPlan]] = p match {
+      case ap: AdaptiveSparkPlanExec => unionPaths(ap.executedPlan, above)
+      case qs: QueryStageExec => unionPaths(qs.plan, above :+ qs)
+      case u: UnionExec => Seq(above)
+      case other => other.children.flatMap(unionPaths(_, above :+ other))
+    }
+    val plan = df.queryExecution.executedPlan
+    val paths = unionPaths(plan, Nil)
+    assert(paths.size == 1, plan.toString)
+    assert(!paths.head.exists(_.isInstanceOf[Exchange]), s"exchange above the union:\n$plan")
+  }
+
+  test("blocking: recommendSalts equals the joinSizeEstimate forecast, NULL and struct keys included") {
+    // The salt formula over Profiling.joinSizeEstimate's join-based
+    // forecast — the form recommendSalts used to run.
+    def viaJoin(l: org.apache.spark.sql.DataFrame, lk: org.apache.spark.sql.Column,
+        r: org.apache.spark.sql.DataFrame, rk: org.apache.spark.sql.Column): Int => Int = {
+      val row = graft.ops.Profiling.joinSizeEstimate(l, lk, r, rk, "x").head()
+      p =>
+        if (row.isNullAt(row.fieldIndex("n_join_rows"))) 0
+        else {
+          val total = row.getAs[Long]("n_join_rows")
+          val top = row.getAs[Long]("top_key_rows")
+          if (total <= 0) 0
+          else {
+            val s = math.ceil(p.toDouble * top / total).toInt
+            if (s <= 1) 0 else math.min(s, p)
+          }
+        }
+    }
+    val skewed = (1L to 200L).map(i => (i, if (i <= 180) "hot" else s"cold_$i")).toDF("id", "k")
+    val uniform = (1L to 200L).map(i => (i, s"g${i % 4}")).toDF("id", "k")
+    val spread = (1L to 200L).map(i => (i, s"k$i")).toDF("id", "k")
+    val other = (1L to 10L).map(i => (i, s"z$i")).toDF("id", "k")
+    // NULL keys: the 120 NULL rows must not count as one hot key.
+    val nulls = (1L to 200L).map(i => (i, Option.when(i > 120)(s"n${i % 9}"))).toDF("id", "k")
+    val demo = graft.LinkageDemo.persons(spark, nClusters = 120).drop("cluster")
+    val rnd = randomPeople(5L, 200, 1L)
+    val cases = Seq(
+      (skewed, col("k"), skewed, col("k")),
+      (uniform, col("k"), uniform, col("k")),
+      (spread, col("k"), spread, col("k")),
+      (skewed, col("k"), other, col("k")),
+      (nulls, col("k"), nulls, col("k")),
+      (nulls, col("k"), skewed, col("k")),
+      (demo, substring(col("surname"), 1, 1), demo, substring(col("surname"), 1, 1)),
+      // struct keys with NULL fields, the benchmark's key shape
+      (rnd, struct(col("k"), floor(col("v")).as("b")), rnd, struct(col("k"), floor(col("v")).as("b"))),
+      (rnd, struct(col("k"), col("name")), skewed, struct(lit(1).as("k"), col("k").as("name"))))
+    for ((l, lk, r, rk) <- cases) {
+      val expected = viaJoin(l, lk, r, rk)
+      for (p <- Seq(4, 32))
+        assert(Blocking.recommendSalts(l, lk, r, rk, targetParallelism = p) == expected(p),
+          s"keys $lk / $rk at P=$p")
+    }
+    // 80 keyed rows over 9 keys (eight of 9 rows, one of 8): Σ = 712,
+    // max = 81 → ceil(32·81/712) = 4; the NULL rows would have made it 31.
+    assert(Blocking.recommendSalts(nulls, col("k"), nulls, col("k"), targetParallelism = 32) == 4)
+  }
+
+  test("linkage pass: a benchmark-shaped pass stays within its job budget") {
+    // perfbench's linkage pass (graft.LinkageE2E's pipeline) on 600 A
+    // rows: salt pre-flight, two computed-key passes, pattern counts,
+    // u-probabilities, EM, scoring, precision bands, calibration.
+    val a = spark.range(1, 601).select(
+        col("id").as("rec_id"),
+        translate(substring(md5(col("id").cast("string")), 1, 12),
+          "0123456789abcdef", "ghijklmnopqrstuv").as("name"),
+        (col("id") % 25).as("nationkey"),
+        round(pmod(xxhash64(col("id")), lit(100000L)).cast("double") / 10.0, 2).as("acctbal"),
+        concat(lit("seg"), (col("id") % 5).cast("string")).as("segment"))
+      .localCheckpoint(true)
+    val b = LinkageE2E.tableB(a).localCheckpoint(true)
+    val truth = a.select(col("rec_id"), col("rec_id").as("cluster"))
+      .union(b.select(col("rec_id"), (col("rec_id") - 1000000000L).as("cluster")))
+    val balKey = (c: org.apache.spark.sql.Column) => floor(c / 1000)
+    val rules = BlockingRules(Seq(
+      ComputedKeys(Seq(("name_pfx", substring(col("name_left"), 1, 2), substring(col("name_right"), 1, 2)))),
+      ComputedKeys(Seq(
+        ("nk", col("nationkey_left"), col("nationkey_right")),
+        ("bal", balKey(col("acctbal_left")), balKey(col("acctbal_right")))))))
+    val comparators = Comparators.jaroWinkler(Seq("name")) ++
+      Comparators.exact(Seq("nationkey", "segment")) :+
+      Comparators.expression("bal_band",
+        when(abs(col("acctbal_left") - col("acctbal_right")) < lit(1.5), "close").otherwise("far"))
+    def pass(): (Long, Int, Double) = {
+      val salts = Blocking.recommendSalts(
+        a, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
+        b, struct(col("nationkey"), balKey(col("acctbal")).as("b")), targetParallelism = 4)
+      val ids = Blocking.extractBlocks(a, b, "rec_id", "rec_id", rules, hotKeySalts = salts)
+        .localCheckpoint(true)
+      val nCand = ids.count()
+      val patterns = EM.collectPatterns(Pairs.patternCounts(a, b, "rec_id", "rec_id", ids, comparators))
+      val u = UProbs.calculateUProbs(a, b, "rec_id", "rec_id", comparators, size = 20000L)
+      val em = EM.run(patterns, totalPairs = nCand.toDouble, uProbabilities = u, maxIter = 5)
+      val values = Comparators.doComparisons(
+        Pairs.computePairsDataset(a, b, "rec_id", "rec_id", ids), comparators,
+        keep = Seq("rec_id_left", "rec_id_right"))
+      val scored = Scoring.attachTruth(Scoring.score(values, em), truth, "rec_id", "cluster")
+        .select("rec_id_left", "rec_id_right", "weight", "true_match").localCheckpoint(true)
+      val top = scored.filter(col("weight") > 0.0)
+      val nTrueTop = top.filter(col("true_match")).count()
+      val bands = Scoring.precisionByBand(top).collect()
+      Scoring.calibrate(scored)
+      (nCand, bands.length, nTrueTop.toDouble / top.count())
+    }
+    val (nCand, nBands, precision) = pass() // warm-up
+    assert(nCand > 600 && nBands > 1 && precision > 0.9, (nCand, nBands, precision))
+    // Measured 33 jobs; with a blocking dedup shuffle, a join-based salt
+    // pre-flight, a u-probability window and a range-sorted band table
+    // the same pass took 39.
+    val (jobs, sites) = countJobs(assert(pass()._1 == nCand))
+    assert(jobs <= 35, s"$jobs jobs: ${sites.mkString(", ")}")
+  }
+
   test("blocking: ComputedKeys equals the equivalent Predicate pass (J2 rewrite)") {
     val computed = Blocking.extractBlocks(people, people, "id", "id",
       BlockingRules(Seq(ComputedKeys(Seq(

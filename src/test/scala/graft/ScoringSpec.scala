@@ -85,6 +85,29 @@ class ScoringSpec extends SparkSpec {
     assert(bands.head.getAs[Long]("n") == 2L)
   }
 
+  test("precisionByBand: the distributed aggregate's rows, ascending by band, NULL band first") {
+    val r = new scala.util.Random(11L)
+    val withTruth = (0 until 400).map { i =>
+      (i.toLong,
+        if (i % 37 == 0) None else Some((r.nextInt(41) - 20) * 0.37 + (if (i % 5 == 0) 0.5 else 0.0)),
+        if (i % 53 == 0) None else Some(r.nextBoolean()))
+    }.toDF("id", "weight", "true_match")
+    // The band table as one sorted distributed query.
+    val reference = withTruth
+      .withColumn("weight_band", round(col("weight")))
+      .groupBy("weight_band")
+      .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
+      .orderBy("weight_band")
+    val got = Scoring.precisionByBand(withTruth)
+    assert(got.schema == reference.schema)
+    val rows = got.collect().toSeq
+    assert(rows == reference.collect().toSeq)
+    assert(rows.head.isNullAt(0) && rows.size > 10)
+    assert(rows.tail.exists(_.getDouble(0) < 0) && rows.tail.exists(_.getDouble(0) == 0.0))
+    val ex = intercept[IllegalArgumentException](Scoring.precisionByBand(withTruth, maxBands = 5))
+    assert(ex.getMessage.contains("more than 5 distinct weight bands"))
+  }
+
   test("calibrate: glm on the LinkageDemo fixture — monotone in weight, AUC > 0.9") {
     import graft.linkage.{Blocking, BlockingRules, Comparators, ComputedKeys, Pairs}
     val people = LinkageDemo.persons(spark, nClusters = 120).cache()

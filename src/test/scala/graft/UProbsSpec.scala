@@ -38,4 +38,22 @@ class UProbsSpec extends SparkSpec {
     assert(u("postcode").keySet.subsetOf(Set("agree", "disagree")))
     assert(u("name").keySet.contains("full agreement"))
   }
+
+  test("calculateUProbs: driver division equals the uProbsLong window bit for bit") {
+    val comparators = Comparators.exact(Seq("postcode")) ++ Comparators.jaroWinkler(Seq("name")) :+
+      Comparators.expression("id_digit", (col("id_left") % 3).cast("string"))
+    for (size <- Seq(7L, 2000L); seed <- Seq(42L, 9L)) {
+      val reference = UProbs.toNestedMap(UProbs.uProbsLong(
+        UProbs.samplePairsByKey(people, people, "id", "id", size, seed), comparators))
+      val got = UProbs.calculateUProbs(people, people, "id", "id", comparators, size, seed)
+      assert(got.keySet == reference.keySet)
+      got.foreach { case (f, levels) =>
+        assert(levels.keySet == reference(f).keySet, s"$f levels")
+        levels.foreach { case (l, p) =>
+          assert(java.lang.Double.doubleToRawLongBits(p) ==
+            java.lang.Double.doubleToRawLongBits(reference(f)(l)), s"$f/$l: $p vs ${reference(f)(l)}")
+        }
+      }
+    }
+  }
 }

@@ -4,7 +4,7 @@
 # the compare hasn't run on).
 #
 # Usage:
-#   tools/gate.sh                 # full 213-query sweep at sf0.001 + sf0.01
+#   tools/gate.sh                 # full 271-query sweep at sf0.001 + sf0.01
 #   tools/gate.sh q_foo,q_bar     # just the named rows, both scales
 #
 # Exits nonzero if any query fails at either scale (oracle_compare.py
