@@ -176,16 +176,17 @@ object Blocking {
         sl.join(sr, cond && col("__salt_l") === col("__salt_r"), "inner")
       } else l.join(r, cond, "inner")
 
-    // A pass's condition over one joined (rowA, rowB) pair, by the
-    // suffixed column names both sides carry after any join; NULL
-    // counts as no match, exactly as the pass's join or filter drops it.
-    def matches(pass: BlockingPass): Column = coalesce(pass match {
+    // A pass's condition over one (rowA, rowB) pair, by the suffixed
+    // column names, which are unique across the two sides.
+    def condition(pass: BlockingPass): Column = pass match {
       case EquiKeys(keys) => keys.map { case (l, r) =>
         col(Suffix.addSuffix(l, "_left")) === col(Suffix.addSuffix(r, "_right"))
       }.reduce(_ && _)
       case ComputedKeys(keys) => keys.map { case (_, le, re) => le === re }.reduce(_ && _)
-      case Predicate(condition) => condition
-    }, lit(false))
+      case Predicate(c) => c
+    }
+    // NULL counts as no match, exactly as the pass's join or filter drops it.
+    def matches(pass: BlockingPass): Column = coalesce(condition(pass), lit(false))
 
     val passes: Seq[DataFrame] = rules.passes.zipWithIndex.map { case (pass, k) =>
       // Drops the pairs an earlier pass produces.
@@ -193,13 +194,10 @@ object Blocking {
         rules.passes.take(k).map(p => !matches(p)).reduceOption(_ && _)
           .fold(joined)(joined.filter)
       pass match {
-        case EquiKeys(keys) =>
+        case EquiKeys(_) =>
           // Null keys never match in an equi-join (NULL = NULL is NULL) —
           // same as the reference's SQL inner join.
-          val cond = keys.map { case (l, r) =>
-            a(Suffix.addSuffix(l, "_left")) === b(Suffix.addSuffix(r, "_right"))
-          }.reduce(_ && _)
-          canon(fresh(saltedEqui(a, b, cond)).select(col(idL), col(idR)))
+          canon(fresh(saltedEqui(a, b, condition(pass))).select(col(idL), col(idR)))
 
         case ComputedKeys(keys) =>
           // Project the computed keys on each side first so the join is a
@@ -209,8 +207,8 @@ object Blocking {
           val cond = keys.map { case (n, _, _) => ak(s"__bk_$n") === bk(s"__bk2_$n") }.reduce(_ && _)
           canon(fresh(saltedEqui(ak, bk, cond)).select(col(idL), col(idR)))
 
-        case Predicate(condition) =>
-          canon(fresh(a.crossJoin(b).filter(condition)).select(col(idL), col(idR)))
+        case Predicate(_) =>
+          canon(fresh(a.crossJoin(b).filter(condition(pass))).select(col(idL), col(idR)))
       }
     }
 
@@ -307,14 +305,21 @@ object Blocking {
         !graft.util.Parallelism.scanBytesAtLeast(dataB, gateBytes)) return None
     val a = Suffix.addSuffix(dataA, "_left")
     val b = Suffix.addSuffix(dataB, "_right")
-    def work(lk: Column, rk: Column): Long = pairWork(a, lk, b, rk).fold(0L)(_._1)
+    // pairWork unions the two keys by position, so both structs get the
+    // same positional field names; a key with a NULL part is NULL, as
+    // the pass's equi-join never matches it.
+    def key(parts: Seq[Column]): Column =
+      when(parts.map(_.isNotNull).reduce(_ && _),
+        struct(parts.zipWithIndex.map { case (c, i) => c.as(s"k$i") }: _*))
+    def work(lk: Seq[Column], rk: Seq[Column]): Long =
+      pairWork(a, key(lk), b, key(rk)).fold(0L)(_._1)
     val total = rules.passes.map {
       case EquiKeys(keys) =>
         val sorted = keys.toSeq.sortBy(_._1)
-        work(struct(sorted.map { case (l, _) => a(Suffix.addSuffix(l, "_left")) }: _*),
-          struct(sorted.map { case (_, r) => b(Suffix.addSuffix(r, "_right")) }: _*))
+        work(sorted.map { case (l, _) => a(Suffix.addSuffix(l, "_left")) },
+          sorted.map { case (_, r) => b(Suffix.addSuffix(r, "_right")) })
       case ComputedKeys(keys) =>
-        work(struct(keys.map(_._2): _*), struct(keys.map(_._3): _*))
+        work(keys.map(_._2), keys.map(_._3))
       case Predicate(_) =>
         dataA.count() * dataB.count() // cross-join pass: every pair forms
     }.sum

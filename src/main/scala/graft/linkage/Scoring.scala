@@ -97,24 +97,20 @@ object Scoring {
     * by band, NULL band first.
     *
     * Computed eagerly and returned as a local frame. The table has one
-    * row per distinct rounded weight (≤ #patterns, the
-    * [[calibrationStats]] contract, enforced the same way with
-    * `take(maxBands + 1)`), so it is ordered on the driver instead of
-    * by a range-partition sample job and a distributed sort. Grouping
-    * normalizes -0.0 and NaN, so `Double` total order is Spark's.
+    * row per distinct rounded weight, so it is collected and ordered on
+    * the driver instead of by a range-partition sample job and a
+    * distributed sort (which would add generated classes to every
+    * linkage pass, docs/CODEGEN_CACHE_r17.md). A band arrives as the
+    * boxed Java value of the weight's type, whose natural order is
+    * Spark's: grouping has already normalized -0.0 and NaN.
     */
-  def precisionByBand(withTruth: DataFrame, maxBands: Int = 100000): DataFrame = {
+  def precisionByBand(withTruth: DataFrame): DataFrame = {
     val bands = withTruth
       .withColumn("weight_band", round(col("weight")))
       .groupBy("weight_band")
       .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
-    val rows = bands.take(maxBands + 1)
-    require(rows.length <= maxBands,
-      s"precisionByBand: more than $maxBands distinct weight bands — the " +
-        "weight column looks like a continuous per-pair score, not a " +
-        "pattern-pure Fellegi-Sunter weight.")
-    val byBand = rows.sortBy(r => Option.unless(r.isNullAt(0))(r.getDouble(0)))(
-      Ordering.Option(Ordering.Double.TotalOrdering))
+    val byBand = bands.collect().sortBy(r => Option(r.get(0)))(Ordering.Option(
+      Ordering.fromLessThan[Any]((x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0)))
     withTruth.sparkSession.createDataFrame(
       java.util.Arrays.asList(byBand: _*), bands.schema)
   }

@@ -290,6 +290,45 @@ class LinkageSpec extends SparkSpec {
     assert(Blocking.recommendSalts(nulls, col("k"), nulls, col("k"), targetParallelism = 32) == 4)
   }
 
+  test("blocking: estimatePairs equals the summed joinSizeEstimate forecast above its 2 MiB gate") {
+    // Large enough (by the optimizer's size estimate) to pass the gate;
+    // B's key columns have other names and types than A's, and both
+    // sides carry NULL keys.
+    val a = spark.range(300000).select(col("id"),
+      when(col("id") % 13 =!= 0, col("id") % 500).as("k"),
+      concat(lit("n"), (col("id") % 37).cast("string")).as("name"))
+    val b = spark.range(200000).select(col("id"),
+      when(col("id") % 7 =!= 0, (col("id") * 7 % 400).cast("int")).as("kb"),
+      concat(lit("n"), (col("id") % 41).cast("string")).as("nameb"))
+    def joinRows(l: org.apache.spark.sql.DataFrame, lk: org.apache.spark.sql.Column,
+        r: org.apache.spark.sql.DataFrame, rk: org.apache.spark.sql.Column): Long = {
+      val row = graft.ops.Profiling.joinSizeEstimate(l, lk, r, rk, "x").head()
+      val i = row.fieldIndex("n_join_rows")
+      if (row.isNullAt(i)) 0L else row.getLong(i)
+    }
+    val computed = ComputedKeys(Seq(("p",
+      substring(col("name_left"), 1, 2), substring(col("nameb_right"), 1, 2))))
+    val rules = BlockingRules(Seq(EquiKeys(Map("k" -> "kb")),
+      EquiKeys(Map("k" -> "kb", "name" -> "nameb")), computed))
+    // joinSizeEstimate matches a struct key with NULL fields, an
+    // equi-join pass does not: those rows are filtered out first.
+    val expected =
+      joinRows(a, col("k"), b, col("kb")) +
+        joinRows(a.filter(col("k").isNotNull), struct(col("k").as("x"), col("name").as("y")),
+          b.filter(col("kb").isNotNull), struct(col("kb").as("x"), col("nameb").as("y"))) +
+        joinRows(a, substring(col("name"), 1, 2), b, substring(col("nameb"), 1, 2))
+    assert(expected > 0)
+    assert(Blocking.estimatePairs(a, b, rules) == Some(expected))
+
+    val selfRules = BlockingRules(Seq(EquiKeys("k", "name"),
+      ComputedKeys(Seq(("p", substring(col("name_left"), 1, 2), substring(col("name_right"), 1, 2))))))
+    val selfExpected =
+      joinRows(a.filter(col("k").isNotNull), struct(col("k"), col("name")),
+        a.filter(col("k").isNotNull), struct(col("k"), col("name"))) +
+        joinRows(a, substring(col("name"), 1, 2), a, substring(col("name"), 1, 2))
+    assert(Blocking.estimatePairs(a, a, selfRules, selfLinkage = true) == Some(selfExpected / 2))
+  }
+
   test("linkage pass: a benchmark-shaped pass stays within its job budget") {
     // perfbench's linkage pass (graft.LinkageE2E's pipeline) on 600 A
     // rows: salt pre-flight, two computed-key passes, pattern counts,

@@ -104,8 +104,19 @@ class ScoringSpec extends SparkSpec {
     assert(rows == reference.collect().toSeq)
     assert(rows.head.isNullAt(0) && rows.size > 10)
     assert(rows.tail.exists(_.getDouble(0) < 0) && rows.tail.exists(_.getDouble(0) == 0.0))
-    val ex = intercept[IllegalArgumentException](Scoring.precisionByBand(withTruth, maxBands = 5))
-    assert(ex.getMessage.contains("more than 5 distinct weight bands"))
+    // `round` keeps the weight's type: every orderable numeric weight
+    // gives the sorted query's rows too.
+    for (t <- Seq("float", "int", "long", "decimal(12,3)")) {
+      val typed = withTruth.withColumn("weight", col("weight").cast(t))
+      val ref = typed
+        .withColumn("weight_band", round(col("weight")))
+        .groupBy("weight_band")
+        .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
+        .orderBy("weight_band")
+      val typedGot = Scoring.precisionByBand(typed)
+      assert(typedGot.schema == ref.schema, t)
+      assert(typedGot.collect().toSeq == ref.collect().toSeq, t)
+    }
   }
 
   test("calibrate: glm on the LinkageDemo fixture — monotone in weight, AUC > 0.9") {
