@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   *     errors carry through to the `failed` map and the exit code.
   *
   * If a committed scale-probe artifact exists (SCALE_PROBE file, see
-  * [[ScaleProbe]]) its JSON line is inlined verbatim under `sf1_probe`
-  * so the per-round bench JSON carries the superlinear-growth evidence
-  * alongside the sf0.1 numbers.
+  * `graft.Measure scale`) its JSON line is inlined verbatim under
+  * `sf1_probe` so the per-round bench JSON carries the
+  * superlinear-growth evidence alongside the sf0.1 numbers.
   *
   * Reporting is incremental and tail-window-aware: after EVERY timed
   * pass the full JSON line is printed and persisted to

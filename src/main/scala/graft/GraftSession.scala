@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * test session (`TestSpark`) call [[build]], so Verify certifies,
   * Bench times and the specs check results under the same posture.
   * A probe that A/Bs a conf sets it on the built session with
-  * `spark.conf.set` (see [[ConfProbe]]).
+  * `spark.conf.set` (see `graft.Measure conf`).
   */
 object GraftSession {
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.DataFrame
   *     that field is non-missing, m[l] ← Σ n·1[level=l]·p / Σ n·p and
   *     u[l] ← Σ n·1[level=l]·(1−p) / Σ n·(1−p) (R/linking.R:120-136);
   *   - fixed `maxiter`, no convergence test; per-iteration max-delta
-  *     trace (R/linking.R:137-140);
+  *     trace (R/linking.R:137-140), recorded as the largest |Δ|;
   *   - weights = log(m) − log(u) per field/level (R/linking.R:151).
   *
   * Intentional divergences from the reference (documented, SURVEY.md §3):
@@ -121,14 +121,20 @@ object EM {
     * behaviors.
     */
   def run(
-      patternCounts: Seq[Pattern],
+      patterns: Seq[Pattern],
       totalPairs: Double,
       uProbabilities: Map[String, Map[String, Double]],
       maxIter: Int = 10,
       uFloor: Double = 1e-9): EMResult = {
-    require(patternCounts.nonEmpty, "empty pattern-count table")
+    require(patterns.nonEmpty, "empty pattern-count table")
     val fields: Seq[String] =
-      patternCounts.head.levels.keys.toSeq.sorted
+      patterns.head.levels.keys.toSeq.sorted
+
+    // The M-step's floating-point sums run in pattern order, and the
+    // aggregate behind collectPatterns does not pin its row order; sort
+    // by level tuple (NULL first) so a fit is bit-reproducible.
+    import scala.math.Ordering.Implicits.seqOrdering
+    val patternCounts = patterns.sortBy(p => (fields.map(p.levels), p.n))
 
     // Levels from the data, sorted, NULL excluded (R/linking.R:82-86).
     val levels: Map[String, Seq[String]] = fields.map { f =>
@@ -200,10 +206,11 @@ object EM {
         (mb.result(), ub.result())
       }
 
+      // Largest |new − old| over all levels: a falling parameter counts.
       def maxDelta(a: Map[String, Map[String, Double]], b: Map[String, Map[String, Double]]): Double =
         a.flatMap { case (f, ls) =>
-          ls.flatMap { case (l, v) => b(f).get(l).map(v - _) }
-        }.foldLeft(Double.NegativeInfinity)(math.max)
+          ls.flatMap { case (l, v) => b(f).get(l).map(old => math.abs(v - old)) }
+        }.foldLeft(0.0)(math.max)
 
       trace += EMTrace(i, maxDelta(newM, m), maxDelta(newU, u), newLambda)
       m = newM

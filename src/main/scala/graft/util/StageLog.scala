@@ -2,11 +2,11 @@ package graft.util
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** The one per-stage evidence listener of the engine's mains
-  * ([[graft.Profile]], [[graft.ConfProbe]], [[graft.Sf10Probe]],
-  * [[graft.Sf10Sweep]]) — one implementation of the stage log, the job
-  * counter, the single-task-violation rule and the top-stage selection,
-  * so a metric fix lands in every probe at once.
+/** The one per-stage evidence listener of the engine's mains (every
+  * mode of [[graft.Measure]], through its query runner) — one
+  * implementation of the stage log, the job counter, the
+  * single-task-violation rule and the top-stage selection, so a metric
+  * fix lands in every probe at once.
   *
   * Metrics per completed stage: task count, WALL ms (submission →
   * completion — for a 1-task stage queued behind a saturated executor

@@ -143,4 +143,37 @@ class EMSpec extends SparkSpec {
     assert(broken.lambda < 1e-12,
       s"lambda should have collapsed far below the 6e-7 cross-space truth, got ${broken.lambda}")
   }
+
+  test("trace records the largest |delta|: a falling m counts") {
+    // u = the level frequencies, so the first M-step rescales m to
+    // m / sum(m) = (0.074, 0.333, 0.593) from the init (0.1, 0.45, 0.8):
+    // every level falls, c by 0.21, so the largest increase (-0.026)
+    // is not the largest change.
+    val patterns = Seq(pat("f", Some("a"), 200), pat("f", Some("b"), 300), pat("f", Some("c"), 500))
+    val u = Map("f" -> Map("a" -> 0.2, "b" -> 0.3, "c" -> 0.5))
+    val one = EM.run(patterns, totalPairs = 1000.0, uProbabilities = u, maxIter = 1)
+    val init = Map("a" -> 0.1, "b" -> 0.45, "c" -> 0.8)
+    val deltas = init.map { case (l, m0) => l -> (one.mProbabilities("f")(l) - m0) }
+    assert(deltas.values.forall(_ < 0), s"every m should fall: $deltas")
+    assert(math.abs(one.trace.head.maxDeltaM - deltas.values.map(math.abs).max) < 1e-12)
+    assert(one.trace.head.maxDeltaM > 0.2)
+  }
+
+  test("fit is bit-identical whatever order the patterns arrive in") {
+    val levels = Seq(None, Some("0"), Some("1"), Some("2"))
+    val patterns = for {
+      (x, i) <- levels.zipWithIndex
+      (y, j) <- levels.zipWithIndex
+      z <- Seq(Some("agree"), Some("disagree"))
+    } yield Pattern(Map("x" -> x, "y" -> y, "z" -> z),
+      1L + (i * 7919L + j * 104729L + (if (z.contains("agree")) 3L else 977L)) % 9973L)
+    val u = Map(
+      "x" -> Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
+      "y" -> Map("0" -> 0.7, "1" -> 0.2, "2" -> 0.1),
+      "z" -> Map("agree" -> 0.05, "disagree" -> 0.95))
+    val total = patterns.map(_.n).sum.toDouble
+    val fwd = EM.run(patterns, total, u, maxIter = 10)
+    assert(EM.run(patterns.reverse, total, u, maxIter = 10) == fwd)
+    assert(EM.run(new scala.util.Random(7).shuffle(patterns), total, u, maxIter = 10) == fwd)
+  }
 }
