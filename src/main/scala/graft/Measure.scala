@@ -56,8 +56,7 @@ object Measure {
 
   /** Runs registry queries in one session with a [[StageLog]] attached. */
   final class Runner(spark: SparkSession) {
-    val log = new StageLog
-    spark.sparkContext.addSparkListener(log)
+    val log = new StageLog(spark.sparkContext)
 
     /** One query run. A query that threw has `rows` −1 and its
       * exception's class in `err`; `plan` is its formatted physical
@@ -300,7 +299,7 @@ object Measure {
   /** The sf1 ladder's queries. Each comment states the query's growth
     * contract on the ×10 fixture, so a ratio can be judged against it.
     */
-  private val ScaleQueries = Seq(
+  private[graft] val ScaleQueries = Seq(
     "q_block_equi", "q_pairs_assembly", "q_pattern_counts", "q_scoring",
     "q_ngram_jaccard", "q_minhash_lsh", "q_simhash", "q_dedup_clusters",
     // round-5 operator families (documents/events-based):
@@ -576,6 +575,10 @@ object Measure {
     violations
   }
 
+  /** The sf10 rung's two query sets, see [[rung]]. */
+  private[graft] val RungDedupQueries = Seq("q_jaccard_prefix", "q_minhash_lsh", "q_winnow", "q_novelty")
+  private[graft] val RungLinkageQueries = Seq("q_block_equi", "q_pairs_assembly", "q_pattern_counts", "q_scoring")
+
   /** The sf10 rung: one decade past the sf1 ladder on the two flagship
     * families, with every stage in the artifact. Each query runs once,
     * cold (a warmup at 2B pairs would double a ~30-minute probe).
@@ -597,32 +600,12 @@ object Measure {
       val stages = r.stages.sortBy(_.id).map(_.json).mkString("[", ",", "]")
       f""""${r.q}":{"sec":${r.sec}%.1f,"rows":${r.rows},"stages":$stages${r.errJson}}"""
     }.mkString("{", ",", "}")
-    val dedup = runAll(Seq("q_jaccard_prefix", "q_minhash_lsh", "q_winnow", "q_novelty"), RungDedup.dir)
-    val linkage = runAll(Seq("q_block_equi", "q_pairs_assembly", "q_pattern_counts", "q_scoring"), RungPairs.dir)
+    val dedup = runAll(RungDedupQueries, RungDedup.dir)
+    val linkage = runAll(RungLinkageQueries, RungPairs.dir)
     val violations = (dedup ++ linkage).flatMap(_.violations)
     println(s"""{"metric":"sf10_probe","dedup_replicas":${RungDedup.replicas},"pairs_replicas":${RungPairs.replicas},"dedup_sf10":${fmt(dedup)},"linkage_2b_pairs":${fmt(linkage)},"single_task_violations":${jsonList(violations)}}""")
     violations
   }
-
-  /** sweep: query → (contract, where its scale evidence lives). The
-    * deliberately quadratic pair-contract queries grow pairs ∝
-    * replicas² under fixed-cardinality keys, 20B+ pairs at ×100, and
-    * the `rung` probe already covers them and the true-sf10 dedup
-    * flagships. Excluded rank slots are backfilled from the next-ranked
-    * queries, and the list is emitted so a skip is loud.
-    */
-  private val SweepExcluded: Map[String, String] = Map(
-    "q_block_equi" -> "pairs ∝ replicas² (fixed-cardinality keys): 2.076B-pair rung in SCALE_PROBE_r14",
-    "q_pairs_assembly" -> "pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14",
-    "q_pattern_counts" -> "pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14 + SPILL_PROBE_r15",
-    "q_scoring" -> "pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14",
-    "q_blocking_metrics" -> "same pair table as q_block_equi (pairs ∝ replicas²): covered by the 2B rung",
-    "q_semantic_decontaminate" -> "corpus×bench pairs ∝ replicas² by construction (both sides grow): sf1 ladder is its decade step",
-    "q_freq_weight" -> "acctbal key fixed ~110-value cardinality → pairs ∝ replicas² by construction: sf1 ladder is its decade step",
-    "q_jaccard_prefix" -> "already at TRUE sf10 in SCALE_PROBE_r14 (864.6 s, linear, 32-wide)",
-    "q_minhash_lsh" -> "already at TRUE sf10 in SCALE_PROBE_r14 (22.5 s)",
-    "q_winnow" -> "already at TRUE sf10 in SCALE_PROBE_r14 (30.0 s)",
-    "q_novelty" -> "already at TRUE sf10 in SCALE_PROBE_r14 (14.7 s)")
 
   /** Queries ranked by sf1 median cost from a committed bench artifact
     * (json4s ships with Spark).
@@ -644,15 +627,16 @@ object Measure {
 
   /** The sf10 top-`n` sweep: the `n` costliest queries of a committed
     * sf1 bench artifact (ranked at run time, not a hand list), minus
-    * [[SweepExcluded]], on the ×100 [[SweepFixture]], with each query's
-    * top 6 stages by max(wall, run) and every violating stage
-    * force-included. Streams one `[sweep]` line per query to stderr,
-    * so a crash keeps partial evidence, then one `sf10_sweep` line,
-    * committed as SCALE_SWEEP_r15.json.
+    * the queries tagged [[QueryTag.SweepExcluded]], on the ×100
+    * [[SweepFixture]], with each query's top 6 stages by max(wall, run)
+    * and every violating stage force-included. Streams one `[sweep]`
+    * line per query to stderr, so a crash keeps partial evidence, then
+    * one `sf10_sweep` line, committed as SCALE_SWEEP_r15.json.
     */
   private def sweep(spark: SparkSession, benchPath: String, topN: Int): Seq[String] = {
+    val excluded = SparkEntry.registry.flatMap(q => q.sweepExcluded.map(q.name -> _)).toMap
     val picked = rankedBySf1Cost(benchPath)
-      .filter { case (n, _) => SparkEntry.queries.contains(n) && !SweepExcluded.contains(n) }
+      .filter { case (n, _) => SparkEntry.queries.contains(n) && !excluded.contains(n) }
       .take(topN)
     build(spark, SweepFixture)
     val run = new Runner(spark)
@@ -664,7 +648,7 @@ object Measure {
       System.err.println(s"[sweep] $line")
       (r, line)
     }
-    val excl = SweepExcluded.map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }
+    val excl = excluded.map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }
       .mkString("{", ",", "}")
     val violations = runs.flatMap(_._1.violations)
     println(s"""{"metric":"sf10_sweep","replicas":${SweepFixture.replicas},"n":${runs.size},"queries":${runs.map(_._2).mkString("{", ",", "}")},"excluded":$excl,"single_task_violations":${jsonList(violations)}}""")

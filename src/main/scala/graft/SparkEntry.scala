@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryTag._
 import graft.linkage._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query surface — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is a named DataFrame program over the
-  * driver's parquet tables; [[oracleSql]] carries the equivalent DuckDB
-  * SQL. Column names are aligned on both sides (the driver sorts
-  * columns by name before hashing). All queries are deterministic:
-  * exact arithmetic (counts, integer-valued sums, single divisions)
-  * only — no order-dependent float accumulation.
+  * Every [[QueryDef]] in [[registry]] is a named DataFrame program over
+  * the parquet tables of an sf directory, with the equivalent DuckDB
+  * SQL and its tags. Column names are aligned on both sides (the
+  * compare sorts columns by name before hashing). All queries are
+  * deterministic: exact arithmetic (counts, integer-valued sums, single
+  * divisions) only — no order-dependent float accumulation.
   */
 object SparkEntry {
 
@@ -26,60 +27,13 @@ object SparkEntry {
     * q_lineitem_agg 0.48→0.80 s same-day A/B) with zero benefit. The
     * guard belongs where heavy NARROW compute follows the scan — the
     * `ensure` call sites in the query bodies and operator internals —
-    * and that placement is REGISTRY-GATED: every query in
-    * [[heavyScanQueries]] is spec-asserted (ParallelismSpec) to carry
+    * and that placement is REGISTRY-GATED: every query tagged
+    * [[QueryTag.HeavyScan]] is spec-asserted (ParallelismSpec) to carry
     * the repartition guard in its plan, so coverage is one audited
-    * list, not per-query whack-a-mole.
+    * tag, not per-query whack-a-mole.
     */
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Queries whose first stage does heavy PER-ROW compute on a fact
-    * scan (tokenize / shingle / hash / decode) — the shape the sf1 v8
-    * single-file layout serialized (q_bloom_index 224.4 s → 2.0 s
-    * once parallel). ParallelismSpec asserts each carries a
-    * `RepartitionOperation` guard in its logical plan against an
-    * under-parallel single-file dir; add new compute-heavy fact
-    * queries HERE and the spec enforces the guard.
-    */
-  val heavyScanQueries: Seq[String] = Seq(
-    "q_text_stats", "q_repetition", "q_bm25", "q_shards", "q_skipgram",
-    "q_bloom_index", "q_calibration", "q_winnow", "q_novelty",
-    "q_bpe_encode", "q_unigram_encode", "q_minhash_lsh", "q_jaccard_prefix",
-    "q_simhash", "q_rare_tokens",
-    // round-14 negative-control sweep finds (real per-row kernels the
-    // r12 hand-audit missed): rolling-hash CDC, the window chunker,
-    // and the WAV-decode+DFT pipeline
-    "q_cdc_chunks", "q_chunk_text", "q_audio_tone",
-    // round-15: the byte-gram builder (sequence-driven substr fan-out)
-    // caught by the sweep on first registration — the control working
-    "q_span_bytes")
-  // q_unigram_lm trains eagerly like q_bpe (localCheckpoint-fenced EM
-  // rounds) — its guard lives in bpeWords via the same scan helper the
-  // lazy q_unigram_encode plan exposes to the registry spec.
-  // q_bpe trains EAGERLY (driver-side merge loop over actions), so its
-  // returned frame no longer contains the corpus scan — its guard
-  // lives in bpeWords, the same code path q_bpe_encode's lazy plan
-  // exposes to the registry spec above.
-
-  /** Adjudicated exceptions to the round-14 negative-control sweep
-    * (ParallelismSpec): queries whose plan contains a heavy-kernel
-    * signature over an unguarded scan where the guard was DELIBERATELY
-    * omitted, each with its measured or structural rationale. Adding a
-    * name here instead of [[heavyScanQueries]] is an explicit audited
-    * decision, not a forgotten guard.
-    */
-  val heavyScanAdjudicated: Map[String, String] = Map(
-    "q_salted_join" -> ("salt explode feeds the shuffle join IMMEDIATELY — " +
-      "salting exists to shape that exchange; per-row work is one literal sequence"),
-    "q_bootstrap" -> ("sequence(1,16) is a bounded resample fan-out into an " +
-      "immediate 17-key hash agg — shuffle-bound, no per-row kernel"),
-    "q_data_mix" -> ("repeatByWeight's sequence(1,w<=3) duplicates rows into " +
-      "row-level output — no shuffle, no per-row compute beyond the copy"),
-    "q_overlap_join" -> ("sequence builds the interval cover-grid keys feeding " +
-      "the equi-join's exchange — join-bound by construction"),
-    "q_path_rollup" -> ("<=2-prefix sequence explode into the rollup hash agg; " +
-      "canonicalization is one codegen regex pass — agg-shuffle-bound"))
 
   /** Epoch-microseconds of an event-time column whatever the fixture's
     * physical type: NANOS-since-epoch BIGINT (parquet timestamp[ns]
@@ -4711,283 +4665,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     qPatternCounts(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lineitem_agg" -> (qLineitemAgg _),
-    "q_block_equi" -> (qBlockEqui _),
-    "q_block_predicate" -> (qBlockPredicate _),
-    "q_synthetic_id" -> (qSyntheticId _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_pairs_assembly" -> (qPairsAssembly _),
-    "q_pattern_counts" -> (qPatternCounts _),
-    "q_jw_levels" -> (qJwLevels _),
-    "q_u_probs" -> (qUProbs _),
-    "q_scoring" -> (qScoring _),
-    "q_window_fraction" -> (qWindowFraction _),
-    "q_quantiles" -> (qQuantiles _),
-    "q_rollup" -> (qRollup _),
-    "q_topk" -> (qTopK _),
-    "q_set_ops" -> (qSetOps _),
-    "q_na_safe_in" -> (qNaSafeIn _),
-    "q_stack_long" -> (qStackLong _),
-    "q_broadcast_lookup" -> (qBroadcastLookup _),
-    "q_partitioned_write" -> (qPartitionedWrite _),
-    "q_partition_overwrite" -> (qPartitionOverwrite _),
-    "q_range_pruned" -> (qRangePruned _),
-    "q_zorder_pruned" -> (qZorderPruned _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_jsonl_roundtrip" -> (qJsonlRoundtrip _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_tsv_roundtrip" -> (qTsvRoundtrip _),
-    "q_text_stats" -> (qTextStats _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_keeplist" -> (qDedupKeeplist _),
-    "q_repetition" -> (qRepetition _),
-    "q_hash_sample" -> (qHashSample _),
-    "q_rare_tokens" -> (qRareTokens _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_dedup_best" -> (qDedupBest _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_jaccard_exact" -> (qJaccardExact _),
-    "q_jaccard_prefix" -> (qJaccardPrefix _),
-    "q_jaccard_standing" -> (qJaccardStanding _),
-    "q_minhash_lsh" -> (qMinhashLsh _),
-    "q_stream_lsh" -> (qStreamLsh _),
-    "q_simhash" -> (qSimhash _),
-    "q_ann_topk" -> (qAnnTopK _),
-    "q_lsh_neardups" -> (qLshNearDups _),
-    "q_multimodal_stats" -> (qMultimodalStats _),
-    "q_event_window" -> (qEventWindow _),
-    "q_rename_join" -> (qRenameJoin _),
-    "q_date_exact" -> (qDateExact _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_band_join" -> (qBandJoin _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_ivf_topk" -> (qIvfTopK _),
-    "q_kmeans" -> (qKmeans _),
-    "q_pq_topk" -> (qPqTopK _),
-    "q_ivfpq_topk" -> (qIvfPqTopK _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_token_budget" -> (qTokenBudget _),
-    "q_leakage_split" -> (qLeakageSplit _),
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_distinctive_tokens" -> (qDistinctiveTokens _),
-    "q_oov_rate" -> (qOovRate _),
-    "q_auc" -> (qAuc _),
-    "q_ks_test" -> (qKsTest _),
-    "q_gini" -> (qGini _),
-    "q_t_closeness" -> (qTCloseness _),
-    "q_randomized_response" -> (qRandomizedResponse _),
-    "q_heaps" -> (qHeaps _),
-    "q_link_predict" -> (qLinkPredict _),
-    "q_prf1" -> (qPrf1 _),
-    "q_mcnemar" -> (qMcnemar _),
-    "q_odds_ratio" -> (qOddsRatio _),
-    "q_zipf" -> (qZipf _),
-    "q_semantic_decontaminate" -> (qSemanticDecontaminate _),
-    "q_rake" -> (qRake _),
-    "q_bootstrap" -> (qBootstrap _),
-    "q_confusion" -> (qConfusion _),
-    "q_class_balance" -> (qClassBalance _),
-    "q_rolling_median" -> (qRollingMedian _),
-    "q_theil_sen" -> (qTheilSen _),
-    "q_mutual_info" -> (qMutualInfo _),
-    "q_grid_cluster" -> (qGridCluster _),
-    "q_split_perplexity" -> (qSplitPerplexity _),
-    "q_ewma" -> (qEwma _),
-    "q_info_gain" -> (qInfoGain _),
-    "q_burstiness" -> (qBurstiness _),
-    "q_assortativity" -> (qAssortativity _),
-    "q_reciprocity" -> (qReciprocity _),
-    "q_srm" -> (qSrm _),
-    "q_cuped" -> (qCuped _),
-    "q_weighted_kappa" -> (qWeightedKappa _),
-    "q_dp_hist" -> (qDpHist _),
-    "q_funnel_time" -> (qFunnelTime _),
-    "q_quantile_norm" -> (qQuantileNorm _),
-    "q_langid_eval" -> (qLangidEval _),
-    "q_session_path" -> (qSessionPath _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_smoothed_rates" -> (qSmoothedRates _),
-    "q_seasonal_naive" -> (qSeasonalNaive _),
-    "q_dedup_capture" -> (qDedupCapture _),
-    "q_bloom_fpr" -> (qBloomFpr _),
-    "q_weekly_churn" -> (qWeeklyChurn _),
-    "q_lorenz" -> (qLorenz _),
-    "q_dup_rate" -> (qDupRate _),
-    "q_sql_functions" -> (qSqlFunctions _),
-    "q_two_table_link" -> (qTwoTableLink _),
-    "q_sessionize" -> (qSessionize _),
-    "q_grouped_topk" -> (qGroupedTopK _),
-    "q_decontaminate_filter" -> (qDecontaminateFilter _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_approx_quantiles" -> (qApproxQuantiles _),
-    "q_window_frame" -> (qWindowFrame _),
-    "q_redact_pii" -> (qRedactPii _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_top_ngrams" -> (qTopNgrams _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_bloom_semi_join" -> (qBloomSemiJoin _),
-    "q_pack_chunks" -> (qPackChunks _),
-    "q_pivot_wider" -> (qPivotWider _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_collect_set" -> (qCollectSet _),
-    "q_pagerank" -> (qPageRank _),
-    "q_edit_distance" -> (qEditDistance _),
-    "q_funnel" -> (qFunnel _),
-    "q_upsert" -> (qUpsert _),
-    "q_split" -> (qSplit _),
-    "q_data_mix" -> (qDataMix _),
-    "q_overlap_join" -> (qOverlapJoin _),
-    "q_triangles" -> (qTriangles _),
-    "q_transitions" -> (qTransitions _),
-    "q_ppr" -> (qPpr _),
-    "q_cube" -> (qCube _),
-    "q_bitmap_distinct" -> (qBitmapDistinct _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_quality_cutoff" -> (qQualityCutoff _),
-    "q_histogram" -> (qHistogram _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_compact" -> (qCompact _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_write_audit" -> (qWriteAudit _),
-    "q_unicode_norm" -> (qUnicodeNorm _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_key_skew" -> (qKeySkew _),
-    "q_bm25" -> (qBm25 _),
-    "q_grouped_heavy" -> (qGroupedHeavy _),
-    "q_hll_partial" -> (qHllPartial _),
-    "q_chunk_text" -> (qChunkText _),
-    "q_winnow" -> (qWinnow _),
-    "q_span_dedup" -> (qSpanDedup _),
-    "q_span_exact" -> (qSpanExact _),
-    "q_span_bytes" -> (qSpanBytes _),
-    "q_semantic_dedup" -> (qSemanticDedup _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_rank_functions" -> (qRankFunctions _),
-    "q_csv_roundtrip" -> (qCsvRoundtrip _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_outliers" -> (qOutliers _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_url_normalize" -> (qUrlNormalize _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_col_profile" -> (qColProfile _),
-    "q_bfs" -> (qBfs _),
-    "q_soundex" -> (qSoundex _),
-    "q_trend" -> (qTrend _),
-    "q_quarantine" -> (qQuarantine _),
-    "q_dense_ids" -> (qDenseIds _),
-    "q_scd2" -> (qScd2 _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_vocab" -> (qVocab _),
-    "q_range_lookup" -> (qRangeLookup _),
-    "q_resample" -> (qResample _),
-    "q_audio_stats" -> (qAudioStats _),
-    "q_lm_score" -> (qLmScore _),
-    "q_strip_html" -> (qStripHtml _),
-    "q_semdedup_keeper" -> (qSemdedupKeeper _),
-    "q_quantize_int8" -> (qQuantizeInt8 _),
-    "q_kcore" -> (qKcore _),
-    "q_entropy" -> (qEntropy _),
-    "q_freq_weight" -> (qFreqWeight _),
-    "q_apportion" -> (qApportion _),
-    "q_blocking_metrics" -> (qBlockingMetrics _),
-    "q_sssp" -> (qSssp _),
-    "q_retention" -> (qRetention _),
-    "q_range_frame" -> (qRangeFrame _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_interleave" -> (qInterleave _),
-    "q_encode" -> (qEncode _),
-    "q_copurchase" -> (qCopurchase _),
-    "q_file_stats" -> (qFileStats _),
-    "q_wau" -> (qWau _),
-    "q_hopping_window" -> (qHoppingWindow _),
-    "q_pop" -> (qPop _),
-    "q_tpch_q3" -> (qTpchQ3 _),
-    "q_mad" -> (qMad _),
-    "q_date_functions" -> (qDateFunctions _),
-    "q_pmi" -> (qPmi _),
-    "q_hits" -> (qHits _),
-    "q_streaks" -> (qStreaks _),
-    "q_corr" -> (qCorr _),
-    "q_lm_bigram" -> (qLmBigram _),
-    "q_js_drift" -> (qJsDrift _),
-    "q_corpus_split_qa" -> (qCorpusSplitQa _),
-    "q_bpe" -> (qBpe _),
-    "q_bpe_stats" -> (qBpeStats _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_unigram_lm" -> (qUnigramLm _),
-    "q_unigram_encode" -> (qUnigramEncode _),
-    "q_unigram_stats" -> (qUnigramStats _),
-    "q_pack_bpe" -> (qPackBpe _),
-    "q_epoch_shuffle" -> (qEpochShuffle _),
-    "q_incr_part" -> (qIncrPart _),
-    "q_incr_read" -> (qIncrRead _),
-    "q_containment" -> (qContainment _),
-    "q_skipgram" -> (qSkipgram _),
-    "q_ann_int8" -> (qAnnInt8 _),
-    "q_hamming_topk" -> (qHammingTopk _),
-    "q_hamming_neardups" -> (qHammingNeardups _),
-    "q_ndcg" -> (qNdcg _),
-    "q_cms" -> (qCms _),
-    "q_length_batches" -> (qLengthBatches _),
-    "q_autocorr" -> (qAutocorr _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_image_dhash" -> (qImageDhash _),
-    "q_image_neardups" -> (qImageNeardups _),
-    "q_seasonal" -> (qSeasonal _),
-    "q_bloom_index" -> (qBloomIndex _),
-    "q_novelty" -> (qNovelty _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_fk_integrity" -> (qFkIntegrity _),
-    "q_join_estimate" -> (qJoinEstimate _),
-    "q_equidepth" -> (qEquidepth _),
-    "q_benford" -> (qBenford _),
-    "q_image_clusters" -> (qImageClusters _),
-    "q_cusum" -> (qCusum _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_label_agreement" -> (qLabelAgreement _),
-    "q_l_diversity" -> (qLDiversity _),
-    "q_calibration" -> (qCalibration _),
-    "q_kappa" -> (qKappa _),
-    "q_cdc_chunks" -> (qCdcChunks _),
-    "q_audio_tone" -> (qAudioTone _),
-    "q_modularity" -> (qModularity _),
-    "q_cdc_neardups" -> (qCdcNeardups _),
-    "q_video_frames" -> (qVideoFrames _),
-    "q_zscore" -> (qZscore _),
-    "q_shards" -> (qShards _),
-    "q_golden" -> (qGolden _),
-    "q_attribution" -> (qAttribution _),
-    "q_minhash_recall" -> (qMinhashRecall _),
-    "q_decayed" -> (qDecayed _),
-    "q_chi_square" -> (qChiSquare _),
-    "q_tfidf" -> (qTfidf _),
-    "q_robust_z" -> (qRobustZ _),
-    "q_assoc_rules" -> (qAssocRules _),
-    "q_weighted_median" -> (qWeightedMedian _),
-    "q_rrf" -> (qRrf _),
-    "q_waterfall" -> (qWaterfall _),
-    "q_incr_lsh" -> (qIncrLsh _),
-    "q_temporal_bfs" -> (qTemporalBfs _),
-    "q_dup_evidence" -> (qDupEvidence _),
-    "q_dedup_curve" -> (qDedupCurve _),
-    "q_sorted_blocking" -> (qSortedBlocking _),
-    "q_rand_index" -> (qRandIndex _),
-    "q_ab_test" -> (qAbTest _),
-    "q_fd" -> (qFd _),
-    "q_survival" -> (qSurvival _),
-    "q_resample_linear" -> (qResampleLinear _),
-    "q_minmax" -> (qMinmax _),
-    "q_skyline" -> (qSkyline _),
-    "q_state_runs" -> (qStateRuns _),
-    "q_recs" -> (qRecs _),
-    "q_path_rollup" -> (qPathRollup _),
-    "q_tfidf_cosine" -> (qTfidfCosine _),
-  )
+  /** Name → build view of [[registry]]. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** Name → DuckDB SQL view of [[registry]]. */
+  lazy val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
+
   /** Shared oracle for q_jaccard_prefix / q_jaccard_standing: the full
     * uncapped co-occurrence join — both Spark paths must reproduce it
     * exactly (the prefix filter, fresh- or stale-ranked, is recall-free).
@@ -5013,23 +4697,28 @@ object SparkEntry {
        |  CAST(inter AS DOUBLE) / (size_a + size_b - inter) AS jaccard
        |FROM v WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= $JacMinJaccard""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_lineitem_agg" ->
+  /** One entry per implemented operator from SURVEY.md §2, each with
+    * its DuckDB SQL over the same parquet tables. Lazy: the oracle
+    * strings read vals defined anywhere in this object.
+    */
+  lazy val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_lineitem_agg", qLineitemAgg,
       """SELECT l_returnflag, l_linestatus,
         |  sum(l_quantity) AS sum_qty, count(*) AS n_rows, avg(l_quantity) AS avg_qty,
         |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_block_equi" -> customerBlockingOracle,
-    "q_block_predicate" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("q_block_equi", qBlockEqui, customerBlockingOracle,
+      SweepExcluded("pairs ∝ replicas² (fixed-cardinality keys): 2.076B-pair rung in SCALE_PROBE_r14")),
+    QueryDef("q_block_predicate", qBlockPredicate,
       """SELECT a.c_custkey AS c_custkey_left, b.c_custkey AS c_custkey_right
         |FROM customer a JOIN customer b
         |  ON abs(a.c_acctbal - b.c_acctbal) < 1000.0 AND a.c_custkey < b.c_custkey
-        |WHERE a.c_nationkey = 1 AND b.c_nationkey = 1""".stripMargin,
-    "q_synthetic_id" ->
+        |WHERE a.c_nationkey = 1 AND b.c_nationkey = 1""".stripMargin),
+    QueryDef("q_synthetic_id", qSyntheticId,
       """SELECT row_number() OVER (ORDER BY n_nationkey) AS synthetic_id,
         |       n_nationkey, n_name
-        |FROM nation""".stripMargin,
-    "q_pairs_assembly" ->
+        |FROM nation""".stripMargin),
+    QueryDef("q_pairs_assembly", qPairsAssembly,
       s"""WITH ids AS ($customerBlockingOracle)
          |SELECT ids.c_custkey_left, ids.c_custkey_right,
          |  a.c_name AS c_name_left, b.c_name AS c_name_right,
@@ -5037,7 +4726,8 @@ object SparkEntry {
          |FROM ids
          |LEFT JOIN customer a ON ids.c_custkey_left = a.c_custkey
          |LEFT JOIN customer b ON ids.c_custkey_right = b.c_custkey""".stripMargin,
-    "q_pattern_counts" ->
+      SweepExcluded("pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14")),
+    QueryDef("q_pattern_counts", qPatternCounts,
       s"""WITH ids AS ($customerBlockingOracle),
          |compared AS (
          |  SELECT $customerComparatorsSql
@@ -5047,7 +4737,8 @@ object SparkEntry {
          |)
          |SELECT c_nationkey, c_name, count(*) AS n FROM compared
          |GROUP BY c_nationkey, c_name""".stripMargin,
-    "q_jw_levels" ->
+      SweepExcluded("pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14 + SPILL_PROBE_r15")),
+    QueryDef("q_jw_levels", qJwLevels,
       """WITH pairs AS (
         |  SELECT a.p_name AS p_name_left, b.p_name AS p_name_right
         |  FROM part a JOIN part b ON a.p_brand = b.p_brand
@@ -5057,15 +4748,15 @@ object SparkEntry {
         |            WHEN jaro_winkler_similarity(p_name_left, p_name_right) > 0.85 THEN 'weak partial agreement'
         |            ELSE 'no agreement' END AS p_name,
         |       count(*) AS n
-        |FROM pairs GROUP BY 1""".stripMargin,
-    "q_u_probs" -> qUProbsOracle(
+        |FROM pairs GROUP BY 1""".stripMargin),
+    QueryDef("q_u_probs", qUProbs, qUProbsOracle(
       """CASE WHEN a.c_nationkey = b.c_nationkey THEN 'agree'
         |     WHEN a.c_nationkey <> b.c_nationkey THEN 'disagree' END AS c_nationkey,
         |CASE WHEN jaro_winkler_similarity(a.c_name, b.c_name) = 1 THEN 'full agreement'
         |     WHEN jaro_winkler_similarity(a.c_name, b.c_name) > 0.9 THEN 'strong partial agreement'
         |     WHEN jaro_winkler_similarity(a.c_name, b.c_name) > 0.85 THEN 'weak partial agreement'
-        |     ELSE 'no agreement' END AS c_name""".stripMargin),
-    "q_scoring" ->
+        |     ELSE 'no agreement' END AS c_name""".stripMargin)),
+    QueryDef("q_scoring", qScoring,
       s"""WITH ids AS ($customerBlockingOracle),
          |compared AS (
          |  SELECT ids.c_custkey_left, ids.c_custkey_right, $customerComparatorsSql
@@ -5080,25 +4771,26 @@ object SparkEntry {
          |)
          |SELECT c_custkey_left, c_custkey_right, round(weight, 6) AS weight
          |FROM scored WHERE weight > 2.5""".stripMargin,
-    "q_window_fraction" ->
+      SweepExcluded("pairs ∝ replicas²: 2.076B-pair rung in SCALE_PROBE_r14")),
+    QueryDef("q_window_fraction", qWindowFraction,
       """SELECT event_type, count(*) AS n,
         |       count(*) / (sum(count(*)) OVER () + 0.0) AS p
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_quantiles" ->
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("q_quantiles", qQuantiles,
       """SELECT l_returnflag,
         |  round(quantile_cont(l_quantity, 0.25), 6) AS p25_qty,
         |  round(quantile_cont(l_quantity, 0.5), 6) AS p50_qty,
         |  round(quantile_cont(l_quantity, 0.75), 6) AS p75_qty,
         |  round(quantile_cont(l_extendedprice, 0.5), 6) AS p50_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_rollup" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QueryDef("q_rollup", qRollup,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_topk" ->
+        |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin),
+    QueryDef("q_topk", qTopK,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-    "q_set_ops" ->
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100""".stripMargin),
+    QueryDef("q_set_ops", qSetOps,
       """SELECT c_nationkey, 'both' AS tag FROM (
         |  SELECT DISTINCT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |  INTERSECT
@@ -5107,64 +4799,64 @@ object SparkEntry {
         |SELECT c_nationkey, 'building_only' AS tag FROM (
         |  SELECT DISTINCT c_nationkey FROM customer WHERE c_mktsegment = 'BUILDING'
         |  EXCEPT
-        |  SELECT DISTINCT c_nationkey FROM customer WHERE c_mktsegment = 'MACHINERY')""".stripMargin,
-    "q_na_safe_in" ->
+        |  SELECT DISTINCT c_nationkey FROM customer WHERE c_mktsegment = 'MACHINERY')""".stripMargin),
+    QueryDef("q_na_safe_in", qNaSafeIn,
       """SELECT CASE WHEN NOT coalesce(nullif(o_orderstatus, 'P') IN ('O', 'F'), false)
         |            THEN 'na_or_other' ELSE 'known' END AS flag,
         |       count(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_stack_long" ->
+        |FROM orders GROUP BY 1""".stripMargin),
+    QueryDef("q_stack_long", qStackLong,
       """WITH longf AS (
         |  SELECT 'o_orderstatus' AS name, o_orderstatus AS value FROM orders
         |  UNION ALL
         |  SELECT 'o_orderpriority', o_orderpriority FROM orders)
-        |SELECT name, value, count(*) AS n FROM longf GROUP BY name, value""".stripMargin,
-    "q_broadcast_lookup" ->
+        |SELECT name, value, count(*) AS n FROM longf GROUP BY name, value""".stripMargin),
+    QueryDef("q_broadcast_lookup", qBroadcastLookup,
       """SELECT CASE l_returnflag WHEN 'A' THEN 'returned' WHEN 'N' THEN 'active'
         |            WHEN 'R' THEN 'refunded' END AS label,
         |       count(*) AS n, sum(l_quantity) AS sum_qty
         |FROM lineitem WHERE l_returnflag IN ('A', 'N', 'R')
-        |GROUP BY 1""".stripMargin,
-    "q_partitioned_write" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_partitioned_write", qPartitionedWrite,
       """SELECT o_orderpriority, count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "q_partition_overwrite" ->
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_partition_overwrite", qPartitionOverwrite,
       """SELECT o_orderpriority, count(*) AS n, min(o_orderkey) AS min_key
         |FROM orders
         |WHERE o_orderpriority <> '1-URGENT' OR o_orderkey % 2 = 0
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_range_pruned" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_range_pruned", qRangePruned,
       """SELECT count(*) AS n, sum(l_quantity) AS sum_qty,
         |       min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-        |FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 2000""".stripMargin,
-    "q_zorder_pruned" ->
+        |FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 2000""".stripMargin),
+    QueryDef("q_zorder_pruned", qZorderPruned,
       """SELECT count(*) AS n, sum(l_quantity) AS sum_qty,
         |       min(l_orderkey) AS min_ok, max(l_partkey) AS max_pk
         |FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 3000
-        |  AND l_partkey BETWEEN 100 AND 900""".stripMargin,
-    "q_jsonl_roundtrip" ->
+        |  AND l_partkey BETWEEN 100 AND 900""".stripMargin),
+    QueryDef("q_jsonl_roundtrip", qJsonlRoundtrip,
       """SELECT count(*) AS n, min(doc_id) AS min_id, max(doc_id) AS max_id,
         |       CAST(sum(length(text)) AS BIGINT) AS sum_chars
-        |FROM documents""".stripMargin,
-    "q_orc_roundtrip" ->
+        |FROM documents""".stripMargin),
+    QueryDef("q_orc_roundtrip", qOrcRoundtrip,
       """SELECT o_orderpriority, count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
         |       CAST(sum(o_custkey) AS BIGINT) AS sum_cust
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q_write_audit" ->
+        |FROM orders GROUP BY 1""".stripMargin),
+    QueryDef("q_write_audit", qWriteAudit,
       """SELECT count(*) AS n_rows,
         |       CAST(coalesce(bit_xor(CAST(('0x' || substr(md5(concat_ws(chr(1),
         |         coalesce(CAST(o_orderkey AS VARCHAR), chr(2)),
         |         coalesce(CAST(o_custkey AS VARCHAR), chr(2)),
         |         coalesce(o_orderpriority, chr(2)))), 1, 15)) AS BIGINT)), 0) AS BIGINT) AS checksum
-        |FROM orders""".stripMargin,
-    "q_bucketed_join" ->
+        |FROM orders""".stripMargin),
+    QueryDef("q_bucketed_join", qBucketedJoin,
       """SELECT c.c_mktsegment, count(*) AS n,
         |       min(o.o_totalprice) AS min_price, max(o.o_totalprice) AS max_price
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-    "q_ann_recall" -> {
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_ann_recall", qAnnRecall, {
       val cos = graft.ops.Similarity.cosineSql("a.v", "c.v", EmbDim)
       val cosJ = graft.ops.Similarity.cosineSql("ea.v", "eb.v", EmbDim)
       val tablesSql = (0 until RecallTables).map { t =>
@@ -5194,13 +4886,13 @@ object SparkEntry {
          |x AS (SELECT count(*) AS n_exact FROM exact)
          |SELECT x.n_exact, f.n_found, CAST(f.n_found AS DOUBLE) / x.n_exact AS recall
          |FROM x, f""".stripMargin
-    },
-    "q_tsv_roundtrip" ->
+    }),
+    QueryDef("q_tsv_roundtrip", qTsvRoundtrip,
       """SELECT event_type, count(*) AS n,
         |       min(event_id) AS min_id, max(event_id) AS max_id,
         |       min(value) AS min_value, max(value) AS max_value
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q_text_stats" -> {
+        |FROM events GROUP BY event_type""".stripMargin),
+    QueryDef("q_text_stats", qTextStats, {
       val stop = graft.ops.TextAnalysis.DefaultStopwords.map(s => s"'$s'").mkString(", ")
       s"""SELECT doc_id,
          |  length(text) AS n_chars,
@@ -5212,14 +4904,14 @@ object SparkEntry {
          |  ${graft.ops.TextAnalysis.languageIdSql("text")} AS lang_id,
          |  ${graft.ops.TextAnalysis.fingerprintSql("text")} AS fingerprint
          |FROM documents""".stripMargin
-    },
-    "q_dedup_exact" ->
-      "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique FROM documents",
-    "q_dedup_keeplist" ->
+    }, HeavyScan),
+    QueryDef("q_dedup_exact", qDedupExact,
+      "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique FROM documents"),
+    QueryDef("q_dedup_keeplist", qDedupKeeplist,
       """SELECT doc_id, md5(text) AS digest,
         |  (doc_id = min(doc_id) OVER (PARTITION BY md5(text))) AS keep
-        |FROM documents""".stripMargin,
-    "q_repetition" -> {
+        |FROM documents""".stripMargin),
+    QueryDef("q_repetition", qRepetition, {
       val top = "list_max(list_transform(list_distinct(t), x -> len(list_filter(t, y -> y = x))))"
       s"""SELECT doc_id,
          |  len(t) AS n_tokens,
@@ -5230,11 +4922,11 @@ object SparkEntry {
          |FROM (SELECT doc_id, string_split(text, ' ') AS t,
          |        ${graft.ops.Dedup.shinglesSql("text", 2)} AS shl
          |      FROM documents)""".stripMargin
-    },
-    "q_hash_sample" ->
+    }, HeavyScan),
+    QueryDef("q_hash_sample", qHashSample,
       s"""SELECT doc_id FROM documents
-         |WHERE ${graft.ops.Sampling.hashBucketSql("doc_id")} < 100""".stripMargin,
-    "q_rare_tokens" ->
+         |WHERE ${graft.ops.Sampling.hashBucketSql("doc_id")} < 100""".stripMargin),
+    QueryDef("q_rare_tokens", qRareTokens,
       """WITH e AS (
         |  SELECT doc_id, u.w AS token
         |  FROM documents, unnest(string_split(text, ' ')) AS u(w)),
@@ -5242,8 +4934,8 @@ object SparkEntry {
         |dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token)
         |SELECT doc_id, token, tf, df
         |FROM tf JOIN dfreq USING (token)
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY df, token) <= 3""".stripMargin,
-    "q_decontaminate" ->
+        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY df, token) <= 3""".stripMargin, HeavyScan),
+    QueryDef("q_decontaminate", qDecontaminate,
       s"""WITH bsh AS (
          |  SELECT DISTINCT u.sh
          |  FROM (SELECT list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
@@ -5258,8 +4950,8 @@ object SparkEntry {
          |SELECT doc_id, n_shingles, count(*) AS n_overlap
          |FROM csh JOIN bsh USING (sh)
          |GROUP BY doc_id, n_shingles
-         |HAVING count(*) >= 5""".stripMargin,
-    "q_dedup_best" ->
+         |HAVING count(*) >= 5""".stripMargin),
+    QueryDef("q_dedup_best", qDedupBest,
       s"""WITH RECURSIVE ${minhashCandCtes(8, 4, Some(LshCap))},
          |edges AS (
          |  SELECT id_a AS a, id_b AS b FROM cand
@@ -5272,8 +4964,8 @@ object SparkEntry {
          |SELECT l.id AS doc_id, l.cluster_id,
          |  (row_number() OVER (PARTITION BY l.cluster_id
          |                      ORDER BY length(d.text) DESC, l.id) = 1) AS keep
-         |FROM lab l JOIN documents d ON l.id = d.doc_id""".stripMargin,
-    "q_ngram_jaccard" ->
+         |FROM lab l JOIN documents d ON l.id = d.doc_id""".stripMargin),
+    QueryDef("q_ngram_jaccard", qNgramJaccard,
       s"""WITH ${minhashCandCtes(jacK, jacBands, Some(LshCap))},
          |v AS (
          |  SELECT c.id_a, c.id_b,
@@ -5284,8 +4976,8 @@ object SparkEntry {
          |  JOIN shf sb ON c.id_b = sb.doc_id)
          |SELECT id_a, id_b, inter, size_a, size_b,
          |  CAST(inter AS DOUBLE) / (size_a + size_b - inter) AS jaccard
-         |FROM v WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= $JacMinJaccard""".stripMargin,
-    "q_jaccard_exact" ->
+         |FROM v WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= $JacMinJaccard""".stripMargin),
+    QueryDef("q_jaccard_exact", qJaccardExact,
       s"""WITH sh AS (
          |  SELECT doc_id, list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
          |  FROM documents),
@@ -5305,18 +4997,20 @@ object SparkEntry {
          |  JOIN shf sb ON co.id_b = sb.doc_id)
          |SELECT id_a, id_b, inter, size_a, size_b,
          |  CAST(inter AS DOUBLE) / (size_a + size_b - inter) AS jaccard
-         |FROM v WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= $JacMinJaccard""".stripMargin,
-    "q_jaccard_prefix" -> jaccardPrefixOracleSql,
+         |FROM v WHERE CAST(inter AS DOUBLE) / (size_a + size_b - inter) >= $JacMinJaccard""".stripMargin),
+    QueryDef("q_jaccard_prefix", qJaccardPrefix, jaccardPrefixOracleSql, HeavyScan,
+      SweepExcluded("already at TRUE sf10 in SCALE_PROBE_r14 (864.6 s, linear, 32-wide)")),
     // Same oracle by design: a stale frequency snapshot reorders the
     // prefix, never the verified result (see qJaccardStanding).
-    "q_jaccard_standing" -> jaccardPrefixOracleSql,
-    "q_minhash_lsh" ->
-      s"WITH ${minhashCandCtes(8, 4, Some(LshCap))} SELECT id_a, id_b FROM cand",
+    QueryDef("q_jaccard_standing", qJaccardStanding, jaccardPrefixOracleSql),
+    QueryDef("q_minhash_lsh", qMinhashLsh,
+      s"WITH ${minhashCandCtes(8, 4, Some(LshCap))} SELECT id_a, id_b FROM cand", HeavyScan,
+      SweepExcluded("already at TRUE sf10 in SCALE_PROBE_r14 (22.5 s)")),
     // Stream ≡ batch: the accumulated streaming sink must equal the
     // batch LSH candidate set (same corpus, same params, cap untripped).
-    "q_stream_lsh" ->
-      s"WITH ${minhashCandCtes(8, 4, Some(LshCap))} SELECT id_a, id_b FROM cand",
-    "q_dedup_clusters" ->
+    QueryDef("q_stream_lsh", qStreamLsh,
+      s"WITH ${minhashCandCtes(8, 4, Some(LshCap))} SELECT id_a, id_b FROM cand"),
+    QueryDef("q_dedup_clusters", qDedupClusters,
       s"""WITH RECURSIVE ${minhashCandCtes(8, 4, Some(LshCap))},
          |edges AS (
          |  SELECT id_a AS a, id_b AS b FROM cand
@@ -5326,12 +5020,12 @@ object SparkEntry {
          |  UNION
          |  SELECT e.b AS id, reach.r FROM reach JOIN edges e ON reach.id = e.a)
          |SELECT id AS doc_id, min(r) AS cluster_id, (min(r) = id) AS keep
-         |FROM reach GROUP BY id""".stripMargin,
-    "q_simhash" ->
+         |FROM reach GROUP BY id""".stripMargin),
+    QueryDef("q_simhash", qSimhash,
       s"""WITH ${graft.ops.Dedup.simhashFpCtesSql("documents", "doc_id", "text", 60)},
          |${graft.ops.Dedup.simhashPairsSql(5, 60, Some(LshCap))}
-         |SELECT id_a, id_b, hamming FROM pairs""".stripMargin,
-    "q_ann_topk" ->
+         |SELECT id_a, id_b, hamming FROM pairs""".stripMargin, HeavyScan),
+    QueryDef("q_ann_topk", qAnnTopK,
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
          |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
          |sim AS (
@@ -5339,8 +5033,8 @@ object SparkEntry {
          |    round(${graft.ops.Similarity.cosineSql("qv", "cv", EmbDim)}, 6) AS cosine
          |  FROM q, c WHERE query_id <> neighbor_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM sim)
-         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5""".stripMargin,
-    "q_lsh_neardups" ->
+         |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5""".stripMargin),
+    QueryDef("q_lsh_neardups", qLshNearDups,
       s"""WITH b0 AS (
          |  SELECT vec_id AS id, embedding AS v,
          |    ${graft.ops.Similarity.lshBucketSql("embedding", EmbDim, 8)} AS bucket
@@ -5351,47 +5045,49 @@ object SparkEntry {
          |    round(${graft.ops.Similarity.cosineSql("a.v", "c.v", EmbDim)}, 6) AS cosine
          |  FROM b a JOIN b c ON a.bucket = c.bucket
          |  WHERE a.id < c.id)
-         |SELECT * FROM pairs WHERE cosine >= 0.4""".stripMargin,
-    "q_multimodal_stats" ->
+         |SELECT * FROM pairs WHERE cosine >= 0.4""".stripMargin),
+    QueryDef("q_multimodal_stats", qMultimodalStats,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
         |  md5(text) AS digest,
         |  CAST(ord(substr(text, 1, 1)) AS BIGINT) AS first_byte
-        |FROM documents""".stripMargin,
-    "q_event_window" ->
+        |FROM documents""".stripMargin),
+    QueryDef("q_event_window", qEventWindow,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
         |       event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_rename_join" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_rename_join", qRenameJoin,
       """SELECT o.o_orderkey, o.o_custkey, c.c_name, c.c_mktsegment
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin,
-    "q_date_exact" ->
+        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin),
+    QueryDef("q_date_exact", qDateExact,
       """SELECT CASE WHEN a.o_orderdate = b.o_orderdate THEN 'agree' ELSE 'disagree' END AS date_cmp,
         |       count(*) AS n
         |FROM orders a JOIN orders b
         |  ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "q_asof_join" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_asof_join", qAsofJoin,
       """WITH r AS (
         |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey,
         |         arg_max(o_totalprice, o_orderkey) AS o_totalprice
         |  FROM orders WHERE o_custkey % 3 <> 0 GROUP BY 1, 2)
         |SELECT e.event_id, e.user_id, r.o_orderkey, r.o_totalprice
         |FROM events e ASOF LEFT JOIN r
-        |  ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate""".stripMargin,
-    "q_band_join" ->
+        |  ON e.user_id = r.o_custkey AND e.ts >= r.o_orderdate""".stripMargin),
+    QueryDef("q_band_join", qBandJoin,
       """SELECT a.user_id, a.event_id AS event_id_a, b.event_id AS event_id_b,
         |       a.event_type AS type_a, b.event_type AS type_b,
         |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        | AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 3600000000""".stripMargin,
-    "q_salted_join" ->
+        | AND abs(epoch_us(a.ts) - epoch_us(b.ts)) <= 3600000000""".stripMargin),
+    QueryDef("q_salted_join", qSaltedJoin,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |       min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1""".stripMargin,
-    "q_ivf_topk" ->
+      HeavyScanAdjudicated("salt explode feeds the shuffle join IMMEDIATELY — " +
+        "salting exists to shape that exchange; per-row work is one literal sequence")),
+    QueryDef("q_ivf_topk", qIvfTopK,
       s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
          |assign AS (
          |  SELECT e.vec_id AS id, e.embedding AS ev, c.cid
@@ -5410,37 +5106,37 @@ object SparkEntry {
          |SELECT query_id, neighbor_id, cosine, rank FROM (
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY cosine DESC, neighbor_id) AS rank FROM sim)
-         |WHERE rank <= 5""".stripMargin,
+         |WHERE rank <= 5""".stripMargin),
     // K-means mirror: the same quantize → argmin → truncating-mean
     // rounds as a MATERIALIZED CTE pyramid; every integer is exact in
     // both engines, so 3 chained rounds stay hash-identical.
-    "q_kmeans" ->
+    QueryDef("q_kmeans", qKmeans,
       s"""WITH ${graft.ops.Similarity.kmeansMicroSqlCtes(
             "embeddings", "vec_id", "embedding", 8, EmbDim, 3)}
-         |SELECT cid, pos, c_micro, n_members FROM km""".stripMargin,
+         |SELECT cid, pos, c_micro, n_members FROM km""".stripMargin),
     // PQ mirror: per-subspace codebook pyramids + the same argmin
     // encode and integer ADC sum; ranks tie-broken (dist, id).
-    "q_pq_topk" -> graft.ops.Similarity.pqOracleSql(
+    QueryDef("q_pq_topk", qPqTopK, graft.ops.Similarity.pqOracleSql(
       "embeddings", "vec_id", "embedding",
-      dim = EmbDim, m = 4, ksub = 4, rounds = 2, nQueries = 8, k = 5),
+      dim = EmbDim, m = 4, ksub = 4, rounds = 2, nQueries = 8, k = 5)),
     // IVF-PQ mirror: coarse-router pyramid + (dist, cid) probe lists
     // + the PQ encode chain, ADC restricted to probed lists.
-    "q_ivfpq_topk" -> graft.ops.Similarity.ivfPqOracleSql(
+    QueryDef("q_ivfpq_topk", qIvfPqTopK, graft.ops.Similarity.ivfPqOracleSql(
       "embeddings", "vec_id", "embedding",
       dim = EmbDim, kCoarse = 8, coarseRounds = 2, nprobe = 3,
-      m = 4, ksub = 4, rounds = 2, nQueries = 8, k = 5),
+      m = 4, ksub = 4, rounds = 2, nQueries = 8, k = 5)),
     // Anti-join mirror: the NOT EXISTS form of the same orphan set.
-    "q_anti_join" ->
+    QueryDef("q_anti_join", qAntiJoin,
       """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_customers_no_orders,
         |       min(c_custkey) AS min_custkey, max(c_custkey) AS max_custkey
         |FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o
         |                  WHERE o.o_custkey = c.c_custkey
         |                    AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // Token-budget mirror: same distinct-ratio quality, same
     // (q DESC, doc_id) prefix sum, same 2/5 integer budget.
-    "q_token_budget" ->
+    QueryDef("q_token_budget", qTokenBudget,
       """WITH tq AS (
         |  SELECT doc_id, source, ts FROM (
         |    SELECT doc_id, source,
@@ -5460,11 +5156,11 @@ object SparkEntry {
         |  tt AS total_tokens, (tt * 2) // 5 AS budget_tokens,
         |  CAST(sum(CASE WHEN cum <= (tt * 2) // 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  CAST(sum(CASE WHEN cum <= (tt * 2) // 5 THEN n_toks ELSE 0 END) AS BIGINT) AS kept_tokens
-        |FROM rk GROUP BY source, tt""".stripMargin,
+        |FROM rk GROUP BY source, tt""".stripMargin),
     // Leakage-split mirror: the q_dedup_clusters CC chain, then the
     // hashBucket split keyed on cluster_id and the spanning-cluster
     // tally (0 by construction — the guard the row certifies).
-    "q_leakage_split" ->
+    QueryDef("q_leakage_split", qLeakageSplit,
       s"""WITH RECURSIVE ${minhashCandCtes(8, 4, Some(LshCap))},
          |edges AS (
          |  SELECT id_a AS a, id_b AS b FROM cand
@@ -5488,10 +5184,10 @@ object SparkEntry {
          |SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(count(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
          |  leak.n_leaky AS n_leaky_clusters
-         |FROM sp, leak GROUP BY 1, leak.n_leaky""".stripMargin,
+         |FROM sp, leak GROUP BY 1, leak.n_leaky""".stripMargin),
     // Source-overlap mirror: same distinct (source, shingle) sets,
     // same shingle-keyed pair counts, same exact Jaccard ppm.
-    "q_source_overlap" ->
+    QueryDef("q_source_overlap", qSourceOverlap,
       s"""WITH sh AS (
          |  SELECT DISTINCT source AS g, u.sh
          |  FROM (SELECT source, ${graft.ops.Dedup.shinglesSql("text", 3)} AS shs
@@ -5504,10 +5200,10 @@ object SparkEntry {
          |SELECT p.src_a, p.src_b, p.n_shared,
          |  CAST((p.n_shared * 1000000) // (sa.n + sb.n - p.n_shared) AS BIGINT) AS jaccard_ppm
          |FROM p JOIN sz sa ON sa.g = p.src_a
-         |       JOIN sz sb ON sb.g = p.src_b""".stripMargin,
+         |       JOIN sz sb ON sb.g = p.src_b""".stripMargin),
     // Distinctive-tokens mirror: same counts, same HUGEINT lift with
     // +1 smoothing, same (lift DESC, token) top-5 per source.
-    "q_distinctive_tokens" ->
+    QueryDef("q_distinctive_tokens", qDistinctiveTokens,
       """WITH tk AS (
         |  SELECT source AS g, u.tok FROM (
         |    SELECT source, list_filter(string_split(text, ' '), x -> x <> '') AS ts
@@ -5526,10 +5222,10 @@ object SparkEntry {
         |       FROM sc)
         |SELECT g AS source, tok, c_gt AS n_in_group, lift_ppm,
         |       CAST(rnk AS BIGINT) AS rank
-        |FROM rk WHERE rnk <= 5""".stripMargin,
+        |FROM rk WHERE rnk <= 5""".stripMargin),
     // OOV mirror: same hashBucket split, same train vocab left join,
     // same exact ppm.
-    "q_oov_rate" ->
+    QueryDef("q_oov_rate", qOovRate,
       s"""WITH sp AS (
          |  SELECT doc_id, text,
          |    CASE WHEN b < 800 THEN 'train' WHEN b < 900 THEN 'val'
@@ -5549,10 +5245,10 @@ object SparkEntry {
          |  CAST(count(DISTINCT tok) AS BIGINT) AS n_types,
          |  CAST(count(DISTINCT CASE WHEN NOT seen THEN tok END) AS BIGINT) AS n_oov_types,
          |  CAST((sum(CASE WHEN NOT seen THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT) AS oov_ppm
-         |FROM j GROUP BY 1""".stripMargin,
+         |FROM j GROUP BY 1""".stripMargin),
     // AUC mirror: same md5 channels as q_calibration, same per-score
     // counts, same doubled-U rank-sum in HUGEINT, floor-ppm out.
-    "q_auc" ->
+    QueryDef("q_auc", qAuc,
       """WITH sc AS (
         |  SELECT CAST(('0x' || substr(md5('cal:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS s,
         |         CAST(('0x' || substr(md5('coin:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
@@ -5571,10 +5267,10 @@ object SparkEntry {
         |       CAST(q AS BIGINT) AS n_neg,
         |       CASE WHEN p * q = 0 THEN NULL
         |            ELSE CAST((u2 * 1000000) // (2 * p * q) AS BIGINT) END AS auc_ppm
-        |FROM u""".stripMargin,
+        |FROM u""".stripMargin),
     // KS mirror: same banded supports, same full-outer merge, same
     // cumulative floor-ppm ECDFs, max-D with min-v tie-break.
-    "q_ks_test" ->
+    QueryDef("q_ks_test", qKsTest,
       """WITH a AS (SELECT n_chars // 10 AS v FROM documents WHERE lang = 'en'),
         |b AS (SELECT n_chars // 10 AS v FROM documents WHERE lang = 'zh'),
         |ca AS (SELECT v, CAST(count(*) AS BIGINT) AS na FROM a GROUP BY 1),
@@ -5592,10 +5288,10 @@ object SparkEntry {
         |mx AS (SELECT max(dv) AS d_ppm FROM d)
         |SELECT t.ta AS n_a, t.tb AS n_b, CAST(mx.d_ppm AS BIGINT) AS d_ppm,
         |       (SELECT min(v) FROM d WHERE d.dv = mx.d_ppm) AS at_v
-        |FROM t, mx""".stripMargin,
+        |FROM t, mx""".stripMargin),
     // Gini mirror: same (weight, key) rank order, same rearrangement
     // identity in HUGEINT, same floor-ppm out.
-    "q_gini" ->
+    QueryDef("q_gini", qGini,
       """WITH k AS (SELECT source AS k, CAST(sum(n_chars) AS BIGINT) AS w
         |           FROM documents GROUP BY 1),
         |r AS (SELECT w, row_number() OVER (ORDER BY w, k) AS i FROM k),
@@ -5608,11 +5304,11 @@ object SparkEntry {
         |       ELSE CAST(((2 * iw - (n + 1) * s) * 1000000) // (n * s) AS BIGINT) END AS gini_ppm,
         |  CASE WHEN s = 0 THEN NULL
         |       ELSE CAST((mx * 1000000) // s AS BIGINT) END AS top_share_ppm
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // Link-prediction mirror: same canonical edge set, same hub-cap
     // on wedge middles, same anti join and (n_common DESC, u, v)
     // total order.
-    "q_link_predict" ->
+    QueryDef("q_link_predict", qLinkPredict,
       """WITH raw AS (
         |  SELECT o_orderkey % 1500 AS a, o_custkey % 1500 AS b FROM orders),
         |e AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
@@ -5631,16 +5327,16 @@ object SparkEntry {
         |SELECT u, v, n_common, pa_score,
         |       CAST(row_number() OVER (ORDER BY n_common DESC, u, v) AS BIGINT) AS rank
         |FROM sc
-        |QUALIFY rank <= 50""".stripMargin,
+        |QUALIFY rank <= 50""".stripMargin),
     // Heaps mirror: same stream indices, same bin-length bands, same
     // cumulative windows.
-    "q_heaps" ->
+    QueryDef("q_heaps", qHeaps,
       s"""WITH ${graft.ops.TextAnalysis.heapsLawSqlCtes(
             "documents", "doc_id", "text", 8192)}
-         |SELECT band, n_tokens, n_types, type_token_ppm FROM heaps""".stripMargin,
+         |SELECT band, n_tokens, n_types, type_token_ppm FROM heaps""".stripMargin),
     // Randomized-response mirror: same md5 coin, same XOR report,
     // same remainder-subtraction debias (est may leave [0, 1e6]).
-    "q_randomized_response" ->
+    QueryDef("q_randomized_response", qRandomizedResponse,
       """WITH r AS (
         |  SELECT c_mktsegment AS g,
         |         ((c_acctbal < 0) <>
@@ -5654,10 +5350,10 @@ object SparkEntry {
         |SELECT g, n, n_reported, obs_ppm,
         |  CAST((((obs_ppm - 250000) * 1000000
         |         - ((obs_ppm - 250000) * 1000000) % 500000) // 500000) AS BIGINT) AS est_ppm
-        |FROM o""".stripMargin,
+        |FROM o""".stripMargin),
     // T-closeness mirror: same class×category grid, same cumulative
     // floor-ppm distributions, same integral EMD.
-    "q_t_closeness" ->
+    QueryDef("q_t_closeness", qTCloseness,
       """WITH k AS (SELECT c_nationkey AS q0, c_mktsegment AS q1,
         |                  CAST(floor(c_acctbal / 1000) AS BIGINT) AS c
         |           FROM customer),
@@ -5682,10 +5378,10 @@ object SparkEntry {
         |SELECT q0, q1, class_size,
         |       CAST(sum(abs(cppm - gppm)) AS BIGINT) // (max(m) - 1) AS emd_ppm,
         |       (CAST(sum(abs(cppm - gppm)) AS BIGINT) // (max(m) - 1)) > 200000 AS risky
-        |FROM cum GROUP BY 1, 2, 3""".stripMargin,
+        |FROM cum GROUP BY 1, 2, 3""".stripMargin),
     // PRF1 mirror: same md5 channels, same threshold explode, same
     // single-division floor-ppm precision/recall/F1.
-    "q_prf1" ->
+    QueryDef("q_prf1", qPrf1,
       """WITH sc AS (
         |  SELECT CAST(('0x' || substr(md5('cal:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS s,
         |         CAST(('0x' || substr(md5('coin:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
@@ -5702,10 +5398,10 @@ object SparkEntry {
         |  CASE WHEN tp + fp = 0 THEN NULL ELSE CAST((tp * 1000000) // (tp + fp) AS BIGINT) END AS precision_ppm,
         |  CASE WHEN tp + fn = 0 THEN NULL ELSE CAST((tp * 1000000) // (tp + fn) AS BIGINT) END AS recall_ppm,
         |  CASE WHEN 2 * tp + fp + fn = 0 THEN NULL ELSE CAST((tp * 2000000) // (2 * tp + fp + fn) AS BIGINT) END AS f1_ppm
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
     // McNemar mirror: same three md5 channels, same discordant-count
     // milli statistic.
-    "q_mcnemar" ->
+    QueryDef("q_mcnemar", qMcnemar,
       """WITH ch AS (
         |  SELECT CAST(('0x' || substr(md5('cal:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS s,
         |         CAST(('0x' || substr(md5('coin:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS cn,
@@ -5723,10 +5419,10 @@ object SparkEntry {
         |       ELSE CAST(((sum(CASE WHEN ca AND NOT cb THEN 1 ELSE 0 END) - sum(CASE WHEN NOT ca AND cb THEN 1 ELSE 0 END))
         |                  * (sum(CASE WHEN ca AND NOT cb THEN 1 ELSE 0 END) - sum(CASE WHEN NOT ca AND cb THEN 1 ELSE 0 END))
         |                  * 1000) // sum(CASE WHEN ca <> cb THEN 1 ELSE 0 END) AS BIGINT) END AS chi2_milli
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin),
     // Odds-ratio mirror: same 2x2 strata, same floor-ppm per-stratum
     // OR and Mantel-Haenszel pooled terms.
-    "q_odds_ratio" ->
+    QueryDef("q_odds_ratio", qOddsRatio,
       """WITH t2 AS (
         |  SELECT CAST(c_nationkey AS VARCHAR) AS stratum,
         |         (c_mktsegment = 'AUTOMOBILE') AS e, (c_acctbal < 0) AS o
@@ -5749,16 +5445,16 @@ object SparkEntry {
         |UNION ALL
         |SELECT '__pooled__', a, b, c, d,
         |  CASE WHEN sd = 0 THEN NULL ELSE CAST((sn * 1000000) // sd AS BIGINT) END
-        |FROM pool""".stripMargin,
+        |FROM pool""".stripMargin),
     // RAKE mirror: same stopword segmentation, same degree/freq word
     // scores and phrase-sum top-50.
-    "q_rake" ->
+    QueryDef("q_rake", qRake,
       s"""WITH ${graft.ops.TextAnalysis.rakeSqlCtes(
             "documents", "doc_id", "text", RakeStopwords, 50)}
-         |SELECT phrase, n_words, n_occurrences, score_ppm, rank FROM rake""".stripMargin,
+         |SELECT phrase, n_words, n_occurrences, score_ppm, rank FROM rake""".stripMargin),
     // Bootstrap mirror: same md5 uniforms against the SAME
     // Scala-computed Poisson CDF literal, same floor-milli means.
-    "q_bootstrap" ->
+    QueryDef("q_bootstrap", qBootstrap,
       s"""WITH b AS (
          |  SELECT CAST(o_orderkey AS VARCHAR) AS k,
          |         CAST(floor(o_totalprice * 100) AS BIGINT) AS v
@@ -5779,9 +5475,11 @@ object SparkEntry {
          |       CASE WHEN n_eff = 0 THEN NULL
          |            ELSE CAST((ws * 1000) // n_eff AS BIGINT) END AS mean_milli
          |FROM g""".stripMargin,
+      HeavyScanAdjudicated("sequence(1,16) is a bounded resample fan-out into an " +
+        "immediate 17-key hash agg — shuffle-bound, no per-row kernel")),
     // Confusion-matrix mirror: same md5 class/flip channels, same
     // cell agg + marginals, same floor-ppm recall/precision.
-    "q_confusion" ->
+    QueryDef("q_confusion", qConfusion,
       """WITH base AS (
         |  SELECT 'c' || CAST(y AS VARCHAR) AS label,
         |         'c' || CAST(CASE WHEN f < 700000 THEN y
@@ -5797,10 +5495,10 @@ object SparkEntry {
         |SELECT c.label, c.pred, c.n, rm.n_label, cm.n_pred,
         |  CAST((c.n * 1000000) // rm.n_label AS BIGINT) AS recall_ppm,
         |  CAST((c.n * 1000000) // cm.n_pred AS BIGINT) AS precision_ppm
-        |FROM cells c JOIN rm USING (label) JOIN cm USING (pred)""".stripMargin,
+        |FROM cells c JOIN rm USING (label) JOIN cm USING (pred)""".stripMargin),
     // Class-balance mirror: same md5 class skew and keep channels,
     // same min-class ppm thresholds, same kept set (checksummed).
-    "q_class_balance" ->
+    QueryDef("q_class_balance", qClassBalance,
       """WITH base AS (
         |  SELECT o_orderkey,
         |    CASE WHEN ch < 600000 THEN 'common'
@@ -5819,19 +5517,19 @@ object SparkEntry {
         |SELECT class, n_class, keep_ppm,
         |       CAST(count(*) AS BIGINT) AS n_selected,
         |       CAST(sum(o_orderkey) AS BIGINT) AS key_checksum
-        |FROM kept GROUP BY 1, 2, 3""".stripMargin,
+        |FROM kept GROUP BY 1, 2, 3""".stripMargin),
     // Rolling-median mirror: quantile_disc(0.5) over the identical
     // trailing-7 frame picks the identical lower-median ELEMENT.
-    "q_rolling_median" ->
+    QueryDef("q_rolling_median", qRollingMedian,
       s"""WITH $DailySeriesCtes
          |SELECT t, x,
          |  quantile_disc(x, 0.5) OVER
          |    (ORDER BY t ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS med
-         |FROM ser""".stripMargin,
+         |FROM ser""".stripMargin),
     // Theil–Sen mirror: same scale-free weekly series, same
     // truncating micro-slope (Spark div ≡ DuckDB // on negatives),
     // same lower-median rank under (s, wa, wb).
-    "q_theil_sen" ->
+    QueryDef("q_theil_sen", qTheilSen,
       """WITH d0 AS (SELECT min(o_orderdate) AS v FROM orders),
         |wk AS (SELECT o_orderpriority,
         |              CAST(datediff('day', d0.v, o_orderdate) AS BIGINT) // 7 AS w,
@@ -5854,10 +5552,10 @@ object SparkEntry {
         |       FROM pairs)
         |SELECT o_orderpriority, CAST(np AS BIGINT) AS n_pairs,
         |       CAST(s AS BIGINT) AS slope_micro
-        |FROM rk WHERE rnk = (np + 1) // 2""".stripMargin,
+        |FROM rk WHERE rnk = (np + 1) // 2""".stripMargin),
     // Dup-rate mirror: the LSH candidate CTEs, pair-member explode,
     // per-source floor-ppm.
-    "q_dup_rate" ->
+    QueryDef("q_dup_rate", qDupRate,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |mem AS (SELECT DISTINCT doc_id FROM (
          |  SELECT id_a AS doc_id FROM cand
@@ -5868,10 +5566,10 @@ object SparkEntry {
          |  CAST((sum(CASE WHEN m.doc_id IS NOT NULL THEN 1 ELSE 0 END) * 1000000)
          |    // count(*) AS BIGINT) AS dup_ppm
          |FROM documents d LEFT JOIN mem m ON m.doc_id = d.doc_id
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin),
     // Bloom-FPR mirror: the q_bloom_index bit machinery at 16 Kbit,
     // probed with guaranteed-absent negative keys.
-    "q_bloom_fpr" -> {
+    QueryDef("q_bloom_fpr", qBloomFpr, {
       def arms(keyExpr: String) = (0 until 3).map(i =>
         s"WHEN gs.i = $i THEN ${graft.ops.Sketches.bloomBitSql(keyExpr, i, 16384)}")
         .mkString("CASE ", " ", " END")
@@ -5899,10 +5597,10 @@ object SparkEntry {
          |  CAST((sum(CASE WHEN maybe THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT)
          |    AS fpr_ppm
          |FROM mb GROUP BY 1""".stripMargin
-    },
+    }),
     // Weekly-churn mirror: same epoch-micro weeks, same (user, w+1)
     // self-join, same last-week exclusion.
-    "q_weekly_churn" ->
+    QueryDef("q_weekly_churn", qWeeklyChurn,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS t_us FROM events),
         |t0 AS (SELECT min(t_us) AS v0 FROM e),
         |uw AS (SELECT DISTINCT user_id, (t_us - t0.v0) // 604800000000 AS w
@@ -5915,10 +5613,10 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN ret THEN 0 ELSE 1 END) AS BIGINT) AS n_churned,
         |  CAST((sum(CASE WHEN ret THEN 0 ELSE 1 END) * 1000000) // count(*) AS BIGINT)
         |    AS churn_ppm
-        |FROM j, mx WHERE w < mw GROUP BY 1""".stripMargin,
+        |FROM j, mx WHERE w < mw GROUP BY 1""".stripMargin),
     // Lorenz mirror: same (weight, key) total-order ranks, same
     // decile rank selection, same truncating cumulative-share ppm.
-    "q_lorenz" ->
+    QueryDef("q_lorenz", qLorenz,
       """WITH k AS (SELECT CAST(o_custkey AS VARCHAR) AS kk,
         |                  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS kw
         |           FROM orders GROUP BY 1),
@@ -5932,10 +5630,10 @@ object SparkEntry {
         |       CAST(r.rk AS BIGINT) AS n_keys_cum,
         |       CAST((CAST(r.cum AS HUGEINT) * 1000000) // tot.t AS BIGINT)
         |         AS cum_weight_ppm
-        |FROM r, tot, d WHERE r.rk = (tot.n * d.decile) // 10""".stripMargin,
+        |FROM r, tot, d WHERE r.rk = (tot.n * d.decile) // 10""".stripMargin),
     // Smoothed-rates mirror: same key agg, same Beta(5,95) shrink,
     // same (smoothed desc, key) rank, same top-20.
-    "q_smoothed_rates" ->
+    QueryDef("q_smoothed_rates", qSmoothedRates,
       """WITH e AS (SELECT 'p' || CAST(user_id % 200 AS VARCHAR) AS key,
         |                  event_type = 'click' AS p
         |           FROM events WHERE event_type IN ('view', 'click')),
@@ -5949,10 +5647,10 @@ object SparkEntry {
         |rk AS (SELECT *, row_number() OVER (ORDER BY smoothed_ppm DESC, key) AS rank
         |       FROM sc)
         |SELECT key, n, pos, rate_ppm, smoothed_ppm, CAST(rank AS BIGINT) AS rank
-        |FROM rk WHERE rank <= 20""".stripMargin,
+        |FROM rk WHERE rank <= 20""".stripMargin),
     // Seasonal-naive-MASE mirror: same daily series, same lag
     // windows, same decimal cross-multiplied floor-ppm.
-    "q_seasonal_naive" ->
+    QueryDef("q_seasonal_naive", qSeasonalNaive,
       s"""WITH $DailySeriesCtes,
          |e AS (SELECT x,
          |        abs(x - lag(x, 7) OVER (ORDER BY t)) AS ep,
@@ -5971,10 +5669,10 @@ object SparkEntry {
          |         // (CAST(sum(e1) AS HUGEINT)
          |             * sum(CASE WHEN ep IS NOT NULL THEN 1 ELSE 0 END)) AS BIGINT)
          |  END AS mase_ppm
-         |FROM e""".stripMargin,
+         |FROM e""".stripMargin),
     // Capture-recapture mirror: both detector CTE chains (disjoint
     // names), canonical distinct pairs, Chapman's estimator.
-    "q_dedup_capture" ->
+    QueryDef("q_dedup_capture", qDedupCapture,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |${graft.ops.Dedup.simhashFpCtesSql("documents", "doc_id", "text", 60)},
          |${graft.ops.Dedup.simhashPairsSql(5, 60, Some(LshCap))},
@@ -5992,10 +5690,10 @@ object SparkEntry {
          |       ELSE CAST((n_a * 1000000) // est_total AS BIGINT) END AS recall_a_ppm,
          |  CASE WHEN est_total <= 0 THEN NULL
          |       ELSE CAST((n_b * 1000000) // est_total AS BIGINT) END AS recall_b_ppm
-         |FROM est""".stripMargin,
+         |FROM est""".stripMargin),
     // Langid-eval mirror: the literal languageIdSql cascade against
     // the truth column, through the q_confusion cell/marginal SQL.
-    "q_langid_eval" ->
+    QueryDef("q_langid_eval", qLangidEval,
       s"""WITH base AS (
          |  SELECT lang AS label, ${graft.ops.TextAnalysis.languageIdSql("text")} AS pred
          |  FROM documents),
@@ -6006,10 +5704,10 @@ object SparkEntry {
          |SELECT c.label, c.pred, c.n, rm.n_label, cm.n_pred,
          |  CAST((c.n * 1000000) // rm.n_label AS BIGINT) AS recall_ppm,
          |  CAST((c.n * 1000000) // cm.n_pred AS BIGINT) AS precision_ppm
-         |FROM cells c JOIN rm USING (label) JOIN cm USING (pred)""".stripMargin,
+         |FROM cells c JOIN rm USING (label) JOIN cm USING (pred)""".stripMargin),
     // Session-path mirror: the q_sessionize session CTE, ordered
     // list agg with the event_id tie-break, same top-20 order.
-    "q_session_path" ->
+    QueryDef("q_session_path", qSessionPath,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS t_us
         |           FROM events),
         |flags AS (
@@ -6030,10 +5728,10 @@ object SparkEntry {
         |        FROM paths GROUP BY 1),
         |rk AS (SELECT *, row_number() OVER (ORDER BY n_sessions DESC, path) AS r
         |       FROM cnt)
-        |SELECT path, n_sessions FROM rk WHERE r <= 20""".stripMargin,
+        |SELECT path, n_sessions FROM rk WHERE r <= 20""".stripMargin),
     // Cohort-LTV mirror: same epoch-micro week grid, same exact
     // cents, same cumulative window over (cohort, age).
-    "q_cohort_ltv" ->
+    QueryDef("q_cohort_ltv", qCohortLtv,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS t_us,
         |                  CAST(floor(value * 100) AS BIGINT) AS v FROM events),
         |t0 AS (SELECT min(t_us) AS v0 FROM e),
@@ -6046,10 +5744,10 @@ object SparkEntry {
         |SELECT cohort_w, age_w, n_users, cents,
         |  CAST(sum(cents) OVER (PARTITION BY cohort_w ORDER BY age_w
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents
-        |FROM grid""".stripMargin,
+        |FROM grid""".stripMargin),
     // DP-histogram mirror: same md5 channels, same trailing-ones
     // geometric draws via bit_count(x XOR (x+1)) - 1, same clamp.
-    "q_dp_hist" ->
+    QueryDef("q_dp_hist", qDpHist,
       """WITH h AS (SELECT c_mktsegment AS key, CAST(count(*) AS BIGINT) AS n
         |           FROM customer GROUP BY 1),
         |ch AS (SELECT key, n,
@@ -6061,10 +5759,10 @@ object SparkEntry {
         |       - (bit_count(xor(cb, cb + 1)) - 1) AS BIGINT) AS noise,
         |  greatest(n + (bit_count(xor(ca, ca + 1)) - 1)
         |             - (bit_count(xor(cb, cb + 1)) - 1), 0) AS dp_n
-        |FROM ch""".stripMargin,
+        |FROM ch""".stripMargin),
     // Funnel-latency mirror: same first-view/first-purchase-after
     // min-aggs in epoch micros, same type-1 rank percentiles.
-    "q_funnel_time" ->
+    QueryDef("q_funnel_time", qFunnelTime,
       """WITH f AS (SELECT user_id, min(epoch_us(ts)) AS t0
         |           FROM events WHERE event_type = 'view' GROUP BY 1),
         |lat AS (
@@ -6079,10 +5777,10 @@ object SparkEntry {
         |  FROM v),
         |ps AS (SELECT unnest([50, 90, 99]) AS p)
         |SELECT CAST(p AS INT) AS p, val AS value
-        |FROM rk, ps WHERE rk = ((n - 1) * p) // 100 + 1""".stripMargin,
+        |FROM rk, ps WHERE rk = ((n - 1) * p) // 100 + 1""".stripMargin),
     // Quantile-normalization mirror: same (value, id) total-order
     // ranks per source, same truncating per-rank pooled mean.
-    "q_quantile_norm" ->
+    QueryDef("q_quantile_norm", qQuantileNorm,
       """WITH ranked AS (
         |  SELECT source, doc_id, CAST(n_chars AS BIGINT) AS value,
         |         row_number() OVER (PARTITION BY source
@@ -6093,10 +5791,10 @@ object SparkEntry {
         |             AS norm_value
         |         FROM ranked GROUP BY 1)
         |SELECT source, doc_id, value, norm_value
-        |FROM ranked JOIN prof USING (rk)""".stripMargin,
+        |FROM ranked JOIN prof USING (rk)""".stripMargin),
     // SRM mirror: same md5 split, same cleared-fraction chi-square
     // terms floored to milli per cell before the 2-cell sum.
-    "q_srm" ->
+    QueryDef("q_srm", qSrm,
       """WITH obs AS (
         |  SELECT CASE WHEN ch < 500000 THEN 'A' ELSE 'B' END AS v, count(*) AS o
         |  FROM (SELECT CAST(('0x' || substr(md5('srm:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS ch
@@ -6117,10 +5815,10 @@ object SparkEntry {
         |SELECT max(n) AS n, CAST(count(*) AS BIGINT) AS n_cells,
         |       CAST(count(*) - 1 AS BIGINT) AS df,
         |       CAST(sum(t) AS BIGINT) AS chi2_milli
-        |FROM terms""".stripMargin,
+        |FROM terms""".stripMargin),
     // CUPED mirror: same md5 split, same 5-sum HUGEINT theta, same
     // fixed-order truncating milli means and adjustment.
-    "q_cuped" ->
+    QueryDef("q_cuped", qCuped,
       """WITH v AS (
         |  SELECT CASE WHEN ch < 500000 THEN 'A' ELSE 'B' END AS variant,
         |         CAST(floor(o_totalprice * 100) AS BIGINT) AS y,
@@ -6147,10 +5845,10 @@ object SparkEntry {
         |       CAST((syv * 1000) // nv
         |            - (theta_ppm * ((sxv * 1000) // nv - mx_milli)) // 1000000
         |         AS BIGINT) AS adj_mean_y_milli
-        |FROM per, th""".stripMargin,
+        |FROM per, th""".stripMargin),
     // Weighted-kappa mirror: same md5 ordinal raters, same
     // cells×cells |a−b| distance fold in HUGEINT, same ppm division.
-    "q_weighted_kappa" ->
+    QueryDef("q_weighted_kappa", qWeightedKappa,
       """WITH r AS (
         |  SELECT ca % 5 AS a, least(ca % 5 + cf // 800000, 4) AS b
         |  FROM (SELECT
@@ -6168,10 +5866,10 @@ object SparkEntry {
         |  CASE WHEN e = 0 THEN NULL
         |       ELSE CAST(((e - CAST(t AS HUGEINT) * d) * 1000000) // e AS BIGINT) END
         |    AS kappa_w_ppm
-        |FROM obs, den""".stripMargin,
+        |FROM obs, den""".stripMargin),
     // Burstiness mirror: same (doc, token) counts, same HUGEINT Fano
     // identity, same (fano desc, token) top-50.
-    "q_burstiness" ->
+    QueryDef("q_burstiness", qBurstiness,
       """WITH tc AS (
         |  SELECT doc_id, tok AS token, count(*) AS c FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -6187,10 +5885,10 @@ object SparkEntry {
         |      FROM st),
         |r AS (SELECT *, row_number() OVER (ORDER BY fano_ppm DESC, token) AS rnk
         |      FROM f)
-        |SELECT token, df_docs, n_occ, fano_ppm FROM r WHERE rnk <= 50""".stripMargin,
+        |SELECT token, df_docs, n_occ, fano_ppm FROM r WHERE rnk <= 50""".stripMargin),
     // Assortativity mirror: same stub construction, same exact
     // 5-sum corr identity in HUGEINT, same r2-ppm + sign outputs.
-    "q_assortativity" ->
+    QueryDef("q_assortativity", qAssortativity,
       """WITH e0 AS (SELECT DISTINCT l_orderkey AS a, -l_suppkey AS b
         |            FROM lineitem WHERE l_quantity >= 45),
         |sym AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
@@ -6212,10 +5910,10 @@ object SparkEntry {
         |    AS r2_ppm,
         |  CASE WHEN den1 = 0 OR den2 = 0 THEN NULL
         |       ELSE CAST(sign(num) AS INT) END AS corr_sign
-        |FROM fin""".stripMargin,
+        |FROM fin""".stripMargin),
     // Reciprocity mirror: same distinct residue edges, same reversed
     // self-join, same floor-ppm share.
-    "q_reciprocity" ->
+    QueryDef("q_reciprocity", qReciprocity,
       """WITH e AS (SELECT DISTINCT l_orderkey % 2000 AS a, l_partkey % 2000 AS b
         |           FROM lineitem WHERE l_orderkey % 2000 <> l_partkey % 2000),
         |j AS (SELECT e1.a, e1.b, e2.a IS NOT NULL AS rec
@@ -6224,10 +5922,10 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN rec THEN 1 ELSE 0 END) AS BIGINT) AS n_reciprocal,
         |  CAST((sum(CASE WHEN rec THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT)
         |    AS reciprocity_ppm
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
     // Grid-cluster mirror: same micro-quantized floor cells, same
     // core threshold, recursive min-reach over 8-neighbor adjacency.
-    "q_grid_cluster" ->
+    QueryDef("q_grid_cluster", qGridCluster,
       """WITH RECURSIVE pts AS (
         |  SELECT (CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000000) AS BIGINT) + 1000000) // 50000 AS cell_x,
         |         (CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000000) AS BIGINT) + 1000000) // 50000 AS cell_y
@@ -6246,10 +5944,10 @@ object SparkEntry {
         |  SELECT e.b AS id, reach.r FROM reach JOIN edges e ON reach.id = e.a)
         |SELECT c.cell_x, c.cell_y, c.n_points, m.cluster_id
         |FROM core c JOIN (SELECT id, min(r) AS cluster_id FROM reach GROUP BY 1) m
-        |  ON m.id = c.cid""".stripMargin,
+        |  ON m.id = c.cid""".stripMargin),
     // Split-perplexity mirror: same hashBucket split, same add-one
     // unigram micro-nat scoring trained on the train split only.
-    "q_split_perplexity" ->
+    QueryDef("q_split_perplexity", qSplitPerplexity,
       s"""WITH sp AS (
          |  SELECT doc_id, text,
          |    CASE WHEN b < 800 THEN 'train' WHEN b < 900 THEN 'val'
@@ -6275,17 +5973,17 @@ object SparkEntry {
          |       CAST(sum(nt) AS BIGINT) AS n_tokens,
          |       CAST(sum(lp) AS BIGINT) AS logprob_unat,
          |       CAST(sum(lp) // sum(nt) AS BIGINT) AS per_token_unat
-         |FROM d GROUP BY 1""".stripMargin,
+         |FROM d GROUP BY 1""".stripMargin),
     // EWMA mirror: byte-identical lag-weight expression emitted by
     // ewmaTruncSql over the shared daily-series CTEs.
-    "q_ewma" ->
+    QueryDef("q_ewma", qEwma,
       s"""WITH $DailySeriesCtes
          |SELECT t, x,
          |  ${graft.ops.Windows.ewmaTruncSql("x", "t", 6)} AS ewma_milli
-         |FROM ser""".stripMargin,
+         |FROM ser""".stripMargin),
     // Info-gain mirror: same stacked feature cells (UNION ALL vs
     // explode(map)), same four floor-primitive sums per feature.
-    "q_info_gain" ->
+    QueryDef("q_info_gain", qInfoGain,
       """WITH base AS (
         |  SELECT CASE WHEN o_totalprice >= 300000 THEN 'big' ELSE 'small' END AS y,
         |         o_orderpriority AS pri, o_orderstatus AS sta,
@@ -6314,10 +6012,10 @@ object SparkEntry {
         |SELECT cs.feature, n, n_cells,
         |       hc + CAST(floor(ln(CAST(n AS DOUBLE)) * n * 1000000) AS BIGINT) - ha - hb
         |         AS mi_unat
-        |FROM cs JOIN va USING (feature) JOIN ya USING (feature)""".stripMargin,
+        |FROM cs JOIN va USING (feature) JOIN ya USING (feature)""".stripMargin),
     // Mutual-information mirror: four sums of the proven q_entropy
     // floor-primitive ⌊c·ln(c)·10⁶⌋, combined identically.
-    "q_mutual_info" ->
+    QueryDef("q_mutual_info", qMutualInfo,
       """WITH cells AS (
         |  SELECT o_orderpriority AS a, o_orderstatus AS b,
         |         CAST(count(*) AS BIGINT) AS c
@@ -6334,15 +6032,15 @@ object SparkEntry {
         |SELECT n, n_cells,
         |  hc + CAST(floor(ln(CAST(n AS DOUBLE)) * n * 1000000) AS BIGINT) - ha - hb
         |    AS mi_unat
-        |FROM cs, am, bm""".stripMargin,
+        |FROM cs, am, bm""".stripMargin),
     // Zipf mirror: same top-1024 total order, same rank-octave bands
     // and rank*freq invariant bounds.
-    "q_zipf" ->
+    QueryDef("q_zipf", qZipf,
       s"""WITH ${graft.ops.TextAnalysis.zipfProfileSqlCtes("documents", "text", 1024)}
-         |SELECT band, n_ranks, band_mass, rf_min, rf_max FROM zipf""".stripMargin,
+         |SELECT band, n_ranks, band_mass, rf_min, rf_max FROM zipf""".stripMargin),
     // Semantic-decontamination mirror: same micro quantization, same
     // integer dot/norm, same floor-ppm cos-squared keep test.
-    "q_semantic_decontaminate" ->
+    QueryDef("q_semantic_decontaminate", qSemanticDecontaminate,
       s"""WITH e AS (
          |  SELECT vec_id,
          |         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS v
@@ -6362,11 +6060,12 @@ object SparkEntry {
          |       CAST(max(c2) AS BIGINT) AS max_cos2_ppm,
          |       min(corpus_id) AS first_corpus_id
          |FROM h WHERE c2 >= 160000 GROUP BY 1""".stripMargin,
+      SweepExcluded("corpus×bench pairs ∝ replicas² by construction (both sides grow): sf1 ladder is its decade step")),
     // Verbatim: DuckDB's built-in jaro_winkler_similarity runs the
     // exact SQL text our registered function table runs on Spark.
-    "q_sql_functions" -> SqlFunctionsSql,
-    "q_unicode_norm" -> UnicodeNormSql,
-    "q_heavy_hitters" ->
+    QueryDef("q_sql_functions", qSqlFunctions, SqlFunctionsSql),
+    QueryDef("q_unicode_norm", qUnicodeNorm, UnicodeNormSql),
+    QueryDef("q_heavy_hitters", qHeavyHitters,
       """WITH tok AS (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |tok2 AS (SELECT token FROM tok WHERE token <> ''),
@@ -6374,10 +6073,10 @@ object SparkEntry {
         |t AS (SELECT count(*) AS n FROM tok2)
         |SELECT token, count(*) AS cnt
         |FROM tok2 GROUP BY token
-        |HAVING count(*) >= (SELECT t.n // (200 * su.v) + 1 FROM t, su)""".stripMargin,
-    "q_bm25" -> graft.ops.TextAnalysis.bm25OracleSql(
-      "documents", "doc_id", "text", Bm25Terms),
-    "q_grouped_heavy" ->
+        |HAVING count(*) >= (SELECT t.n // (200 * su.v) + 1 FROM t, su)""".stripMargin),
+    QueryDef("q_bm25", qBm25, graft.ops.TextAnalysis.bm25OracleSql(
+      "documents", "doc_id", "text", Bm25Terms), HeavyScan),
+    QueryDef("q_grouped_heavy", qGroupedHeavy,
       """WITH tok AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents),
         |tok2 AS (SELECT lang, token FROM tok WHERE token <> ''),
@@ -6385,19 +6084,19 @@ object SparkEntry {
         |t AS (SELECT lang, count(*) AS n FROM tok2 GROUP BY 1)
         |SELECT c.lang, c.token, c.cnt
         |FROM c JOIN t ON c.lang = t.lang
-        |WHERE c.cnt >= t.n // 100 + 1""".stripMargin,
-    "q_hll_partial" ->
-      "SELECT count(DISTINCT o_custkey) AS n_exact, true AS within_3pct FROM orders",
-    "q_chunk_text" -> graft.ops.TextAnalysis.chunkTokensOracleSql(
-      "documents", "doc_id", "text", chunkTokens = 64, stride = 48),
-    "q_key_skew" ->
+        |WHERE c.cnt >= t.n // 100 + 1""".stripMargin),
+    QueryDef("q_hll_partial", qHllPartial,
+      "SELECT count(DISTINCT o_custkey) AS n_exact, true AS within_3pct FROM orders"),
+    QueryDef("q_chunk_text", qChunkText, graft.ops.TextAnalysis.chunkTokensOracleSql(
+      "documents", "doc_id", "text", chunkTokens = 64, stride = 48), HeavyScan),
+    QueryDef("q_key_skew", qKeySkew,
       """WITH c AS (SELECT o_custkey AS key, count(*) AS cnt FROM orders GROUP BY 1),
         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total, count(*) AS n_keys FROM c)
         |SELECT c.key, c.cnt, c.cnt * 1000000 // t.total AS share_ppm, t.n_keys
         |FROM c, t
         |ORDER BY c.cnt DESC, c.key ASC
-        |LIMIT 25""".stripMargin,
-    "q_two_table_link" ->
+        |LIMIT 25""".stripMargin),
+    QueryDef("q_two_table_link", qTwoTableLink,
       """WITH compared AS (
         |  SELECT CASE WHEN jaro_winkler_similarity(a.c_name, b.s_name) = 1 THEN 'full agreement'
         |              WHEN jaro_winkler_similarity(a.c_name, b.s_name) > 0.9 THEN 'strong partial agreement'
@@ -6410,8 +6109,8 @@ object SparkEntry {
         |              END AS key_digit
         |  FROM customer a JOIN supplier b ON a.c_nationkey = b.s_nationkey)
         |SELECT name_band, acct_band, key_digit, count(*) AS n
-        |FROM compared GROUP BY name_band, acct_band, key_digit""".stripMargin,
-    "q_sessionize" ->
+        |FROM compared GROUP BY name_band, acct_band, key_digit""".stripMargin),
+    QueryDef("q_sessionize", qSessionize,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS t_us FROM events),
         |flags AS (
         |  SELECT user_id, t_us,
@@ -6425,14 +6124,14 @@ object SparkEntry {
         |  FROM flags)
         |SELECT user_id, session_id, count(*) AS n_events,
         |       min(t_us) AS t_start, max(t_us) AS t_end
-        |FROM sessions GROUP BY user_id, session_id""".stripMargin,
-    "q_grouped_topk" ->
+        |FROM sessions GROUP BY user_id, session_id""".stripMargin),
+    QueryDef("q_grouped_topk", qGroupedTopK,
       """SELECT c_mktsegment, c_custkey, c_acctbal, rnk FROM (
         |  SELECT c_mktsegment, c_custkey, c_acctbal,
         |         row_number() OVER (PARTITION BY c_mktsegment
         |           ORDER BY c_acctbal DESC, c_custkey) AS rnk
-        |  FROM customer) WHERE rnk <= 3""".stripMargin,
-    "q_decontaminate_filter" ->
+        |  FROM customer) WHERE rnk <= 3""".stripMargin),
+    QueryDef("q_decontaminate_filter", qDecontaminateFilter,
       s"""WITH bsh AS (
          |  SELECT DISTINCT u.sh
          |  FROM (SELECT list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
@@ -6449,27 +6148,27 @@ object SparkEntry {
          |  GROUP BY doc_id HAVING count(*) >= 5)
          |SELECT doc_id, lang FROM documents
          |WHERE doc_id % 20 <> 0
-         |  AND doc_id NOT IN (SELECT doc_id FROM flagged)""".stripMargin,
+         |  AND doc_id NOT IN (SELECT doc_id FROM flagged)""".stripMargin),
     // The oracle proves the sketch's 3% accuracy contract, not the
     // sketch bits: n_exact hash-matches, within_3pct must come out
     // true on the Spark side.
-    "q_approx_distinct" ->
+    QueryDef("q_approx_distinct", qApproxDistinct,
       """SELECT count(DISTINCT o_custkey) AS n_exact, true AS within_3pct
-        |FROM orders""".stripMargin,
-    "q_approx_quantiles" ->
+        |FROM orders""".stripMargin),
+    QueryDef("q_approx_quantiles", qApproxQuantiles,
       """SELECT quantile_cont(l_quantity, 0.5) AS p50_exact,
         |       quantile_cont(l_quantity, 0.99) AS p99_exact,
         |       true AS p50_within_1pct_or_unit, true AS p99_within_1pct_or_unit
-        |FROM lineitem""".stripMargin,
-    "q_window_frame" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("q_window_frame", qWindowFrame,
       """SELECT user_id, event_id,
         |       count(*) OVER w AS n_in_frame,
         |       min(value) OVER w AS min_v,
         |       max(value) OVER w AS max_v
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-        |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q_redact_pii" ->
+        |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""".stripMargin),
+    QueryDef("q_redact_pii", qRedactPii,
       s"""WITH dirty AS (
          |  SELECT doc_id,
          |    text || ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
@@ -6477,21 +6176,21 @@ object SparkEntry {
          |         || ' acct 1234567890' || CAST(doc_id AS VARCHAR) AS text
          |  FROM documents)
          |SELECT doc_id, ${graft.ops.TextAnalysis.redactPiiSql("text")} AS redacted
-         |FROM dirty""".stripMargin,
-    "q_stratified_sample" ->
+         |FROM dirty""".stripMargin),
+    QueryDef("q_stratified_sample", qStratifiedSample,
       s"""SELECT doc_id, lang FROM documents
          |WHERE ${graft.ops.Sampling.hashBucketSql("doc_id")} <
-         |  CASE lang WHEN 'de' THEN 400 WHEN 'en' THEN 100 ELSE 250 END""".stripMargin,
-    "q_top_ngrams" ->
+         |  CASE lang WHEN 'de' THEN 400 WHEN 'en' THEN 100 ELSE 250 END""".stripMargin),
+    QueryDef("q_top_ngrams", qTopNgrams,
       s"""SELECT ngram, count(*) AS n
          |FROM (SELECT unnest(${graft.ops.Dedup.shinglesSql("text", 2)}) AS ngram
          |      FROM documents)
-         |GROUP BY ngram ORDER BY n DESC, ngram LIMIT 20""".stripMargin,
-    "q_semi_join" ->
+         |GROUP BY ngram ORDER BY n DESC, ngram LIMIT 20""".stripMargin),
+    QueryDef("q_semi_join", qSemiJoin,
       """SELECT c_custkey, c_mktsegment FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-    "q_line_dedup" ->
+        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin),
+    QueryDef("q_line_dedup", qLineDedup,
       """WITH segs AS (
         |  SELECT doc_id,
         |         unnest(string_split(text, ' ')) AS seg,
@@ -6506,38 +6205,38 @@ object SparkEntry {
         |                           ' ' ORDER BY s.pos), '') AS clean_text,
         |       count(f.seg) AS n_removed
         |FROM segs s LEFT JOIN freq f USING (seg)
-        |GROUP BY s.doc_id""".stripMargin,
-    "q_bloom_semi_join" ->
+        |GROUP BY s.doc_id""".stripMargin),
+    QueryDef("q_bloom_semi_join", qBloomSemiJoin,
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_orderkey = l_orderkey
-        |                AND o_orderpriority = '1-URGENT')""".stripMargin,
-    "q_collect_set" ->
+        |                AND o_orderpriority = '1-URGENT')""".stripMargin),
+    QueryDef("q_collect_set", qCollectSet,
       """SELECT user_id,
         |       array_to_string(list(DISTINCT event_type ORDER BY event_type), ',')
         |         AS event_types
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q_quality_cutoff" ->
+        |FROM events GROUP BY user_id""".stripMargin),
+    QueryDef("q_quality_cutoff", qQualityCutoff,
       """SELECT doc_id, lang, n_chars, pr FROM (
         |  SELECT doc_id, lang, n_chars,
         |         percent_rank() OVER (PARTITION BY lang ORDER BY n_chars) AS pr
         |  FROM documents)
-        |WHERE pr <= 0.5""".stripMargin,
-    "q_histogram" ->
+        |WHERE pr <= 0.5""".stripMargin),
+    QueryDef("q_histogram", qHistogram,
       """SELECT CAST(floor(value / 25) AS BIGINT) AS bucket, count(*) AS n,
         |       min(value) AS min_v, max(value) AS max_v
-        |FROM events GROUP BY 1""".stripMargin,
-    "q_pagerank" -> pageRankOracle(5),
-    "q_ppr" -> pprOracle(5),
-    "q_cube" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    QueryDef("q_pagerank", qPageRank, pageRankOracle(5)),
+    QueryDef("q_ppr", qPpr, pprOracle(5)),
+    QueryDef("q_cube", qCube,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_bitmap_distinct" ->
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin),
+    QueryDef("q_bitmap_distinct", qBitmapDistinct,
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_distinct_cust,
         |       count(*) AS n_rows
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-    "q_incremental_dedup" ->
+        |FROM orders GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_incremental_dedup", qIncrementalDedup,
       s"""WITH sh AS (
          |  SELECT doc_id, list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
          |  FROM documents),
@@ -6560,16 +6259,16 @@ object SparkEntry {
          |SELECT new_id, corpus_id, inter, size_new, size_corpus,
          |  CAST(inter AS DOUBLE) / (size_new + size_corpus - inter) AS jaccard
          |FROM v
-         |WHERE CAST(inter AS DOUBLE) / (size_new + size_corpus - inter) >= 0.5""".stripMargin,
-    "q_transitions" ->
+         |WHERE CAST(inter AS DOUBLE) / (size_new + size_corpus - inter) >= 0.5""".stripMargin),
+    QueryDef("q_transitions", qTransitions,
       """WITH seq AS (
         |  SELECT event_type,
         |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
         |  FROM events)
         |SELECT event_type AS from_type, next_type AS to_type, count(*) AS n
         |FROM seq WHERE next_type IS NOT NULL
-        |GROUP BY event_type, next_type""".stripMargin,
-    "q_overlap_join" ->
+        |GROUP BY event_type, next_type""".stripMargin),
+    QueryDef("q_overlap_join", qOverlapJoin,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_ns(ts) AS t,
         |         epoch_ns(ts) + CAST(floor(value * 60000000000.0) AS BIGINT) AS te
@@ -6578,29 +6277,33 @@ object SparkEntry {
         |FROM (SELECT * FROM e WHERE event_type = 'view') l
         |JOIN (SELECT * FROM e WHERE event_type = 'purchase') r
         |  ON l.user_id = r.user_id AND l.t <= r.te AND r.t <= l.te""".stripMargin,
-    "q_triangles" ->
+      HeavyScanAdjudicated("sequence builds the interval cover-grid keys feeding " +
+        "the equi-join's exchange — join-bound by construction")),
+    QueryDef("q_triangles", qTriangles,
       """WITH e AS (
         |  SELECT DISTINCT least(o_orderkey % 1500, o_custkey % 1500) AS a,
         |                  greatest(o_orderkey % 1500, o_custkey % 1500) AS b
         |  FROM orders WHERE (o_orderkey % 1500) <> (o_custkey % 1500))
         |SELECT count(*) AS n_triangles
-        |FROM e x JOIN e y ON x.b = y.a JOIN e z ON z.a = x.a AND z.b = y.b""".stripMargin,
-    "q_split" ->
+        |FROM e x JOIN e y ON x.b = y.a JOIN e z ON z.a = x.a AND z.b = y.b""".stripMargin),
+    QueryDef("q_split", qSplit,
       """SELECT lang,
         |  CASE WHEN b < 900 THEN 'train' WHEN b < 950 THEN 'valid' ELSE 'test' END AS split,
         |  count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM (SELECT lang, n_chars,
         |        CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000 AS b
         |      FROM documents)
-        |GROUP BY lang, split""".stripMargin,
-    "q_data_mix" ->
+        |GROUP BY lang, split""".stripMargin),
+    QueryDef("q_data_mix", qDataMix,
       """SELECT doc_id, lang, unnest(generate_series(1, w)) AS rep
         |FROM (SELECT doc_id, lang,
         |        CASE WHEN lang = 'en' THEN 1
         |             WHEN lang IN ('es', 'de') THEN 2
         |             ELSE 3 END AS w
         |      FROM documents)""".stripMargin,
-    "q_upsert" ->
+      HeavyScanAdjudicated("repeatByWeight's sequence(1,w<=3) duplicates rows into " +
+        "row-level output — no shuffle, no per-row compute beyond the copy")),
+    QueryDef("q_upsert", qUpsert,
       """WITH merged AS (
         |  SELECT o_orderkey, o_orderpriority, o_totalprice
         |  FROM orders WHERE o_orderkey % 97 <> 0
@@ -6615,14 +6318,14 @@ object SparkEntry {
         |       CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
         |       CAST(sum(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT) AS sum_floor_price,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        |FROM merged GROUP BY o_orderpriority""".stripMargin,
-    "q_edit_distance" ->
+        |FROM merged GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_edit_distance", qEditDistance,
       """WITH names AS (SELECT DISTINCT p_name FROM part)
         |SELECT a.p_name AS name_a, b.p_name AS name_b,
         |       levenshtein(a.p_name, b.p_name) AS dist
         |FROM names a JOIN names b ON a.p_name < b.p_name
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin,
-    "q_funnel" ->
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2""".stripMargin),
+    QueryDef("q_funnel", qFunnel,
       """WITH s0 AS (SELECT user_id, min(ts) AS t FROM events
         |            WHERE event_type = 'view' GROUP BY user_id),
         |s1 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
@@ -6633,29 +6336,29 @@ object SparkEntry {
         |       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
         |SELECT 'view' AS stage, 0 AS stage_idx, (SELECT count(*) FROM s0) AS n_users
         |UNION ALL SELECT 'click', 1, (SELECT count(*) FROM s1)
-        |UNION ALL SELECT 'purchase', 2, (SELECT count(*) FROM s2)""".stripMargin,
-    "q_json_extract" ->
+        |UNION ALL SELECT 'purchase', 2, (SELECT count(*) FROM s2)""".stripMargin),
+    QueryDef("q_json_extract", qJsonExtract,
       """SELECT event_id,
         |       CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events""".stripMargin,
-    "q_pivot_wider" ->
+        |FROM events""".stripMargin),
+    QueryDef("q_pivot_wider", qPivotWider,
       """SELECT user_id,
         |       count(*) FILTER (WHERE event_type = 'click')    AS n_click,
         |       count(*) FILTER (WHERE event_type = 'error')    AS n_error,
         |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
         |       count(*) FILTER (WHERE event_type = 'signup')   AS n_signup,
         |       count(*) FILTER (WHERE event_type = 'view')     AS n_view
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q_schema_evolution" ->
+        |FROM events GROUP BY user_id""".stripMargin),
+    QueryDef("q_schema_evolution", qSchemaEvolution,
       """SELECT count(*) AS n,
         |       count(CASE WHEN doc_id % 2 = 1 THEN lang END) AS n_lang,
         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents""".stripMargin,
-    "q_compact" ->
+        |FROM documents""".stripMargin),
+    QueryDef("q_compact", qCompact,
       """SELECT count(*) AS n, min(doc_id) AS min_id, max(doc_id) AS max_id,
         |       CAST(sum(length(text)) AS BIGINT) AS sum_chars
-        |FROM documents""".stripMargin,
-    "q_pack_chunks" ->
+        |FROM documents""".stripMargin),
+    QueryDef("q_pack_chunks", qPackChunks,
       """WITH toks AS (
         |  SELECT lang, doc_id,
         |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -6670,8 +6373,8 @@ object SparkEntry {
         |SELECT lang, doc_id, n_tokens,
         |       s_before // 512 AS chunk,
         |       s_before % 512 AS chunk_offset
-        |FROM cum""".stripMargin,
-    "q_winnow" ->
+        |FROM cum""".stripMargin),
+    QueryDef("q_winnow", qWinnow,
       s"""WITH ${graft.ops.TextAnalysis.winnowFingerprintsSqlCtes(
               "documents", "doc_id", "text", WinnowK, WinnowW)},
          |capped AS (
@@ -6679,14 +6382,15 @@ object SparkEntry {
          |  QUALIFY count(*) OVER (PARTITION BY fp) <= $WinnowCap)
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
          |FROM capped a JOIN capped b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared""".stripMargin,
-    "q_span_dedup" -> graft.ops.Dedup.removeDuplicatedSpansSql(
-      "documents", "doc_id", "text", k = 5),
-    "q_span_exact" -> graft.ops.Dedup.duplicatedSpanRunsSql(
-      "documents", "doc_id", "text", k = 5),
-    "q_span_bytes" -> graft.ops.Dedup.duplicatedByteSpanRunsSql(
-      "documents", "doc_id", "text", k = 50),
-    "q_semantic_dedup" ->
+         |GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared""".stripMargin, HeavyScan,
+      SweepExcluded("already at TRUE sf10 in SCALE_PROBE_r14 (30.0 s)")),
+    QueryDef("q_span_dedup", qSpanDedup, graft.ops.Dedup.removeDuplicatedSpansSql(
+      "documents", "doc_id", "text", k = 5)),
+    QueryDef("q_span_exact", qSpanExact, graft.ops.Dedup.duplicatedSpanRunsSql(
+      "documents", "doc_id", "text", k = 5)),
+    QueryDef("q_span_bytes", qSpanBytes, graft.ops.Dedup.duplicatedByteSpanRunsSql(
+      "documents", "doc_id", "text", k = 50), HeavyScan),
+    QueryDef("q_semantic_dedup", qSemanticDedup,
       s"""WITH RECURSIVE cent AS (
          |  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8),
          |assign AS (
@@ -6707,23 +6411,23 @@ object SparkEntry {
          |  UNION
          |  SELECT e.b AS id, reach.r FROM reach JOIN edges e ON reach.id = e.a)
          |SELECT id AS vec_id, min(r) AS cluster_id, (min(r) = id) AS keep
-         |FROM reach GROUP BY id""".stripMargin,
-    "q_grouping_sets" ->
+         |FROM reach GROUP BY id""".stripMargin),
+    QueryDef("q_grouping_sets", qGroupingSets,
       """SELECT o_orderstatus, o_orderpriority,
         |       CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
         |       count(*) AS n,
         |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
         |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin,
-    "q_rank_functions" ->
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin),
+    QueryDef("q_rank_functions", qRankFunctions,
       """SELECT c_nationkey, c_custkey,
         |       dense_rank() OVER w AS drank,
         |       CAST(floor(percent_rank() OVER w * 1000000) AS BIGINT) AS prank_ppm,
         |       CAST(floor(cume_dist() OVER w * 1000000) AS BIGINT) AS cdist_ppm,
         |       ntile(4) OVER w AS quartile
         |FROM customer
-        |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)""".stripMargin,
-    "q_csv_roundtrip" ->
+        |WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)""".stripMargin),
+    QueryDef("q_csv_roundtrip", qCsvRoundtrip,
       """WITH tricky AS (
         |  SELECT c_custkey,
         |         c_name || ', segment="' || c_mktsegment || '"' AS c_desc,
@@ -6733,11 +6437,11 @@ object SparkEntry {
         |       CAST(sum(length(c_desc)) AS BIGINT) AS sum_desc_len,
         |       min(c_desc) AS min_desc,
         |       CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS sum_bal_cents
-        |FROM tricky""".stripMargin,
-    "q_label_prop" -> lpaOracle(4),
+        |FROM tricky""".stripMargin),
+    QueryDef("q_label_prop", qLabelProp, lpaOracle(4)),
     // HUGEINT throughout (sums of BIGINT promote; products stay int128,
     // max ≈ 1.7e38 > the n·SS ≈ 3e24 ceiling here) ≡ Spark decimal(38,0).
-    "q_outliers" ->
+    QueryDef("q_outliers", qOutliers,
       """WITH v AS (
         |  SELECT o_orderkey, o_orderpriority,
         |         CAST(round(o_totalprice * 100) AS BIGINT) *
@@ -6752,8 +6456,8 @@ object SparkEntry {
         |FROM v JOIN st USING (o_orderpriority)
         |WHERE (CAST(v.price_cents AS HUGEINT) * st.n - st.s) *
         |      (CAST(v.price_cents AS HUGEINT) * st.n - st.s) * 1 >
-        |      4 * (st.n * st.ss - CAST(st.s AS HUGEINT) * st.s)""".stripMargin,
-    "q_url_normalize" ->
+        |      4 * (st.n * st.ss - CAST(st.s AS HUGEINT) * st.s)""".stripMargin),
+    QueryDef("q_url_normalize", qUrlNormalize,
       s"""WITH raw AS (
          |  SELECT CASE c_custkey % 5
          |    WHEN 0 THEN 'HTTPS://Shop.Example.COM:443/items/' || CAST(c_custkey % 97 AS VARCHAR) || '/?utm_source=x&b=2&a=1'
@@ -6764,8 +6468,8 @@ object SparkEntry {
          |  FROM customer)
          |SELECT ${graft.ops.Urls.canonicalizeUrlSql("url")} AS canonical_url,
          |       count(*) AS n_fetches
-         |FROM raw GROUP BY 1""".stripMargin,
-    "q_weighted_sample" ->
+         |FROM raw GROUP BY 1""".stripMargin),
+    QueryDef("q_weighted_sample", qWeightedSample,
       s"""WITH v AS (
          |  SELECT c_custkey, c_mktsegment,
          |         greatest(1, CAST(round(c_acctbal * 100) AS BIGINT)) AS w_cents
@@ -6776,15 +6480,15 @@ object SparkEntry {
          |  FROM v)
          |SELECT c_custkey, c_mktsegment, w_cents, priority FROM p
          |QUALIFY row_number() OVER (PARTITION BY c_mktsegment
-         |  ORDER BY priority, c_custkey) <= 20""".stripMargin,
-    "q_col_profile" ->
+         |  ORDER BY priority, c_custkey) <= 20""".stripMargin),
+    QueryDef("q_col_profile", qColProfile,
       s"""WITH v AS (
          |  SELECT o_custkey, o_orderstatus, CAST(o_orderdate AS DATE) AS o_date,
          |         CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderpriority END AS prio
          |  FROM orders)
-         |${graft.ops.Profiling.tableProfileSql("v", Seq("o_custkey", "o_orderstatus", "o_date", "prio"))}""".stripMargin,
-    "q_bfs" -> bfsOracle(4),
-    "q_soundex" ->
+         |${graft.ops.Profiling.tableProfileSql("v", Seq("o_custkey", "o_orderstatus", "o_date", "prio"))}""".stripMargin),
+    QueryDef("q_bfs", qBfs, bfsOracle(4)),
+    QueryDef("q_soundex", qSoundex,
       s"""WITH w0 AS (
          |  SELECT unnest(string_split(p_name, ' ')) AS w FROM part
          |  UNION ALL SELECT n_name FROM nation
@@ -6793,10 +6497,10 @@ object SparkEntry {
          |w AS (SELECT DISTINCT w FROM w0)
          |SELECT ${graft.ops.Phonetic.soundexSql("w")} AS code,
          |       count(*) AS n_words, min(w) AS example_min, max(w) AS example_max
-         |FROM w GROUP BY 1""".stripMargin,
+         |FROM w GROUP BY 1""".stripMargin),
     // HUGEINT ≡ decimal(38,0); `//` and `div` both truncate toward zero
     // (probed on negatives), and date-minus-date is exact integer days.
-    "q_trend" ->
+    QueryDef("q_trend", qTrend,
       """WITH v AS (
         |  SELECT o_orderpriority,
         |         CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
@@ -6810,8 +6514,8 @@ object SparkEntry {
         |SELECT o_orderpriority, CAST(n AS BIGINT) AS n,
         |       CAST((1000000 * (n * sxy - sx * sy)) // NULLIF(n * sxx - sx * sx, 0) AS BIGINT)
         |         AS slope_ppm
-        |FROM st""".stripMargin,
-    "q_quarantine" ->
+        |FROM st""".stripMargin),
+    QueryDef("q_quarantine", qQuarantine,
       s"""WITH v AS (
          |  SELECT o_orderkey,
          |         ${graft.ops.Contracts.violationsSql(Seq(
@@ -6823,14 +6527,14 @@ object SparkEntry {
          |  FROM orders)
          |SELECT violated_rules, count(*) AS n,
          |       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-         |FROM v WHERE violated_rules <> '' GROUP BY 1""".stripMargin,
-    "q_dense_ids" ->
+         |FROM v WHERE violated_rules <> '' GROUP BY 1""".stripMargin),
+    QueryDef("q_dense_ids", qDenseIds,
       """SELECT c_custkey, c_mktsegment,
         |       row_number() OVER (ORDER BY c_custkey) AS row_id
-        |FROM customer""".stripMargin,
+        |FROM customer""".stripMargin),
     // arg_max(status, orderkey) ≡ Spark's max(struct(orderkey, status))
     // when the key is unique within the group.
-    "q_scd2" ->
+    QueryDef("q_scd2", qScd2,
       """WITH v AS (
         |  SELECT o_custkey,
         |         CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
@@ -6841,8 +6545,8 @@ object SparkEntry {
         |  FROM v GROUP BY 1, 2)
         |SELECT o_custkey, day, status, day AS valid_from,
         |       lead(day) OVER (PARTITION BY o_custkey ORDER BY day) AS valid_to
-        |FROM log""".stripMargin,
-    "q_snapshot_diff" -> {
+        |FROM log""".stripMargin),
+    QueryDef("q_snapshot_diff", qSnapshotDiff, {
       val d = graft.etl.Etl.rowDigestSql(Seq("text", "source"))
       s"""WITH v2 AS (
          |  SELECT doc_id,
@@ -6860,16 +6564,16 @@ object SparkEntry {
          |      FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id)
          |SELECT status, count(*) AS n, min(doc_id) AS min_key, max(doc_id) AS max_key
          |FROM j GROUP BY 1""".stripMargin
-    },
-    "q_vocab" ->
+    }),
+    QueryDef("q_vocab", qVocab,
       """WITH tk AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |c AS (SELECT tok, count(*) AS cnt FROM tk WHERE tok <> '' GROUP BY 1
         |      HAVING count(*) >= 5)
         |SELECT tok, cnt, row_number() OVER (ORDER BY cnt DESC, tok) AS token_id
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin),
     // the naive theta-join IS the spec; the Spark side must match it
     // through the binned equi-join exactly
-    "q_range_lookup" ->
+    QueryDef("q_range_lookup", qRangeLookup,
       """WITH br(bracket, lo, hi) AS (VALUES
         |  ('low', 0, 10000000), ('mid', 5000000, 30000000),
         |  ('high', 20000000, 60000000), ('vip', 45000000, 100000000)),
@@ -6877,8 +6581,8 @@ object SparkEntry {
         |      FROM orders)
         |SELECT bracket, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM p JOIN br ON p.cents BETWEEN br.lo AND br.hi
-        |GROUP BY 1""".stripMargin,
-    "q_resample" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_resample", qResample,
       """WITH obs AS (
         |  SELECT user_id, epoch_us(ts) AS t, arg_max(value, event_id) AS v
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
@@ -6896,10 +6600,10 @@ object SparkEntry {
         |           PARTITION BY user_id ORDER BY t, is_obs DESC
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
         |  FROM u)
-        |SELECT user_id, t AS sample_ts, v AS value FROM f WHERE is_obs = 0""".stripMargin,
+        |SELECT user_id, t AS sample_ts, v AS value FROM f WHERE is_obs = 0""".stripMargin),
     // recomputes the decoded stats from the closed-form PCM formula:
     // equality proves the WAV encode → decode roundtrip bit-exact
-    "q_audio_stats" ->
+    QueryDef("q_audio_stats", qAudioStats,
       """WITH s AS (
         |  SELECT doc_id, ((doc_id * 2654435761 + i * 40503) % 65536 - 32768) AS v
         |  FROM (SELECT doc_id, unnest(generate_series(0, 39 + doc_id % 25)) AS i
@@ -6910,8 +6614,8 @@ object SparkEntry {
         |       count(*) AS n_samples,
         |       CAST(sum(v * v) AS BIGINT) AS sum_sq,
         |       CAST(max(abs(v)) AS BIGINT) AS peak
-        |FROM s GROUP BY 1""".stripMargin,
-    "q_lm_score" ->
+        |FROM s GROUP BY 1""".stripMargin),
+    QueryDef("q_lm_score", qLmScore,
       """WITH ref AS (
         |  SELECT unnest(string_split(text, ' ')) AS tok
         |  FROM documents WHERE doc_id % 10 < 8),
@@ -6924,8 +6628,8 @@ object SparkEntry {
         |           CAST(st.total + st.v AS DOUBLE)) * 1000000) AS BIGINT) AS unat
         |  FROM tk t LEFT JOIN vocab vb USING (tok), st WHERE t.tok <> '')
         |SELECT doc_id, count(*) AS n_tokens, CAST(sum(unat) AS BIGINT) AS logprob_unat
-        |FROM j GROUP BY 1""".stripMargin,
-    "q_strip_html" -> {
+        |FROM j GROUP BY 1""".stripMargin),
+    QueryDef("q_strip_html", qStripHtml, {
       val html = s"concat('$HtmlPre', CAST(doc_id AS VARCHAR), " +
         s"'$HtmlMid', text, '$HtmlPost')"
       s"""WITH c AS (
@@ -6935,22 +6639,22 @@ object SparkEntry {
          |  CAST(length(clean) AS BIGINT) AS n_chars_clean,
          |  substr(clean, 1, 40) AS head40
          |FROM c""".stripMargin
-    },
-    "q_semdedup_keeper" ->
+    }),
+    QueryDef("q_semdedup_keeper", qSemdedupKeeper,
       s"""WITH base AS (
          |  SELECT vec_id AS id,
          |    ${graft.ops.Similarity.lshBucketSql("embedding", EmbDim, 4)} AS cl,
          |    embedding AS v
          |  FROM embeddings),
-         |${graft.ops.Similarity.clusterKeeperSql(EmbDim)}""".stripMargin,
-    "q_quantize_int8" ->
-      graft.ops.Similarity.quantizeInt8Sql("embeddings", "vec_id", "embedding", EmbDim),
-    "q_kcore" ->
+         |${graft.ops.Similarity.clusterKeeperSql(EmbDim)}""".stripMargin),
+    QueryDef("q_quantize_int8", qQuantizeInt8,
+      graft.ops.Similarity.quantizeInt8Sql("embeddings", "vec_id", "embedding", EmbDim)),
+    QueryDef("q_kcore", qKcore,
       s"""WITH e0 AS (SELECT DISTINCT l_orderkey AS a, -l_suppkey AS b
          |            FROM lineitem WHERE l_quantity >= 45),
          |sym AS (SELECT a AS src, b AS dst FROM e0 UNION SELECT b, a FROM e0),
-         |${graft.ops.Graphs.kCoreSql(3, 8)}""".stripMargin,
-    "q_entropy" ->
+         |${graft.ops.Graphs.kCoreSql(3, 8)}""".stripMargin),
+    QueryDef("q_entropy", qEntropy,
       """WITH tk AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |tc AS (
@@ -6958,8 +6662,8 @@ object SparkEntry {
         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
         |  CAST(sum(CAST(floor(ln(CAST(c AS DOUBLE)) * c * 1000000) AS BIGINT)) AS BIGINT)
         |    AS clogc_unat
-        |FROM tc GROUP BY 1""".stripMargin,
-    "q_freq_weight" ->
+        |FROM tc GROUP BY 1""".stripMargin),
+    QueryDef("q_freq_weight", qFreqWeight,
       """WITH freq AS (
         |  SELECT c_mktsegment AS val, count(*) AS cnt FROM customer GROUP BY 1),
         |st AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM freq),
@@ -6979,11 +6683,12 @@ object SparkEntry {
         |  FROM p CROSS JOIN st
         |  LEFT JOIN freq f ON (CASE WHEN sl = sr THEN sl END) = f.val)
         |SELECT segment, fw_unat, count(*) AS n_pairs FROM w GROUP BY 1, 2""".stripMargin,
-    "q_apportion" ->
+      SweepExcluded("acctbal key fixed ~110-value cardinality → pairs ∝ replicas² by construction: sf1 ladder is its decade step")),
+    QueryDef("q_apportion", qApportion,
       s"""WITH tok AS (
          |  SELECT source, len(string_split(text, ' ')) AS tokens FROM documents),
-         |${graft.ops.Sampling.apportionTokensSql(1000000L)}""".stripMargin,
-    "q_blocking_metrics" ->
+         |${graft.ops.Sampling.apportionTokensSql(1000000L)}""".stripMargin),
+    QueryDef("q_blocking_metrics", qBlockingMetrics,
       s"""WITH c AS (
          |  SELECT c_custkey, c_acctbal,
          |    ${graft.ops.Sampling.hashBucketSql("c_custkey")} AS hb
@@ -7002,10 +6707,11 @@ object SparkEntry {
          |  1.0 - CAST(cc.n_cand AS DOUBLE) / (n.na * n.na) AS reduction_ratio,
          |  CAST(hit.n_hits AS DOUBLE) / n.na AS pairs_completeness
          |FROM cc, n, hit""".stripMargin,
+      SweepExcluded("same pair table as q_block_equi (pairs ∝ replicas²): covered by the 2B rung")),
     // l_quantity is a DOUBLE holding exact TPC-H integers (1..50), so the
     // BIGINT cast agrees on both engines; parallel edges collapse to
     // min(w) BEFORE relaxation, exactly as the operator does.
-    "q_sssp" ->
+    QueryDef("q_sssp", qSssp,
       s"""WITH e0 AS (SELECT l_orderkey AS a, -l_suppkey AS b,
          |              CAST(l_quantity AS BIGINT) AS w FROM lineitem),
          |eall AS (SELECT a AS src, b AS dst, w FROM e0
@@ -7013,29 +6719,29 @@ object SparkEntry {
          |edges AS (SELECT src, dst, min(w) AS w FROM eall GROUP BY src, dst),
          |d0 AS (SELECT DISTINCT -s_suppkey AS id, CAST(0 AS BIGINT) AS dist
          |       FROM supplier WHERE s_suppkey <= 5),
-         |${graft.ops.Graphs.shortestPathsSql(4)}""".stripMargin,
-    "q_retention" ->
+         |${graft.ops.Graphs.shortestPathsSql(4)}""".stripMargin),
+    QueryDef("q_retention", qRetention,
       """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS p FROM events),
         |f AS (SELECT user_id, min(p) AS cohort FROM e GROUP BY 1),
         |d AS (SELECT DISTINCT e.user_id, f.cohort, e.p - f.cohort AS "offset"
         |      FROM e JOIN f ON e.user_id = f.user_id)
         |SELECT cohort, "offset", count(*) AS n_users
-        |FROM d GROUP BY 1, 2""".stripMargin,
-    "q_range_frame" ->
+        |FROM d GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_range_frame", qRangeFrame,
       """SELECT user_id, event_id, epoch_us(ts) AS t_us,
         |  count(*) OVER w AS n_trailing,
         |  CAST(sum(CAST(floor(value * 1000000.0) AS BIGINT)) OVER w AS BIGINT)
         |    AS sum_v_micro
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q_percentiles" ->
+        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin),
+    QueryDef("q_percentiles", qPercentiles,
       s"""WITH v AS (SELECT o_orderpriority,
          |             CAST(floor(o_totalprice * 100) AS BIGINT) AS val
          |           FROM orders),
          |${graft.ops.Profiling.exactPercentilesSql(
-               Seq("o_orderpriority"), Seq(10, 25, 50, 75, 90, 99))}""".stripMargin,
-    "q_interleave" ->
+               Seq("o_orderpriority"), Seq(10, 25, 50, 75, 90, 99))}""".stripMargin),
+    QueryDef("q_interleave", qInterleave,
       s"""WITH d AS (
          |  SELECT doc_id, source,
          |    CAST(substr(source, 4) AS BIGINT) % 4 + 1 AS w,
@@ -7044,10 +6750,10 @@ object SparkEntry {
          |  FROM documents)
          |SELECT doc_id, source, CAST(rank_in_source AS BIGINT) AS rank_in_source,
          |  CAST(${graft.ops.Sampling.interleavePosSql(1000000L)} AS BIGINT) AS pos
-         |FROM d""".stripMargin,
+         |FROM d""".stripMargin),
     // OOV id 0; token order carried through the ORDER BY pos list, so
     // the digest is transposition-sensitive like the Spark side's.
-    "q_encode" ->
+    QueryDef("q_encode", qEncode,
       """WITH tk AS (SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |c AS (SELECT tok, count(*) AS cnt FROM tk WHERE tok <> '' GROUP BY 1
         |      HAVING count(*) >= 5),
@@ -7066,8 +6772,8 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN tid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
         |  md5(array_to_string(list(CAST(tid AS VARCHAR) ORDER BY pos), ','))
         |    AS ids_digest
-        |FROM enc GROUP BY doc_id""".stripMargin,
-    "q_copurchase" ->
+        |FROM enc GROUP BY doc_id""".stripMargin),
+    QueryDef("q_copurchase", qCopurchase,
       """WITH e AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
         |           FROM lineitem),
         |deg AS (SELECT basket, count(*) AS d FROM e GROUP BY 1),
@@ -7075,30 +6781,30 @@ object SparkEntry {
         |      WHERE deg.d <= 50)
         |SELECT a.item AS item_a, b.item AS item_b, count(*) AS n_shared
         |FROM k a JOIN k b ON a.basket = b.basket AND a.item < b.item
-        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
+        |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin),
     // files_disjoint / files_le_requested are computed from the REAL
     // file envelopes on the Spark side; the oracle pins the expected
     // healthy-layout constants plus the exact source totals.
-    "q_file_stats" ->
+    QueryDef("q_file_stats", qFileStats,
       """SELECT count(*) AS n_rows, min(l_orderkey) AS min_key,
         |  max(l_orderkey) AS max_key, 1 AS files_disjoint,
         |  1 AS files_le_requested
-        |FROM lineitem""".stripMargin,
-    "q_wau" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("q_wau", qWau,
       """WITH act AS (SELECT DISTINCT user_id AS e,
         |               epoch_us(ts) // 86400000000 AS p FROM events),
         |w AS (SELECT e, p + k AS period FROM act, UNNEST(range(0, 7)) AS t(k))
         |SELECT period, count(DISTINCT e) AS n_active
-        |FROM w GROUP BY 1""".stripMargin,
+        |FROM w GROUP BY 1""".stripMargin),
     // every event lands in exactly w/h = 4 hop-aligned windows:
     // s_k = (t div h - k)·h for k in 0..3 — s_k ≤ t < s_k + w always.
-    "q_hopping_window" ->
+    QueryDef("q_hopping_window", qHoppingWindow,
       """WITH e AS (SELECT event_type, epoch_us(ts) AS t FROM events),
         |w AS (SELECT event_type, ((t // 900000000) - k) * 900000000 AS ws
         |      FROM e, UNNEST(range(0, 4)) AS u(k))
         |SELECT make_timestamp(ws) AS window_start, event_type, count(*) AS n
-        |FROM w GROUP BY 1, 2""".stripMargin,
-    "q_pop" ->
+        |FROM w GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_pop", qPop,
       """WITH m AS (
         |  SELECT c_mktsegment, CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
         |         CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
@@ -7112,8 +6818,8 @@ object SparkEntry {
         |  CASE WHEN prev_cents IS NOT NULL AND prev_cents <> 0
         |       THEN ((rev_cents - prev_cents) * 1000000) // prev_cents
         |       ELSE NULL END AS delta_ppm
-        |FROM lg""".stripMargin,
-    "q_tpch_q3" ->
+        |FROM lg""".stripMargin),
+    QueryDef("q_tpch_q3", qTpchQ3,
       """WITH l AS (
         |  SELECT l_orderkey,
         |    CAST(floor(l_extendedprice * 100) AS BIGINT) *
@@ -7128,10 +6834,10 @@ object SparkEntry {
         |FROM l JOIN o ON l.l_orderkey = o.o_orderkey
         |GROUP BY 1, 2, 3
         |ORDER BY revenue_micro_cents DESC, l.l_orderkey ASC
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin),
     // p50 rank = (n-1)//2 + 1, twice: once on values, once on the
     // absolute deviations from the group median.
-    "q_mad" ->
+    QueryDef("q_mad", qMad,
       """WITH v AS (SELECT o_orderpriority AS g,
         |             CAST(floor(o_totalprice * 100) AS BIGINT) AS val
         |           FROM orders),
@@ -7145,17 +6851,17 @@ object SparkEntry {
         |          row_number() OVER (PARTITION BY g ORDER BY dv) AS rk,
         |          count(*) OVER (PARTITION BY g) AS n FROM d)
         |SELECT g AS o_orderpriority, med AS median, dv AS mad
-        |FROM rk2 WHERE rk = (n - 1) // 2 + 1""".stripMargin,
-    "q_date_functions" ->
+        |FROM rk2 WHERE rk = (n - 1) // 2 + 1""".stripMargin),
+    QueryDef("q_date_functions", qDateFunctions,
       """SELECT year(o_orderdate) AS y, quarter(o_orderdate) AS q,
         |  month(o_orderdate) AS m, isodow(o_orderdate) AS iso_dow,
         |  datediff('day', DATE '1992-01-01', o_orderdate) AS days_since,
         |  last_day(o_orderdate) AS month_end, count(*) AS n
-        |FROM orders GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin,
+        |FROM orders GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin),
     // Bigrams via aligned list slices; empty tokens dropped BEFORE
     // pairing on both engines. PMI = ln(n_pair·N/(c_a·c_b)) floored
     // to micro-nats — one fixed-order IEEE log, hash-exact.
-    "q_pmi" ->
+    QueryDef("q_pmi", qPmi,
       """WITH d AS (
         |  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS ts
         |  FROM documents),
@@ -7173,23 +6879,23 @@ object SparkEntry {
         |    AS pmi_unat
         |FROM big b
         |JOIN uni ca ON b.tok_a = ca.tok
-        |JOIN uni cb ON b.tok_b = cb.tok, n""".stripMargin,
+        |JOIN uni cb ON b.tok_b = cb.tok, n""".stripMargin),
     // Same fixed-round integer update as the operator, one CTE chain
     // per round (the pageRankOracle pattern); `//` ≡ `div` on these
     // non-negative operands, HUGEINT ≡ decimal(38,0).
-    "q_hits" ->
+    QueryDef("q_hits", qHits,
       s"""WITH edges AS (
          |  SELECT DISTINCT o_custkey AS src, -o_orderkey AS dst FROM orders),
          |nodes AS (SELECT src AS id FROM edges UNION SELECT dst FROM edges),
          |tgt AS (SELECT count(*) * 1000000 AS target FROM nodes),
          |s0 AS (SELECT id, CAST(1000000 AS BIGINT) AS auth,
          |              CAST(1000000 AS BIGINT) AS hub FROM nodes),
-         |${graft.ops.Graphs.hitsSql(3)}""".stripMargin,
+         |${graft.ops.Graphs.hitsSql(3)}""".stripMargin),
     // Islands trick: period − row_number is constant exactly within a
     // consecutive run. Spark's longest-streak struct-max ≡ the QUALIFY
     // row_number argmax (len DESC, end DESC — max_by can't take
     // composite ordering).
-    "q_streaks" ->
+    QueryDef("q_streaks", qStreaks,
       """WITH a AS (
         |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS p FROM events),
         |i AS (
@@ -7209,9 +6915,9 @@ object SparkEntry {
         |  FROM g GROUP BY 1)
         |SELECT t.user_id, t.n_active_periods, t.n_streaks,
         |       b.longest_streak, b.longest_end
-        |FROM tot t JOIN best b ON t.user_id = b.user_id AND b.rn = 1""".stripMargin,
+        |FROM tot t JOIN best b ON t.user_id = b.user_id AND b.rn = 1""".stripMargin),
     // The canonical fetch log through the shared prefix/list program.
-    "q_path_rollup" ->
+    QueryDef("q_path_rollup", qPathRollup,
       s"""WITH raw AS (
          |  SELECT CASE c_custkey % 5
          |    WHEN 0 THEN 'HTTPS://Shop.Example.COM:443/items/' || CAST(c_custkey % 97 AS VARCHAR) || '/?utm_source=x&b=2&a=1'
@@ -7225,9 +6931,11 @@ object SparkEntry {
          |    SELECT ${graft.ops.Urls.canonicalizeUrlSql("url")} AS u FROM raw)
          |  WHERE u IS NOT NULL),
          |${graft.ops.Urls.pathPrefixCountsSql(2)}""".stripMargin,
+      HeavyScanAdjudicated("<=2-prefix sequence explode into the rollup hash agg; " +
+        "canonicalization is one codegen regex pass — agg-shuffle-bound")),
     // Integer centi-nat weights keep every aggregate under 2^53, so
     // the dot/norm doubles are exact and even the cosine hash-matches.
-    "q_tfidf_cosine" ->
+    QueryDef("q_tfidf_cosine", qTfidfCosine,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
          |tf AS (SELECT doc_id, term, count(*) AS tf
@@ -7254,10 +6962,10 @@ object SparkEntry {
          |    * 1000000) AS BIGINT) AS cosine_ppm
          |FROM dt
          |JOIN nr na ON dt.id_a = na.doc_id
-         |JOIN nr nb ON dt.id_b = nb.doc_id""".stripMargin,
+         |JOIN nr nb ON dt.id_b = nb.doc_id""".stripMargin),
     // Lag-change flag + cumsum episode numbering, (time, state) total
     // order — the sessionize mirror shape on VALUE changes.
-    "q_state_runs" ->
+    QueryDef("q_state_runs", qStateRuns,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS t, event_type AS s FROM events),
         |f AS (
@@ -7272,10 +6980,10 @@ object SparkEntry {
         |  FROM f)
         |SELECT user_id, CAST(ep AS BIGINT) AS episode, min(s) AS state,
         |       min(t) AS t_start, max(t) AS t_end, count(*) AS n_events
-        |FROM g GROUP BY 1, 2""".stripMargin,
+        |FROM g GROUP BY 1, 2""".stripMargin),
     // The q_assoc_rules pipeline cut per antecedent by the same total
     // (lift DESC, conf DESC, item) order.
-    "q_recs" ->
+    QueryDef("q_recs", qRecs,
       """WITH e AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
         |           FROM lineitem),
         |deg AS (SELECT basket, count(*) AS d FROM e GROUP BY 1),
@@ -7297,10 +7005,10 @@ object SparkEntry {
         |        ORDER BY lift_ppm DESC, confidence_ppm DESC, item_b) AS rnk
         |      FROM rules)
         |SELECT item_a, item_b, lift_ppm, confidence_ppm, rnk
-        |FROM r WHERE rnk <= 3""".stripMargin,
+        |FROM r WHERE rnk <= 3""".stripMargin),
     // The union+window encoding with struct-carried neighbors; the
     // interp is one truncating division from exact integers.
-    "q_resample_linear" ->
+    QueryDef("q_resample_linear", qResampleLinear,
       """WITH obs AS (
         |  SELECT user_id, epoch_us(ts) AS t,
         |         arg_max(CAST(floor(value * 100) AS BIGINT), event_id) AS v
@@ -7326,9 +7034,9 @@ object SparkEntry {
         |  CASE WHEN nxt IS NULL THEN prev.pv
         |       ELSE (prev.pv * (nxt.nt - t) + nxt.nv * (t - prev.pt))
         |            // (nxt.nt - prev.pt) END AS cents
-        |FROM f WHERE is_obs = 0""".stripMargin,
+        |FROM f WHERE is_obs = 0""".stripMargin),
     // (x−min)·1e6 // (max−min), constant groups NULL.
-    "q_minmax" ->
+    QueryDef("q_minmax", qMinmax,
       """WITH v AS (
         |  SELECT c_mktsegment, c_custkey,
         |         CAST(floor(c_acctbal * 100) AS BIGINT) AS x
@@ -7337,9 +7045,9 @@ object SparkEntry {
         |SELECT v.c_mktsegment, v.c_custkey, v.x,
         |  CASE WHEN st.hi = st.lo THEN NULL
         |       ELSE ((v.x - st.lo) * 1000000) // (st.hi - st.lo) END AS scaled_ppm
-        |FROM v JOIN st USING (c_mktsegment)""".stripMargin,
+        |FROM v JOIN st USING (c_mktsegment)""".stripMargin),
     // Per-x min first, running-min over DISTINCT x, join back for ties.
-    "q_skyline" ->
+    QueryDef("q_skyline", qSkyline,
       """WITH v AS (
         |  SELECT p_partkey, CAST(floor(p_retailprice) AS BIGINT) AS x,
         |         CAST(p_size AS BIGINT) AS y
@@ -7351,16 +7059,16 @@ object SparkEntry {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS best
         |    FROM px)
         |  WHERE best IS NULL OR my < best)
-        |SELECT v.p_partkey, v.x, v.y FROM v JOIN fr USING (x, y)""".stripMargin,
+        |SELECT v.p_partkey, v.x, v.y FROM v JOIN fr USING (x, y)""".stripMargin),
     // One arm per tested pair; NULL dependents count as an extra
     // distinct image (conservative), NULL determinants are excluded.
-    "q_fd" -> Seq(
+    QueryDef("q_fd", qFd, Seq(
       fdArm("o_orderkey", "o_custkey"),
       fdArm("o_custkey", "o_orderpriority"),
-      fdArm("o_orderpriority", "o_orderstatus")).mkString("\nUNION ALL\n"),
+      fdArm("o_orderpriority", "o_orderstatus")).mkString("\nUNION ALL\n")),
     // Risk sets and the log-survival cumsum over DISTINCT durations;
     // each factor floored to micro-nats pre-sum, terminal-0 sentinel.
-    "q_survival" ->
+    QueryDef("q_survival", qSurvival,
       """WITH per AS (
         |  SELECT user_id,
         |    (max(epoch_us(ts)) - min(epoch_us(ts))) // 86400000000 AS dur,
@@ -7384,11 +7092,11 @@ object SparkEntry {
         |  CAST(sum(term) OVER (ORDER BY t
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS log_surv_unat
-        |FROM e""".stripMargin,
+        |FROM e""".stripMargin),
     // The (sortKey, id) total order makes the neighbor pair set a pure
     // function of the data; the operator's distributed numbering ≡ one
     // global row_number.
-    "q_sorted_blocking" ->
+    QueryDef("q_sorted_blocking", qSortedBlocking,
       """WITH r AS (
         |  SELECT c_custkey AS id, c_name AS k,
         |         row_number() OVER (ORDER BY c_name, c_custkey) AS rk
@@ -7397,10 +7105,10 @@ object SparkEntry {
         |  SELECT a.id AS id_left, b.id AS id_right, b.rk - a.rk AS rank_gap
         |  FROM r a JOIN r b ON b.rk > a.rk AND b.rk <= a.rk + 3)
         |SELECT id_left, id_right, CAST(rank_gap AS BIGINT) AS rank_gap
-        |FROM p""".stripMargin,
+        |FROM p""".stripMargin),
     // Closed-form Rand components from the contingency cells —
     // C(n,2) terms through HUGEINT, final ppm by integral division.
-    "q_rand_index" -> {
+    QueryDef("q_rand_index", qRandIndex, {
       val fp = graft.ops.TextAnalysis.fingerprintSql("text")
       s"""WITH j AS (SELECT md5(text) AS ca, $fp AS cb FROM documents),
          |cells AS (SELECT ca, cb, count(*) AS n FROM j GROUP BY 1, 2),
@@ -7418,9 +7126,9 @@ object SparkEntry {
          |  CAST(((s2 + (tot * (tot - 1) // 2 - sa - sb + s2)) * 1000000) //
          |       greatest(tot * (tot - 1) // 2, 1) AS BIGINT) AS rand_ppm
          |FROM s, ma, mb""".stripMargin
-    },
+    }),
     // The q_chi_square pipeline over per-user (variant, converted).
-    "q_ab_test" ->
+    QueryDef("q_ab_test", qAbTest,
       """WITH u AS (
         |  SELECT user_id % 2 AS a,
         |         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS b
@@ -7450,10 +7158,10 @@ object SparkEntry {
         |       CAST((n_a - 1) * (n_b - 1) AS BIGINT) AS dof,
         |       obs_terms + CAST(((t * t - obs_rc) * 1000000) // t AS BIGINT)
         |         AS chi2_micro
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin),
     // Edge-time guard INSIDE the relax join; min-arrival is
     // order-independent, the pageRankExact determinism contract.
-    "q_temporal_bfs" ->
+    QueryDef("q_temporal_bfs", qTemporalBfs,
       s"""WITH e0 AS (
          |  SELECT DISTINCT o_custkey AS c, -l_suppkey AS sp,
          |    CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS t
@@ -7463,10 +7171,10 @@ object SparkEntry {
          |  UNION SELECT sp, c, t FROM e0),
          |a0 AS (SELECT c_custkey AS id, CAST(0 AS BIGINT) AS arrival
          |       FROM customer WHERE c_custkey <= 3),
-         |${graft.ops.Graphs.temporalBfsSql(4)}""".stripMargin,
+         |${graft.ops.Graphs.temporalBfsSql(4)}""".stripMargin),
     // LSH candidates joined back to the uncapped inverted index; the
     // min/max shared shingle is a total, engine-free order.
-    "q_dup_evidence" ->
+    QueryDef("q_dup_evidence", qDupEvidence,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |idx AS (SELECT doc_id, u.s AS shingle FROM shf, unnest(shf.shl) AS u(s))
          |SELECT c.id_a, c.id_b, count(*) AS n_shared,
@@ -7474,11 +7182,11 @@ object SparkEntry {
          |FROM cand c
          |JOIN idx a ON c.id_a = a.doc_id
          |JOIN idx b ON c.id_b = b.doc_id AND a.shingle = b.shingle
-         |GROUP BY 1, 2""".stripMargin,
+         |GROUP BY 1, 2""".stripMargin),
     // Exact pairs at the 0.4 floor (uncapped co-occurrence = the
     // prefix path's recall proof), bucketed by Jaccard decile — the
     // single double division is identical IEEE on both engines.
-    "q_dedup_curve" ->
+    QueryDef("q_dedup_curve", qDedupCurve,
       s"""WITH sh AS (
          |  SELECT doc_id, list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
          |  FROM documents),
@@ -7497,21 +7205,21 @@ object SparkEntry {
          |j AS (
          |  SELECT CAST(inter AS DOUBLE) / (size_a + size_b - inter) AS jac FROM v)
          |SELECT CAST(floor(jac * 10) AS BIGINT) AS decile, count(*) AS n_pairs
-         |FROM j WHERE jac >= 0.4 GROUP BY 1""".stripMargin,
+         |FROM j WHERE jac >= 0.4 GROUP BY 1""".stripMargin),
     // Same banded signatures as q_minhash_lsh (one-table CTE chain —
     // the operator buckets the union identically); the cross pair set
     // is just a side predicate on the bucket self-join.
-    "q_incr_lsh" ->
+    QueryDef("q_incr_lsh", qIncrLsh,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |cand2 AS (
          |  SELECT a.doc_id AS id_new, b.doc_id AS id_corpus
          |  FROM bands a JOIN bands b
          |    ON a.band = b.band AND a.digest = b.digest
          |  WHERE a.doc_id % 20 = 0 AND b.doc_id % 20 <> 0)
-         |SELECT DISTINCT id_new, id_corpus FROM cand2""".stripMargin,
+         |SELECT DISTINCT id_new, id_corpus FROM cand2""".stripMargin),
     // Duplicate values collapse BEFORE the cumsum (input order can
     // never matter); threshold rank (W+1)//2 on exact BIGINT weights.
-    "q_weighted_median" ->
+    QueryDef("q_weighted_median", qWeightedMedian,
       """WITH cnt AS (SELECT l_orderkey, count(*) AS w FROM lineitem GROUP BY 1),
         |v0 AS (
         |  SELECT o_orderpriority AS g, CAST(floor(o_totalprice) AS BIGINT) AS v,
@@ -7526,10 +7234,10 @@ object SparkEntry {
         |  FROM v)
         |SELECT g AS o_orderpriority, CAST(min(v) AS BIGINT) AS weighted_median,
         |       CAST(max(tot) AS BIGINT) AS total_weight
-        |FROM c WHERE cw >= (tot + 1) // 2 GROUP BY 1""".stripMargin,
+        |FROM c WHERE cw >= (tot + 1) // 2 GROUP BY 1""".stripMargin),
     // Both shortlists rebuilt by their own oracles' pipelines (CTE
     // names disambiguated), fused with the identical integer formula.
-    "q_rrf" -> {
+    QueryDef("q_rrf", qRrf, {
       val dot = (1 to EmbDim).map(i => s"q2.qc[$i] * e.codes[$i]").mkString(" + ")
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
          |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -7571,10 +7279,10 @@ object SparkEntry {
          |         ORDER BY rrf_micro DESC, neighbor_id) AS rank FROM f)
          |SELECT query_id, neighbor_id, rrf_micro, n_sources, rank
          |FROM rr WHERE rank <= 5""".stripMargin
-    },
+    }),
     // Level priority via CASE order; each level's right key is unique,
     // so the two LEFT JOINs + coalesce reproduce first-match-wins.
-    "q_waterfall" ->
+    QueryDef("q_waterfall", qWaterfall,
       """WITH l AS (
         |  SELECT o_orderkey, o_custkey,
         |    CASE WHEN o_custkey % 3 = 0 THEN NULL ELSE o_custkey END AS k1,
@@ -7590,11 +7298,11 @@ object SparkEntry {
         |  LEFT JOIN customer c2 ON l.k2 = -c2.c_custkey)
         |SELECT matched_level, count(*) AS n,
         |       CAST(sum(floor(bal)) AS BIGINT) AS sum_floor_bal
-        |FROM res GROUP BY 1""".stripMargin,
+        |FROM res GROUP BY 1""".stripMargin),
     // The q_mad rank selections joined back row-wise; `//` and `div`
     // both truncate toward zero on the negative deviations (probed —
     // the q_trend precedent).
-    "q_robust_z" ->
+    QueryDef("q_robust_z", qRobustZ,
       """WITH v AS (
         |  SELECT o_orderpriority AS g, o_orderkey,
         |         CAST(floor(o_totalprice * 100) AS BIGINT) AS val
@@ -7612,10 +7320,10 @@ object SparkEntry {
         |SELECT v.g AS o_orderpriority, v.o_orderkey, v.val AS x,
         |  CASE WHEN st.mad = 0 THEN NULL
         |       ELSE ((v.val - st.med) * 1000000) // st.mad END AS robust_z_ppm
-        |FROM v JOIN st USING (g)""".stripMargin,
+        |FROM v JOIN st USING (g)""".stripMargin),
     // Confidence/lift from counts on the SAME hub-capped universe as
     // q_copurchase; lift numerator through HUGEINT ≡ decimal(38,0).
-    "q_assoc_rules" ->
+    QueryDef("q_assoc_rules", qAssocRules,
       """WITH e AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
         |           FROM lineitem),
         |deg AS (SELECT basket, count(*) AS d FROM e GROUP BY 1),
@@ -7631,10 +7339,10 @@ object SparkEntry {
         |  CAST((CAST(p.n_ab AS HUGEINT) * tot.t * 1000000) //
         |       (CAST(ia.n AS HUGEINT) * ib.n) AS BIGINT) AS lift_ppm
         |FROM p JOIN ic ia ON p.item_a = ia.item
-        |       JOIN ic ib ON p.item_b = ib.item, tot""".stripMargin,
+        |       JOIN ic ib ON p.item_b = ib.item, tot""".stripMargin),
     // Exact power-of-2 half-life weights: 1e6 // 2^Δ, zero beyond 19
     // half-lives — all-integer, order-free.
-    "q_decayed" ->
+    QueryDef("q_decayed", qDecayed,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS t,
         |         CAST(floor(value * 100) AS BIGINT) AS v
@@ -7650,11 +7358,11 @@ object SparkEntry {
         |  FROM wts)
         |SELECT user_id, count(*) AS n_events,
         |       CAST(sum(v * w) AS BIGINT) AS decayed_micro
-        |FROM sc GROUP BY 1""".stripMargin,
+        |FROM sc GROUP BY 1""".stripMargin),
     // Observed cells carry per-cell floored terms; the o=0 mass is the
     // closed-form T² − Σ_obs r·c, floored once — the operator's
     // documented contract.
-    "q_chi_square" ->
+    QueryDef("q_chi_square", qChiSquare,
       """WITH cells AS (
         |  SELECT source AS a, lang AS b, count(*) AS o
         |  FROM documents GROUP BY 1, 2),
@@ -7682,10 +7390,10 @@ object SparkEntry {
         |       CAST((n_a - 1) * (n_b - 1) AS BIGINT) AS dof,
         |       obs_terms + CAST(((t * t - obs_rc) * 1000000) // t AS BIGINT)
         |         AS chi2_micro
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin),
     // idf = one ln of an integer ratio floored to micro-nats; the
     // (score DESC, term) order is total, so the ranking hash-matches.
-    "q_tfidf" ->
+    QueryDef("q_tfidf", qTfidf,
       """WITH tk AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |tf AS (
@@ -7700,10 +7408,10 @@ object SparkEntry {
         |  FROM tf JOIN dfq USING (term), n),
         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
         |        ORDER BY score_unat DESC, term) AS rank FROM sc)
-        |SELECT doc_id, term, tf, score_unat, rank FROM r WHERE rank <= 3""".stripMargin,
+        |SELECT doc_id, term, tf, score_unat, rank FROM r WHERE rank <= 3""".stripMargin),
     // HRW weights recomputed per (key, shard); arg_max is unique
     // because md5 weights never tie on real keys.
-    "q_shards" ->
+    QueryDef("q_shards", qShards,
       """WITH k AS (SELECT c_custkey AS key FROM customer),
         |w AS (
         |  SELECT key, s,
@@ -7715,10 +7423,10 @@ object SparkEntry {
         |SELECT a10.shard AS shard, count(*) AS n_keys,
         |       CAST(sum(CASE WHEN a10.shard = a11.shard THEN 1 ELSE 0 END) AS BIGINT)
         |         AS n_stay
-        |FROM a10 JOIN a11 USING (key) GROUP BY 1""".stripMargin,
+        |FROM a10 JOIN a11 USING (key) GROUP BY 1""".stripMargin, HeavyScan),
     // Per-field survivorship argmax as a composite struct max — the
     // tie-safe mirror of goldenRecord's max(struct(has, rank, value)).
-    "q_golden" ->
+    QueryDef("q_golden", qGolden,
       """WITH b AS (
         |  SELECT c_custkey // 3 AS cluster_id, c_name, c_mktsegment,
         |         c_acctbal, c_custkey
@@ -7730,11 +7438,11 @@ object SparkEntry {
         |                   r := c_custkey, v := c_mktsegment))).v AS c_mktsegment,
         |  (max(struct_pack(h := CASE WHEN c_acctbal IS NULL THEN 0 ELSE 1 END,
         |                   r := c_custkey, v := c_acctbal))).v AS c_acctbal
-        |FROM b GROUP BY 1""".stripMargin,
+        |FROM b GROUP BY 1""".stripMargin),
     // Last click at-or-before each purchase: LEFT JOIN + max ≡ the
     // backward-inclusive asof; payload is the matched time itself, so
     // equal-time click duplicates cannot diverge.
-    "q_attribution" ->
+    QueryDef("q_attribution", qAttribution,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS t_conv
         |  FROM events WHERE event_type = 'purchase'),
@@ -7746,11 +7454,11 @@ object SparkEntry {
         |  FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.t_click <= p.t_conv
         |  GROUP BY 1, 2, 3)
         |SELECT event_id, user_id, t_conv, t_touch, t_conv - t_touch AS delta_us
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
     // Candidates from the minhash CTEs, exact pairs from the uncapped
     // co-occurrence join (the q_jaccard_prefix oracle), recall as an
     // exact integer ppm.
-    "q_minhash_recall" ->
+    QueryDef("q_minhash_recall", qMinhashRecall,
       s"""WITH ${minhashCandCtes(8, 4, Some(LshCap))},
          |idx AS (SELECT doc_id, u.s AS shingle FROM shf, unnest(shf.shl) AS u(s)),
          |co AS (
@@ -7771,10 +7479,10 @@ object SparkEntry {
          |       (SELECT count(*) FROM cand) AS n_cand,
          |       (SELECT count(*) FROM hit) AS n_hit,
          |       CAST(((SELECT count(*) FROM hit) * 1000000) //
-         |            (SELECT count(*) FROM ex) AS BIGINT) AS recall_ppm""".stripMargin,
+         |            (SELECT count(*) FROM ex) AS BIGINT) AS recall_ppm""".stripMargin),
     // Same shingle/index/co-occurrence mirror as q_jaccard_exact, with
     // exact integer-ppm containments (// ≡ div, non-negative).
-    "q_containment" ->
+    QueryDef("q_containment", qContainment,
       s"""WITH sh AS (
          |  SELECT doc_id, list_distinct(${graft.ops.Dedup.shinglesSql("text", 3)}) AS shl
          |  FROM documents),
@@ -7797,10 +7505,10 @@ object SparkEntry {
          |  CAST((inter * 1000000) // size_b AS BIGINT) AS cont_b_ppm
          |FROM v
          |WHERE greatest((inter * 1000000) // size_a,
-         |               (inter * 1000000) // size_b) >= 500000""".stripMargin,
+         |               (inter * 1000000) // size_b) >= 500000""".stripMargin),
     // Window-3 ordered pairs: k runs over start positions, dd over
     // offsets; the WHERE bound is the slice-length clamp.
-    "q_skipgram" ->
+    QueryDef("q_skipgram", qSkipgram,
       """WITH d AS (
         |  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS ts
         |  FROM documents),
@@ -7809,11 +7517,11 @@ object SparkEntry {
         |  FROM d, UNNEST(range(1, len(ts))) AS t(k), UNNEST(range(1, 4)) AS u(dd)
         |  WHERE k + dd <= len(ts))
         |SELECT tok_a, tok_b, count(*) AS n_cooc
-        |FROM p GROUP BY 1, 2 HAVING count(*) >= 20""".stripMargin,
+        |FROM p GROUP BY 1, 2 HAVING count(*) >= 20""".stripMargin, HeavyScan),
     // The oracle recomputes the int8 codebook in SQL (the
     // q_quantize_int8 contract) and scores with an explicit integer
     // dot — order-free, so the rank order is total on both engines.
-    "q_ann_int8" -> {
+    QueryDef("q_ann_int8", qAnnInt8, {
       val dot = (1 to EmbDim).map(i => s"q.qc[$i] * e.codes[$i]").mkString(" + ")
       s"""WITH st AS (
          |  SELECT gs.i AS pos,
@@ -7837,10 +7545,10 @@ object SparkEntry {
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY dot_q DESC, neighbor_id) AS rank FROM sc)
          |SELECT query_id, neighbor_id, dot_q, rank FROM r WHERE rank <= 5""".stripMargin
-    },
+    }),
     // Sign-signature CTE shared shape: identical half-word layout and
     // `> 0` test as Similarity.signWord; xor+bit_count distance.
-    "q_hamming_topk" ->
+    QueryDef("q_hamming_topk", qHammingTopk,
       s"""WITH sig AS (
          |  SELECT vec_id,
          |    ${graft.ops.Similarity.signWordSql("embedding", 0, EmbDim)} AS sig0,
@@ -7853,11 +7561,11 @@ object SparkEntry {
          |  FROM q CROSS JOIN sig s WHERE s.vec_id <> q.query_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
          |        ORDER BY hamming, neighbor_id) AS rank FROM sc)
-         |SELECT query_id, neighbor_id, hamming, rank FROM r WHERE rank <= 5""".stripMargin,
+         |SELECT query_id, neighbor_id, hamming, rank FROM r WHERE rank <= 5""".stripMargin),
     // The oracle REPRODUCES the multi-index banding (8-bit bands over
     // the two half-words), so the reported pair set is exactly the
     // banded-candidate ∩ radius set on both engines.
-    "q_hamming_neardups" ->
+    QueryDef("q_hamming_neardups", qHammingNeardups,
       s"""WITH sig AS (
          |  SELECT vec_id,
          |    ${graft.ops.Similarity.signWordSql("embedding", 0, EmbDim)} AS sig0,
@@ -7878,22 +7586,22 @@ object SparkEntry {
          |  FROM cand c
          |  JOIN sig sa ON sa.vec_id = c.id_a
          |  JOIN sig sb ON sb.vec_id = c.id_b)
-         |SELECT id_a, id_b, hamming FROM h WHERE hamming <= 18""".stripMargin,
+         |SELECT id_a, id_b, hamming FROM h WHERE hamming <= 18""".stripMargin),
     // dHash mirror from first principles: the analytic gray formula
     // (R=G=B → BT.601 luma is the gray value exactly), 4×4 block sums
     // floor-divided, gradient-sign bits packed into the same two
     // half-words the Spark decode path emits.
-    "q_image_dhash" ->
+    QueryDef("q_image_dhash", qImageDhash,
       s"""WITH $ImageDhashCtes
          |SELECT d.doc_id, CAST(36 AS INT) AS width, CAST(32 AS INT) AS height,
          |  CAST(coalesce(a.d0, 0) AS BIGINT) AS d0,
          |  CAST(coalesce(a.d1, 0) AS BIGINT) AS d1
-         |FROM documents d LEFT JOIN agg a ON a.id = d.doc_id""".stripMargin,
+         |FROM documents d LEFT JOIN agg a ON a.id = d.doc_id""".stripMargin),
     // Near-duplicate images: the analytic dHash feeds the SAME 8-band
     // multi-index join as q_hamming_neardups; radius 7 < 8 bands, so
     // the pigeonhole guarantee makes the result the EXACT radius-7
     // pair set (no candidate-generation caveat on this row).
-    "q_image_neardups" ->
+    QueryDef("q_image_neardups", qImageNeardups,
       s"""WITH $ImageDhashCtes,
          |sig AS (
          |  SELECT d.doc_id AS id, coalesce(a.d0, 0) AS sig0, coalesce(a.d1, 0) AS sig1
@@ -7911,10 +7619,10 @@ object SparkEntry {
          |  SELECT c.id_a, c.id_b,
          |    CAST(bit_count(xor(sa.sig0, sb.sig0)) + bit_count(xor(sa.sig1, sb.sig1)) AS BIGINT) AS hamming
          |  FROM cand c JOIN sig sa ON sa.id = c.id_a JOIN sig sb ON sb.id = c.id_b)
-         |SELECT id_a, id_b, hamming FROM h WHERE hamming <= 7""".stripMargin,
+         |SELECT id_a, id_b, hamming FROM h WHERE hamming <= 7""".stripMargin),
     // Seasonal mirror: same series CTEs, same centered RANGE window,
     // floor-div trend, phase agg.
-    "q_seasonal" ->
+    QueryDef("q_seasonal", qSeasonal,
       s"""WITH $DailySeriesCtes,
         |tw AS (
         |  SELECT t, x,
@@ -7923,10 +7631,10 @@ object SparkEntry {
         |  FROM ser)
         |SELECT t % 7 AS phase, CAST(count(*) AS BIGINT) AS n_days,
         |       CAST(sum(x - ws // 7) AS BIGINT) AS resid_sum
-        |FROM tw WHERE wn = 7 GROUP BY 1""".stripMargin,
+        |FROM tw WHERE wn = 7 GROUP BY 1""".stripMargin),
     // Bloom mirror: identical salted-md5 bit positions, bit_or'd into
     // the same 32-bit words, all-k-bits membership test per file.
-    "q_bloom_index" -> {
+    QueryDef("q_bloom_index", qBloomIndex, {
       def arms(keyExpr: String) = (0 until 3).map(i =>
         s"WHEN gs.i = $i THEN ${graft.ops.Sketches.bloomBitSql(keyExpr, i, 1024)}")
         .mkString("CASE ", " ", " END")
@@ -7951,10 +7659,10 @@ object SparkEntry {
          |act AS (SELECT DISTINCT o_custkey AS probe_key, file, true AS actual FROM o)
          |SELECT m.probe_key, m.file, m.maybe, coalesce(a.actual, false) AS actual
          |FROM mb m LEFT JOIN act a USING (probe_key, file)""".stripMargin
-    },
+    }, HeavyScan),
     // Novelty mirror: distinct (doc, trigram), min-doc ownership,
     // integer ppm.
-    "q_novelty" ->
+    QueryDef("q_novelty", qNovelty,
       s"""WITH sh AS (
          |  SELECT DISTINCT doc_id, u.sh
          |  FROM (SELECT doc_id, ${graft.ops.Dedup.shinglesSql("text", 3)} AS shs
@@ -7964,10 +7672,11 @@ object SparkEntry {
          |  CAST(sum(CASE WHEN fs.first_id = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
          |  CAST((sum(CASE WHEN fs.first_id = sh.doc_id THEN 1 ELSE 0 END) * 1000000)
          |    // count(*) AS BIGINT) AS novelty_ppm
-         |FROM sh JOIN fs USING (sh) GROUP BY 1""".stripMargin,
+         |FROM sh JOIN fs USING (sh) GROUP BY 1""".stripMargin, HeavyScan,
+      SweepExcluded("already at TRUE sf10 in SCALE_PROBE_r14 (14.7 s)")),
     // CUSUM mirror: identical milli-mean series + planted shift, the
     // same running-sum/running-min prefix form.
-    "q_cusum" ->
+    QueryDef("q_cusum", qCusum,
       """WITH d0 AS (SELECT min(o_orderdate) AS v FROM orders),
         |daily AS (
         |  SELECT CAST(datediff('day', d0.v, o_orderdate) AS BIGINT) AS t,
@@ -7988,10 +7697,10 @@ object SparkEntry {
         |  FROM c)
         |SELECT t, CAST(x AS BIGINT) AS x, CAST(cum - mn AS BIGINT) AS s,
         |       cum - mn >= 20000 AS alarm
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // Coverage mirror: same (freq DESC, tok) total order, same
     // cutoff explode, 1-row total.
-    "q_vocab_coverage" ->
+    QueryDef("q_vocab_coverage", qVocabCoverage,
       """WITH v AS (
         |  SELECT tok, CAST(count(*) AS BIGINT) AS freq
         |  FROM (SELECT u.tok FROM (
@@ -8006,10 +7715,10 @@ object SparkEntry {
         |       CAST(sum(rk.freq) AS BIGINT) AS covered_tokens,
         |       CAST((sum(rk.freq) * 1000000) // t.total AS BIGINT) AS coverage_ppm
         |FROM rk, cf, t WHERE rk.rank <= cf.cutoff
-        |GROUP BY 1, t.total""".stripMargin,
+        |GROUP BY 1, t.total""".stripMargin),
     // Label-agreement mirror: the q_ann_int8 quantized-kNN CTEs with
     // a 50-query filter, then exact label-vote integers.
-    "q_label_agreement" -> {
+    QueryDef("q_label_agreement", qLabelAgreement, {
       val dot = (1 to EmbDim).map(i => s"q.qc[$i] * e.codes[$i]").mkString(" + ")
       s"""WITH st AS (
          |  SELECT gs.i AS pos,
@@ -8042,10 +7751,10 @@ object SparkEntry {
          |  CAST((sum(CASE WHEN n_label = label THEN 1 ELSE 0 END) * 1000000) // count(*) AS BIGINT) AS agree_ppm,
          |  sum(CASE WHEN n_label = label THEN 1 ELSE 0 END) * 2 < count(*) AS suspect
          |FROM lj GROUP BY 1, 2""".stripMargin
-    },
+    }),
     // FK mirror: identical full-join shape per relation, null tally
     // as a scalar subquery.
-    "q_fk_integrity" -> {
+    QueryDef("q_fk_integrity", qFkIntegrity, {
       def rel(name: String, child: String, ck: String, parent: String, pk: String) =
         s"""SELECT '$name' AS relation,
            |  CAST(coalesce(sum(coalesce(cn, 0)), 0) AS BIGINT) AS n_child_rows,
@@ -8062,10 +7771,10 @@ object SparkEntry {
         rel("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
         rel("lineitem->supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"))
         .mkString("\nUNION ALL\n")
-    },
+    }),
     // Join-forecast mirror: per-key counts, HUGEINT products, same
     // (contribution DESC, key string DESC) top pick.
-    "q_join_estimate" -> {
+    QueryDef("q_join_estimate", qJoinEstimate, {
       def rel(name: String, left: String, lk: String, right: String, rk: String) =
         s"""SELECT '$name' AS relation, t.nk AS n_shared_keys, t.nj AS n_join_rows,
            |  top.tk AS top_key, top.tc AS top_key_rows,
@@ -8081,9 +7790,9 @@ object SparkEntry {
       Seq(rel("orders*customer", "orders", "o_custkey", "customer", "c_custkey"),
         rel("lineitem*part", "lineitem", "l_partkey", "part", "p_partkey"))
         .mkString("\nUNION ALL\n")
-    },
+    }),
     // Equi-depth mirror: same rank math, same bucket assignment.
-    "q_equidepth" ->
+    QueryDef("q_equidepth", qEquidepth,
       """WITH v AS (
         |  SELECT c_mktsegment, c_custkey,
         |         CAST(floor(c_acctbal * 100) AS BIGINT) AS val
@@ -8095,9 +7804,9 @@ object SparkEntry {
         |  FROM v)
         |SELECT c_mktsegment, ((rk - 1) * 8) // n AS bucket,
         |       CAST(count(*) AS BIGINT) AS n, min(val) AS lo, max(val) AS hi
-        |FROM rk GROUP BY 1, 2""".stripMargin,
+        |FROM rk GROUP BY 1, 2""".stripMargin),
     // Benford mirror: same digit extract, same shared literal table.
-    "q_benford" ->
+    QueryDef("q_benford", qBenford,
       s"""WITH d AS (
          |  SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS INT) AS digit
          |  FROM (SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS v FROM orders)
@@ -8108,17 +7817,17 @@ object SparkEntry {
          |SELECT g.digit, g.n, (g.n * 1000000) // t.tot AS obs_ppm,
          |       e.exp_arr[g.digit] AS exp_ppm,
          |       (g.n * 1000000) // t.tot - e.exp_arr[g.digit] AS dev_ppm
-         |FROM g, t, e""".stripMargin,
+         |FROM g, t, e""".stripMargin),
     // CC graded against the planted ground truth, not a mirror: every
     // image's cluster is its base decade (and the keeper its minimum)
     // iff the pair detection found every same-base link and no
     // cross-base one.
-    "q_image_clusters" ->
+    QueryDef("q_image_clusters", qImageClusters,
       """SELECT doc_id, (doc_id // 10) * 10 AS cluster_id,
         |       doc_id = (doc_id // 10) * 10 AS keep
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
     // L-diversity mirror: three-level agg, same QI and sensitive band.
-    "q_l_diversity" ->
+    QueryDef("q_l_diversity", qLDiversity,
       """WITH sv AS (
         |  SELECT c_nationkey, c_mktsegment,
         |         CAST(floor(c_acctbal / 1000) AS BIGINT) AS s, count(*) AS n
@@ -8131,10 +7840,10 @@ object SparkEntry {
         |       CAST(count(*) AS BIGINT) AS n_classes,
         |       CAST(count(*) * sz AS BIGINT) AS n_rows,
         |       dv < 3 AS risky
-        |FROM cls GROUP BY 1, 2""".stripMargin,
+        |FROM cls GROUP BY 1, 2""".stripMargin),
     // Calibration mirror: identical md5 confidence + independent md5
     // coin (non-negative operands, div ≡ //), same fixed-width bins.
-    "q_calibration" ->
+    QueryDef("q_calibration", qCalibration,
       """WITH sc AS (
         |  SELECT CAST(('0x' || substr(md5('cal:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS p,
         |         CAST(('0x' || substr(md5('coin:' || CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000
@@ -8147,10 +7856,10 @@ object SparkEntry {
         |       CAST(sum(p) AS BIGINT) // count(*) AS mean_score_ppm,
         |       CAST((sum(CASE WHEN y THEN 1 ELSE 0 END) * 1000000) // count(*)
         |         - CAST(sum(p) AS BIGINT) // count(*) AS BIGINT) AS gap_ppm
-        |FROM sc GROUP BY 1""".stripMargin,
+        |FROM sc GROUP BY 1""".stripMargin, HeavyScan),
     // Kappa mirror: same two rule labelers, same exact rational —
     // truncating division via remainder subtraction (HUGEINT).
-    "q_kappa" ->
+    QueryDef("q_kappa", qKappa,
       """WITH lab AS (
         |  SELECT CASE WHEN n < 30 THEN 'short' WHEN n < 100 THEN 'mid' ELSE 'long' END AS a,
         |         CASE WHEN d < 25 THEN 'short' WHEN d < 60 THEN 'mid' ELSE 'long' END AS b
@@ -8169,18 +7878,18 @@ object SparkEntry {
         |  CASE WHEN t * t - pe = 0 THEN NULL
         |    ELSE CAST((((t * d - pe) * 1000000 - ((t * d - pe) * 1000000) % (t * t - pe))
         |               // (t * t - pe)) AS BIGINT) END AS kappa_ppm
-        |FROM tot, pe""".stripMargin,
+        |FROM tot, pe""".stripMargin),
     // CDC mirror: the cdcChunksSqlCtes chain — identical rolling-hash
     // arithmetic, boundary residue, and slice math.
-    "q_cdc_chunks" ->
+    QueryDef("q_cdc_chunks", qCdcChunks,
       s"""WITH ${graft.ops.TextAnalysis.cdcChunksSqlCtes(
             "documents", "doc_id", "text", 4, 32)}
          |SELECT doc_id, chunk_idx, n_tokens, chunk_hash
-         |FROM cdc_chunks""".stripMargin,
+         |FROM cdc_chunks""".stripMargin, HeavyScan),
     // Tone mirror: samples rebuilt ANALYTICALLY from the planted bin
     // and the shared CosTable64 — equality certifies the engine's
     // encode→WAV→decode→DFT chain (the q_image_dhash discipline).
-    "q_audio_tone" -> {
+    QueryDef("q_audio_tone", qAudioTone, {
       val tab = graft.ops.Multimodal.cosTable64Sql
       s"""WITH ids AS (
          |  SELECT doc_id, 1 + doc_id % 8 AS k FROM documents WHERE doc_id % 11 = 0),
@@ -8198,11 +7907,11 @@ object SparkEntry {
          |       c_sum * c_sum + s_sum * s_sum = max(c_sum * c_sum + s_sum * s_sum)
          |         OVER (PARTITION BY doc_id) AS dominant
          |FROM sums""".stripMargin
-    },
+    }, HeavyScan),
     // CDC near-dup mirror: the cdc_chunks chain, distinct (doc,
     // hash), the same hot-chunk cap, chunk-keyed join, pre-cap
     // containment denominators.
-    "q_cdc_neardups" ->
+    QueryDef("q_cdc_neardups", qCdcNeardups,
       s"""WITH ${graft.ops.TextAnalysis.cdcChunksSqlCtes(
             "documents", "doc_id", "text", 4, 16)},
          |dch AS (SELECT DISTINCT doc_id, chunk_hash FROM cdc_chunks),
@@ -8220,10 +7929,10 @@ object SparkEntry {
          |SELECT p.id_a, p.id_b, p.n_shared,
          |       (p.n_shared * 1000000) // least(na.n, nb.n) AS containment_ppm
          |FROM p JOIN nd na ON na.doc_id = p.id_a
-         |       JOIN nd nb ON nb.doc_id = p.id_b""".stripMargin,
+         |       JOIN nd nb ON nb.doc_id = p.id_b""".stripMargin),
     // Video-frame mirror: the SAME analytic dHash chain instantiated
     // at frame keys video·10 + f (sampled every 2nd frame).
-    "q_video_frames" ->
+    QueryDef("q_video_frames", qVideoFrames,
       s"""WITH ${imageDhashCtesFor(
             """SELECT doc_id * 10 + gs.f AS img_id
               |    FROM documents, generate_series(0, 8) gs(f)
@@ -8233,10 +7942,10 @@ object SparkEntry {
          |  CAST(36 AS INT) AS width, CAST(32 AS INT) AS height,
          |  CAST(coalesce(a.d0, 0) AS BIGINT) AS d0,
          |  CAST(coalesce(a.d1, 0) AS BIGINT) AS d1
-         |FROM imgids i LEFT JOIN agg a ON a.id = i.img_id""".stripMargin,
+         |FROM imgids i LEFT JOIN agg a ON a.id = i.img_id""".stripMargin),
     // Modularity mirror: the LPA CTE chain, then the same
     // (2m·W − Σd²)/(2m)² rational in HUGEINT.
-    "q_modularity" ->
+    QueryDef("q_modularity", qModularity,
       s"""WITH ${lpaOracleCtes(4)},
          |lab AS (SELECT id, lbl FROM lab4),
          |je AS (
@@ -8254,9 +7963,9 @@ object SparkEntry {
          |  CAST(two_m // 2 AS BIGINT) AS m_edges, CAST(wi AS BIGINT) AS w_internal,
          |  CAST(((two_m * wi - ds) * 1000000 - ((two_m * wi - ds) * 1000000) % (two_m * two_m))
          |       // (two_m * two_m) AS BIGINT) AS q_ppm
-         |FROM w, dsq, nn""".stripMargin,
+         |FROM w, dsq, nn""".stripMargin),
     // K-anonymity mirror: two hash aggs, identical acctbal banding.
-    "q_k_anonymity" ->
+    QueryDef("q_k_anonymity", qKAnonymity,
       """WITH cls AS (
         |  SELECT c_nationkey, c_mktsegment,
         |         CAST(floor(c_acctbal / 100) AS BIGINT) AS band,
@@ -8266,11 +7975,11 @@ object SparkEntry {
         |       CAST(count(*) AS BIGINT) AS n_classes,
         |       CAST(count(*) * sz AS BIGINT) AS n_rows,
         |       sz < 5 AS risky
-        |FROM cls GROUP BY sz""".stripMargin,
+        |FROM cls GROUP BY sz""".stripMargin),
     // ACF mirror: identical integer series (floor-div revenue ×
     // planted weekly factor), self-join on the shifted index, then
     // the q_corr HUGEINT correlation math per lag.
-    "q_autocorr" ->
+    QueryDef("q_autocorr", qAutocorr,
       s"""WITH $DailySeriesCtes,
         |lags AS (SELECT unnest([1, 2, 3, 4, 5, 6, 7, 14]) AS lag),
         |pairs AS (
@@ -8292,10 +8001,10 @@ object SparkEntry {
         |       ELSE CAST((1000000 * num * num) // (den1 * den2) AS BIGINT) END AS r2_ppm,
         |  CASE WHEN den1 = 0 OR den2 = 0 THEN NULL
         |       ELSE CAST(sign(num) AS INT) END AS corr_sign
-        |FROM fin""".stripMargin,
+        |FROM fin""".stripMargin),
     // Winsorize mirror: identical rank math (ceil(pct·n/100)-th
     // smallest under the same (val, id) tie order), BIGINT clamps.
-    "q_winsorize" ->
+    QueryDef("q_winsorize", qWinsorize,
       """WITH v AS (
         |  SELECT c_mktsegment, c_custkey,
         |         CAST(floor(c_acctbal * 100) AS BIGINT) AS val
@@ -8315,10 +8024,10 @@ object SparkEntry {
         |  CAST(sum(CASE WHEN r.val > c.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped_hi,
         |  CAST(sum(greatest(least(r.val, c.hi), c.lo)) AS BIGINT) AS sum_winsorized
         |FROM rk r JOIN cuts c USING (c_mktsegment)
-        |GROUP BY 1, 2, 3, 4""".stripMargin,
+        |GROUP BY 1, 2, 3, 4""".stripMargin),
     // Both strategies' batch layouts are pure functions of the data
     // (row_number over a total order); all costs are BIGINT.
-    "q_length_batches" ->
+    QueryDef("q_length_batches", qLengthBatches,
       """WITH d AS (
         |  SELECT doc_id,
         |    CAST(len(list_filter(string_split(text, ' '), t -> t <> '')) AS BIGINT) AS n_tok
@@ -8333,10 +8042,10 @@ object SparkEntry {
         |SELECT strategy, batch_id, CAST(count(*) AS BIGINT) AS n_seqs,
         |  max(n_tok) AS max_len, CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
         |  CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-        |FROM s GROUP BY 1, 2""".stripMargin,
+        |FROM s GROUP BY 1, 2""".stripMargin),
     // The oracle rebuilds the 4×64 sketch with the same row-salted
     // md5 buckets; estimates are min-over-rows of exact BIGINT cells.
-    "q_cms" -> {
+    QueryDef("q_cms", qCms, {
       def arms(keyExpr: String) = (0 until 4).map(r =>
         s"WHEN gs.r = $r THEN ${graft.ops.Sketches.cmsBucketSql(keyExpr, r, 64)}")
         .mkString("CASE ", " ", " END")
@@ -8359,10 +8068,10 @@ object SparkEntry {
          |SELECT tok, true_n, CAST(min(cnt) AS BIGINT) AS est_n,
          |       CAST(min(cnt) AS BIGINT) - true_n AS err
          |FROM j GROUP BY 1, 2""".stripMargin
-    },
+    }),
     // System = hamming ranking, truth = int8 ranking; gains are the
     // SAME Scala-computed literals Similarity.retrievalEval uses.
-    "q_ndcg" -> {
+    QueryDef("q_ndcg", qNdcg, {
       val dot = (1 to EmbDim).map(i => s"q.qc[$i] * e.codes[$i]").mkString(" + ")
       s"""WITH sig AS (
          |  SELECT vec_id,
@@ -8421,11 +8130,11 @@ object SparkEntry {
          |  CAST(coalesce(1000000 // p.first_hit, 0) AS BIGINT) AS mrr_micro,
          |  CAST((1000000 * p.dcg) // i.v AS BIGINT) AS ndcg_ppm
          |FROM per p JOIN idcg i ON i.query_id = p.query_id""".stripMargin
-    },
+    }),
     // num and radicand are exact shift-invariant HUGEINTs ≤ 2^53, so
     // the double conversions are exact and the z chain is ONE
     // fixed-order IEEE computation on both engines.
-    "q_zscore" ->
+    QueryDef("q_zscore", qZscore,
       """WITH v AS (
         |  SELECT c_mktsegment, c_custkey,
         |         CAST(floor(c_acctbal / 10) AS BIGINT) AS x
@@ -8440,12 +8149,12 @@ object SparkEntry {
         |       ELSE CAST(floor(CAST(v.x * st.n - st.s AS DOUBLE) /
         |                       sqrt(CAST(st.n * st.ss - st.s * st.s AS DOUBLE))
         |                       * 1000000) AS BIGINT) END AS z_ppm
-        |FROM v JOIN st USING (c_mktsegment)""".stripMargin,
+        |FROM v JOIN st USING (c_mktsegment)""".stripMargin),
     // Stupid backoff: seen bigram → ln(c2/c1); else α=2/5 carried as a
     // rational so every score is ln of ONE integer-over-integer double
     // division — identical IEEE chain on both engines, micro-nat
     // floors before the BIGINT sum (the q_lm_score discipline).
-    "q_lm_bigram" ->
+    QueryDef("q_lm_bigram", qLmBigram,
       """WITH reft AS (
         |  SELECT list_filter(string_split(text, ' '), t -> t <> '') AS ts
         |  FROM documents WHERE doc_id % 10 < 8),
@@ -8482,11 +8191,11 @@ object SparkEntry {
         |  LEFT JOIN uni ub ON p.b = ub.tok, st)
         |SELECT doc_id, count(*) AS n_tokens, CAST(sum(hit) AS BIGINT) AS n_bigram_hits,
         |       CAST(sum(unat) AS BIGINT) AS logprob_unat
-        |FROM (SELECT * FROM fsc UNION ALL SELECT * FROM psc) GROUP BY 1""".stripMargin,
+        |FROM (SELECT * FROM fsc UNION ALL SELECT * FROM psc) GROUP BY 1""".stripMargin),
     // Per-token JSD terms floored to pico-nats before the BIGINT sum;
     // x/y are each ONE double division from exact integers, and the
     // (x+x)/(x+y) spelling is shared verbatim with the Spark side.
-    "q_js_drift" ->
+    QueryDef("q_js_drift", qJsDrift,
       """WITH ta0 AS (
         |  SELECT unnest(string_split(text, ' ')) AS tok
         |  FROM documents WHERE doc_id % 10 < 8),
@@ -8517,11 +8226,15 @@ object SparkEntry {
         |       CAST(sum(CASE WHEN a IS NOT NULL AND b IS NOT NULL THEN 1 ELSE 0 END)
         |         AS BIGINT) AS n_common,
         |       CAST(sum(t1 + t2) AS BIGINT) AS jsd2_pnat
-        |FROM terms""".stripMargin,
+        |FROM terms""".stripMargin),
     // BPE training mirror: wf/w0 seed the doubled-separator symbol
     // strings, then Bpe.bpeSql unrolls the identical 12 merge rounds
     // (pair count → argmax → single literal replace) as chained CTEs.
-    "q_bpe" ->
+    // q_bpe trains EAGERLY (driver-side merge loop over actions), so its
+    // returned frame no longer contains the corpus scan — its guard
+    // lives in bpeWords, the same code path q_bpe_encode's lazy plan
+    // exposes to the registry spec.
+    QueryDef("q_bpe", qBpe,
       s"""WITH wf AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -8531,12 +8244,12 @@ object SparkEntry {
          |    chr(31) || chr(31) ||
          |      regexp_replace(word, '(.)', '\\1' || chr(31) || chr(31), 'g') AS sym
          |  FROM wf),
-         |${graft.ops.Bpe.bpeSql(BpeMergeRounds)}""".stripMargin,
+         |${graft.ops.Bpe.bpeSql(BpeMergeRounds)}""".stripMargin),
     // Fertility mirror: the same training CTEs to the final
     // segmentation, then the pieces-per-word histogram in exact
     // integers (character length semantics match: both engines count
     // codepoints).
-    "q_bpe_stats" ->
+    QueryDef("q_bpe_stats", qBpeStats,
       s"""WITH wf AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -8555,13 +8268,13 @@ object SparkEntry {
          |  CAST(count(*) AS BIGINT) AS n_word_types,
          |  CAST(sum(freq) AS BIGINT) AS n_word_occurrences,
          |  CAST(sum(length(word) * freq) AS BIGINT) AS n_chars_occurrences
-         |FROM seg GROUP BY 1""".stripMargin,
+         |FROM seg GROUP BY 1""".stripMargin),
     // Encoding mirror: the same training CTEs, then word-position
     // explode (positions keep gaps where empty words were filtered,
     // matching posexplode-then-filter), segmentation join, piece
     // explode, and a row_number piece vocabulary over sorted distinct
     // pieces (≡ denseIdsBy's 1-based dense numbering).
-    "q_bpe_encode" ->
+    QueryDef("q_bpe_encode", qBpeEncode,
       s"""WITH wf AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -8590,13 +8303,16 @@ object SparkEntry {
          |        FROM dw JOIN seg USING (word)) x,
          |       unnest(generate_series(1, len(x.pieces))) AS t(j))
          |SELECT pe.doc_id, pe.word_pos, pe.piece_pos, pe.piece, v.piece_id
-         |FROM pe JOIN vocab v USING (piece)""".stripMargin,
+         |FROM pe JOIN vocab v USING (piece)""".stripMargin, HeavyScan),
     // Unigram-LM training mirror: uw is the SAME word-frequency CTE as
     // the BPE family plus the maxWordLen policy filter; trainSqlRounds
     // unrolls the identical seed → EM → prune → EM schedule with the
     // Viterbi DP one chained CTE per character position; the trace
     // union hashes every model state.
-    "q_unigram_lm" ->
+    // q_unigram_lm trains eagerly like q_bpe (localCheckpoint-fenced EM
+    // rounds) — its guard lives in bpeWords via the same scan helper the
+    // lazy q_unigram_encode plan exposes to the registry spec.
+    QueryDef("q_unigram_lm", qUnigramLm,
       s"""WITH uw AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -8604,7 +8320,7 @@ object SparkEntry {
          |${graft.ops.Unigram.trainSqlRounds("uw", UnigramMaxPieceLen,
               UnigramSeedMultiChar, UnigramKeepMultiChar, UnigramEmBefore,
               UnigramEmAfter, UnigramMaxWordLen)}
-         |${graft.ops.Unigram.traceSelectSql(UnigramEmBefore, UnigramEmAfter)}""".stripMargin,
+         |${graft.ops.Unigram.traceSelectSql(UnigramEmBefore, UnigramEmAfter)}""".stripMargin),
     // Unigram encode mirror: the training CTEs, ONE more Viterbi DP
     // under the final vocabulary v4 (u4seg segments under v3 — the
     // M-step input, not the final model), then the q_bpe_encode
@@ -8614,7 +8330,7 @@ object SparkEntry {
     // filter), so the `dw JOIN encseg` below would silently drop it
     // while Spark's bpeEncode raise_errors on the unknown word — the
     // CASE makes DuckDB refuse identically, per offending word.
-    "q_unigram_encode" -> {
+    QueryDef("q_unigram_encode", qUnigramEncode, {
       val lastV = s"v${UnigramEmBefore + 1 + UnigramEmAfter}"
       s"""WITH uw AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
@@ -8638,10 +8354,10 @@ object SparkEntry {
          |FROM (SELECT dw.doc_id, dw.word_pos, s.pieces
          |      FROM dw JOIN encseg s USING (word)) x,
          |     unnest(generate_series(1, len(x.pieces))) AS t(j)""".stripMargin
-    },
+    }, HeavyScan),
     // Unigram fertility mirror: training + one final-vocab Viterbi,
     // then the q_bpe_stats histogram select over encseg.
-    "q_unigram_stats" -> {
+    QueryDef("q_unigram_stats", qUnigramStats, {
       val lastV = s"v${UnigramEmBefore + 1 + UnigramEmAfter}"
       s"""WITH uw AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
@@ -8657,10 +8373,10 @@ object SparkEntry {
          |  CAST(sum(freq) AS BIGINT) AS n_word_occurrences,
          |  CAST(sum(length(word) * freq) AS BIGINT) AS n_chars_occurrences
          |FROM encseg GROUP BY 1""".stripMargin
-    },
+    }),
     // BPE→packing composition: the encode mirror's piece stream
     // aggregated per doc, then the q_pack_chunks cumsum/floor-div.
-    "q_pack_bpe" ->
+    QueryDef("q_pack_bpe", qPackBpe,
       s"""WITH wf AS MATERIALIZED (
          |  SELECT word, CAST(count(*) AS BIGINT) AS freq
          |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -8695,20 +8411,20 @@ object SparkEntry {
          |SELECT lang, doc_id, n_pieces,
          |       s_before // 2048 AS chunk,
          |       s_before % 2048 AS chunk_offset
-         |FROM cum""".stripMargin,
+         |FROM cum""".stripMargin),
     // Per-epoch md5 permutation: same (epoch || chr(1) || key) hash,
     // row_number per epoch over (hash, key) ≡ denseIdsBy's global
     // numbering minus the epoch base.
-    "q_epoch_shuffle" ->
+    QueryDef("q_epoch_shuffle", qEpochShuffle,
       """SELECT doc_id, CAST(epoch AS INTEGER) AS epoch,
         |       CAST(row_number() OVER (PARTITION BY epoch
         |              ORDER BY md5(CAST(epoch AS VARCHAR) || chr(1) || CAST(doc_id AS VARCHAR)),
         |                       CAST(doc_id AS VARCHAR)) AS BIGINT) AS pos
-        |FROM documents, unnest(generate_series(1, 3)) AS e(epoch)""".stripMargin,
+        |FROM documents, unnest(generate_series(1, 3)) AS e(epoch)""".stripMargin),
     // The split QA row composes q_split's md5 bucket, q_js_drift's
     // floored-term JSD, and q_chi_square's closed-form missing-cell
     // chi-square over ONE shared split CTE.
-    "q_corpus_split_qa" ->
+    QueryDef("q_corpus_split_qa", qCorpusSplitQa,
       """WITH sp AS (
         |  SELECT doc_id, lang, text,
         |    CASE WHEN b < 900 THEN 'train' WHEN b < 950 THEN 'valid' ELSE 'test' END AS split
@@ -8772,19 +8488,19 @@ object SparkEntry {
         |         obs_terms + CAST(((t * t - obs_rc) * 1000000) // t AS BIGINT)
         |           AS chi2_micro
         |  FROM agg)
-        |SELECT jsd.*, chi.* FROM jsd, chi""".stripMargin,
+        |SELECT jsd.*, chi.* FROM jsd, chi""".stripMargin),
     // The incremental read must return EXACTLY batch 2 (and nothing
     // after the commit), so the oracle aggregates the batch-2 predicate
     // directly against the base table.
-    "q_incr_read" ->
+    QueryDef("q_incr_read", qIncrRead,
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
         |       CAST(sum(floor(o_totalprice)) AS BIGINT) AS sum_floor_price,
         |       CAST(0 AS BIGINT) AS n_after_commit
-        |FROM orders WHERE o_orderkey % 4 >= 2 GROUP BY 1""".stripMargin,
+        |FROM orders WHERE o_orderkey % 4 >= 2 GROUP BY 1""".stripMargin),
     // The sharded read must return batch 2 everywhere PLUS batch 1 in
     // the two partitions whose ledgers were never committed.
-    "q_incr_part" ->
+    QueryDef("q_incr_part", qIncrPart,
       """SELECT o_orderpriority, count(*) AS n,
         |       CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
         |       CAST(sum(floor(o_totalprice)) AS BIGINT) AS sum_floor_price,
@@ -8793,10 +8509,10 @@ object SparkEntry {
         |WHERE o_orderkey % 4 >= 2
         |   OR (o_orderkey % 4 < 2 AND
         |       (o_orderpriority LIKE '1-%' OR o_orderpriority LIKE '2-%'))
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // r² as an exact HUGEINT rational; only the final ppm quotient
     // truncates (non-negative operands, so // ≡ div).
-    "q_corr" ->
+    QueryDef("q_corr", qCorr,
       """WITH cnt AS (
         |  SELECT l_orderkey AS o_orderkey, count(*) AS n_items
         |  FROM lineitem GROUP BY 1),
@@ -8823,7 +8539,7 @@ object SparkEntry {
         |    AS r2_ppm,
         |  CASE WHEN den1 = 0 OR den2 = 0 THEN NULL
         |       ELSE CAST(sign(num) AS INT) END AS corr_sign
-        |FROM fin""".stripMargin,
+        |FROM fin""".stripMargin),
   )
 
   /** DuckDB mirror of [[qBfs]]: the identical frontier expansion —

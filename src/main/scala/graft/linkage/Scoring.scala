@@ -226,13 +226,7 @@ object Scoring {
     val minTrue = stats.filter(s => s._3 > 0).map(_._1).minOption
     val separated = maxFalse.isEmpty || minTrue.isEmpty || maxFalse.get < minTrue.get
 
-    def logLik(a: Double, b: Double): Double =
-      stats.foldLeft(0.0) { case (acc, (w, n, k)) =>
-        val z = a + b * w
-        // k·log σ(z) + (n−k)·log σ(−z), stably: log σ(z) = −log1pexp(−z)
-        def log1pexp(x: Double) = if (x > 35) x else math.log1p(math.exp(x))
-        acc - k * log1pexp(-z) - (n - k) * log1pexp(z)
-      }
+    def logLik(a: Double, b: Double): Double = binomialLogLik(stats, Calibration(a, b))
 
     var a = math.log((totalK + 0.5) / (totalN - totalK + 0.5))
     var b = 0.0
@@ -283,6 +277,7 @@ object Scoring {
   def binomialLogLik(stats: Seq[(Double, Long, Long)], cal: Calibration): Double =
     stats.foldLeft(0.0) { case (acc, (w, n, k)) =>
       val z = cal.intercept + cal.slope * w
+      // k·log σ(z) + (n−k)·log σ(−z), stably: log σ(z) = −log1pexp(−z)
       def log1pexp(x: Double) = if (x > 35) x else math.log1p(math.exp(x))
       acc - k * log1pexp(-z) - (n - k) * log1pexp(z)
     }

@@ -1,6 +1,8 @@
 package graft.util
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The one per-stage evidence listener of the engine's mains (every
   * mode of [[graft.Measure]], through its query runner) — one
@@ -18,8 +20,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * read/write bytes and input bytes. Jobs are counted as they start: a
   * query that fires many actions at construction (eager
   * localCheckpoint rounds) shows its fixed per-action overhead there.
+  *
+  * Constructing one registers it on `sc`.
   */
-class StageLog extends SparkListener {
+class StageLog(sc: SparkContext) extends SparkListener {
 
   final case class Stage(id: Int, tasks: Int, wallMs: Long, runMs: Long,
       memSpill: Long, diskSpill: Long,
@@ -45,11 +49,12 @@ class StageLog extends SparkListener {
   }
 
   /** Snapshot and clear: the stages completed and the jobs started
-    * since the last call. Sleeps briefly first so the async listener
-    * bus flushes the just-finished query's events.
+    * since the last call. Waits first for the async listener bus to
+    * deliver every event posted so far; a job posts its stage and job
+    * end events before its action returns, so none are missed.
     */
   def drain(): (Seq[Stage], Int) = {
-    Thread.sleep(700)
+    Bridge.waitForListeners(sc)
     val out = scala.collection.mutable.ArrayBuffer[Stage]()
     var r = rows.poll()
     while (r != null) { out += r; r = rows.poll() }
@@ -74,4 +79,6 @@ class StageLog extends SparkListener {
     val ranked = stages.sortBy(s => -math.max(s.wallMs, s.runMs)).take(n)
     (ranked ++ singleTaskViolations(stages, minRunMs)).distinct.sortBy(_.id)
   }
+
+  sc.addSparkListener(this)
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,13 +12,19 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** Minimal bridge into Spark's `private[sql]` Column ↔ Expression
   * conversions (Spark 4 removed the public `new Column(expr)` path)
-  * and the Dataset-checkpoint internals. Lives under
+  * the Dataset-checkpoint internals and the listener bus. Lives under
   * `org.apache.spark.sql` solely for access; no Spark internals are
   * modified.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every listener has handled every event posted so far
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`); throws a
+    * `TimeoutException` if the bus has not drained after 10 s.
+    */
+  def waitForListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** `df.localCheckpoint(eager = true)` that RETURNS THE ROW COUNT of
     * the materializing job instead of discarding it.

@@ -16,8 +16,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("StageLog: jobs and shuffle write of a one-shuffle query") {
-    val log = new graft.util.StageLog
-    spark.sparkContext.addSparkListener(log)
+    val log = new graft.util.StageLog(spark.sparkContext)
     try {
       log.drain()
       val groups = spark.range(0, 10000, 1, 4)

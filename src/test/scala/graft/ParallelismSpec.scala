@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Murmur3Hash, Seque
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
+import graft.QueryTag.{HeavyScan, HeavyScanAdjudicated}
 import graft.util.Parallelism
 
 /** Contract of [[graft.util.Parallelism.ensure]] — the one mechanism
@@ -39,7 +40,7 @@ class ParallelismSpec extends SparkSpec {
 
   test("every heavyScanQueries entry carries the repartition guard against an under-parallel layout") {
     // The registry IS the mechanism (VERDICT r12 item 7): compute-heavy
-    // fact-scan queries are listed once in SparkEntry.heavyScanQueries
+    // fact-scan queries are tagged HeavyScan in SparkEntry.registry
     // and this test asserts each one's plan carries a repartition
     // guard when built over the driver's single-file sf0.001 tables —
     // so a new heavy query without its `ensure` fails here, not in an
@@ -47,15 +48,12 @@ class ParallelismSpec extends SparkSpec {
     // was measured and rejected: it cannot parallelize the scan itself
     // and taxes every scan→shuffle query — see the t() scaladoc.)
     val dir = "/root/testdata/sf0.001"
-    val names = SparkEntry.heavyScanQueries
-    assert(names.nonEmpty)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    assert(unknown.isEmpty, s"registry names not in queries: $unknown")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      val guards = df.queryExecution.logical.collect { case r: RepartitionOperation => r }
+    val heavy = SparkEntry.registry.filter(_.tags.contains(HeavyScan))
+    assert(heavy.nonEmpty)
+    heavy.foreach { q =>
+      val guards = q.build(spark, dir).queryExecution.logical.collect { case r: RepartitionOperation => r }
       assert(guards.nonEmpty,
-        s"$name is registered compute-heavy but its plan has no repartition guard")
+        s"${q.name} is registered compute-heavy but its plan has no repartition guard")
     }
   }
 
@@ -82,7 +80,7 @@ class ParallelismSpec extends SparkSpec {
     * (whose output parallelism is shuffle.partitions regardless of
     * layout) means the kernel inherits raw scan parallelism: the exact
     * shape the sf1 v8 single-file layout serialized. Such a query must
-    * be in [[SparkEntry.heavyScanQueries]] (whose guard presence the
+    * be tagged [[QueryTag.HeavyScan]] (whose guard presence the
     * registry test above asserts).
     */
   private def isHeavy(e: Expression): Boolean = e match {
@@ -122,16 +120,17 @@ class ParallelismSpec extends SparkSpec {
     assert(!unguardedHeavyScan(good.queryExecution.analyzed),
       "detector flagged the guarded twin")
     // Sweep: every registered query with an unguarded heavy scan-fed
-    // kernel must be in the registry — a forgotten guard fails HERE,
-    // not in the next sf1 bench.
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(SparkEntry.heavyScanQueries.contains)
-      .filterNot(SparkEntry.heavyScanAdjudicated.contains)
-      .filter { name =>
-        unguardedHeavyScan(SparkEntry.queries(name)(spark, dir).queryExecution.analyzed)
-      }
+    // kernel must be tagged — a forgotten guard fails HERE, not in the
+    // next sf1 bench.
+    val offenders = SparkEntry.registry.sortBy(_.name)
+      .filterNot(_.tags.exists {
+        case HeavyScan | HeavyScanAdjudicated(_) => true
+        case _ => false
+      })
+      .filter(q => unguardedHeavyScan(q.build(spark, dir).queryExecution.analyzed))
+      .map(_.name)
     assert(offenders.isEmpty,
-      s"heavy scan-fed kernels outside heavyScanQueries (guard them or adjudicate): $offenders")
+      s"heavy scan-fed kernels not tagged HeavyScan (guard them or adjudicate): $offenders")
   }
 
   test("ensure is a no-op when the byte-split estimate already reaches target parallelism") {

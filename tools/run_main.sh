@@ -9,6 +9,8 @@
 # Usage: tools/run_main.sh graft.Bench  (env vars pass through)
 # GRAFT_CLASSES overrides the classes dir — points a run at a
 # baseline snapshot for paired same-weather comparisons.
+# stdout/stderr are UTF-8 whatever the caller's locale: JDK 17 prints
+# non-ASCII (∝ × →) as '?' when LANG/LC_ALL are unset.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="${1:?main class, e.g. graft.Bench}"; shift || true
@@ -24,6 +26,7 @@ mkdir -p /dev/shm/graft-spark
 exec java "${FLAGS[@]}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
+  -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
   -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
   -cp "${GRAFT_CLASSES:-target/scala-2.13/classes}:/opt/spark/jars/*" "$MAIN" "$@"
