@@ -91,12 +91,52 @@ object JaroWinkler {
     val md = m.toDouble
     val jaro = (md / len1 + md / len2 + (md - t) / md) / 3.0
 
-    if (jaro > 0.7) {
-      var prefix = 0
-      val maxPrefix = math.min(4, math.min(len1, len2))
-      while (prefix < maxPrefix && s1.getByte(prefix) == s2.getByte(prefix)) prefix += 1
-      jaro + prefix * 0.1 * (1.0 - jaro)
-    } else jaro
+    if (jaro > 0.7) jaro + commonPrefix(s1, len1, s2, len2) * 0.1 * (1.0 - jaro) else jaro
+  }
+
+  /** Common prefix in bytes, capped at 4 (the Winkler boost's). */
+  private def commonPrefix(s1: UTF8String, len1: Int, s2: UTF8String, len2: Int): Int = {
+    var prefix = 0
+    val maxPrefix = math.min(4, math.min(len1, len2))
+    while (prefix < maxPrefix && s1.getByte(prefix) == s2.getByte(prefix)) prefix += 1
+    prefix
+  }
+
+  // Thread-local byte histogram for [[similarityBound]], all zero
+  // between calls.
+  private val byteCounts: ThreadLocal[Array[Int]] = ThreadLocal.withInitial(() => new Array[Int](256))
+
+  /** Upper bound on [[similarity]] of two non-empty, unequal strings in
+    * O(len1 + len2): the greedy matching pairs equal bytes, so matches
+    * m ≤ c, the size of the two byte multisets' intersection, and with
+    * transpositions ≥ 0, jaro ≤ (c/len1 + c/len2 + 1)/3. The Winkler
+    * step is non-decreasing in jaro (the boost factor is at most 0.4
+    * and jumps up at 0.7), so applying it with the pair's actual common
+    * prefix bounds the similarity (the filter step of filter-then-verify
+    * string-similarity joins).
+    */
+  private[graft] def similarityBound(s1: UTF8String, len1: Int, s2: UTF8String, len2: Int): Double = {
+    val counts = byteCounts.get()
+    var i = 0
+    while (i < len1) { counts(s1.getByte(i) & 0xff) += 1; i += 1 }
+    var common = 0
+    i = 0
+    while (i < len2) {
+      // Branch-free take of one b if any is left: on random names the
+      // test is a coin flip, and a mispredicted branch per byte halves
+      // the speed.
+      val b = s2.getByte(i) & 0xff
+      val left = counts(b)
+      val take = -left >>> 31 // 1 when left > 0 (counts are never negative)
+      counts(b) = left - take
+      common += take
+      i += 1
+    }
+    i = 0
+    while (i < len1) { counts(s1.getByte(i) & 0xff) = 0; i += 1 }
+    val c = common.toDouble
+    val jaro = (c / len1 + c / len2 + 1.0) / 3.0
+    if (jaro > 0.7) jaro + commonPrefix(s1, len1, s2, len2) * 0.1 * (1.0 - jaro) else jaro
   }
 
   // Band labels (reference: R/comparators.R:8-12).
@@ -108,20 +148,20 @@ object JaroWinkler {
   /** Banded comparator kernel: one similarity evaluation per row (a
     * CASE chain over a `jaro_winkler` column would evaluate it once
     * per branch — Catalyst subexpression elimination does not reach
-    * conditional branches), plus a length-based upper-bound short
-    * circuit: jaro ≤ (min/len1 + min/len2 + 1)/3 and the Winkler boost
-    * is monotone, so pairs whose bound can't clear `weak` skip the
-    * O(len·window) matching loop entirely.
+    * conditional branches), after an O(len) filter: a pair whose
+    * [[similarityBound]] cannot clear the lower threshold is "no
+    * agreement" without the O(len·window) matching loop. Random
+    * same-length names share few enough bytes that most of a
+    * u-sample's pairs stop there. The bound is computed in the same
+    * float operations as the similarity; the 1e-9 margin absorbs the
+    * rounding of its smaller match count.
     */
   def band(s1: UTF8String, s2: UTF8String, strong: Double, weak: Double): UTF8String = {
     val len1 = s1.numBytes
     val len2 = s2.numBytes
     if (len1 == 0 || len2 == 0) return NONE
     if (s1.equals(s2)) return FULL
-    val mn = math.min(len1, len2).toDouble
-    val jaroBound = (mn / len1 + mn / len2 + 1.0) / 3.0
-    val bound = if (jaroBound > 0.7) jaroBound + 4 * 0.1 * (1.0 - jaroBound) else jaroBound
-    if (!(bound > weak)) return NONE
+    if (similarityBound(s1, len1, s2, len2) <= math.min(strong, weak) - 1e-9) return NONE
     val sim = jaroWinklerBytes(s1, len1, s2, len2)
     if (sim == 1.0) FULL
     else if (sim > strong) STRONG

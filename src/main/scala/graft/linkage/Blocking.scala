@@ -2,6 +2,7 @@ package graft.linkage
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Candidate-pair generation ("blocking"): avoid the O(|A|·|B|) cross
   * product by taking the union of cheap equi-join passes plus optional
@@ -254,26 +255,33 @@ object Blocking {
     * sides share, or None when they share none.
     *
     * One keyed aggregate over the tagged union of both sides' keys
-    * (per key: left rows, right rows), then a global `sum`/`max` of
-    * the per-key products as `decimal(38,0)` — the two pre-flight
-    * numbers in one codegen'd hash-aggregate pipeline and one 1-row
-    * collect, without a key join. NULL keys are dropped, as an
+    * (per key: left rows, right rows) stays distributed; each task
+    * then reduces its keys' products to a partial sum and max
+    * ([[org.apache.spark.sql.graftbridge.Bridge.foldPartitions]]) and
+    * the driver finishes them — two jobs, without a key join or a
+    * global aggregate's single-task merge job. Products and sums are
+    * exact longs (an overflow throws). NULL keys are dropped, as an
     * equi-join drops them; keys on one side only contribute a zero
     * product. [[graft.ops.Profiling.joinSizeEstimate]] is the same
     * forecast as a reporting table (shared-key count, top key).
     */
   private def pairWork(left: DataFrame, leftKey: Column,
       right: DataFrame, rightKey: Column): Option[(Long, Long)] = {
-    val dec = "decimal(38,0)"
     val keys = left.select(leftKey.as("__k"), lit(1L).as("__l"), lit(0L).as("__r"))
       .union(right.select(rightKey.as("__k"), lit(0L).as("__l"), lit(1L).as("__r")))
-    val row = keys.filter(col("__k").isNotNull)
+    val perKey = keys.filter(col("__k").isNotNull)
       .groupBy(col("__k")).agg(sum(col("__l")).as("__ln"), sum(col("__r")).as("__rn"))
-      .select((col("__ln").cast(dec) * col("__rn").cast(dec)).as("__c"))
-      .agg(sum(col("__c")).cast("long"), max(col("__c")).cast("long"))
-      .head()
-    if (row.isNullAt(0) || row.getLong(0) <= 0) None
-    else Some((row.getLong(0), row.getLong(1)))
+      .select(col("__ln"), col("__rn"))
+    val (total, top) = Bridge.foldPartitions(perKey) { rows =>
+      var (t, m) = (0L, 0L)
+      rows.foreach { r =>
+        val work = Math.multiplyExact(r.getLong(0), r.getLong(1))
+        t = Math.addExact(t, work)
+        m = math.max(m, work)
+      }
+      (t, m)
+    }.foldLeft((0L, 0L)) { case ((t, m), (pt, pm)) => (Math.addExact(t, pt), math.max(m, pm)) }
+    if (total <= 0) None else Some((total, top))
   }
 
   /** UPPER-BOUND estimate of the blocked candidate-pair count: the sum
@@ -286,10 +294,10 @@ object Blocking {
     * [[Pairs.computePairsDataset]]; a high estimate only means smaller
     * tasks).
     *
-    * Cost: one dimension-scale pre-flight job per pass (one keyed
-    * count aggregate + a 1-row collect), run ONLY when the combined
-    * input passes [[graft.util.Parallelism.scanBytesAtLeast]] at
-    * 2 MiB — the local bench inputs (sf0.1 customer 315 KB, part
+    * Cost: one dimension-scale pre-flight per pass ([[pairWork]]'s two
+    * jobs), run ONLY when the combined input passes
+    * [[graft.util.Parallelism.scanBytesAtLeast]] at 2 MiB — the local
+    * bench inputs (sf0.1 customer 315 KB, part
     * 180 KB) sit 6×+ under the gate, so driver-comparable plans carry
     * zero extra jobs and stay byte-identical, while the 2B-pair probe
     * fixture (7.9 MB) and anything bigger pre-flights. Returns None
@@ -348,8 +356,9 @@ object Blocking {
     * tiny-cardinality uniform key (k uniform groups ⇒ s ≈ P/k, giving
     * k·s ≈ P work units).
     *
-    * Cost: one keyed count aggregate over both sides' keys and a
-    * 1-row collect, far cheaper than the pair generation it sizes.
+    * Cost: [[pairWork]]'s two jobs (one keyed count aggregate over
+    * both sides' keys, then a per-task reduce finished on the driver),
+    * far cheaper than the pair generation it sizes.
     * Pass the SAME key expressions the blocking pass will use (left
     * and right sides). Identity of the pair set under any salt count
     * is spec-proved (LinkageSpec); this helper only picks the

@@ -1,7 +1,9 @@
 package graft.linkage
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Scoring: compile fitted m/u tables into a single per-pair weight
   * expression, threshold, rank, and evaluate
@@ -96,23 +98,55 @@ object Scoring {
     * table (scratch.R:137-139): (weight_band, precision, n), ascending
     * by band, NULL band first.
     *
-    * Computed eagerly and returned as a local frame. The table has one
-    * row per distinct rounded weight, so it is collected and ordered on
-    * the driver instead of by a range-partition sample job and a
-    * distributed sort (which would add generated classes to every
-    * linkage pass, docs/CODEGEN_CACHE_r17.md). A band arrives as the
-    * boxed Java value of the weight's type, whose natural order is
-    * Spark's: grouping has already normalized -0.0 and NaN.
+    * Computed eagerly and returned as a local frame. One job counts the
+    * (band, true_match) pairs ([[countsByValue]], at most
+    * [[MaxDriverRows]]); the driver takes `avg(true_match)` and the row
+    * count per band and orders the bands, instead of an aggregate's two
+    * jobs and a range-partition sample job and distributed sort (which
+    * would add generated classes to every linkage pass,
+    * docs/CODEGEN_CACHE_r17.md). The truth counts are exact integers,
+    * so the average is the aggregate's double.
     */
   def precisionByBand(withTruth: DataFrame): DataFrame = {
-    val bands = withTruth
-      .withColumn("weight_band", round(col("weight")))
-      .groupBy("weight_band")
-      .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
-    val byBand = bands.collect().sortBy(r => Option(r.get(0)))(Ordering.Option(
+    val banded = withTruth.select(round(col("weight")).as("weight_band"), col("true_match").cast("double"))
+    val byBand = countsByValue(banded, MaxDriverRows,
+      "precisionByBand keeps one row per distinct rounded weight and truth value; " +
+        "the weight column looks like a continuous per-pair score, not a " +
+        "pattern-pure Fellegi-Sunter weight.")
+      .map { case (band, truths) =>
+        val known = truths.filter(_._1 != null)
+        val precision = if (known.isEmpty) null
+          else known.map { case (t, n) => t.asInstanceOf[Double] * n }.sum / known.map(_._2).sum
+        Row(band, precision, truths.map(_._2).sum)
+      }
+    val schema = StructType(Seq(banded.schema("weight_band"),
+      StructField("precision", DoubleType, nullable = true),
+      StructField("n", LongType, nullable = false)))
+    withTruth.sparkSession.createDataFrame(java.util.Arrays.asList(byBand: _*), schema)
+  }
+
+  /** The most rows a driver-side table of distinct weights may hold;
+    * also [[calibrationStats]]' default bound.
+    */
+  private val MaxDriverRows = 100000
+
+  /** `keyed`'s (value, truth) rows counted in one
+    * [[org.apache.spark.sql.graftbridge.Bridge.countRows]] job and
+    * grouped by value on the driver: (value, (truth, rows) per truth),
+    * ascending by value, NULL first. A value arrives as the boxed Java
+    * value of its type, normalized as `groupBy` normalizes it, is merged
+    * under Java equality (one NaN) and ordered by its natural order,
+    * which is Spark's.
+    */
+  private def countsByValue(keyed: DataFrame, maxRows: Int,
+      contract: String): Seq[(Any, List[(Any, Long)])] = {
+    val byValue = new java.util.HashMap[Any, List[(Any, Long)]]()
+    Bridge.countRows(keyed, maxRows, contract).foreach { case (r, n) =>
+      byValue.merge(r.get(0), List((r.get(1), n)), (a, b) => a ::: b)
+    }
+    import scala.jdk.CollectionConverters._
+    byValue.asScala.toSeq.sortBy(kv => Option(kv._1))(Ordering.Option(
       Ordering.fromLessThan[Any]((x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0)))
-    withTruth.sparkSession.createDataFrame(
-      java.util.Arrays.asList(byBand: _*), bands.schema)
   }
 
   /** Fitted logistic calibration weight → P(match): intercept + slope
@@ -153,12 +187,12 @@ object Scoring {
     *
     * so a weighted logistic fit on the `(w, label, frequency)` rows is
     * EXACTLY the same MLE as a fit over every pair. The pair table is
-    * touched once, by one `groupBy(weight)` count — the only form that
+    * touched once, by one count per distinct weight — the only form that
     * survives 100×: at the NCVR-scale E2E the per-pair `spark.ml` fit
     * was 233.6 s of a 357.5 s pipeline (65%, docs/LINKAGE_E2E_r11.md)
     * for a ≤37-distinct-input computation; 6.6B scored pairs would
-    * make it the whole job, while the groupBy stays one shuffle of
-    * #patterns-sized partials. The aggregated fit itself is a
+    * make it the whole job, while the count stays one job of
+    * #patterns-sized per-task partials. The aggregated fit itself is a
     * driver-side Newton/IRLS over the collected sufficient statistics
     * ([[calibrationStats]], boundedness enforced) — see [[fitIrls]]
     * for why second-order beats `spark.ml`'s L-BFGS here. Parity with
@@ -174,27 +208,32 @@ object Scoring {
     * driver-side float reduction over them is order-pinned). Safe to
     * collect for the same reason [[EM.collectPatterns]] is — row count
     * is bounded by the number of distinct weights (≤ #patterns for
-    * pattern-pure weights), not by pair count — and ENFORCED the same
-    * way: `take(max + 1)` keeps driver memory O(max) and a breach
-    * fails loudly naming the broken contract (a continuous per-pair
-    * score is not a Fellegi–Sunter weight; band it or fit it
-    * distributed via [[calibrateFull]]).
+    * pattern-pure weights), not by pair count — and ENFORCED: one job
+    * counts the (weight, truth) pairs
+    * ([[org.apache.spark.sql.graftbridge.Bridge.countRows]], stopping
+    * at 2 × `maxDistinct` rows, which keeps driver memory O(max)), and
+    * more than `maxDistinct` distinct weights fails loudly naming the
+    * broken contract (a continuous per-pair score is not a
+    * Fellegi–Sunter weight; band it or fit it distributed via
+    * [[calibrateFull]]).
     */
   def calibrationStats(withTruth: DataFrame, weightCol: String = "weight",
       truthCol: String = "true_match",
-      maxDistinct: Int = 100000): Seq[(Double, Long, Long)] = {
-    val rows = withTruth
-      .filter(col(truthCol).isNotNull && col(weightCol).isNotNull)
-      .groupBy(col(weightCol).cast("double").as("__w"))
-      .agg(count(lit(1)).as("__n"), sum(col(truthCol).cast("long")).as("__k"))
-      .take(maxDistinct + 1)
-    require(rows.length <= maxDistinct,
+      maxDistinct: Int = MaxDriverRows): Seq[(Double, Long, Long)] = {
+    val contract =
       s"calibrationStats: more than $maxDistinct distinct weights — the " +
         "driver-side calibration contract (distinct weights <= #patterns) " +
         "is broken; the weight column looks like a continuous per-pair " +
         "score, not a pattern-pure Fellegi-Sunter weight. Band it, or use " +
-        "calibrateFull for a distributed per-pair fit.")
-    rows.map(r => (r.getDouble(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
+        "calibrateFull for a distributed per-pair fit."
+    val stats = countsByValue(withTruth
+      .filter(col(truthCol).isNotNull && col(weightCol).isNotNull)
+      .select(col(weightCol).cast("double"), col(truthCol).cast("long")),
+      2 * maxDistinct, contract)
+    require(stats.size <= maxDistinct, contract)
+    stats.map { case (w, truths) =>
+      (w.asInstanceOf[Double], truths.map(_._2).sum, truths.map { case (t, n) => t.asInstanceOf[Long] * n }.sum)
+    }
   }
 
   /** Newton/IRLS on the aggregated binomial — the fit that actually

@@ -3,6 +3,7 @@ package graft.linkage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** u-probability estimation by random pair sampling
   * (reference: `calculate_u_probs`, scratch.R:58-100): draw ~1e6
@@ -14,6 +15,9 @@ import org.apache.spark.sql.functions._
   * (scratch.R:68-71). Here pair generation is distributed from the
   * start — `spark.range(size)` plus a deterministic per-index mix —
   * so no driver materialization and full reproducibility under a seed.
+  * What reaches the driver is driver-sized by construction: the two
+  * id domains, and one count per distinct tuple of comparator levels
+  * ([[calculateUProbs]]).
   */
 object UProbs {
 
@@ -50,7 +54,7 @@ object UProbs {
     *
     * NOTE: a global `row_number()` is a single-partition sort — fine for
     * the deterministic/oracle path, wrong at 100 TB. The scale path is
-    * [[samplePairsByCross]], which needs no synthetic ids at all.
+    * [[samplePairsByKey]], which needs no synthetic ids at all.
     */
   def withSyntheticId(df: DataFrame, idName: String, orderCol: String): DataFrame =
     // The single-partition sort is BY DESIGN here (the reference-parity
@@ -70,21 +74,6 @@ object UProbs {
     idx.select(
       lcgPick(col("id"), nA, 0L, seed, mult = 48271L).as("synthetic_id_left"),
       lcgPick(col("id"), nB, 1000003L, seed, mult = 69621L).as("synthetic_id_right"))
-  }
-
-  /** Scale-path sampler: independent `sample()` of each side then cross
-    * join, giving ~`size` random pairs without any global sort or
-    * driver round-trip. Marginal distribution per side is uniform;
-    * pairs share sampled rows (same trade-off Splink's public u-training
-    * makes). Use when tables are too large for synthetic-id assignment.
-    */
-  def samplePairsByCross(dataA: DataFrame, dataB: DataFrame, size: Long, seed: Long): DataFrame = {
-    val nA = dataA.count().toDouble
-    val nB = dataB.count().toDouble
-    val side = math.sqrt(size.toDouble)
-    val a = Suffix.addSuffix(dataA.sample(withReplacement = false, math.min(1.0, side / nA), seed), "_left")
-    val b = Suffix.addSuffix(dataB.sample(withReplacement = false, math.min(1.0, side / nB), seed + 1), "_right")
-    a.crossJoin(b)
   }
 
   /** Per-(field, level) sample counts (reference: scratch.R:73-83):
@@ -113,9 +102,9 @@ object UProbs {
 
   /** Deterministic sampled pairs joined DIRECTLY on numeric key
     * columns: LCG picks land in the key's ACTUAL domain
-    * [min(key), max(key)] (measured with one cheap min/max aggregate
-    * per side — not assumed 1..n) and equi-join each side's id — NO
-    * global row_number sort anywhere in the plan, fully
+    * [min(key), max(key)] (both sides' domains measured in one job over
+    * the two id columns — not assumed 1..n) and equi-join each side's
+    * id — NO global row_number sort anywhere in the plan, fully
     * oracle-expressible.
     *
     * Joins are INNER: a pick that hits no key drops the whole pair.
@@ -125,20 +114,13 @@ object UProbs {
     * would count fabricated comparisons, biasing every u-probability
     * downward on the agreeing levels. Dense keys give a uniform
     * sample of exactly `size` pairs; sparse keys thin the sample
-    * (missed picks are dropped entirely), never bias surviving rows —
-    * but for heavily sparse domains prefer [[samplePairsByCross]],
-    * which never misses.
+    * (missed picks are dropped entirely), never bias surviving rows.
     */
   def samplePairsByKey(
       dataA: DataFrame, dataB: DataFrame, idColA: String, idColB: String,
       size: Long, seed: Long): DataFrame = {
-    def domain(df: DataFrame, idCol: String): (Long, Long) = {
-      val r = df.agg(min(col(idCol)).cast("long"), max(col(idCol)).cast("long")).head()
-      (r.getLong(0), r.getLong(1))
-    }
     val spark = dataA.sparkSession
-    val (minA, maxA) = domain(dataA, idColA)
-    val (minB, maxB) = domain(dataB, idColB)
+    val Seq((minA, maxA), (minB, maxB)) = idDomains(dataA, idColA, dataB, idColB)
     val a = Suffix.addSuffix(dataA, "_left")
     val b = Suffix.addSuffix(dataB, "_right")
     val ids = samplePairIds(spark, maxA - minA + 1, maxB - minB + 1, size, seed)
@@ -150,20 +132,51 @@ object UProbs {
       .join(b, ids("synthetic_id_right") === b(Suffix.addSuffix(idColB, "_right")), "inner")
   }
 
+  /** (min, max) of each side's id column as longs, NULLs ignored, in
+    * one job over both: each task reduces its partition of the tagged
+    * union and the driver finishes.
+    */
+  private def idDomains(dataA: DataFrame, idColA: String,
+      dataB: DataFrame, idColB: String): Seq[(Long, Long)] = {
+    val tagged = dataA.select(lit(0), col(idColA).cast("long"))
+      .union(dataB.select(lit(1), col(idColB).cast("long")))
+    val parts = Bridge.foldPartitions(tagged) { rows =>
+      val lo = Array(Long.MaxValue, Long.MaxValue)
+      val hi = Array(Long.MinValue, Long.MinValue)
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val (side, id) = (r.getInt(0), r.getLong(1))
+          lo(side) = math.min(lo(side), id)
+          hi(side) = math.max(hi(side), id)
+        }
+      }
+      (lo, hi)
+    }
+    Seq(idColA, idColB).zipWithIndex.map { case (idCol, side) =>
+      val lo = parts.foldLeft(Long.MaxValue)((m, p) => math.min(m, p._1(side)))
+      val hi = parts.foldLeft(Long.MinValue)((m, p) => math.max(m, p._2(side)))
+      require(lo <= hi, s"samplePairsByKey: id column $idCol has no non-NULL id")
+      (lo, hi)
+    }
+  }
+
   /** End-to-end u-probability estimation — the Spark-native
     * `calculate_u_probs` (scratch.R:58-100), routed through the
     * SCALE-SAFE key-join sampler: the reference's driver-side
     * `copy_to` of a random id table becomes a distributed
     * `spark.range` + equi-join, and no step sorts the full table.
     * `idColA`/`idColB` must be numeric id columns (dense 1..n for a
-    * perfectly uniform sample). For tables without such a key, either
-    * use [[samplePairsByCross]] + [[uProbsLong]] directly, or accept
+    * perfectly uniform sample). For tables without such a key, accept
     * the single-partition sort of [[withSyntheticId]] on a
-    * driver-sized slice.
+    * driver-sized slice and call [[uProbsLong]] directly.
     *
-    * The (name, value, n) counts are collected (at most Σ-levels
-    * rows) and divided on the driver: the same `n / Σ n` doubles as
-    * [[uProbsLong]]'s window, without its sort and exchange.
+    * One job counts the sample's distinct level tuples
+    * ([[org.apache.spark.sql.graftbridge.Bridge.countRows]], at most
+    * the product of the per-field level counts, bounded like
+    * [[EM.collectPatterns]]); the driver then takes each field's
+    * marginal counts, NULL levels dropped, and divides: the same
+    * `n / Σ n` doubles as [[uProbsLong]]'s window, since every count is
+    * an exact integer.
     */
   def calculateUProbs(
       dataA: DataFrame,
@@ -172,14 +185,21 @@ object UProbs {
       idColB: String,
       comparators: Seq[Comparator],
       size: Long = 1000000L,
-      seed: Long = 42L): Map[String, Map[String, Double]] =
-    uCounts(samplePairsByKey(dataA, dataB, idColA, idColB, size, seed), comparators)
-      .collect().toSeq
-      .groupBy(_.getString(0))
-      .map { case (name, rows) =>
-        val total = rows.map(_.getLong(2)).sum
-        name -> rows.map(r => r.getString(1) -> r.getLong(2).toDouble / total.toDouble).toMap
-      }
+      seed: Long = 42L): Map[String, Map[String, Double]] = {
+    val compared = Comparators.doComparisons(
+      samplePairsByKey(dataA, dataB, idColA, idColB, size, seed), comparators)
+    val tuples = Bridge.countRows(compared, 100000,
+      "calculateUProbs counts one row per distinct tuple of comparator levels, at most " +
+        "the product of the per-field level counts; a comparator is emitting " +
+        "high-cardinality levels (raw values instead of a small banded set); band it.")
+    comparators.zipWithIndex.flatMap { case (c, i) =>
+      val byLevel = tuples.filter(!_._1.isNullAt(i))
+        .groupMapReduce(_._1.getString(i))(_._2)(_ + _)
+      val total = byLevel.values.sum.toDouble
+      if (byLevel.isEmpty) None
+      else Some(c.name -> byLevel.map { case (level, n) => level -> n.toDouble / total })
+    }.toMap
+  }
 
   /** Collect the long frequency table to field → (level → p)
     * (reference: scratch.R:85-96).

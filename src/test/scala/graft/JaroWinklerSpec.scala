@@ -72,6 +72,57 @@ class JaroWinklerSpec extends SparkSpec {
     }
   }
 
+  test("band agrees with CASE over the scalar similarity on 24k fixture-shaped pairs") {
+    // LinkageE2E's names: 12 letters over a 16-letter alphabet. Pairs
+    // are random (the u-sample), one letter substituted (tableB's
+    // perturbation), two adjacent letters transposed, and multi-byte
+    // UTF-8 words, which the similarity compares byte by byte.
+    val rnd = new scala.util.Random(23L)
+    val letters = "ghijklmnopqrstuv"
+    def name(alphabet: String, len: Int) = Seq.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    def substitute(w: String) = w.updated(rnd.nextInt(w.length), letters(rnd.nextInt(16)))
+    def transpose(w: String) = {
+      val i = rnd.nextInt(w.length - 1)
+      w.updated(i, w(i + 1)).updated(i + 1, w(i))
+    }
+    val pairs = Seq.fill(6000) {
+      val w = name(letters, 12)
+      Seq((w, name(letters, 12)), (w, substitute(w)), (w, transpose(w)),
+        (name("aéßü€ghij", 1 + rnd.nextInt(8)), name("aéßü€ghij", 1 + rnd.nextInt(8))))
+    }.flatten
+    assert(pairs.size >= 20000)
+    def caseBand(sim: Double, strong: Double, weak: Double) =
+      if (sim == 1.0) "full agreement"
+      else if (sim > strong) "strong partial agreement"
+      else if (sim > weak) "weak partial agreement"
+      else "no agreement"
+    for ((strong, weak) <- Seq((0.9, 0.85), (0.8, 0.7), (0.6, 0.4))) {
+      val bands = pairs.map { case (a, b) =>
+        val sim = JaroWinkler.similarity(a, b)
+        val got = JaroWinkler.band(
+          UTF8String.fromString(a), UTF8String.fromString(b), strong, weak).toString
+        assert(got == caseBand(sim, strong, weak), s"band($a, $b, $strong, $weak): got $got (sim=$sim)")
+        got
+      }
+      assert(bands.toSet.size == 4, s"thresholds ($strong, $weak) reach ${bands.toSet}")
+    }
+  }
+
+  test("similarityBound: never below the similarity, and filters most random fixture names") {
+    val rnd = new scala.util.Random(29L)
+    def name() = Seq.fill(12)("ghijklmnopqrstuv"(rnd.nextInt(16))).mkString
+    val pairs = Seq.fill(5000)((name(), name())).map { case (a, b) =>
+      (UTF8String.fromString(a), UTF8String.fromString(b))
+    }
+    val bounds = pairs.map { case (a, b) =>
+      val bound = JaroWinkler.similarityBound(a, a.numBytes, b, b.numBytes)
+      assert(bound >= JaroWinkler.similarity(a, b), s"bound($a, $b) = $bound")
+      bound
+    }
+    // A length-only bound is 1.0 for every pair of 12-letter names.
+    assert(bounds.count(_ <= 0.85 - 1e-9) > bounds.size / 2)
+  }
+
   test("symmetric (1000 random pairs)") {
     val ws = randomWords(13L, 1000, 8, "xyz")
     ws.zip(ws.reverse).foreach { case (a, b) =>

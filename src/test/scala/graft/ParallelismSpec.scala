@@ -38,7 +38,7 @@ class ParallelismSpec extends SparkSpec {
     assert(repartitions(projected) == 1)
   }
 
-  test("every heavyScanQueries entry carries the repartition guard against an under-parallel layout") {
+  test("every HeavyScan-tagged query carries the repartition guard") {
     // The registry IS the mechanism (VERDICT r12 item 7): compute-heavy
     // fact-scan queries are tagged HeavyScan in SparkEntry.registry
     // and this test asserts each one's plan carries a repartition

@@ -119,6 +119,23 @@ class ScoringSpec extends SparkSpec {
     }
   }
 
+  test("precisionByBand: -0.0 and 0.0 share one band, every NaN is one band, as in groupBy") {
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    val withTruth = Seq((-0.2, true), (0.3, false), (Double.NaN, true), (nan2, false), (2.6, true))
+      .toDF("weight", "true_match").repartition(3)
+    val got = Scoring.precisionByBand(withTruth).collect().toSeq
+    assert(got.map(_.getLong(2)) == Seq(2L, 1L, 2L))
+    assert(java.lang.Double.doubleToRawLongBits(got.head.getDouble(0)) == 0L) // +0.0
+    assert(got.head.getDouble(1) == 0.5)
+    assert(got(1).getDouble(0) == 3.0 && got(2).getDouble(0).isNaN)
+    val reference = withTruth
+      .withColumn("weight_band", round(col("weight")))
+      .groupBy("weight_band")
+      .agg(avg(col("true_match").cast("double")).as("precision"), count(lit(1)).as("n"))
+      .orderBy("weight_band")
+    assert(got == reference.collect().toSeq)
+  }
+
   test("calibrate: glm on the LinkageDemo fixture — monotone in weight, AUC > 0.9") {
     import graft.linkage.{Blocking, BlockingRules, Comparators, ComputedKeys, Pairs}
     val people = LinkageDemo.persons(spark, nClusters = 120).cache()

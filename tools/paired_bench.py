@@ -9,39 +9,73 @@ at pass spreads that would flag a sequential run hopelessly noisy
 (round-14 VERDICT item 1; r11-r13 lost three delta tables to noise).
 
 Usage:
-  tools/paired_bench.py BASELINE_CLASSES SFDIR [PASSES] [OUT.json] [q_a,q_b]
+  tools/paired_bench.py [--runner-dir DIR] BASELINE_CLASSES SFDIR [PASSES] [OUT.json] [q_a,q_b]
 
 The current side always runs target/scala-2.13/classes. PairedRunner
 itself is staged into a runner-only directory prepended to BOTH
 classpaths, so the baseline snapshot needs no PairedRunner of its own;
-SparkEntry still resolves from each side's own classes directory.
+SparkEntry still resolves from each side's own classes directory. The
+staging directory is --runner-dir (emptied first), by default a fresh
+temporary directory removed at exit.
+
+Each runner JVM's heap is a quarter of the box's MemTotal, clamped to
+2-8 GB, so the two runners together take at most half the memory (the
+tests' SPARK_DRIVER_MEM rule for one JVM).
 
 Output: one JSON line (and OUT.json) with per-query median seconds for
 both sides, the paired ratio, movers >1.25x either way, and totals.
 """
+import argparse
+import atexit
 import json
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CUR = os.path.join(REPO, 'target/scala-2.13/classes')
 SPARK_JARS = '/opt/spark/jars/*'
 
-base_classes = sys.argv[1]
-sfdir = sys.argv[2]
-passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-out_path = sys.argv[4] if len(sys.argv) > 4 else None
-only = set(sys.argv[5].split(',')) if len(sys.argv) > 5 else None
+ap = argparse.ArgumentParser(description='Paired A/B bench of two graft class trees.')
+ap.add_argument('--runner-dir', metavar='DIR', help='staging directory for PairedRunner (emptied first)')
+ap.add_argument('base_classes', metavar='BASELINE_CLASSES')
+ap.add_argument('sfdir', metavar='SFDIR')
+ap.add_argument('passes', metavar='PASSES', nargs='?', type=int, default=3)
+ap.add_argument('out_path', metavar='OUT.json', nargs='?')
+ap.add_argument('only', metavar='q_a,q_b', nargs='?')
+args = ap.parse_args()
+base_classes = args.base_classes
+sfdir = args.sfdir
+passes = args.passes
+out_path = args.out_path
+only = set(args.only.split(',')) if args.only else None
+
+
+def runner_heap():
+    """A quarter of MemTotal per runner, clamped to 2-8 GB."""
+    try:
+        with open('/proc/meminfo') as fh:
+            kb = next(int(l.split()[1]) for l in fh if l.startswith('MemTotal:'))
+    except (OSError, StopIteration, ValueError):
+        return '2g'
+    return f'{min(max(kb // 4194304, 2), 8)}g'
+
+
+HEAP = runner_heap()
 
 # Stage PairedRunner classes alone (runner dir is FIRST on both
 # classpaths; it must contain nothing else or it would shadow the
 # baseline snapshot's SparkEntry).
-runner_dir = '/tmp/graft_paired_runner'
-shutil.rmtree(runner_dir, ignore_errors=True)
-os.makedirs(os.path.join(runner_dir, 'graft'))
+if args.runner_dir:
+    runner_dir = args.runner_dir
+    shutil.rmtree(runner_dir, ignore_errors=True)
+else:
+    runner_dir = tempfile.mkdtemp(prefix='graft_paired_runner_')
+    atexit.register(shutil.rmtree, runner_dir, ignore_errors=True)
+os.makedirs(os.path.join(runner_dir, 'graft'), exist_ok=True)
 staged = 0
 for f in os.listdir(os.path.join(CUR, 'graft')):
     if f.startswith('PairedRunner'):
@@ -68,7 +102,7 @@ JVM_FLAGS = sum((['--add-opens', f'{p}=ALL-UNNAMED'] for p in OPENS), []) + [
 def start(classes):
     cp = f'{runner_dir}:{classes}:{SPARK_JARS}'
     return subprocess.Popen(
-        ['java', '-Xmx24g'] + JVM_FLAGS + ['-cp', cp, 'graft.PairedRunner'],
+        ['java', f'-Xmx{HEAP}'] + JVM_FLAGS + ['-cp', cp, 'graft.PairedRunner'],
         stdin=subprocess.PIPE, stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL, text=True, bufsize=1)
 
