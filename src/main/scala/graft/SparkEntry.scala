@@ -955,8 +955,7 @@ object SparkEntry {
     * over the embeddings in integer micro-units — quantize once,
     * integer squared-Euclidean argmin, truncating-mean update — so
     * the full iterative clustering chain is hash-checked against the
-    * DuckDB CTE pyramid (the last non-oracle'd ANN stage; float-mean
-    * k-means stays as [[graft.ops.Similarity.kmeansCentroids]]).
+    * DuckDB CTE pyramid (the last non-oracle'd ANN stage).
     */
   private def qKmeans(s: SparkSession, dir: String): DataFrame =
     graft.ops.Similarity.kmeansCentroidsMicro(
@@ -3845,7 +3844,7 @@ object SparkEntry {
   /** The analytic-dHash CTE chain over an arbitrary image-key source:
     * `idsSql` must yield a column `img_id`; the chain ends at `agg`
     * keyed by `id`. Frame key semantics are [[graft.ops.Multimodal
-    * .synthGray]]'s: base = `img_id div 10`, variant = `img_id mod
+    * .synthBmp]]'s: base = `img_id div 10`, variant = `img_id mod
     * 10` — shared by the still-image fixture (img_id = doc_id) and
     * the video fixture (img_id = video·10 + frame).
     */

@@ -15,9 +15,16 @@ object Verify {
     // SPARK_GRAFT_VERIFY_COALESCE=0 keeps the parallel write (the
     // compare tools glob part files either way).
     val coalesce1 = sys.env.getOrElse("SPARK_GRAFT_VERIFY_COALESCE", "1") != "0"
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // Clear the previous run's output first: a query that now throws
+      // before its write must show NO output, not be compared on stale
+      // parquet left in a reused out dir.
+      rm(new java.io.File(s"$outDir/$name"))
       try {
         val df = fn(spark, sfDir)
         (if (coalesce1) df.coalesce(1) else df).write.mode("overwrite")

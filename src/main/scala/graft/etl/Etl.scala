@@ -170,59 +170,6 @@ object Etl {
     }
   }
 
-  /** Size-targeted compaction: derive the file count from the actual
-    * on-disk bytes (`ceil(bytes / targetFileBytes)`) instead of a
-    * hand-picked count — the knob operators actually reason in
-    * ("~512 MB files"), and the difference between a table compacted
-    * once and one re-tuned every time it grows. Parquet compression
-    * carries over (the post-compaction encoding matches the input's),
-    * so input bytes are an honest size proxy. Delegates to
-    * [[compact]] for the write.
-    */
-  def compactToSize(spark: SparkSession, inPath: String, outPath: String,
-      targetFileBytes: Long, partitionCols: Seq[String] = Nil): Unit = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    def du(f: java.io.File): Long =
-      if (f.isFile) { if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L else f.length }
-      else Option(f.listFiles()).toSeq.flatten.map(du).sum
-    val bytes = du(new java.io.File(inPath))
-    require(bytes > 0, s"no data bytes under $inPath")
-    def ceilDiv(a: Long, b: Long): Int = math.max(1L, (a + b - 1) / b).toInt
-    if (partitionCols.isEmpty) {
-      val nFiles = ceilDiv(bytes, targetFileBytes)
-      // coalesce can only LOWER the partition count: when the derived
-      // count exceeds the scan's (small target vs the reader's
-      // bin-packing), rebalance (shuffle) or the target is silently
-      // missed by up to maxPartitionBytes/target ×.
-      val scanParts = spark.read.parquet(inPath).rdd.getNumPartitions
-      compact(spark, inPath, outPath, nFiles, rebalance = nFiles > scanParts)
-    } else {
-      // compact's partitioned branch takes files PER HIVE PARTITION
-      // (its write salt is per-partition): derive the per-partition
-      // count from the AVERAGE partition's bytes, not the table's —
-      // a global count here would write nFiles files into EVERY
-      // partition and explode the file count.
-      val nPartDirs = math.max(1,
-        Option(new java.io.File(inPath).listFiles()).toSeq.flatten
-          .count(f => f.isDirectory && f.getName.contains("=")))
-      val perPartition = ceilDiv(bytes / nPartDirs, targetFileBytes)
-      compact(spark, inPath, outPath, perPartition, partitionCols = partitionCols)
-    }
-  }
-
-  /** Parquet scan that SKIPS corrupt or truncated files instead of
-    * failing the job — the triage read for a 100 TB table with a bad
-    * write behind it (a failed executor's partial file, a torn copy).
-    * Scoped per-read (an option on this scan, not a session config —
-    * nothing leaks into other readers). NOT for production pipelines:
-    * silently dropping data is the wrong default, which is why the
-    * regular [[readPartitioned]] stays strict; pair this with
-    * [[readAudited]]'s checksum to quantify exactly what a salvage
-    * read lost.
-    */
-  def readSalvage(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("ignoreCorruptFiles", "true").parquet(path)
-
   /** In-place compaction of a SINGLE hive partition: reads just that
     * partition (partition-pruned scan), coalesces to `targetFiles`,
     * and dynamic-overwrites ONLY that directory — sibling partitions

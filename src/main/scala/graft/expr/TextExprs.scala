@@ -51,8 +51,8 @@ object TextExprs {
   /** MinHash signature: k affine-mix minima over a base-hash array in
     * ONE pass (k accumulators), vs k interpreted `array_min(transform)`
     * walks. mix_i(h) = (h·(2i+1001) + (9176i+17)) mod P — identical
-    * integer math to [[graft.ops.Dedup.minhashMix]] (inputs are
-    * non-negative, so `%` equals `pmod`). Empty input → k nulls,
+    * integer math to `OpsSpec.minhashMix`, its parity reference (inputs
+    * are non-negative, so `%` equals `pmod`). Empty input → k nulls,
     * matching `array_min(empty) = NULL`.
     */
   def minhashSignature(hashes: ArrayData, k: Int): ArrayData = {
@@ -148,10 +148,9 @@ object TextExprs {
   /** Polynomial rolling fingerprint over a token array:
     * h ← (h·31 + code(w)) mod 1e9+7 with code = first 8 hex digits of
     * MD5 (= the first 4 digest bytes, big-endian). Value-identical to
-    * the `aggregate(transform(...))` fold in
-    * [[graft.ops.TextAnalysis.fingerprintHof]] — exact integer math,
-    * same left-to-right order — without the interpreted md5 lambda per
-    * token.
+    * the `aggregate(transform(...))` fold `OpsSpec.fingerprintHof` —
+    * exact integer math, same left-to-right order — without the
+    * interpreted md5 lambda per token.
     */
   def tokenFingerprint(toks: ArrayData): Long = {
     val num = toks.numElements()

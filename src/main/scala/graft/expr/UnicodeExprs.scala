@@ -95,10 +95,6 @@ object UnicodeExprs {
   /** Column face of [[NfcNormalizeExpr]]. */
   def nfcNormalizeCol(c: Column): Column =
     Bridge.column(NfcNormalizeExpr(Bridge.expression(c)))
-
-  /** Column face of [[StripAccentsExpr]]. */
-  def stripAccentsCol(c: Column): Column =
-    Bridge.column(StripAccentsExpr(Bridge.expression(c)))
 }
 
 /** `nfc_normalize(string)` — codegen'd NFC canonicalization. */

@@ -44,7 +44,8 @@ object VectorExprs {
   /** Fused random-hyperplane bucket: all `planes` sign bits in ONE
     * pass over the vector. Each plane's projection accumulates in
     * index order independently, so per-plane results are bit-identical
-    * to the per-plane HOF fold in [[graft.ops.Similarity.lshBucket]].
+    * to the per-plane HOF fold `OpsSpec.lshBucketHof`, the parity
+    * reference for [[graft.ops.Similarity.lshBucket]].
     */
   def lshBucket(a: ArrayData, planes: Int, seed: Long): Long = {
     val n = a.numElements()

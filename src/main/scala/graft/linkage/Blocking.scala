@@ -75,15 +75,6 @@ final case class BlockingRules(passes: Seq[BlockingPass]) {
         passes.map(p => s"  - $p").mkString("\n")
 }
 
-/** Top-level linkage spec (reference: S7 `ppack_spec`,
-  * R/s7_classes.R:34-44).
-  */
-final case class LinkSpec(
-    blocking: BlockingRules,
-    comparators: Seq[Comparator],
-    uniqueIdA: String,
-    uniqueIdB: String)
-
 object Blocking {
 
   /** Generate the deduplicated candidate-pair id table

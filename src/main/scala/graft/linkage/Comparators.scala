@@ -3,8 +3,6 @@ package graft.linkage
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.expr.JaroWinkler.jaro_winkler
-
 /** Comparator-expression builders: each comparator maps a record pair
   * (with `_left`/`_right` suffixed columns) to a discrete agreement
   * level, or NULL when the comparison is inapplicable.

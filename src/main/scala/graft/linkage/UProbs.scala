@@ -200,14 +200,4 @@ object UProbs {
       else Some(c.name -> byLevel.map { case (level, n) => level -> n.toDouble / total })
     }.toMap
   }
-
-  /** Collect the long frequency table to field → (level → p)
-    * (reference: scratch.R:85-96).
-    */
-  def toNestedMap(uLong: DataFrame): Map[String, Map[String, Double]] =
-    uLong.collect().toSeq
-      .groupBy(_.getAs[String]("name"))
-      .map { case (name, rows) =>
-        name -> rows.map(r => r.getAs[String]("value") -> r.getAs[Double]("p")).toMap
-      }
 }

@@ -122,24 +122,14 @@ object Dedup {
   /** Word n-gram shingles over a token-array column (n ≥ 1); the empty
     * array when the document has fewer than n tokens. Codegen'd one-
     * pass kernel ([[graft.expr.ShinglesExpr]]); the interpreted HOF
-    * form is kept as [[shinglesFromTokensHof]] for parity tests — that
-    * form additionally required `toks` to be a bound attribute
+    * form, `OpsSpec.shinglesFromTokensHof`, is its parity reference —
+    * that form additionally required `toks` to be a bound attribute
     * (expressions inside a `transform` lambda re-evaluate per element,
     * O(tokens²); measured 40× on the 400-token documents corpus), a
     * trap the expression kernel does not have.
     */
   def shinglesFromTokens(toks: Column, n: Int): Column =
     if (n == 1) toks else graft.expr.TextExprs.shingles(toks, n)
-
-  /** Interpreted Column-algebra shingling — parity reference. */
-  def shinglesFromTokensHof(toks: Column, n: Int): Column =
-    if (n == 1) toks
-    else {
-      val idx = sequence(lit(0), size(toks) - n) // 0-based subscripts
-      when(size(toks) >= n,
-        transform(idx, i => concat_ws(" ", (0 until n).map(j => element_at(toks, (i + j + 1).cast("int"))): _*)))
-        .otherwise(array().cast("array<string>"))
-    }
 
   /** Convenience inline form — ONLY for one-shot use on small inputs;
     * pair pipelines materialize the tokens first (see above).
@@ -659,21 +649,6 @@ object Dedup {
   def shingleBaseHashSql(sExpr: String): String =
     s"CAST(('0x' || substr(md5($sExpr), 1, 15)) AS BIGINT) % $MhP"
 
-  /** Per-permutation mix: (aᵢ·h + bᵢ) mod P with fixed odd multipliers;
-    * products stay below 2⁶². */
-  def minhashMix(h: Column, i: Int): Column =
-    pmod(h * lit(2 * i + 1001L) + lit(i * 9176L + 17L), lit(MhP))
-
-  /** MinHash signature columns over a PRE-HASHED shingle array
-    * (array<long> of [[shingleBaseHash]] values — materialize it once
-    * so the MD5 pass isn't repeated per permutation):
-    * sig_i = min over hashes of mix_i(h), i = 0..k−1.
-    */
-  def minhashSignature(hashCol: Column, k: Int): Seq[(String, Column)] =
-    (0 until k).map { i =>
-      s"sig_$i" -> array_min(transform(hashCol, h => minhashMix(h, i)))
-    }
-
   /** MinHash-LSH candidate pairs from a prepared (id, sh) shingle-set
     * table (see [[shingleSets]]). Output (id_a, id_b) distinct,
     * id_a < id_b.
@@ -692,7 +667,8 @@ object Dedup {
     * cross-join LSH candidate paths. Codegen'd map side: per-shingle
     * MD5 base hashes and all k signature minima in fused single-pass
     * kernels (the HOF forms — an interpreted md5 lambda per shingle
-    * plus k interpreted array walks — are kept for the parity tests).
+    * plus k interpreted array walks — are `OpsSpec`'s parity
+    * references).
     * Band digests then read sig elements directly; values are
     * identical either way (exact integer math), as is the DuckDB
     * mirror.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,122 +12,16 @@ import org.apache.spark.sql.types._
   * partition, library handles per-record work, output is a typed
   * schema Catalyst can keep optimizing after.
   *
-  * Image payloads decode through [[ImageCodec]] — the JDK's built-in
-  * `javax.imageio` (PNG/BMP/GIF/JPEG readers ship with every JDK; zero
-  * added dependencies). Non-image payloads (and the text-fixture path)
-  * go through [[FakeCodec]], a deterministic stand-in with the same
-  * signature. The Spark-side plumbing — schema, partitioning, batch
-  * iteration, feature schema — is oracle-tested via [[mediaStats]].
+  * Image payloads decode through the JDK's built-in `javax.imageio`
+  * ([[dhashBytes]]; PNG/BMP/GIF/JPEG readers ship with every JDK, zero
+  * added dependencies), audio through [[AudioCodec]]'s WAV reader and
+  * video through [[VideoCodec]]'s frame container. The relational
+  * side of a payload column is oracle-tested via [[mediaStats]].
   */
 object Multimodal {
 
   /** One media record: payload + typed metadata. */
   final case class MediaRecord(id: Long, media: Array[Byte], mime: String, meta: Map[String, String])
-
-  /** Extracted features: what a decode+embed stage would emit. */
-  final case class MediaFeatures(
-      id: Long, byteLen: Int, width: Int, height: Int, features: Array[Float])
-
-  /** Real image decoder on the JDK's `javax.imageio`: width, height,
-    * and a [[FeatureDim]]-bin normalized luminance histogram. Integer
-    * BT.601 luma weights (299/587/114 over 1000) keep binning
-    * bit-deterministic across platforms. Returns None for payloads no
-    * installed reader accepts (truncated/corrupt/unknown format) —
-    * callers map that to a sentinel row rather than dropping the
-    * record, so a bad file in a 100 TB corpus is visible, not silent.
-    *
-    * `ImageIO.setUseCache(false)` keeps per-record decodes in-heap
-    * (the default spills every stream to a temp FILE — a per-record
-    * disk write on the executor's hot path).
-    */
-  object ImageCodec {
-    javax.imageio.ImageIO.setUseCache(false)
-    def decode(payload: Array[Byte]): Option[(Int, Int, Array[Float])] = {
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-        catch { case _: java.io.IOException => null }
-      Option(img).map { im =>
-        val (w, h) = (im.getWidth, im.getHeight)
-        val hist = new Array[Float](FeatureDim)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = im.getRGB(x, y)
-            val lum = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-              (rgb & 0xff) * 114) / 1000
-            hist(lum * FeatureDim / 256) += 1f
-            x += 1
-          }
-          y += 1
-        }
-        val n = (w.toLong * h).toFloat
-        var j = 0; while (j < FeatureDim) { hist(j) /= n; j += 1 }
-        (w, h, hist)
-      }
-    }
-  }
-
-  /** Shared feature vector width for both codecs. */
-  val FeatureDim = 16
-
-  /** Deterministic fake decoder for NON-image payloads (the text
-    * fixture path, and any mime with no installed reader):
-    * "dimensions" derive from payload length, "features" are a
-    * fixed-size byte histogram — deterministic, so tests can assert
-    * exact values end-to-end through the mapPartitions plumbing.
-    */
-  object FakeCodec {
-    val FeatureDim = Multimodal.FeatureDim
-    def decode(payload: Array[Byte]): (Int, Int, Array[Float]) = {
-      val n = payload.length
-      val width = math.max(1, n % 1024)
-      val height = math.max(1, (n / 1024) + 1)
-      val hist = new Array[Float](FeatureDim)
-      var i = 0
-      while (i < n) { hist((payload(i) & 0xff) % FeatureDim) += 1f; i += 1 }
-      if (n > 0) { var j = 0; while (j < FeatureDim) { hist(j) /= n; j += 1 } }
-      (width, height, hist)
-    }
-  }
-
-  /** Wrap a text table as media records (payload = UTF-8 bytes) — the
-    * fixture path for environments with no real media files.
-    */
-  def asMediaRecords(df: DataFrame, idCol: String, textCol: String): Dataset[MediaRecord] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(
-      col(idCol).cast("long").as("id"),
-      col(textCol).cast("binary").as("media"),
-      lit("text/plain").as("mime"),
-      map(lit("origin"), col(textCol).substr(1, 8)).as("meta"))
-      .as[MediaRecord]
-  }
-
-  /** Batched decode stage: one partition = one iterator, records
-    * processed streaming (no per-partition materialization), output
-    * typed. This is the stage shape that scales: decode parallelism ==
-    * partition count, no driver involvement, constant memory.
-    *
-    * Dispatch is per-record on mime: `image/&#42;` decodes through the
-    * real [[ImageCodec]]; an image payload NO reader accepts yields
-    * the sentinel `(width, height) = (-1, -1)` with zero features
-    * (visible downstream, never silently faked); anything else takes
-    * the deterministic [[FakeCodec]] text path.
-    */
-  def decodeFeatures(records: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    records.mapPartitions { it =>
-      it.map { r =>
-        val (w, h, f) =
-          if (r.mime.startsWith("image/"))
-            ImageCodec.decode(r.media).getOrElse((-1, -1, new Array[Float](FeatureDim)))
-          else FakeCodec.decode(r.media)
-        MediaFeatures(r.id, r.media.length, w, h, f)
-      }
-    }
-  }
 
   /** Relational stats over the binary column — stays in the codegen'd
     * plan (no decode): byte length, digest, first-byte. Oracle-checked
@@ -240,9 +134,9 @@ object Multimodal {
     }
   }
 
-  /** Batched audio decode stage — same mapPartitions shape as
-    * [[decodeFeatures]]: per-partition iterator, typed output, corrupt
-    * payloads → visible `(-1, …)` sentinel.
+  /** Batched audio decode stage — one `mapPartitions` pass:
+    * per-partition iterator, typed output, corrupt payloads → visible
+    * `(-1, …)` sentinel.
     */
   def decodeAudioFeatures(records: Dataset[MediaRecord]): Dataset[AudioFeatures] = {
     implicit val enc = Encoders.product[AudioFeatures]
@@ -356,24 +250,20 @@ object Multimodal {
     ((w >>> 4) % 256).toInt
   }
 
-  /** The synthetic pixel's gray value — PURE INTEGER arithmetic, so an
-    * oracle can recompute it analytically: a gradient over a
-    * per-block md5 texture keyed by `id div 10` (ids sharing a base
-    * are PERCEPTUAL NEAR-DUPLICATES) plus a sparse per-variant
-    * brightness flip keyed by `id mod 10` (≈ 1% of pixels inverted —
-    * visible to an exact-dup hash, mostly invisible to dHash, which
-    * is the point of perceptual hashing).
-    */
-  def synthGray(id: Long, x: Int, y: Int): Int = {
-    val g = (x * 7 + y * 13 + blockHash(id / 10, x / 4, y / 4)) % 256
-    if ((x + y * SynthW) % 97 == id % 10) (g + 128) % 256 else g
-  }
-
   /** Write the synthetic image as a REAL 24-bit BMP (54-byte header,
     * bottom-up BGR rows, 4-byte row padding) — pure JVM, so the
     * engine-side payload is genuine image bytes that `javax.imageio`
     * must decode correctly for the hash to match the oracle's
     * analytic pixels.
+    *
+    * Each gray value is PURE INTEGER arithmetic, so an oracle can
+    * recompute it analytically: a gradient over a per-block md5
+    * texture keyed by `id div 10` (ids sharing a base are PERCEPTUAL
+    * NEAR-DUPLICATES) plus a sparse per-variant brightness flip keyed
+    * by `id mod 10` (≈ 1% of pixels inverted — visible to an
+    * exact-dup hash, mostly invisible to dHash, which is the point of
+    * perceptual hashing). `ProfilingMultimodalSpec.synthGray` is the
+    * per-pixel reference.
     */
   def synthBmp(id: Long): Array[Byte] = {
     val (w, h) = (SynthW, SynthH)
@@ -418,7 +308,7 @@ object Multimodal {
   }
 
   /** dHash (difference hash) of a decoded image: integer luma per
-    * pixel (the [[ImageCodec]] BT.601 weights), exact 4×4 block-mean
+    * pixel (BT.601 weights 299/587/114 over 1000), exact 4×4 block-mean
     * downsample to a 9×8 grid (floor division — no float filter), and
     * bit `r·8 + c` set iff `mean(r,c) > mean(r,c+1)`. The standard
     * near-duplicate image fingerprint: brightness/contrast shifts

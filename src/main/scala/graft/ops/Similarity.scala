@@ -22,20 +22,13 @@ object Similarity {
 
   /** Left-to-right dot product of two float-array columns on doubles —
     * a codegen'd Catalyst expression ([[graft.expr.DotProduct]]): the
-    * Column-algebra fold ([[dotHof]]) is interpreted (higher-order
-    * functions never enter whole-stage codegen), which made the dot
-    * product the hot-path cost of every similarity operator. Results
-    * are bit-identical (same IEEE fold order; property-tested).
+    * Column-algebra fold (`OpsSpec.dotHof`, its parity reference) is
+    * interpreted (higher-order functions never enter whole-stage
+    * codegen), which made the dot product the hot-path cost of every
+    * similarity operator. Results are bit-identical (same IEEE fold
+    * order; property-tested).
     */
   def dot(a: Column, b: Column): Column = graft.expr.VectorExprs.dot_product(a, b)
-
-  /** The interpreted Column-algebra fold — kept as the parity
-    * reference for [[dot]]'s property tests.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** DuckDB mirror of [[dot]] over 1-based list expressions. */
   def dotSql(aExpr: String, bExpr: String, dim: Int): String =
@@ -75,16 +68,12 @@ object Similarity {
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * an LCG-mixed value in [−0.5, 0.5) — same closed form in SQL, so
-    * LSH bucketing is oracle-checkable.
+  /** Deterministic pseudo-random hyperplane component for (plane, dim)
+    * in DuckDB SQL: an LCG-mixed value in [−0.5, 0.5) — the closed form
+    * [[graft.expr.VectorExprs.lshBucket]] computes, so LSH bucketing
+    * is oracle-checkable.
     */
   private val P = 2147483647L
-  def planeComponent(plane: Int, d: Column, seed: Long): Column = {
-    val j = d + lit(seed + plane * 10007L)
-    (pmod(pmod(j * j, lit(P)) * lit(48271L) + j, lit(P)).cast("double") / lit(P.toDouble)) - 0.5
-  }
-
   def planeComponentSql(plane: Int, dExpr: String, seed: Long): String = {
     val j = s"($dExpr + ${seed + plane * 10007L})"
     s"(CAST((((($j * $j) % $P) * 48271 + $j) % $P) AS DOUBLE) / $P) - 0.5"
@@ -97,24 +86,11 @@ object Similarity {
     *
     * Codegen'd and FUSED ([[graft.expr.LshBucketExpr]]): one array
     * pass for all planes, vs `planes` interpreted HOF folds in
-    * [[lshBucketHof]]. Bit-identical per-plane accumulation order.
+    * `OpsSpec.lshBucketHof`, its parity reference. Bit-identical
+    * per-plane accumulation order.
     */
   def lshBucket(vec: Column, planes: Int, seed: Long = 42L): Column =
     graft.expr.VectorExprs.lsh_bucket(vec, planes, seed)
-
-  /** The interpreted Column-algebra form — parity reference for
-    * [[lshBucket]]'s property tests.
-    */
-  def lshBucketHof(vec: Column, planes: Int, seed: Long = 42L): Column = {
-    val bits = (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(1), size(vec)),
-          (x, i) => x.cast("double") * planeComponent(p, i.cast("long"), seed)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << p)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
 
   def lshBucketSql(vecExpr: String, dim: Int, planes: Int, seed: Long = 42L): String = {
     val bits = (0 until planes).map { p =>
@@ -238,7 +214,8 @@ object Similarity {
     * SMALLEST ids, in id order — reproducible across engines, which is
     * what makes the whole IVF path oracle-checkable (k-means centroids
     * would differ run-to-run and engine-to-engine). For quality on a
-    * real corpus, refine these with [[kmeansCentroids]] (Spark-only).
+    * real corpus, [[kmeansCentroidsMicro]] refines these same seeds
+    * (quantized) with Lloyd's rounds.
     * Collects k·dim floats to the driver — the index metadata, tiny by
     * construction (k ≤ thousands).
     */
@@ -247,35 +224,8 @@ object Similarity {
     corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol)).limit(k)
       .collect().map(_.getSeq[Float](1).toArray)
 
-  /** Lloyd's refinement of seed centroids, executed as Spark
-    * aggregations: assign (map-only codegen expr) → per-centroid mean
-    * (one hash agg per round). Deliberately NOT oracle-wired — float
-    * means are order-dependent across engines — but property-tested:
-    * inertia is monotonically non-increasing. Empty clusters keep
-    * their previous centroid.
-    */
-  def kmeansCentroids(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      init: Array[Array[Float]], rounds: Int): Array[Array[Float]] = {
-    var cents = init
-    val dim = init.head.length
-    for (_ <- 0 until rounds) {
-      val assigned = corpus.select(col(vecCol).as("v"),
-        graft.expr.VectorExprs.nearest_centroid(col(vecCol), cents).as("cid"))
-      val dimMeans = (0 until dim).map(i =>
-        avg(col("v").getItem(i).cast("double")).as(s"m$i"))
-      val means = assigned.groupBy("cid")
-        .agg(dimMeans.head, dimMeans.tail: _*)
-        .collect().map(r => r.getInt(0) ->
-          Array.tabulate(dim)(i => r.getDouble(i + 1).toFloat)).toMap
-      cents = cents.indices.map(p => means.getOrElse(p, cents(p))).toArray
-    }
-    cents
-  }
-
-  /** ENGINE-EXACT Lloyd's refinement in integer micro-units — the
-    * oracle-wireable counterpart of [[kmeansCentroids]] (whose float
-    * means are order-dependent across engines): every coordinate is
+  /** ENGINE-EXACT Lloyd's refinement in integer micro-units (float
+    * means would be order-dependent across engines): every coordinate is
     * quantized ONCE to `floor(x·10⁶)` (exact double math in both
     * engines), assignment is argmin of the integer squared-Euclidean
     * distance with `(dist, cid)` tie order, and each update is the
@@ -748,18 +698,6 @@ object Similarity {
        |         ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
        |FROM adc
        |QUALIFY rank <= $k""".stripMargin
-  }
-
-  /** Mean squared cosine-distance to the assigned centroid — the
-    * k-means objective, for convergence tests. */
-  def inertia(
-      corpus: DataFrame, vecCol: String, cents: Array[Array[Float]]): Double = {
-    val centDf = centroidsDf(corpus, cents)
-    corpus.select(col(vecCol).as("v"),
-        graft.expr.VectorExprs.nearest_centroid(col(vecCol), cents).as("cid"))
-      .join(broadcast(centDf), Seq("cid"))
-      .select(avg(pow(lit(1.0) - cosine(col("v"), col("cv")), 2)).as("j"))
-      .collect().head.getDouble(0)
   }
 
   private def centroidsDf(like: DataFrame, cents: Array[Array[Float]]): DataFrame = {

@@ -29,15 +29,11 @@ object TextAnalysis {
     Seq("the", "a", "an", "of", "and", "to", "in", "is", "on", "for")
 
   /** Stopword count over whitespace tokens — codegen'd set-membership
-    * pass ([[graft.expr.CountInSetExpr]]); [[stopwordCountHof]] is the
-    * interpreted parity reference.
+    * pass ([[graft.expr.CountInSetExpr]]); `OpsSpec.stopwordCountHof`
+    * is the interpreted parity reference.
     */
   def stopwordCount(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
     graft.expr.TextExprs.count_in_set(tokensWs(text), stopwords)
-
-  /** Interpreted Column-algebra form — parity reference. */
-  def stopwordCountHof(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
-    size(filter(tokensWs(text), w => w.isin(stopwords.map(lit(_)): _*)))
 
   /** Quality signals: length, token count, punctuation ratio, stopword
     * ratio, mean token length. Ratios are single divisions of exact
@@ -119,17 +115,6 @@ object TextAnalysis {
       "top_token_frac" -> top.cast("double") / size(toks))
   }
 
-  /** Interpreted parity reference for the top-token count:
-    * max over distinct tokens of that token's occurrence count.
-    * O(distinct·tokens) lambda evaluation — tests only.
-    */
-  def topTokenCountHof(text: Column): Column = {
-    val toks = tokensWs(text)
-    coalesce(
-      array_max(transform(array_distinct(toks), x => size(filter(toks, y => y === x)))),
-      lit(0)).cast("long")
-  }
-
   /** Per-document keywords by GLOBAL rarity: the k tokens of each doc
     * with the lowest corpus document-frequency (ties → lexicographic).
     * This is TF-IDF's ranking with the float log dropped — pure
@@ -165,17 +150,11 @@ object TextAnalysis {
     * `list_reduce` mirror folds sequentially over exact integers, so
     * the result is bit-identical across engines. Codegen'd
     * ([[graft.expr.TokenFingerprintExpr]]) — the Column-algebra fold
-    * ran an interpreted md5 lambda per token; [[fingerprintHof]] is
-    * the parity reference.
+    * ran an interpreted md5 lambda per token; `OpsSpec.fingerprintHof`
+    * is the parity reference.
     */
   def fingerprint(text: Column): Column =
     graft.expr.TextExprs.token_fingerprint(tokensWs(text))
-
-  /** Interpreted Column-algebra form — parity reference. */
-  def fingerprintHof(text: Column): Column = {
-    val codes = transform(tokensWs(text), w => conv(substring(md5(w), 1, 8), 16, 10).cast("long"))
-    aggregate(codes, lit(0L), (h, x) => (h * 31 + x) % FpMod)
-  }
 
   /** The identical fingerprint in DuckDB SQL. */
   def fingerprintSql(textExpr: String): String =

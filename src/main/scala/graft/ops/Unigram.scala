@@ -93,21 +93,6 @@ object Unigram {
       .select(col("word").substr(col("__s"), col("__l")).as("piece"), col("freq"))
       .groupBy("piece").agg(sum("freq").as("cnt"))
 
-  /** Add-one-smoothed micro-nat piece scores from counts:
-    * `logp_unat = ⌊10⁶·ln((cnt+1)/(total+|V|))⌋` — the
-    * [[TextAnalysis.lmUnigramScore]] formula, one IEEE `ln` of a
-    * single integer-over-integer division. The (total,|V|) stats row
-    * broadcasts; the vocab is model-sized.
-    */
-  def rescore(counts: DataFrame): DataFrame = {
-    val stats = counts.agg(sum("cnt").as("__total"), count(lit(1)).as("__nv"))
-    counts.crossJoin(broadcast(stats))
-      .select(col("piece"), col("cnt"),
-        floor(log((col("cnt") + 1).cast("double") /
-          (col("__total") + col("__nv")).cast("double")) * 1e6)
-          .cast("long").as("logp_unat"))
-  }
-
   /** Seed vocabulary: ALL single characters plus the `seedMultiChar`
     * highest-count multi-character substrings (count DESC, piece ASC —
     * a total order, so the seed is engine-stable). orderBy+limit, not
@@ -186,30 +171,6 @@ object Unigram {
         col("__fin.score").as("score_unat"))
   }
 
-  /** Hard-EM M-step counts: piece usage along each word's Viterbi
-    * segmentation, frequency-weighted, with UNUSED vocab pieces kept
-    * at count 0 (add-one smoothing keeps them alive until a prune —
-    * the vocabulary only shrinks at prune steps, like SentencePiece).
-    */
-  def emCounts(words: DataFrame, scoredVocab: DataFrame, maxPieceLen: Int): DataFrame = {
-    val used = viterbiSegments(words, scoredVocab, maxPieceLen)
-      .select(explode(col("pieces")).as("piece"), col("freq"))
-      .groupBy("piece").agg(sum("freq").as("__used"))
-    scoredVocab.select("piece").join(used, Seq("piece"), "left")
-      .select(col("piece"), coalesce(col("__used"), lit(0L)).as("cnt"))
-  }
-
-  /** Prune to `keepMultiChar` multi-character pieces by (cnt DESC,
-    * piece ASC); single characters always survive (coverage).
-    */
-  def prune(scoredVocab: DataFrame, keepMultiChar: Int): DataFrame = {
-    val singles = scoredVocab.filter(length(col("piece")) === 1).select("piece", "cnt")
-    val multi = scoredVocab.filter(length(col("piece")) > 1)
-      .orderBy(col("cnt").desc, col("piece").asc).limit(keepMultiChar)
-      .select("piece", "cnt")
-    singles.unionByName(multi)
-  }
-
   /** Train the unigram LM tokenizer. Returns `(trace, finalVocab)`:
     * `trace` is `(round, piece, cnt, logp_unat)` for every model state
     * — round 0 the scored seed, rounds 1..emBeforePrune the EM
@@ -236,12 +197,15 @@ object Unigram {
     */
   private final case class DriverPiece(piece: String, cnt: Long, logpUnat: Long)
 
-  /** Driver-side [[rescore]] — the identical micro-nat arithmetic on
-    * the identical integers: `(cnt+1)` and `(total+|V|)` cast to
-    * double, ONE IEEE division, ONE `StrictMath.log` (what Spark's
-    * `log` expression calls — verified against the catalyst bytecode),
-    * `⌊·10⁶⌋`. Bit-identical to the Spark column by construction, so
-    * the training trace's hash contract is untouched.
+  /** Add-one-smoothed micro-nat piece scores on the driver:
+    * `logp_unat = ⌊10⁶·ln((cnt+1)/(total+|V|))⌋`, the
+    * [[TextAnalysis.lmUnigramScore]] formula — `(cnt+1)` and
+    * `(total+|V|)` cast to double, ONE IEEE division, ONE
+    * `StrictMath.log` (what Spark's `log` expression calls — verified
+    * against the catalyst bytecode), `⌊·10⁶⌋`. Bit-identical to the
+    * Spark-column form by construction (`UnigramSpec.rescore` is that
+    * form, and pins the equality), so the training trace's hash
+    * contract is untouched.
     */
   private def rescoreDriver(counts: Seq[(String, Long)]): Seq[DriverPiece] = {
     val total = counts.iterator.map(_._2).sum
@@ -303,8 +267,10 @@ object Unigram {
     def vocabDf(v: Seq[DriverPiece]): DataFrame =
       v.map(p => (p.piece, p.cnt, p.logpUnat)).toDF("piece", "cnt", "logp_unat")
     // Hard-EM round, driver-state form: Viterbi usage counts along the
-    // single best segmentations (one job), zero-kept pieces filled on
-    // the driver ([[emCounts]]' smoothing contract).
+    // single best segmentations (one job), frequency-weighted; unused
+    // pieces are kept at count 0 (add-one smoothing keeps them alive
+    // until a prune — the vocabulary only shrinks at prune steps, like
+    // SentencePiece).
     def emRound(v: Seq[DriverPiece]): Seq[DriverPiece] = {
       val used = viterbiSegments(words, vocabDf(v), maxPieceLen)
         .select(explode(col("pieces")).as("piece"), col("freq"))
@@ -312,9 +278,9 @@ object Unigram {
       val usedMap = collectBounded(used, "EM usage counts").toMap
       rescoreDriver(v.map(p => (p.piece, usedMap.getOrElse(p.piece, 0L))))
     }
-    // Driver-side [[prune]]: singles always survive; multi-char pieces
-    // ranked (cnt DESC, piece ASC in UTF-8 binary order — the engines'
-    // shared collation).
+    // Prune to `keepMultiChar` multi-character pieces: singles always
+    // survive (coverage); multi-char pieces ranked (cnt DESC, piece ASC
+    // in UTF-8 binary order — the engines' shared collation).
     def pruneDriver(v: Seq[DriverPiece]): Seq[DriverPiece] = {
       // single = ONE code point: Spark `length` and DuckDB `len` both
       // count code points, not UTF-16 units.
@@ -382,7 +348,7 @@ object Unigram {
     * posterior mass, so a word with competing segmentations splits its
     * frequency fractionally instead of winner-take-all. Returns
     * `(piece, ecnt double)` with unused vocab pieces kept at 0.0 (the
-    * [[emCounts]] smoothing contract).
+    * hard E-step's smoothing contract in [[unigramTrain]]).
     *
     * SPEC-GATED, NOT ORACLE-HASHED — deliberately: α/β are float
     * log-sum-exp chains whose accumulation order is engine- and
@@ -448,7 +414,7 @@ object Unigram {
       .select(col("piece"), coalesce(col("__used"), lit(0.0)).as("ecnt"))
   }
 
-  /** Float analogue of [[rescore]]: `logp = ln((ecnt+1)/(total+|V|))`
+  /** Float analogue of [[rescoreSql]]: `logp = ln((ecnt+1)/(total+|V|))`
     * over expected counts — same add-one smoothing, no micro-nat floor
     * (the soft path is float end-to-end).
     */

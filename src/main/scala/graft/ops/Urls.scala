@@ -56,20 +56,6 @@ object Urls {
       .otherwise(concat(scheme, lit("://"), host, path, query))
   }
 
-  /** Domain of the canonical URL — the grouping key for per-site
-    * corpus stats (crawl budgets, per-domain quality, robots audits).
-    */
-  def urlHost(url: Column): Column = {
-    val u = regexp_replace(url, "#.*", "")
-    val scheme = lower(regexp_extract(u, SchemeRe, 1))
-    val hostPort = lower(regexp_extract(u, HostRe, 1))
-    val hostNoPort = when(scheme === "http", regexp_replace(hostPort, ":80$", ""))
-      .when(scheme === "https", regexp_replace(hostPort, ":443$", ""))
-      .otherwise(hostPort)
-    val host = regexp_replace(hostNoPort, "^www\\.", "")
-    when(scheme === "" || host === "", lit(null).cast("string")).otherwise(host)
-  }
-
   /** DuckDB mirror of [[canonicalizeUrl]] over the SQL fragment
     * `urlExpr` — step-for-step the same regex/array program (probed:
     * both engines return '' from regexp_extract on no-match, split ''

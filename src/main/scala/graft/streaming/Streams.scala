@@ -46,93 +46,6 @@ object Streams {
       .select(col("window.start").as("window_start"), col("event_type"), col("n"))
   }
 
-  /** Gap-based session aggregation with Spark's built-in
-    * `session_window` — the streaming-native form of
-    * `graft.ops.Windows.sessionize` (which is the batch,
-    * oracle-mirrorable lag/cumsum form). Output: one row per
-    * (user_id, session) with the event count and the session's
-    * window bounds. Semantics note: `session_window` merges events
-    * whose gap is STRICTLY LESS than the gap duration (a new session
-    * starts when gap >= gapDuration), while the batch form splits on
-    * gap > maxGap; they agree on every dataset with no gap exactly
-    * equal to the threshold. On a stream, the watermark finalizes and
-    * evicts sessions; state is per live session, bounded.
-    */
-  def sessionWindowCounts(
-      events: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame = {
-    val timed = withEventTime(events)
-    val maybeWatermarked =
-      if (timed.isStreaming) timed.withWatermark("event_time", watermark) else timed
-    maybeWatermarked
-      .groupBy(session_window(col("event_time"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_events"))
-  }
-
-  /** Streaming deduplication — the incremental form of the exact-dup
-    * keep-list (see `graft.ops.Dedup.exactDuplicates`): first
-    * occurrence of each key wins, and the WATERMARK BOUNDS THE STATE —
-    * `dropDuplicatesWithinWatermark` keeps a key's dedup state only
-    * until the watermark passes it, so an unbounded ingest stream holds
-    * a bounded key set instead of every key ever seen (plain streaming
-    * `dropDuplicates` state grows forever — a non-starter for a
-    * continuous 100 TB/day training-data feed; duplicates farther
-    * apart than the watermark are the batch backfill's job).
-    *
-    * On a BATCH frame the same call degrades to plain
-    * `dropDuplicates(idCols)` — same code path for backfill and
-    * ingest.
-    */
-  def dedupWithinWatermark(
-      events: DataFrame,
-      idCols: Seq[String],
-      watermark: String = "2 hours"): DataFrame = {
-    val timed = withEventTime(events)
-    if (timed.isStreaming)
-      timed.withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(idCols)
-    else timed.dropDuplicates(idCols)
-  }
-
-  /** Stream-stream interval join: pairs of left/right events with the
-    * SAME key whose event times differ by at most `band` — the
-    * streaming form of `graft.ops.Joins.bandJoin`. Both sides carry a
-    * watermark, and the time-range join condition is what lets Spark
-    * BOUND the join state: a buffered row is dropped as soon as the
-    * other side's watermark passes its band edge. Without the range
-    * condition (or with `band` >> the watermark) state grows with the
-    * stream — the 100 TB/day failure mode.
-    *
-    * Runs on batch frames unchanged (watermarks are no-ops there), so
-    * the parity test is `intervalJoin(batch, batch) == bandJoin`.
-    * Output: key, left event id/time, right event id/time.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String = "user_id",
-      idCol: String = "event_id",
-      band: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame = {
-    def side(df: DataFrame, p: String): DataFrame = {
-      val timed = withEventTime(df)
-        .select(col(key).as(s"${p}_key"), col(idCol).as(s"${p}_$idCol"),
-          col("event_time").as(s"${p}_time"))
-      if (timed.isStreaming) timed.withWatermark(s"${p}_time", watermark) else timed
-    }
-    val l = side(left, "l")
-    val r = side(right, "r")
-    l.join(r,
-      col("l_key") === col("r_key") &&
-        col("r_time") >= col("l_time") - expr(s"INTERVAL $band") &&
-        col("r_time") <= col("l_time") + expr(s"INTERVAL $band"))
-      .select(col("l_key").as(key), col(s"l_$idCol"), col("l_time"),
-        col(s"r_$idCol"), col("r_time"))
-  }
-
   final case class LshCandidate(id_new: Long, id_corpus: Long)
   final case class LshBucketState(ids: Array[Long], hot: Boolean)
 
@@ -223,279 +136,6 @@ object Streams {
               else LshBucketState(members, hot = false))
             out.result().iterator
           }
-      }
-  }
-
-  final case class SessionEvent(user_id: Long, event_time: java.sql.Timestamp)
-  final case class SessionUpdate(user_id: Long, n_events: Long, closed: Boolean)
-
-  /** Custom stateful operator: per-user session event counting with an
-    * optional inactivity timeout — the `flatMapGroupsWithState` shape
-    * for state Spark's built-in windows can't express. State is one
-    * counter per live user: bounded, partitioned by key.
-    *
-    * `timeoutMs <= 0` disables timeouts (sessions never auto-close).
-    * NOTE: with ProcessingTimeTimeout the no-data timeout batches make
-    * `processAllAvailable` unsuitable for synchronous testing — drive
-    * timeout behavior with a real trigger clock, not MemoryStream.
-    */
-  def sessionCounts(
-      events: Dataset[SessionEvent],
-      timeoutMs: Long = 30 * 60 * 1000L): Dataset[SessionUpdate] = {
-    import events.sparkSession.implicits._
-    val timeoutConf =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, SessionUpdate](OutputMode.Append, timeoutConf) {
-        (userId: Long, batch: Iterator[SessionEvent], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            val n = state.get
-            state.remove()
-            Iterator.single(SessionUpdate(userId, n, closed = true))
-          } else {
-            val n = state.getOption.getOrElse(0L) + batch.size
-            state.update(n)
-            if (timeoutMs > 0) state.setTimeoutDuration(timeoutMs)
-            Iterator.single(SessionUpdate(userId, n, closed = false))
-          }
-      }
-  }
-
-  /** Streaming upsert sink: apply each micro-batch as a key-based
-    * MERGE into a hive-partitioned parquet table via
-    * [[graft.etl.Etl.upsertPartitioned]] — the CDC-to-table pattern
-    * (stream of corrections → standing partitioned corpus) without a
-    * table format. Each batch rewrites ONLY the partitions it
-    * touches; an empty batch is a no-op rather than an empty
-    * overwrite.
-    *
-    * Delivery contract: `foreachBatch` is at-least-once, and the
-    * merge is idempotent for a replayed batch (same keys → same
-    * rows), so the table converges under retries as long as batches
-    * for a key arrive in order (the same contract as any
-    * last-writer-wins CDC apply). A batch carrying SEVERAL rows for
-    * one key is written as-is ([[graft.etl.Etl.upsertPartitioned]]'s
-    * documented pass-through) — reduce upstream (e.g. latest-by-
-    * timestamp struct agg) when at most one row per key is wanted.
-    */
-  def upsertSink(
-      df: org.apache.spark.sql.DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      partitionCols: Seq[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (new java.io.File(path).exists())
-            graft.etl.Etl.upsertPartitioned(batch.sparkSession, path, batch,
-              keyCols, partitionCols)
-          else
-            batch.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(path)
-        }
-    }
-
-  /** Streaming subword-encode sink (round-14 VERDICT item 8): apply a
-    * TRAINED segmentation — BPE's merge result or the unigram-LM
-    * Viterbi segmentation, both `(word, pieces)` — to a document
-    * stream through the SAME [[graft.ops.Bpe.bpeEncode]]
-    * vocabulary-sized hash join the batch path uses, one micro-batch
-    * at a time. The model is a static frame captured at sink
-    * definition (tokenizers version like models, not like dimensions —
-    * retraining is a new deployment, so the enrich-style snapshot
-    * contract is the RIGHT semantics here, not a limitation); the join
-    * is state-free, so the stream never accumulates tokenizer state.
-    *
-    * Delivery contract: each micro-batch OVERWRITES its own
-    * `batch_id=<id>` partition directory, so foreachBatch's
-    * at-least-once replay converges to exactly-once output (the
-    * [[upsertSink]] idempotence discipline; an empty batch is a
-    * no-op). Novel words — absent from the segmentation — fail the
-    * batch loudly via bpeEncode's raise_error rather than emitting a
-    * silent gap.
-    */
-  def encodeSink(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      segmented: DataFrame,
-      path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ops.Bpe.bpeEncode(batch, idCol, col(textCol), segmented)
-            .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-    }
-
-  /** Stream-static enrichment join: decorate a stream with dimension
-    * attributes from a batch table (user → segment, doc → source
-    * metadata). The broadcast hint keeps the per-batch join map-only
-    * (no stream-side shuffle, no state: the 100 TB/day stream never
-    * waits on an exchange). Left join so dimension gaps decorate with
-    * NULLs instead of dropping events; use [[graft.linkage.Suffix]]-
-    * style disjoint column names upstream.
-    *
-    * SNAPSHOT CONTRACT: for file sources the dimension's file listing
-    * is captured when `dim` is defined — the stream joins that
-    * snapshot for its whole lifetime, and overwriting the files under
-    * a running query FAILS the query (verified in the spec), it does
-    * not refresh it. To pick up dimension changes, restart the query,
-    * or apply batches through `foreachBatch` re-reading the dimension
-    * per batch (the [[upsertSink]] pattern), or serve the dimension
-    * from a snapshot-isolated table format.
-    */
-  def enrich(
-      stream: DataFrame,
-      dim: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "enrich needs join keys")
-    stream.join(broadcast(dim), keys, "left")
-  }
-
-  final case class FunnelEvent(user_id: Long, event_type: String, ts: Long)
-  final case class FunnelUpdate(user_id: Long, stage_idx: Int, stage: String, ts: Long)
-
-  /** Streaming funnel progress: per-user furthest IN-ORDER stage,
-    * maintained with `mapGroupsWithState`; emits one [[FunnelUpdate]]
-    * whenever a user's furthest completed stage advances (its `ts` is
-    * the completion time of the newly reached stage). The streaming
-    * complement of [[graft.ops.Windows.funnel]]: counting updates per
-    * stage_idx reproduces the batch funnel's `n_users`.
-    *
-    * State per user: the completion times of stages reached so far
-    * (≤ stages.size longs — bounded, partitioned by key). Each batch
-    * folds its events in event-time order into that state; stage k
-    * completes at the earliest event of `stages(k)` STRICTLY after
-    * the stage-(k−1) completion, exactly the batch semantics.
-    *
-    * EXACTNESS CONTRACT: equal to the batch funnel when each user's
-    * events arrive in event-time order across batches (any order
-    * WITHIN a batch is fine — the fold sorts the batch). A stage-k
-    * event that arrives after a later-timestamped stage-(k−1) event
-    * was already folded is gone (streaming funnels cannot replay
-    * discarded events with bounded state); under out-of-order arrival
-    * the result is a lower bound that never regresses.
-    */
-  def funnelProgress(
-      events: Dataset[FunnelEvent],
-      stages: Seq[String]): Dataset[FunnelUpdate] = {
-    require(stages.nonEmpty, "funnelProgress needs at least one stage")
-    import events.sparkSession.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    events
-      .filter((e: FunnelEvent) => stageIdx.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], FunnelUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[FunnelEvent], state: GroupState[List[Long]]) =>
-          // completion times of stages reached so far, index-aligned
-          var done = state.getOption.getOrElse(Nil).toVector
-          val before = done.size
-          val sorted = batch.toVector.sortBy(e => (e.ts, e.event_type))
-          sorted.foreach { e =>
-            val k = stageIdx(e.event_type)
-            // advance only at the frontier: stage k completes when
-            // k-1 is the furthest stage and this event is strictly
-            // after its completion
-            if (k == done.size && (k == 0 || e.ts > done(k - 1)))
-              done = done :+ e.ts
-          }
-          if (done.size > before) state.update(done.toList)
-          (before until done.size).iterator
-            .map(k => FunnelUpdate(userId, k, stages(k), done(k)))
-      }
-  }
-
-  final case class HeavyUpdate(group: String, token: String, min_count: Long)
-
-  /** Streaming Misra-Gries maintenance: a bounded heavy-hitter sketch
-    * per GROUP, updated incrementally — "which domains dominate the
-    * crawl, live" with O(capacity) state per group forever, where a
-    * streaming groupBy(token) would grow state with the distinct-token
-    * space. Reuses the batch [[graft.expr.MisraGries]] kernel
-    * (identical reduce rule), so the stream state obeys the same
-    * guarantee: any token with true frequency > n/(capacity+1) over
-    * the whole stream so far is tracked, and each tracked count is a
-    * lower bound undercounting by at most n/(capacity+1).
-    *
-    * Emits the (group, token, min_count) entries whose counter CHANGED
-    * in the batch — the latest emission per (group, token) is the
-    * current lower bound; a token that stops being emitted may have
-    * been evicted (sketch semantics: eviction is not a claim of
-    * absence). Exact verification, when needed, is a batch
-    * [[graft.ops.HeavyHitters]] pass over the accumulated data.
-    */
-  final case class DecayedScore(key: Long, period: Long,
-    decayed_micro: Long, n_events: Long)
-
-  /** Streaming half-life-decayed scores — the incremental face of
-    * [[graft.ops.Windows.decayedSum]], with PERIOD-ALIGNED ages
-    * (Δ = latest-period − event-period, both `floorDiv(t, halfLife)`):
-    * per key, the state is the last period plus a FIXED 20-slot array
-    * of raw per-period value sums (weights are `10⁶ div 2^Δ`, zero
-    * from Δ = 20, so older mass needs no storage — bounded state
-    * forever, the [[streamingHeavyHitters]] discipline). Each batch
-    * emits the key's refreshed `(period, decayed_micro, n_events)`.
-    *
-    * Exactness: the score is `Σ_slots sum_Δ · (10⁶ div 2^Δ)` — the
-    * identical integer arithmetic whatever the batch boundaries, so a
-    * replay in ANY batching yields bit-identical scores (spec: two
-    * different splits vs a one-shot fold). Late events older than the
-    * key's latest period land in their true slot; beyond 19 periods
-    * they only tick `n_events`. Event times must be non-negative
-    * epochs (the [[graft.ops.Windows.cohortRetention]] contract).
-    */
-  def decayedScores(
-      events: Dataset[(Long, Long, Long)],
-      halfLife: Long): Dataset[DecayedScore] = {
-    require(halfLife > 0, s"halfLife must be positive, got $halfLife")
-    import events.sparkSession.implicits._
-    val W = 20
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Array[Long]), DecayedScore](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[(Long, Long, Long)],
-            state: GroupState[(Long, Long, Array[Long])]) =>
-          var (p0, n, sums) = state.getOption
-            .getOrElse((Long.MinValue, 0L, Array.fill(W)(0L)))
-          batch.foreach { case (_, t, v) =>
-            val p = Math.floorDiv(t, halfLife)
-            if (p0 == Long.MinValue) p0 = p
-            if (p > p0) {
-              val shift = math.min(p - p0, W.toLong).toInt
-              val ns = Array.fill(W)(0L)
-              var i = 0
-              while (i + shift < W) { ns(i + shift) = sums(i); i += 1 }
-              sums = ns
-              p0 = p
-            }
-            val d = p0 - p // >= 0 after the shift
-            if (d < W) sums(d.toInt) += v
-            n += 1
-          }
-          state.update((p0, n, sums))
-          val score = (0 until W).map(i => sums(i) * (1000000L / (1L << i))).sum
-          Iterator(DecayedScore(key, p0, score, n))
-      }
-  }
-
-  def streamingHeavyHitters(
-      events: Dataset[(String, String)],
-      capacity: Int): Dataset[HeavyUpdate] = {
-    require(capacity > 0, s"capacity must be positive, got $capacity")
-    import events.sparkSession.implicits._
-    val mg = new graft.expr.MisraGries(capacity)
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[Map[String, Long], HeavyUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, batch: Iterator[(String, String)], state: GroupState[Map[String, Long]]) =>
-          val buf = scala.collection.mutable.HashMap.empty[String, Long]
-          state.getOption.foreach(_.foreach { case (k, v) => buf.update(k, v) })
-          val before = buf.toMap
-          batch.foreach { case (_, token) => mg.reduce(buf, token) }
-          state.update(buf.toMap)
-          buf.toSeq.filter { case (k, c) => !before.get(k).contains(c) }
-            .map { case (token, c) => HeavyUpdate(group, token, c) }.iterator
       }
   }
 }

@@ -208,42 +208,6 @@ class EtlSpec extends SparkSpec {
     assert(got == df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet)
   }
 
-  test("compactToSize derives file count from on-disk bytes") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cts").toString
-    val df = (1L to 20000L).map(i => (i, s"some_payload_string_$i")).toDF("id", "payload")
-    df.repartition(32).write.parquet(s"$root/in")
-    def du(d: String) = Option(new java.io.File(d).listFiles()).toSeq.flatten
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.length).sum
-    val bytes = du(s"$root/in")
-    val target = bytes / 3 // expect ceil(3.x) = 3-4 files
-    Etl.compactToSize(spark, s"$root/in", s"$root/out", target)
-    val outFiles = Option(new java.io.File(s"$root/out").listFiles()).toSeq.flatten
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(outFiles >= 3 && outFiles <= 4, s"got $outFiles files")
-    assert(spark.read.parquet(s"$root/out").count() == 20000L)
-  }
-
-  test("readSalvage skips a corrupt file; strict read fails; audit quantifies the loss") {
-    val root = java.nio.file.Files.createTempDirectory("graft_salv").toString
-    val path = s"$root/t"
-    val df = (1L to 100L).map(i => (i, s"row_$i")).toDF("id", "v")
-    Etl.writeAudited(df, path, Seq("id", "v"))
-    // drop a torn file into the table directory
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "part-99999-torn.snappy.parquet"),
-      "not a parquet file".getBytes)
-    intercept[org.apache.spark.SparkException] {
-      spark.read.parquet(path).count()
-    }
-    val salvaged = Etl.readSalvage(spark, path)
-    assert(salvaged.count() == 100L)
-    // the audit checksum still matches: salvage lost nothing real here
-    val s = Etl.auditSummary(salvaged, Seq("id", "v")).head()
-    val ref = Etl.auditSummary(df, Seq("id", "v")).head()
-    assert(s.getLong(0) == ref.getLong(0) && s.getLong(1) == ref.getLong(1))
-  }
-
   test("upsertPartitioned is idempotent under batch replay") {
     val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
     val path = s"$root/t"

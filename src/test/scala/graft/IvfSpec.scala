@@ -56,16 +56,6 @@ class IvfSpec extends SparkSpec {
     assert(ivf.size <= bf.size)
   }
 
-  test("kmeans refinement: inertia non-increasing, recall not worse") {
-    val seed = Similarity.seedCentroids(emb, "vec_id", "embedding", 8)
-    val j0 = Similarity.inertia(emb, "embedding", seed)
-    val r1 = Similarity.kmeansCentroids(emb, "vec_id", "embedding", seed, rounds = 1)
-    val j1 = Similarity.inertia(emb, "embedding", r1)
-    val r3 = Similarity.kmeansCentroids(emb, "vec_id", "embedding", r1, rounds = 2)
-    val j3 = Similarity.inertia(emb, "embedding", r3)
-    assert(j1 <= j0 + 1e-12 && j3 <= j1 + 1e-12, s"inertia rose: $j0 -> $j1 -> $j3")
-  }
-
   test("kmeansCentroidsMicro matches an exact driver-side reference") {
     val k = 8
     val dim = 64

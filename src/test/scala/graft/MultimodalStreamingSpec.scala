@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.ops.Multimodal
 import graft.streaming.Streams
 
-/** Multimodal plumbing (binary columns + batched decode stage) and
-  * Structured Streaming (batch/stream parity for the windowed agg,
-  * stateful sessionization).
+/** Multimodal plumbing (binary columns, the WAV codec and its decode
+  * stage) and Structured Streaming (batch/stream parity for the
+  * windowed aggs, the incremental LSH dedup and the sketch cells).
   */
 class MultimodalStreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -26,56 +26,6 @@ class MultimodalStreamingSpec extends SparkSpec {
       case _ => raw.withColumn(
         "ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
     }
-  }
-
-  test("multimodal: records round-trip through the batched decode stage") {
-    val docs = Seq((1L, "hello world"), (2L, "")).toDF("doc_id", "text")
-    val records = Multimodal.asMediaRecords(docs, "doc_id", "text")
-    val feats = Multimodal.decodeFeatures(records).collect().sortBy(_.id)
-    assert(feats.map(_.id).toSeq == Seq(1L, 2L))
-    assert(feats(0).byteLen == 11)
-    assert(feats(0).features.length == Multimodal.FakeCodec.FeatureDim)
-    assert(math.abs(feats(0).features.sum - 1.0f) < 1e-5) // histogram normalized
-    assert(feats(1).byteLen == 0 && feats(1).features.forall(_ == 0f))
-    // deterministic: same input → same features
-    val again = Multimodal.decodeFeatures(records).collect().sortBy(_.id)
-    assert(again(0).features.toSeq == feats(0).features.toSeq)
-  }
-
-  test("multimodal: real PNGs decode through ImageCodec end-to-end") {
-    // Deterministic fixtures written by the JDK's own encoder: ImageIO
-    // ships PNG read AND write, so the whole decode path is real — no
-    // canned binary blobs, no external libraries.
-    def png(w: Int, h: Int)(pix: (Int, Int) => Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, pix(x, y))
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, "png", bos))
-      bos.toByteArray
-    }
-    // 4×2: left half black (lum 0 → bin 0), right half white (lum 255
-    // → bin 15). 3×1 mid-gray 0x808080: lum 128 → bin 8.
-    val bw = png(4, 2)((x, _) => if (x < 2) 0x000000 else 0xffffff)
-    val gray = png(3, 1)((_, _) => 0x808080)
-    val records = Seq(
-      Multimodal.MediaRecord(1L, bw, "image/png", Map("name" -> "bw")),
-      Multimodal.MediaRecord(2L, gray, "image/png", Map("name" -> "gray")),
-      Multimodal.MediaRecord(3L, Array[Byte](1, 2, 3), "image/png", Map.empty), // corrupt
-      Multimodal.MediaRecord(4L, "plain text".getBytes("UTF-8"), "text/plain", Map.empty)
-    ).toDS()
-    val feats = Multimodal.decodeFeatures(records).collect().sortBy(_.id)
-    assert(feats(0).width == 4 && feats(0).height == 2)
-    assert(feats(0).features(0) == 0.5f && feats(0).features(15) == 0.5f)
-    assert(feats(0).features.sum == 1.0f)
-    assert(feats(1).width == 3 && feats(1).height == 1)
-    assert(feats(1).features(8) == 1.0f)
-    // corrupt image payload → visible sentinel, not a fake decode
-    assert(feats(2).width == -1 && feats(2).height == -1)
-    assert(feats(2).features.forall(_ == 0f) && feats(2).byteLen == 3)
-    // non-image mime still takes the deterministic text path
-    assert(feats(3).width >= 1 && feats(3).byteLen == 10)
-    assert(math.abs(feats(3).features.sum - 1.0f) < 1e-5)
   }
 
   test("multimodal: mediaStats digest matches md5 of the text bytes") {
@@ -191,55 +141,6 @@ class MultimodalStreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming: encodeSink — unigram + BPE subword streams equal the batch encode") {
-    // Train both tokenizer families on the FULL corpus (the model is a
-    // static artifact), then stream the same docs in two micro-batches
-    // through encodeSink and compare the accumulated per-batch output
-    // to one batch bpeEncode over everything — the stream≡batch parity
-    // contract, plus idempotent per-batch overwrite semantics.
-    val docs = Seq(
-      1L -> "the fast sort and the fast scan",
-      2L -> "scan the table and sort the table",
-      3L -> "fast fast fast sort scan table the and")
-    val (b1, b2) = (docs.take(2), docs.drop(2))
-    val all = docs.toDF("doc_id", "text")
-    val words = all.select(explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    val (_, uniVocab) = graft.ops.Unigram.unigramTrain(words,
-      maxPieceLen = 3, seedMultiChar = 12, keepMultiChar = 6,
-      emBeforePrune = 1, emAfterPrune = 1, maxWordLen = 12)
-    val segUni = graft.ops.Unigram.viterbiSegments(words, uniVocab, 3)
-      .select(col("word"), col("pieces")).localCheckpoint(true)
-    val (_, segBpeFull) = graft.ops.Bpe.bpeTrain(words, merges = 4)
-    val segBpe = segBpeFull.select(col("word"), col("pieces")).localCheckpoint(true)
-
-    Seq(("uni", segUni), ("bpe", segBpe)).foreach { case (tag, seg) =>
-      val expected = graft.ops.Bpe.bpeEncode(all, "doc_id", col("text"), seg)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      val path = java.nio.file.Files.createTempDirectory(s"graft_encsink_$tag").toString
-      val stream = MemoryStream[(Long, String)](spark)
-      val q = Streams.encodeSink(stream.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", seg, path).start()
-      try {
-        stream.addData(b1); q.processAllAvailable()
-        stream.addData(b2); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.read.parquet(path)
-        .select("doc_id", "word_pos", "piece_pos", "piece")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      assert(got == expected, s"$tag stream≡batch parity")
-      // replay idempotence: rewriting batch 0's directory with the
-      // same content must not change the accumulated result
-      graft.ops.Bpe.bpeEncode(b1.toDF("doc_id", "text"), "doc_id", col("text"), seg)
-        .write.mode("overwrite").parquet(s"$path/batch_id=0")
-      val replayed = spark.read.parquet(path)
-        .select("doc_id", "word_pos", "piece_pos", "piece")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
-      assert(replayed == expected, s"$tag replay idempotence")
-    }
-  }
-
   test("streaming: incremental LSH dedup — hot bucket censors from the cap onward") {
     // Four exact copies, cap 2: the first two members pair; the third
     // arrival crosses the cap and tombstones every bucket they share,
@@ -311,282 +212,6 @@ class MultimodalStreamingSpec extends SparkSpec {
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
       assert(got == expected)
     } finally q.stop()
-  }
-
-  test("streaming: session_window — batch result equals Windows.sessionize; stream equals batch") {
-    // eventsNs normalizes ts to NANOS; the gap threshold is 30 min. The
-    // built-in session_window splits on gap >= g, the batch lag/cumsum
-    // form on gap > g — they agree unless a fixture gap lands exactly
-    // on the threshold (in which case this set compare would fail).
-    val batchDf = eventsNs
-    val viaSessionize = graft.ops.Windows.sessionSummary(
-        batchDf.select(org.apache.spark.sql.functions.col("user_id"),
-          org.apache.spark.sql.functions.expr("ts div 1000").as("t_us")),
-        Seq("user_id"), "t_us", maxGap = 1800000000L)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))) // user, n, t_start
-      .toSet
-    val viaSessionWindow = Streams.sessionWindowCounts(batchDf)
-      .collect().map(r => (r.getLong(0), r.getLong(3),
-        r.getTimestamp(1).getTime * 1000 + r.getTimestamp(1).getNanos / 1000 % 1000))
-      .toSet
-    assert(viaSessionWindow == viaSessionize)
-
-    val stream = MemoryStream[(Long, Long, String)](spark)
-    val streamDf = stream.toDF().toDF("ts", "user_id", "event_type")
-    val q = Streams.sessionWindowCounts(streamDf)
-      .writeStream.format("memory").queryName("sess_out").outputMode("complete").start()
-    try {
-      stream.addData(batchDf.select("ts", "user_id", "event_type")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toIndexedSeq)
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .collect().map(r => (r.getLong(0), r.getLong(3),
-          r.getTimestamp(1).getTime * 1000 + r.getTimestamp(1).getNanos / 1000 % 1000))
-        .toSet
-      assert(got == viaSessionWindow)
-    } finally q.stop()
-  }
-
-  test("streaming: interval join — batch equals bandJoin; stream equals batch") {
-    val bandUs = 300000000L // 5 minutes in micros
-    val ev = eventsNs
-      .filter(col("user_id") % 17 === 0) // keep the self-join pair count sane
-      .select("ts", "user_id", "event_id")
-
-    // batch parity vs the exact integral band join on micros
-    val viaBand = {
-      val us = ev.select(col("user_id"), col("event_id"), expr("ts div 1000").as("t_us"))
-      val l = us.toDF("u", "lid", "lt")
-      val r = us.toDF("u2", "rid", "rt")
-      graft.ops.Joins.bandJoin(l, r, Seq(("u", "u2")), "lt", "rt", bandUs)
-        .select("u", "lid", "rid")
-        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-    }
-    val viaInterval = Streams.intervalJoin(ev, ev)
-      .select("user_id", "l_event_id", "r_event_id")
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-    assert(viaInterval == viaBand && viaBand.nonEmpty)
-
-    // stream-stream: inner join emits eagerly; after draining, equals batch
-    val ls = MemoryStream[(Long, Long, Long)](spark)
-    val rs = MemoryStream[(Long, Long, Long)](spark)
-    val q = Streams.intervalJoin(
-        ls.toDF().toDF("ts", "user_id", "event_id"),
-        rs.toDF().toDF("ts", "user_id", "event_id"))
-      .writeStream.format("memory").queryName("ij_out").outputMode("append").start()
-    try {
-      val rows = ev.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      ls.addData(rows.toIndexedSeq)
-      rs.addData(rows.toIndexedSeq)
-      q.processAllAvailable()
-      val got = spark.table("ij_out").select("user_id", "l_event_id", "r_event_id")
-        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-      assert(got == viaBand)
-    } finally q.stop()
-  }
-
-  test("streaming: watermark dedup — stream keeps one row per key, equals batch") {
-    val stream = MemoryStream[(Long, Long, String)](spark)
-    val streamDf = stream.toDF().toDF("ts", "user_id", "event_type")
-    val q = Streams.dedupWithinWatermark(streamDf, Seq("user_id"))
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      val t0 = 1700000000000L * 1000000L // nanos
-      // users 1 and 2, with duplicates of user 1 within the watermark
-      stream.addData(Seq((t0, 1L, "a"), (t0 + 1000L, 1L, "b"), (t0, 2L, "c")))
-      q.processAllAvailable()
-      stream.addData(Seq((t0 + 2000L, 1L, "d"), (t0, 3L, "e")))
-      q.processAllAvailable()
-      val got = spark.table("dedup_out").select("user_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(got.toSeq == Seq(1L, 2L, 3L)) // one row per key
-      // batch path: same call, same semantics
-      val batch = Seq((t0, 1L, "a"), (t0 + 1000L, 1L, "b"), (t0, 2L, "c"))
-        .toDF("ts", "user_id", "event_type")
-      assert(Streams.dedupWithinWatermark(batch, Seq("user_id")).count() == 2)
-    } finally q.stop()
-  }
-
-  test("streaming: funnelProgress — stage counts equal the batch funnel; advances incrementally") {
-    val stages = Seq("view", "click", "purchase")
-    val batchDf = eventsNs
-      .select(col("user_id"), col("event_type"), col("ts"))
-    val want = graft.ops.Windows.funnel(batchDf, "user_id", "event_type", "ts", stages)
-      .collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
-
-    val stream = MemoryStream[Streams.FunnelEvent](spark)
-    val q = Streams.funnelProgress(stream.toDS(), stages)
-      .writeStream.format("memory").queryName("funnel_out").outputMode("append").start()
-    try {
-      // all events in ONE batch: the stateful fold must reproduce the
-      // batch funnel exactly (counting updates per stage == n_users)
-      stream.addData(batchDf.collect().map(r =>
-        Streams.FunnelEvent(r.getLong(0), r.getString(1), r.getLong(2))).toIndexedSeq)
-      q.processAllAvailable()
-      val got = spark.table("funnel_out").groupBy("stage_idx").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      assert(got == want.filter(_._2 > 0))
-
-      // incremental, in-order arrival: a new user advances one stage
-      // per batch, each advance emitted exactly once
-      stream.addData(Streams.FunnelEvent(999999L, "view", 1L))
-      q.processAllAvailable()
-      stream.addData(Streams.FunnelEvent(999999L, "click", 2L))
-      q.processAllAvailable()
-      // same-ts click must NOT advance (strictly-after contract),
-      // stale re-sends must not re-emit
-      stream.addData(Streams.FunnelEvent(999999L, "purchase", 2L),
-        Streams.FunnelEvent(999999L, "click", 5L))
-      q.processAllAvailable()
-      val user = spark.table("funnel_out").filter(col("user_id") === 999999L)
-        .collect().map(r => (r.getInt(1), r.getLong(3))).sorted
-      assert(user.toSeq == Seq((0, 1L), (1, 2L)))
-    } finally q.stop()
-  }
-
-  test("streaming: upsertSink merges each micro-batch into a partitioned table") {
-    val root = java.nio.file.Files.createTempDirectory("graft_upsink").toString
-    val path = s"$root/t"
-    val stream = MemoryStream[(String, Long, Double)](spark)
-    val q = Streams.upsertSink(stream.toDF().toDF("p", "k", "v"), path,
-        keyCols = Seq("k"), partitionCols = Seq("p"))
-      .outputMode("update").start()
-    try {
-      // batch 1 creates the table
-      stream.addData(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 30.0))
-      q.processAllAvailable()
-      // batch 2: update k=2, insert k=9 into a NEW partition; a is
-      // touched, b must survive untouched
-      stream.addData(("a", 2L, 99.0), ("c", 9L, 90.0))
-      q.processAllAvailable()
-      val got = spark.read.parquet(path)
-        .select(col("p").cast("string"), col("k"), col("v"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == Set(
-        ("a", 1L, 10.0), ("a", 2L, 99.0), // replaced
-        ("b", 3L, 30.0),                  // untouched partition
-        ("c", 9L, 90.0)))                 // inserted new partition
-    } finally q.stop()
-  }
-
-  test("streaming: enrich decorates across batches; dim overwrite under a live query FAILS it") {
-    val root = java.nio.file.Files.createTempDirectory("graft_enrich").toString
-    val dimPath = s"$root/dim"
-    Seq((1L, "bronze"), (2L, "silver")).toDF("k", "segment")
-      .write.mode("overwrite").parquet(dimPath)
-    val stream = MemoryStream[(Long, Double)](spark)
-    val out = Streams.enrich(
-      stream.toDF().toDF("k", "v"), spark.read.parquet(dimPath), Seq("k"))
-    val q = out.writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      stream.addData((1L, 10.0), (3L, 30.0))
-      q.processAllAvailable()
-      val b1 = spark.table("enrich_out")
-        .collect().map(r => (r.getLong(0), r.getAs[String]("segment"))).toSet
-      // known key decorated, unknown key kept with NULL (left join)
-      assert(b1 == Set((1L, "bronze"), (3L, null)))
-      // same snapshot serves later batches
-      stream.addData((2L, 20.0))
-      q.processAllAvailable()
-      val b2 = spark.table("enrich_out")
-        .collect().map(r => (r.getLong(0), r.getAs[String]("segment"))).toSet
-      assert(b2.contains((2L, "silver")))
-      // SNAPSHOT CONTRACT: overwriting the dimension files under the
-      // running query kills the next batch (file listing is pinned at
-      // definition) — refresh requires a restart or foreachBatch.
-      Seq((3L, "gold")).toDF("k", "segment")
-        .write.mode("overwrite").parquet(dimPath)
-      stream.addData((3L, 31.0))
-      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      assert(e.getMessage.contains("FILE_NOT_EXIST") ||
-        Option(e.getCause).exists(_.getMessage.contains("FILE_NOT_EXIST")))
-    } finally q.stop()
-  }
-
-  test("streaming: stateful session counts accumulate per user") {
-    val stream = MemoryStream[Streams.SessionEvent](spark)
-    // timeoutMs = 0: ProcessingTimeTimeout schedules no-data timeout
-    // batches that keep processAllAvailable from returning under
-    // MemoryStream — the synchronous test drives the NoTimeout path.
-    val q = Streams.sessionCounts(stream.toDS(), timeoutMs = 0L)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      val t0 = new java.sql.Timestamp(1700000000000L)
-      stream.addData(Streams.SessionEvent(1L, t0), Streams.SessionEvent(1L, t0), Streams.SessionEvent(2L, t0))
-      q.processAllAvailable()
-      stream.addData(Streams.SessionEvent(1L, t0))
-      q.processAllAvailable()
-      val got = spark.table("sess_out").as[Streams.SessionUpdate].collect()
-      // first batch: user 1 count 2, user 2 count 1; second: user 1 count 3
-      assert(got.exists(u => u.user_id == 1 && u.n_events == 2))
-      assert(got.exists(u => u.user_id == 2 && u.n_events == 1))
-      assert(got.exists(u => u.user_id == 1 && u.n_events == 3))
-    } finally q.stop()
-  }
-
-  test("streaming: Misra-Gries heavy hitters — guarantee holds across batches, state bounded") {
-    val capacity = 5
-    val stream = MemoryStream[(String, String)](spark)
-    val q = Streams.streamingHeavyHitters(stream.toDS(), capacity)
-      .writeStream.format("memory").queryName("mg_out").outputMode("append").start()
-    try {
-      // group g: token 'hot' 30/75 total; 20 distinct cold tokens.
-      // Guarantee: freq > n/(cap+1) = 75/6 = 12.5 → 'hot' MUST be
-      // tracked at the end with min_count >= 30 - 12 = 18.
-      val batch1 = (1 to 15).map(_ => ("g", "hot")) ++
-        (1 to 20).map(i => ("g", s"cold$i"))
-      val batch2 = (1 to 15).map(_ => ("g", "hot")) ++
-        (1 to 20).map(i => ("g", s"cold$i"))
-      stream.addData(batch1)
-      q.processAllAvailable()
-      stream.addData(batch2)
-      q.processAllAvailable()
-      // latest emission per token is the current lower bound
-      val latest = spark.table("mg_out").as[Streams.HeavyUpdate].collect()
-        .zipWithIndex.groupBy(_._1.token)
-        .map { case (t, rows) => t -> rows.maxBy(_._2)._1.min_count }
-      assert(latest.contains("hot"), s"hot not tracked: $latest")
-      assert(latest("hot") >= 18L && latest("hot") <= 30L, s"bound violated: ${latest("hot")}")
-      // hot's lower bound is nondecreasing across batch emissions
-      val hotSeq = spark.table("mg_out").as[Streams.HeavyUpdate].collect()
-        .zipWithIndex.filter(_._1.token == "hot").sortBy(_._2).map(_._1.min_count)
-      assert(hotSeq.nonEmpty && hotSeq.sameElements(hotSeq.sorted), s"not monotone: ${hotSeq.toSeq}")
-    } finally q.stop()
-  }
-
-  test("streaming: decayedScores — batching-invariant, late events, period shifts") {
-    import spark.implicits._
-    val hl = 10L
-    // (key, t, v): key 1 spans three periods with a late event; key 2
-    // collects in one period then goes idle across a shift.
-    val all = Seq(
-      (1L, 5L, 100L), (1L, 15L, 40L), (1L, 25L, 7L),   // periods 0,1,2
-      (1L, 3L, 11L),                                    // late into period 0
-      (2L, 50L, 9L), (2L, 51L, 1L))
-    def run(batches: Seq[Seq[(Long, Long, Long)]], name: String): Map[Long, (Long, Long, Long)] = {
-      val stream = MemoryStream[(Long, Long, Long)](spark)
-      val q = Streams.decayedScores(stream.toDS(), hl)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-        spark.table(name).as[Streams.DecayedScore].collect()
-          .zipWithIndex.groupBy(_._1.key)
-          .map { case (k, rows) =>
-            val last = rows.maxBy(_._2)._1
-            k -> ((last.period, last.decayed_micro, last.n_events))
-          }
-      } finally q.stop()
-    }
-    val oneShot = run(Seq(all), "dec_a")
-    val split = run(Seq(all.take(2), all.slice(2, 4), all.drop(4)), "dec_b")
-    assert(oneShot == split, s"batching changed the result: $oneShot vs $split")
-    // hand expectation (period-aligned weights 1e6 div 2^Δ from p=2):
-    // key 1: Δ2:(100+11)→÷4, Δ1:40→÷2, Δ0:7 → 111·250000+40·500000+7·1000000
-    assert(oneShot(1L) == ((2L, 111L * 250000L + 40L * 500000L + 7L * 1000000L, 4L)))
-    assert(oneShot(2L) == ((5L, 10L * 1000000L, 2L)))
   }
 
   test("streaming: count-min sketch cells — incremental stream equals batch") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -7,6 +8,7 @@ import graft.ops.{Dedup, Similarity, TextAnalysis}
 /** Specs for the training-data pipeline operators. */
 class OpsSpec extends SparkSpec {
   import spark.implicits._
+  import OpsSpec._
 
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -80,9 +82,9 @@ class OpsSpec extends SparkSpec {
       .toDF("text")
     val cmp = texts.select(
       TextAnalysis.stopwordCount(col("text")).as("sc_fast"),
-      TextAnalysis.stopwordCountHof(col("text")).as("sc_slow"),
+      stopwordCountHof(col("text")).as("sc_slow"),
       TextAnalysis.fingerprint(col("text")).as("fp_fast"),
-      TextAnalysis.fingerprintHof(col("text")).as("fp_slow")).collect()
+      fingerprintHof(col("text")).as("fp_slow")).collect()
     assert(cmp.forall(r => r.getInt(0) == r.getInt(1)))
     assert(cmp.forall(r => r.getLong(2) == r.getLong(3)))
   }
@@ -97,7 +99,7 @@ class OpsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val cmp = toks.select(
         Dedup.shinglesFromTokens(col("toks"), n).as("fast"),
-        Dedup.shinglesFromTokensHof(col("toks"), n).as("slow")).collect()
+        shinglesFromTokensHof(col("toks"), n).as("slow")).collect()
       assert(cmp.forall(r => r.getSeq[String](0) == r.getSeq[String](1)), s"shingles n=$n")
     }
     val sh = toks.select(array_distinct(Dedup.shinglesFromTokens(col("toks"), 2)).as("sh"))
@@ -110,7 +112,7 @@ class OpsSpec extends SparkSpec {
     val withH = sh.withColumn("__h", transform(col("sh"), s => Dedup.shingleBaseHash(s)))
     val scmp = withH.select(
       graft.expr.TextExprs.minhash_signature(col("__h"), k).as("fast"),
-      array(Dedup.minhashSignature(col("__h"), k).map(_._2): _*).as("slow")).collect()
+      array(minhashSignature(col("__h"), k).map(_._2): _*).as("slow")).collect()
     assert(scmp.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -536,12 +538,12 @@ class OpsSpec extends SparkSpec {
     val pairs = vecs.toDF("id_a", "va").crossJoin(vecs.toDF("id_b", "vb"))
     val d = pairs.select(
       Similarity.dot(col("va"), col("vb")).as("fast"),
-      Similarity.dotHof(col("va"), col("vb")).as("slow")).collect()
+      dotHof(col("va"), col("vb")).as("slow")).collect()
     assert(d.nonEmpty && d.forall(r => r.getDouble(0) == r.getDouble(1)))
     for (planes <- Seq(1, 4, 8, 16)) {
       val b = vecs.select(
         Similarity.lshBucket(col("embedding"), planes).as("fast"),
-        Similarity.lshBucketHof(col("embedding"), planes).as("slow")).collect()
+        lshBucketHof(col("embedding"), planes).as("slow")).collect()
       assert(b.forall(r => r.getLong(0) == r.getLong(1)), s"bucket mismatch at planes=$planes")
     }
   }
@@ -556,7 +558,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("va", "vb")
     val rows = df.select(
       Similarity.dot(col("va"), col("vb")).as("fast"),
-      Similarity.dotHof(col("va"), col("vb")).as("slow")).collect()
+      dotHof(col("va"), col("vb")).as("slow")).collect()
     assert(rows(0).getDouble(0) == 6.0 && rows(0).getDouble(1) == 6.0)
     assert(rows(1).isNullAt(0) && rows(1).isNullAt(1))
   }
@@ -609,7 +611,7 @@ class OpsSpec extends SparkSpec {
     // codegen kernel == interpreted HOF form on the shared fixture
     val parity = docs.select(
       graft.expr.TextExprs.top_token_count(split(col("text"), " ")).as("fast"),
-      TextAnalysis.topTokenCountHof(col("text")).as("slow")).collect()
+      topTokenCountHof(col("text")).as("slow")).collect()
     assert(parity.nonEmpty && parity.forall(r => r.getLong(0) == r.getLong(1)))
   }
 
@@ -1427,4 +1429,88 @@ class OpsSpec extends SparkSpec {
     // x, z fail minDf=2 and never appear
     assert(got.toSeq == Seq(("b", 2L, 5L, 900000L), ("u", 2L, 2L, 0L)))
   }
+}
+
+/** The interpreted Column-algebra (higher-order function) forms of the
+  * codegen'd kernels: the slow parity references the specs above hold
+  * each kernel to, value for value.
+  */
+object OpsSpec {
+
+  /** Left-to-right double fold — reference for [[Similarity.dot]]. */
+  def dotHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  private val P = 2147483647L
+
+  /** Deterministic hyperplane component for (plane, dim): an LCG-mixed
+    * value in [−0.5, 0.5), the closed form of
+    * [[Similarity.planeComponentSql]].
+    */
+  private def planeComponent(plane: Int, d: Column, seed: Long): Column = {
+    val j = d + lit(seed + plane * 10007L)
+    (pmod(pmod(j * j, lit(P)) * lit(48271L) + j, lit(P)).cast("double") / lit(P.toDouble)) - 0.5
+  }
+
+  /** One HOF fold per plane — reference for [[Similarity.lshBucket]]. */
+  def lshBucketHof(vec: Column, planes: Int, seed: Long = 42L): Column = {
+    val bits = (0 until planes).map { p =>
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(1), size(vec)),
+          (x, i) => x.cast("double") * planeComponent(p, i.cast("long"), seed)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj > 0, lit(1L << p)).otherwise(0L)
+    }
+    bits.reduce(_ + _)
+  }
+
+  /** Reference for [[TextAnalysis.stopwordCount]]. */
+  def stopwordCountHof(text: Column,
+      stopwords: Seq[String] = TextAnalysis.DefaultStopwords): Column =
+    size(filter(TextAnalysis.tokensWs(text), w => w.isin(stopwords.map(lit(_)): _*)))
+
+  /** Max over distinct tokens of that token's occurrence count —
+    * O(distinct·tokens) lambda evaluation; reference for the
+    * `top_token_count` kernel.
+    */
+  def topTokenCountHof(text: Column): Column = {
+    val toks = TextAnalysis.tokensWs(text)
+    coalesce(
+      array_max(transform(array_distinct(toks), x => size(filter(toks, y => y === x)))),
+      lit(0)).cast("long")
+  }
+
+  /** Reference for [[TextAnalysis.fingerprint]]. */
+  def fingerprintHof(text: Column): Column = {
+    val codes = transform(TextAnalysis.tokensWs(text),
+      w => conv(substring(md5(w), 1, 8), 16, 10).cast("long"))
+    aggregate(codes, lit(0L), (h, x) => (h * 31 + x) % 1000000007L)
+  }
+
+  /** Reference for [[Dedup.shinglesFromTokens]]. */
+  def shinglesFromTokensHof(toks: Column, n: Int): Column =
+    if (n == 1) toks
+    else {
+      val idx = sequence(lit(0), size(toks) - n) // 0-based subscripts
+      when(size(toks) >= n,
+        transform(idx, i => concat_ws(" ", (0 until n).map(j => element_at(toks, (i + j + 1).cast("int"))): _*)))
+        .otherwise(array().cast("array<string>"))
+    }
+
+  /** Per-permutation minhash mix: (aᵢ·h + bᵢ) mod P with fixed odd
+    * multipliers; products stay below 2⁶².
+    */
+  def minhashMix(h: Column, i: Int): Column =
+    pmod(h * lit(2 * i + 1001L) + lit(i * 9176L + 17L), lit(P))
+
+  /** MinHash signature columns over a pre-hashed shingle array:
+    * sig_i = min over hashes of mix_i(h), i = 0..k−1 — reference for
+    * the `minhash_signature` kernel.
+    */
+  def minhashSignature(hashCol: Column, k: Int): Seq[(String, Column)] =
+    (0 until k).map { i =>
+      s"sig_$i" -> array_min(transform(hashCol, h => minhashMix(h, i)))
+    }
 }

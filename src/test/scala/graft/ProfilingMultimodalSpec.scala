@@ -65,6 +65,16 @@ class ProfilingMultimodalSpec extends SparkSpec {
       1L -> (2L, 2L, 1000000L), 2L -> (2L, 0L, 0L), 3L -> (2L, 1L, 500000L)))
   }
 
+  /** The synthetic pixel's gray value, per pixel — the analytic form
+    * of the pixels [[Multimodal.synthBmp]] writes: a gradient over the
+    * per-block md5 texture keyed by `id div 10`, plus the sparse
+    * brightness flip keyed by `id mod 10`.
+    */
+  private def synthGray(id: Long, x: Int, y: Int): Int = {
+    val g = (x * 7 + y * 13 + Multimodal.blockHash(id / 10, x / 4, y / 4)) % 256
+    if ((x + y * Multimodal.SynthW) % 97 == id % 10) (g + 128) % 256 else g
+  }
+
   // Independent local dHash from the ANALYTIC pixel formula — no
   // image bytes involved; the Spark path must agree through a real
   // BMP encode + javax.imageio decode.
@@ -73,7 +83,7 @@ class ProfilingMultimodalSpec extends SparkSpec {
     for (r <- 0 until 8; c <- 0 until 9) {
       var s = 0L
       for (y <- r * 4 until (r + 1) * 4; x <- c * 4 until (c + 1) * 4)
-        s += Multimodal.synthGray(id, x, y)
+        s += synthGray(id, x, y)
       means(r)(c) = s / 16
     }
     var d0 = 0L; var d1 = 0L

@@ -15,6 +15,16 @@ class UProbsSpec extends SparkSpec {
     (4L, "bob", null), (5L, "carol", "AB1"), (6L, "carole", "EF3")
   ).toDF("id", "name", "postcode")
 
+  /** Collect the long frequency table to field → (level → p)
+    * (reference: scratch.R:85-96).
+    */
+  private def toNestedMap(uLong: org.apache.spark.sql.DataFrame): Map[String, Map[String, Double]] =
+    uLong.collect().toSeq
+      .groupBy(_.getAs[String]("name"))
+      .map { case (name, rows) =>
+        name -> rows.map(r => r.getAs[String]("value") -> r.getAs[Double]("p")).toMap
+      }
+
   test("samplePairIds: deterministic under a seed, ids within range") {
     val a = UProbs.samplePairIds(spark, 6, 6, 500, seed = 42L).collect()
     val b = UProbs.samplePairIds(spark, 6, 6, 500, seed = 42L).collect()
@@ -43,7 +53,7 @@ class UProbsSpec extends SparkSpec {
     val comparators = Comparators.exact(Seq("postcode")) ++ Comparators.jaroWinkler(Seq("name")) :+
       Comparators.expression("id_digit", (col("id_left") % 3).cast("string"))
     for (size <- Seq(7L, 2000L); seed <- Seq(42L, 9L)) {
-      val reference = UProbs.toNestedMap(UProbs.uProbsLong(
+      val reference = toNestedMap(UProbs.uProbsLong(
         UProbs.samplePairsByKey(people, people, "id", "id", size, seed), comparators))
       val got = UProbs.calculateUProbs(people, people, "id", "id", comparators, size, seed)
       assert(got.keySet == reference.keySet)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Unigram
@@ -13,8 +14,35 @@ class UnigramSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def vocab(rows: (String, Long)*) =
-    Unigram.rescore(rows.toDF("piece", "cnt"))
+  /** Add-one-smoothed micro-nat piece scores as a Spark column:
+    * `logp_unat = ⌊10⁶·ln((cnt+1)/(total+|V|))⌋` — the Spark-side form
+    * of the driver's `rescoreDriver`, which the randomized-grid case
+    * below holds to `StrictMath.log`. The (total,|V|) stats row
+    * broadcasts.
+    */
+  private def rescore(counts: DataFrame): DataFrame = {
+    val stats = counts.agg(sum("cnt").as("__total"), count(lit(1)).as("__nv"))
+    counts.crossJoin(broadcast(stats))
+      .select(col("piece"), col("cnt"),
+        floor(log((col("cnt") + 1).cast("double") /
+          (col("__total") + col("__nv")).cast("double")) * 1e6)
+          .cast("long").as("logp_unat"))
+  }
+
+  /** Hard-EM M-step counts as a Spark frame: piece usage along each
+    * word's Viterbi segmentation, frequency-weighted, with unused
+    * vocab pieces kept at count 0 — the contract `unigramTrain`'s
+    * driver-side EM round keeps.
+    */
+  private def emCounts(words: DataFrame, scoredVocab: DataFrame, maxPieceLen: Int): DataFrame = {
+    val used = Unigram.viterbiSegments(words, scoredVocab, maxPieceLen)
+      .select(explode(col("pieces")).as("piece"), col("freq"))
+      .groupBy("piece").agg(sum("freq").as("__used"))
+    scoredVocab.select("piece").join(used, Seq("piece"), "left")
+      .select(col("piece"), coalesce(col("__used"), lit(0L)).as("cnt"))
+  }
+
+  private def vocab(rows: (String, Long)*) = rescore(rows.toDF("piece", "cnt"))
 
   test("viterbi picks the max-score segmentation (hand-computed)") {
     // vocab counts: ab=8, a=1, b=1, c=5 → total=15, V=4.
@@ -70,7 +98,7 @@ class UnigramSpec extends SparkSpec {
         p -> math.floor(
           StrictMath.log((c + 1).toDouble / (total + nv).toDouble) * 1e6).toLong
       }.toMap
-      val got = Unigram.rescore(counts.toDF("piece", "cnt")).collect()
+      val got = rescore(counts.toDF("piece", "cnt")).collect()
         .map(r => r.getString(0) -> r.getLong(2)).toMap
       assert(got == expected, s"micro-nat drift at nv=$nv total=$total")
     }
@@ -128,7 +156,7 @@ class UnigramSpec extends SparkSpec {
     // vocab has 'zz' which no word can use → cnt 0, still present.
     val words = Seq(("aa", 3L), ("ab", 2L)).toDF("word", "freq")
     val v = vocab("a" -> 1L, "b" -> 1L, "aa" -> 50L, "zz" -> 50L)
-    val cnts = Unigram.emCounts(words, v, maxPieceLen = 2)
+    val cnts = emCounts(words, v, maxPieceLen = 2)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(cnts("zz") == 0L)
     assert(cnts("aa") == 3L)  // "aa" → [aa] (one big piece wins)
@@ -211,7 +239,7 @@ class UnigramSpec extends SparkSpec {
     // complement, equal by symmetry.
     val words = Seq(("ab", 2L)).toDF("word", "freq")
     val vHard = vocab("a" -> 5L, "b" -> 5L, "ab" -> 5L)
-    val hard = Unigram.emCounts(words, vHard, maxPieceLen = 2)
+    val hard = emCounts(words, vHard, maxPieceLen = 2)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(hard("ab") == 2L && hard("a") == 0L && hard("b") == 0L)
     val vSoft = Unigram.rescoreSoft(

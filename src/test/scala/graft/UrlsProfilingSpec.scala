@@ -43,13 +43,12 @@ class UrlsProfilingSpec extends SparkSpec {
     }
   }
 
-  test("canonicalizeUrl: NULL in -> NULL out; urlHost extracts the canonical domain") {
+  test("canonicalizeUrl: NULL in -> NULL out; case, www. and :80 normalized") {
     val df = Seq[(java.lang.Long, String)]((1L, null), (2L, "HTTP://WWW.A.B:80/x"))
       .toDF("id", "url")
-    val rows = df.select(Urls.canonicalizeUrl(col("url")).as("c"),
-      Urls.urlHost(col("url")).as("h")).collect()
-    assert(rows(0).isNullAt(0) && rows(0).isNullAt(1))
-    assert(rows(1).getString(0) == "http://a.b/x" && rows(1).getString(1) == "a.b")
+    val rows = df.select(Urls.canonicalizeUrl(col("url")).as("c")).collect()
+    assert(rows(0).isNullAt(0))
+    assert(rows(1).getString(0) == "http://a.b/x")
   }
 
   test("weightedSample: matches an independent Scala computation of the priorities") {
