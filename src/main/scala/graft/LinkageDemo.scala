@@ -7,8 +7,9 @@ import graft.linkage._
 
 /** End-to-end Fellegi–Sunter run over a synthesized persons dataset
   * with planted duplicate clusters — the Spark analogue of the
-  * reference's de-facto integration test (scratch.R:18-139). Prints
-  * fitted m/u/λ/weights and the precision-by-weight-band table.
+  * reference's de-facto integration test (scratch.R:18-139), run as
+  * one self-linkage [[graft.linkage.Linkage.run]]. Prints fitted
+  * λ/weights and the precision-by-weight-band table.
   *
   * Run: `sbt "runMain graft.LinkageDemo"`.
   */
@@ -67,9 +68,9 @@ object LinkageDemo {
     val n = data.count()
     println(s"persons: $n records")
 
-    // 1. Blocking (reference: scratch.R:23-29). The last pass is
-    // SURVEY §4's first-initial case: a real-alphabet surname initial
-    // is a tiny-cardinality SKEWED key (five of the fixture's fourteen
+    // Blocking (reference: scratch.R:23-29). The last pass is SURVEY
+    // §4's first-initial case: a real-alphabet surname initial is a
+    // tiny-cardinality SKEWED key (five of the fixture's fourteen
     // surnames start with 'w', so one block carries ~35% of the rows
     // and ~46% of the pair work) — the shape where AQE's byte-based
     // skew split can't help a compute-bound pair fan-out. The salt
@@ -79,40 +80,8 @@ object LinkageDemo {
       EquiKeys("surname"), EquiKeys("dob"), EquiKeys("postcode_fake"), EquiKeys("first_name"),
       ComputedKeys(Seq(
         ("s1", substring(col("surname_left"), 1, 1), substring(col("surname_right"), 1, 1))))))
-    val salts = Blocking.recommendSalts(
-      data, substring(col("surname"), 1, 1),
-      data, substring(col("surname"), 1, 1),
-      targetParallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    println(s"recommended hotKeySalts for the surname-initial pass: $salts")
-    def blocks(hotKeySalts: Int) = Blocking
-      .extractBlocks(data, data, "unique_id", "unique_id", rules,
-        hotKeySalts = hotKeySalts)
-      .filter(col("unique_id_left") < col("unique_id_right"))
-    val ids = blocks(salts).cache()
-    // Salt-identity check, run live on the pipeline's own pair set
-    // (LinkageSpec pins the same identity on fixed salt counts): the
-    // recommendation changes the PARALLELISM of the hot blocks, never
-    // the pairs — so precision/recall below are by construction the
-    // numbers an unsalted run produces.
-    val unsalted = blocks(0)
-    // True MULTISET identity: compare (pair → multiplicity) frames —
-    // except() over the grouped counts is exact even if a salting bug
-    // broke extractBlocks' pass disjointness SYMMETRICALLY on both sides
-    // (count-plus-set equality alone cannot tell {x,x,y} from
-    // {x,y,y}; round-15 ADVICE). The unsalted re-run is a demo-only
-    // double-compute; the spec-level identity (LinkageSpec) checks
-    // without it.
-    val pairCols = ids.columns.map(col).toSeq
-    def multiset(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(pairCols: _*).count()
-    val nSalted = ids.count()
-    val saltIdentical =
-      multiset(ids).except(multiset(unsalted)).isEmpty &&
-        multiset(unsalted).except(multiset(ids)).isEmpty
-    println(s"candidate pairs: $nSalted (salted ≡ unsalted: $saltIdentical)")
-    require(saltIdentical, "salted blocking must preserve the pair multiset")
 
-    // 2. Comparators (reference: scratch.R:39-47).
+    // Comparators (reference: scratch.R:39-47).
     val comparators =
       Comparators.exact(Seq("dob", "postcode_fake", "occupation")) ++
       Comparators.jaroWinkler(Seq("first_name", "surname")) :+
@@ -123,39 +92,43 @@ object LinkageDemo {
                 !coalesce(col("gender_right").isin("female", "male"), lit(false)), null)
           .otherwise("disagree"))
 
-    // 3. Pattern counts (reference: scratch.R:51-54).
-    val counts = Pairs.patternCounts(data, data, "unique_id", "unique_id", ids, comparators)
-    val patterns = EM.collectPatterns(counts)
-    println(s"distinct patterns: ${patterns.size}")
+    // Pattern counts, u-probabilities, EM, scoring and glm calibration
+    // (reference: scratch.R:51-139), at the reference's `weight > 5`.
+    val res = Linkage.run(data, data, "unique_id", rules, substring(col("surname"), 1, 1),
+      comparators, truth, uSample = 200000L, emIterations = 20, threshold = 5.0,
+      selfLinkage = true)
+    println(s"recommended hotKeySalts for the surname-initial pass: ${res.salts}")
 
-    // 4. u-probabilities by random sampling (reference: scratch.R:58-100).
-    val u = UProbs.calculateUProbs(data, data, "unique_id", "unique_id", comparators, size = 200000L)
+    // Salt-identity check, run live on the pipeline's own pair set
+    // (LinkageSpec pins the same identity on fixed salt counts): the
+    // recommendation changes the PARALLELISM of the hot blocks, never
+    // the pairs — so precision below is by construction the number an
+    // unsalted run produces. True MULTISET identity: compare (pair →
+    // multiplicity) frames — except() over the grouped counts is exact
+    // even if a salting bug broke extractBlocks' pass disjointness
+    // SYMMETRICALLY on both sides (count-plus-set equality alone cannot
+    // tell {x,x,y} from {x,y,y}). The unsalted re-run is a demo-only
+    // double-compute; the spec-level identity (LinkageSpec) checks
+    // without it.
+    val unsalted = Blocking.extractBlocks(data, data, "unique_id", "unique_id", rules,
+      selfLinkage = true)
+    val pairCols = res.ids.columns.map(col).toSeq
+    def multiset(df: DataFrame) = df.groupBy(pairCols: _*).count()
+    val saltIdentical =
+      multiset(res.ids).except(multiset(unsalted)).isEmpty &&
+        multiset(unsalted).except(multiset(res.ids)).isEmpty
+    println(s"candidate pairs: ${res.candidates} (salted ≡ unsalted: $saltIdentical)")
+    require(saltIdentical, "salted blocking must preserve the pair multiset")
 
-    // 5. EM (reference: scratch.R:102).
-    val em = EM.run(patterns, totalPairs = n.toDouble * n / 2, uProbabilities = u, maxIter = 20)
-    println(f"lambda = ${em.lambda}%.6f")
-    em.weights.foreach { case (f, ls) =>
+    println(s"distinct patterns: ${res.patterns.size}")
+    println(f"lambda = ${res.em.lambda}%.6f")
+    res.em.weights.foreach { case (f, ls) =>
       println(s"  $f: " + ls.map { case (l, w) => f"$l=$w%.2f" }.mkString(", "))
     }
-
-    // 6. Score + evaluate (reference: scratch.R:106-139).
-    val pairsDs = Pairs.computePairsDataset(data, data, "unique_id", "unique_id", ids)
-    val values = Comparators.doComparisons(pairsDs, comparators,
-      keep = Seq("unique_id_left", "unique_id_right"))
-    val scored = Scoring.topMatches(Scoring.score(values, em), threshold = 5.0)
-    val evaluated = Scoring.attachTruth(scored, truth, "unique_id", "cluster")
-    val bands = Scoring.precisionByBand(evaluated)
-    bands.show(50, truncate = false)
-
-    val total = evaluated.count()
-    val correct = evaluated.filter(col("true_match")).count()
-    println(f"precision@weight>5: $correct/$total = ${correct.toDouble / total}%.3f")
-
-    // 7. glm calibration (reference: scratch.R:137) — fit on ALL scored
-    // pairs (not the thresholded slice, which is nearly all-positive).
-    val allScored = Scoring.attachTruth(
-      Scoring.score(values, em), truth, "unique_id", "cluster")
-    val cal = Scoring.calibrate(allScored)
+    println("precision by weight band:")
+    res.bands.foreach(r => println(f"  band=${r.getDouble(0)}%5.1f precision=${r.getDouble(1)}%.4f n=${r.getLong(2)}"))
+    println(f"precision@weight>5: ${res.trueTop}/${res.top} = ${res.trueTop.toDouble / res.top}%.3f")
+    val cal = res.calibration
     println(f"glm calibration: P(match) = sigmoid(${cal.intercept}%.4f + ${cal.slope}%.4f * weight)")
     spark.stop()
   }

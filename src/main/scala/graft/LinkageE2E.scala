@@ -8,7 +8,8 @@ import graft.linkage._
 /** End-to-end TWO-TABLE linkage at the reference's production scale —
   * NCVR 2021 × 2023 (scratch.R:142-156, ~8M voters × 2 snapshots)
   * rebuilt as customer × a synthesized perturbed clone, through the
-  * full pipeline: blocking → u-probs → EM → scoring → calibration.
+  * full pipeline ([[graft.linkage.Linkage.run]]): blocking → u-probs →
+  * EM → scoring → calibration.
   * Where [[LinkageDemo]] proves the algorithmics on ~800 records,
   * this proves the PIPELINE: default 150k × 135k
   * (`SPARK_GRAFT_E2E_REPL=10`); `SPARK_GRAFT_E2E_REPL=534` is the
@@ -39,14 +40,6 @@ import graft.linkage._
   * with the heap).
   */
 object LinkageE2E {
-
-  private def timed[T](label: String)(f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[time] $label: $sec%.1f s")
-    (r, sec)
-  }
 
   /** `repl`× re-keyed replication of the sf0.1 customer table (15k
     * base rows — repl=10 is the standing 150k shape, repl=534 the
@@ -137,7 +130,7 @@ object LinkageE2E {
     val truth = a.select(col("rec_id"), col("rec_id").as("cluster"))
       .union(b.select(col("rec_id"), (col("rec_id") - 1000000000L).as("cluster")))
 
-    // 1. Blocking: name-prefix pass + nation×balance-band pass.
+    // Blocking: name-prefix pass + nation×balance-band pass.
     // Per-block pair count is quadratic in block size (the extractBlocks
     // scale contract), so the key CARDINALITY must grow with the data:
     // at NCVR scale the name prefix widens to 6 hash-letters (16⁶ ≈
@@ -171,28 +164,16 @@ object LinkageE2E {
       ComputedKeys(Seq(
         ("nk", col("nationkey_left"), col("nationkey_right")),
         ("bal10", balKey(col("acctbal_left")), balKey(col("acctbal_right")))))))
-    // Pre-flight skew check on the coarser pass-2 key (nation ×
+    // The salt pre-flight sizes the coarser pass-2 key (nation ×
     // balance band — the pass that goes quadratic if the band is too
-    // wide): recommendSalts forecasts per-key pair work from both
-    // sides' key counts and sizes hotKeySalts for extractBlocks. With
-    // the scaled keys above the expected answer is 0 (the key spreads
-    // fine; salting would only pay replication) — the point is that
-    // this is now MEASURED before the join runs, not asserted: a
-    // fixture regression to a low-cardinality band would surface here
-    // as a nonzero salt count instead of a straggler task.
-    val salts = Blocking.recommendSalts(
-      a, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
-      b, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
-      targetParallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    println(s"recommended hotKeySalts for pass 2: $salts")
-    val (ids, tBlock) = timed("blocking") {
-      Blocking.extractBlocks(a, b, "rec_id", "rec_id", rules,
-        hotKeySalts = salts).localCheckpoint(true)
-    }
-    val nCand = ids.count()
-    println(s"candidate pairs: $nCand")
+    // wide). With the scaled keys above the expected answer is 0 (the
+    // key spreads fine; salting would only pay replication) — the
+    // point is that this is MEASURED before the join runs, not
+    // asserted: a fixture regression to a low-cardinality band would
+    // surface here as a nonzero salt count instead of a straggler task.
+    val saltKey = struct(col("nationkey"), balKey(col("acctbal")).as("b"))
 
-    // 2. Comparators: JW name band, exact nation (nulls → NULL level),
+    // Comparators: JW name band, exact nation (nulls → NULL level),
     // exact segment, balance band.
     val comparators =
       Comparators.jaroWinkler(Seq("name")) ++
@@ -201,53 +182,6 @@ object LinkageE2E {
         when(abs(col("acctbal_left") - col("acctbal_right")) < lit(1.5), "close")
           .otherwise("far"))
 
-    // 3. Pattern counts over the candidate pairs.
-    val (patterns, tPatterns) = timed("pattern counts") {
-      EM.collectPatterns(
-        Pairs.patternCounts(a, b, "rec_id", "rec_id", ids, comparators))
-    }
-    println(s"distinct patterns: ${patterns.size}")
-
-    // 4. u-probabilities from random A×B pairs (not candidates).
-    val (u, tU) = timed("u-probs") {
-      UProbs.calculateUProbs(a, b, "rec_id", "rec_id", comparators, size = 500000L)
-    }
-
-    // 5. EM over the pattern table. `totalPairs` is the CANDIDATE
-    // count, not nA·nB: the pattern table covers candidates only, and
-    // feeding it a cross-space denominator (the reference's
-    // `total_pairs = n²/2`, scratch.R:56 — whose own comment flags
-    // underflow) makes the mixture inconsistent once matches are a
-    // visible fraction of candidates. Measured here: at the 150k
-    // shape matches are ~0.1% of candidates and either form converges;
-    // at NCVR scale (127.8M candidates, ~5.6% matches) the cross-space
-    // prior says "matches are 1e-7 of pairs" while the table says 5.6%
-    // — the u-class absorbs the match class and λ decays ×1e-5 per
-    // iteration to 1e-125 with every weight driven negative. Fitting
-    // the mixture over the candidate population is self-consistent at
-    // every scale; λ then reads "match rate among candidates".
-    val (em, tEm) = timed("EM") {
-      EM.run(patterns, totalPairs = nCand.toDouble, uProbabilities = u, maxIter = 25)
-    }
-    println(f"lambda = ${em.lambda}%.3e")
-    em.trace.foreach(t =>
-      println(f"  iter ${t.iteration}%2d: dM=${t.maxDeltaM}%.2e dU=${t.maxDeltaU}%.2e lambda=${t.lambda}%.3e"))
-    em.weights.foreach { case (f, ls) =>
-      println(s"  $f: " + ls.map { case (l, w) => f"$l=$w%.2f" }.mkString(", "))
-    }
-
-    // 6. Score every candidate pair ONCE (assemble → compare → weight
-    // → truth, materialized via localCheckpoint); evaluation and
-    // calibration both read the checkpointed table — no recompute.
-    val (scored, tScore) = timed("score all candidates") {
-      val pairsDs = Pairs.computePairsDataset(a, b, "rec_id", "rec_id", ids)
-      val values = Comparators.doComparisons(pairsDs, comparators,
-        keep = Seq("rec_id_left", "rec_id_right"))
-      Scoring.attachTruth(
-        Scoring.score(values, em), truth, "rec_id", "cluster")
-        .select("rec_id_left", "rec_id_right", "weight", "true_match")
-        .localCheckpoint(true)
-    }
     // Decision threshold: weight > 0 — the Fellegi–Sunter sign
     // boundary (total log-likelihood ratio favors match). A fixed
     // positive cutoff like the old `> 5` silently moves BETWEEN match
@@ -257,30 +191,25 @@ object LinkageE2E {
     // name-perturbed true match rides on the name weight alone (~4.4
     // here) — at NCVR scale `> 5` kept precision 1.0 but silently
     // cost 28% recall.
-    val ((bands, precision, recall), tEval) = timed("evaluation") {
-      val top = scored.filter(col("weight") > 0.0)
-      val nTop = top.count()
-      val nTrueTop = top.filter(col("true_match")).count()
-      (Scoring.precisionByBand(top).collect(),
-        (nTrueTop, nTop),
-        (nTrueTop, nB)) // every B row has exactly one true A partner
+    val res = Linkage.run(a, b, "rec_id", rules, saltKey, comparators, truth,
+      uSample = 500000L, emIterations = 25, threshold = 0.0)
+    println(s"recommended hotKeySalts for pass 2: ${res.salts}")
+    println(s"candidate pairs: ${res.candidates}")
+    println(s"distinct patterns: ${res.patterns.size}")
+    val em = res.em
+    println(f"lambda = ${em.lambda}%.3e")
+    em.trace.foreach(t =>
+      println(f"  iter ${t.iteration}%2d: dM=${t.maxDeltaM}%.2e dU=${t.maxDeltaU}%.2e lambda=${t.lambda}%.3e"))
+    em.weights.foreach { case (f, ls) =>
+      println(s"  $f: " + ls.map { case (l, w) => f"$l=$w%.2f" }.mkString(", "))
     }
     println("precision by weight band:")
-    bands.foreach(r => println(f"  band=${r.getDouble(0)}%5.1f precision=${r.getDouble(1)}%.4f n=${r.getLong(2)}"))
-    println(f"precision@weight>0: ${precision._1}/${precision._2} = ${precision._1.toDouble / precision._2}%.4f")
-    println(f"recall@weight>0:    ${recall._1}/${recall._2} = ${recall._1.toDouble / recall._2}%.4f")
+    res.bands.foreach(r => println(f"  band=${r.getDouble(0)}%5.1f precision=${r.getDouble(1)}%.4f n=${r.getLong(2)}"))
+    println(f"precision@weight>0: ${res.trueTop}/${res.top} = ${res.trueTop.toDouble / res.top}%.4f")
+    // every B row has exactly one true A partner
+    println(f"recall@weight>0:    ${res.trueTop}/$nB = ${res.trueTop.toDouble / nB}%.4f")
 
-    // 7. Calibration on all scored candidates (same checkpointed
-    // table), fit on distinct-weight aggregates: weight is a pure
-    // function of the comparison pattern (≤ #patterns distinct
-    // values), so the factorized fit is the exact same MLE at one
-    // groupBy over the pair table — at NCVR scale the per-pair
-    // spark.ml fit was 233.6 s (65% of the pipeline,
-    // docs/LINKAGE_E2E_r11.md); the small shape also runs the
-    // unaggregated reference form and prints both as parity evidence.
-    val (cal, tCal) = timed("glm calibration") {
-      Scoring.calibrate(scored)
-    }
+    val cal = res.calibration
     println(f"glm calibration: P(match) = sigmoid(${cal.intercept}%.4f + ${cal.slope}%.4f * weight)" +
       s" separated=${cal.separated}")
     if (cal.separated)
@@ -288,7 +217,8 @@ object LinkageE2E {
         "\n  exist (R glm would warn 'fitted probabilities numerically 0 or 1');" +
         "\n  coefficients are optimizer stopping points, the ranking is exact.")
     val total = (System.nanoTime() - tTotal0) / 1e9
-    println(f"[time] TOTAL: $total%.1f s (block=$tBlock%.1f patterns=$tPatterns%.1f u=$tU%.1f em=$tEm%.1f score=$tScore%.1f eval=$tEval%.1f cal=$tCal%.1f)")
+    println(f"[time] TOTAL: $total%.1f s (" +
+      res.seconds.map { case (phase, s) => f"$phase=$s%.1f" }.mkString(" ") + ")")
 
     // Parity evidence, OUTSIDE the pipeline wall time: re-fit with the
     // unaggregated per-pair reference form and print both. ±1e-6
@@ -298,20 +228,22 @@ object LinkageE2E {
     // points — the deltas are then expected and meaningless (the
     // printed `separated` flag says which regime a run is in). Always
     // on for the small shape; `SPARK_GRAFT_E2E_CAL_PARITY=1` opts in
-    // at big scale (it re-pays the per-pair fit this round removed).
+    // at big scale (it re-pays the per-pair fit the aggregated form
+    // removed).
     if (!big || sys.env.get("SPARK_GRAFT_E2E_CAL_PARITY").contains("1")) {
-      val (calFull, tCalFull) = timed("glm calibration (unaggregated reference)") {
-        Scoring.calibrateFull(scored)
-      }
+      val t0 = System.nanoTime()
+      val calFull = Scoring.calibrateFull(res.scored)
+      val tCalFull = (System.nanoTime() - t0) / 1e9
+      println(f"[time] glm calibration (unaggregated reference): $tCalFull%.1f s")
       println(f"  unaggregated: P(match) = sigmoid(${calFull.intercept}%.4f + ${calFull.slope}%.4f * weight)" +
         f" separated=${calFull.separated}" +
         f" (|dIntercept|=${math.abs(calFull.intercept - cal.intercept)}%.2e" +
-        f" |dSlope|=${math.abs(calFull.slope - cal.slope)}%.2e, ${tCalFull}%.1f s vs ${tCal}%.1f s)")
+        f" |dSlope|=${math.abs(calFull.slope - cal.slope)}%.2e, ${tCalFull}%.1f s vs ${res.seconds.toMap.apply("calibrate")}%.1f s)")
       // The adjudicator when the two disagree: both coefficients
       // evaluated on the SAME aggregated likelihood — the MLE is
       // whichever is higher (they factorize identically, so this is
       // the per-pair likelihood up to the same constant).
-      val stats = Scoring.calibrationStats(scored)
+      val stats = Scoring.calibrationStats(res.scored)
       val (llAgg, llFull) =
         (Scoring.binomialLogLik(stats, cal), Scoring.binomialLogLik(stats, calFull))
       println(f"  logLik: aggregated-Newton=$llAgg%.6f per-pair-LBFGS=$llFull%.6f" +

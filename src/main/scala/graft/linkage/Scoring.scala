@@ -73,10 +73,6 @@ object Scoring {
   def score(comparisonValues: DataFrame, em: EM.EMResult): DataFrame =
     comparisonValues.withColumn("weight", weightExpression(em))
 
-  /** Threshold + rank (reference: scratch.R:130,134). */
-  def topMatches(scored: DataFrame, threshold: Double = 5.0): DataFrame =
-    scored.filter(col("weight") > threshold).orderBy(desc("weight"))
-
   /** Attach ground-truth cluster labels from both sides and mark true
     * matches (reference: scratch.R:131-133). `truth` has columns
     * (idCol, clusterCol).

@@ -337,9 +337,14 @@ object Multimodal {
   def dhashBytes(payload: Array[Byte]): (Int, Int, Long, Long) = {
     {
       {
+        // In memory: ImageIO's default disk cache spools an InputStream
+        // to a temp file. `read` closes the stream unless no reader fits.
+        val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+          new java.io.ByteArrayInputStream(payload))
         val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+          try javax.imageio.ImageIO.read(in)
           catch { case _: java.io.IOException => null }
+          finally try in.close() catch { case _: java.io.IOException => () }
         if (img == null || img.getWidth % 9 != 0 || img.getHeight % 8 != 0)
           (-1, -1, 0L, 0L)
         else {

@@ -108,7 +108,7 @@ class BpeSpec extends SparkSpec {
     // and verified, and a reloaded model must re-segment identically
     val words = Seq(("banana", 4L), ("bandana", 2L), ("ana", 7L)).toDF("word", "freq")
     val (mt, seg) = Bpe.bpeTrain(words, merges = 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_bpe_model").toString
+    val out = tempDir("graft_bpe_model").toString
     graft.etl.Etl.writeAudited(mt, out,
       Seq("merge_no", "pair_a", "pair_b", "merged", "pair_count"))
     val reloaded = graft.etl.Etl.readAudited(spark, out) // verifying reader

@@ -11,7 +11,7 @@ class EtlSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed join: no exchange on either side, result correct") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bkt_spec").toString
+    val tmp = tempDir("graft_bkt_spec").toString
     val left = (1L to 100L).map(i => (i, s"name_$i")).toDF("id", "name")
     val right = (1L to 300L).map(i => (i % 100 + 1, i)).toDF("id", "order_id")
     Etl.writeBucketed(left, "spec_bkt_left", s"$tmp/left", "id", 4, Some("id"))
@@ -33,7 +33,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite replaces only the partitions present in the frame") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpo_spec").toString
+    val tmp = tempDir("graft_dpo_spec").toString
     val base = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"), (5L, "c"))
       .toDF("id", "part")
     Etl.writePartitioned(base, tmp, Seq("part"))
@@ -45,7 +45,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("range-sorted write: per-file key ranges are disjoint (data-skipping layout)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rng_spec").toString
+    val tmp = tempDir("graft_rng_spec").toString
     val df = (1L to 1000L).map(i => (i * 37 % 1000, i)).toDF("k", "v")
     Etl.writeRangeSorted(df, tmp, "k", nFiles = 4)
     // min/max of k per physical file must not overlap across files —
@@ -69,7 +69,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("z-ordered write: files cover small 2-d boxes; roundtrip exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_z_spec").toString
+    val tmp = tempDir("graft_z_spec").toString
     // 64x64 grid, shuffled ordering — x and y are independent, so a
     // plain x-sort gives full-range y boxes.
     val df = (0 until 4096).map { i =>
@@ -102,7 +102,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("compact: shrinks the file count, keeps every row byte-identical") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cmp_spec").toString
+    val tmp = tempDir("graft_cmp_spec").toString
     val df = (1L to 2000L).map(i => (i, s"row_$i")).toDF("id", "payload")
     df.repartition(37).write.parquet(s"$tmp/in")
     def nFiles(p: String) = new java.io.File(p).listFiles
@@ -119,7 +119,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("compact: hive-partitioned input preserves layout; flat compact refused") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cmp_part").toString
+    val tmp = tempDir("graft_cmp_part").toString
     val df = (1L to 3000L).map(i => (i % 3, i, s"row_$i")).toDF("p", "id", "payload")
     df.repartition(20).write.partitionBy("p").parquet(s"$tmp/in")
     def partFiles(root: String, p: Long) =
@@ -151,7 +151,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("upsertPartitioned: replace + insert by key, untouched partition byte-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ups").toString
+    val root = tempDir("graft_ups").toString
     val tmp = s"$root/t"
     val base = Seq(
       ("a", 1L, 10.0), ("a", 2L, 20.0),
@@ -185,7 +185,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("compactPartition: rewrites ONE partition in place, siblings byte-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cmp_inplace").toString
+    val root = tempDir("graft_cmp_inplace").toString
     val tmp = s"$root/t"
     val df = (1L to 3000L).map(i => (i % 3, i, s"row_$i")).toDF("p", "id", "payload")
     df.repartition(20).write.partitionBy("p").parquet(tmp)
@@ -209,7 +209,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("upsertPartitioned is idempotent under batch replay") {
-    val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val root = tempDir("graft_replay").toString
     val path = s"$root/t"
     Seq(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 30.0)).toDF("p", "k", "v")
       .write.partitionBy("p").parquet(path)
@@ -228,7 +228,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("ORC roundtrip preserves rows, schema, and unicode strings") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc_spec").toString
+    val tmp = tempDir("graft_orc_spec").toString
     val df = Seq((1L, "plain"), (2L, "tabs\tand\nnewlines"), (3L, "unicodé ☃"),
       (4L, null.asInstanceOf[String])).toDF("id", "text")
     Etl.writeOrc(df, tmp)
@@ -241,7 +241,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("audited write: manifest verifies; tampering fails loudly; checksum is layout-independent") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_aud_spec").toString + "/t"
+    val tmp = tempDir("graft_aud_spec").toString + "/t"
     val df = (1L to 500L).map(i => (i, s"payload_$i", if (i % 7 == 0) null else s"v$i"))
       .toDF("id", "payload", "opt")
     Etl.writeAudited(df, tmp, Seq("id", "payload", "opt"))
@@ -272,7 +272,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("readIncremental: only-new-files semantics, commit idempotence, guards") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr_spec").toString
+    val tmp = tempDir("graft_incr_spec").toString
     (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")
       .write.mode("append").parquet(tmp)
     // no ledger yet: everything is new
@@ -294,7 +294,7 @@ class EtlSpec extends SparkSpec {
     Etl.commitProcessed(spark, tmp, n1) // replay
     assert(Etl.readIncremental(spark, tmp)._2.isEmpty)
     // guards: partitioned layouts refused; unescapable names refused
-    val part = java.nio.file.Files.createTempDirectory("graft_incr_part").toString
+    val part = tempDir("graft_incr_part").toString
     (1L to 4L).map(i => (i, i % 2)).toDF("id", "p")
       .write.partitionBy("p").mode("overwrite").parquet(part)
     val e1 = intercept[IllegalArgumentException](Etl.readIncremental(spark, part))
@@ -305,7 +305,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("readIncrementalPartitioned: per-partition ledgers isolate commits") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr_shard").toString
+    val tmp = tempDir("graft_incr_shard").toString
     Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "p")
       .write.partitionBy("p").mode("append").parquet(tmp)
     val (all1, fresh1) = Etl.readIncrementalPartitioned(spark, tmp, "p")
@@ -324,7 +324,7 @@ class EtlSpec extends SparkSpec {
     assert(got3.count() == 0L && fresh3.isEmpty)
     assert(got3.columns.toSet == Set("id", "p")) // schema survives the empty case
     // guards: a flat directory refuses; a foreign subdirectory refuses
-    val flat = java.nio.file.Files.createTempDirectory("graft_incr_flat").toString
+    val flat = tempDir("graft_incr_flat").toString
     Seq((1L, "x")).toDF("id", "v").write.mode("append").parquet(flat)
     val e1 = intercept[IllegalArgumentException](
       Etl.readIncrementalPartitioned(spark, flat, "p"))
@@ -336,7 +336,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("readIncremental: file-count ceiling raises loudly before the driver drowns") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr_cap").toString
+    val tmp = tempDir("graft_incr_cap").toString
     // many-file fixture: 8 single-row part files via repartition(8)
     spark.range(8).repartition(8).toDF("id")
       .write.mode("append").parquet(tmp)
@@ -363,7 +363,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("shingle-frequency snapshot: parquet round-trip preserves the (shingle, df) table; drifted schema refuses loudly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shfreq").toString
+    val tmp = tempDir("graft_shfreq").toString
     val docs = Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "x y z w"))
       .toDF("doc_id", "text")
     val sh = graft.ops.Dedup.shingleSets(docs, "doc_id", col("text"), 2)

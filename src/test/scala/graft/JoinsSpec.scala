@@ -235,7 +235,7 @@ class JoinsSpec extends SparkSpec {
     // side reads from parquet: over a LocalRelation the optimizer
     // folds the filter away entirely (ConvertToLocalRelation), which
     // hides the physical shape this test pins.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_spec").toString
+    val dir = tempDir("graft_bloom_spec").toString
     (1L to 100L).map(k => (k, s"p$k")).toDF("lk", "payload")
       .write.mode("overwrite").parquet(dir)
     val left = spark.read.parquet(dir)

@@ -330,9 +330,10 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("linkage pass: a benchmark-shaped pass stays within its job budget") {
-    // perfbench's linkage pass (graft.LinkageE2E's pipeline) on 600 A
-    // rows: salt pre-flight, two computed-key passes, pattern counts,
-    // u-probabilities, EM, scoring, precision bands, calibration.
+    // Linkage.run on a perfbench-shaped fixture (graft.LinkageE2E's
+    // rules and comparators) with 600 A rows: salt pre-flight, two
+    // computed-key passes, pattern counts, u-probabilities, EM, scoring,
+    // precision bands, calibration.
     val a = spark.range(1, 601).select(
         col("id").as("rec_id"),
         translate(substring(md5(col("id").cast("string")), 1, 12),
@@ -355,25 +356,10 @@ class LinkageSpec extends SparkSpec {
       Comparators.expression("bal_band",
         when(abs(col("acctbal_left") - col("acctbal_right")) < lit(1.5), "close").otherwise("far"))
     def pass(): (Long, Int, Double) = {
-      val salts = Blocking.recommendSalts(
-        a, struct(col("nationkey"), balKey(col("acctbal")).as("b")),
-        b, struct(col("nationkey"), balKey(col("acctbal")).as("b")), targetParallelism = 4)
-      val ids = Blocking.extractBlocks(a, b, "rec_id", "rec_id", rules, hotKeySalts = salts)
-        .localCheckpoint(true)
-      val nCand = ids.count()
-      val patterns = EM.collectPatterns(Pairs.patternCounts(a, b, "rec_id", "rec_id", ids, comparators))
-      val u = UProbs.calculateUProbs(a, b, "rec_id", "rec_id", comparators, size = 20000L)
-      val em = EM.run(patterns, totalPairs = nCand.toDouble, uProbabilities = u, maxIter = 5)
-      val values = Comparators.doComparisons(
-        Pairs.computePairsDataset(a, b, "rec_id", "rec_id", ids), comparators,
-        keep = Seq("rec_id_left", "rec_id_right"))
-      val scored = Scoring.attachTruth(Scoring.score(values, em), truth, "rec_id", "cluster")
-        .select("rec_id_left", "rec_id_right", "weight", "true_match").localCheckpoint(true)
-      val top = scored.filter(col("weight") > 0.0)
-      val nTrueTop = top.filter(col("true_match")).count()
-      val bands = Scoring.precisionByBand(top).collect()
-      Scoring.calibrate(scored)
-      (nCand, bands.length, nTrueTop.toDouble / top.count())
+      val res = Linkage.run(a, b, "rec_id", rules,
+        struct(col("nationkey"), balKey(col("acctbal")).as("b")), comparators, truth,
+        uSample = 20000L, emIterations = 5, threshold = 0.0)
+      (res.candidates, res.bands.length, res.trueTop.toDouble / res.top)
     }
     val (nCand, nBands, precision) = pass() // warm-up
     assert(nCand > 600 && nBands > 1 && precision > 0.9, (nCand, nBands, precision))

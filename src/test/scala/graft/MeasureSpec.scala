@@ -11,10 +11,8 @@ class MeasureSpec extends SparkSpec {
 
   private def read(dir: String, t: String) = spark.read.parquet(s"$dir/$t.parquet")
 
-  private def withTempDir(body: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_measure_spec").toFile
-    try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
+  private def withTempDir(body: String => Unit): Unit =
+    body(tempDir("graft_measure_spec").toString)
 
   test("replica recipe: xR rows, disjoint ids, salted tokens, verbatim dimensions") { withTempDir { out =>
     val r = 3

@@ -1181,7 +1181,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("fileStats: per-file envelopes of a range-sorted layout are disjoint and complete") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstats").toString
+    val dir = tempDir("graft_fstats").toString
     val df = (1L to 1000L).map(i => (i, i % 7)).toDF("k", "v")
     graft.etl.Etl.writeRangeSorted(df, dir, "k", nFiles = 4)
     val st = graft.etl.Etl.fileStats(spark, dir, "k").collect()

@@ -18,7 +18,7 @@ class ParallelismSpec extends SparkSpec {
     df.queryExecution.logical.collect { case r: RepartitionOperation => r }.size
 
   private def writeSingleFile(rows: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_par_spec").toString
+    val dir = tempDir("graft_par_spec").toString
     import spark.implicits._
     (1 to rows).map(i => (i.toLong, s"v$i" * 8)).toDF("id", "s")
       .coalesce(1).write.mode("overwrite").parquet(dir)

@@ -108,6 +108,28 @@ class ProfilingMultimodalSpec extends SparkSpec {
     }
   }
 
+  test("dhashBytes decodes in memory: ImageIO's disk cache gets no file") {
+    import javax.imageio.ImageIO
+    import scala.jdk.CollectionConverters._
+    val cache = tempDir("graft_imageio_cache")
+    val watcher = cache.getFileSystem.newWatchService()
+    val useCache = ImageIO.getUseCache
+    try {
+      cache.register(watcher, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(cache.toFile)
+      val (w, h, d0, d1) = Multimodal.dhashBytes(Multimodal.synthBmp(17L))
+      assert((w, h, (d0, d1)) == ((36, 32, dhashLocal(17L))))
+      val created = Option(watcher.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS))
+        .toSeq.flatMap(_.pollEvents().asScala.map(_.context.toString))
+      assert(created.isEmpty, s"the decode wrote cache files: $created")
+    } finally {
+      ImageIO.setCacheDirectory(null)
+      ImageIO.setUseCache(useCache)
+      watcher.close()
+    }
+  }
+
   test("dHash is perceptual: same-base variants near, exact bytes differ") {
     val (a, b) = (0L, 5L) // same base 0, different sparse flips
     assert(!java.util.Arrays.equals(Multimodal.synthBmp(a), Multimodal.synthBmp(b)))

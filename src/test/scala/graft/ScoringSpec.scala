@@ -64,12 +64,12 @@ class ScoringSpec extends SparkSpec {
       .filter(col("weight") > 0).count() == 1)
   }
 
-  test("topMatches thresholds and ranks; attachTruth + precisionByBand") {
+  test("weight threshold; attachTruth + precisionByBand") {
     val values = Seq(
       (1L, 2L, "agree"), (1L, 3L, "agree"), (3L, 4L, "disagree")
     ).toDF("id_left", "id_right", "f")
     val scored = Scoring.score(values, em)
-    val top = Scoring.topMatches(scored, threshold = 1.0)
+    val top = scored.filter(col("weight") > 1.0)
     assert(top.count() == 2) // both "agree" pairs, weight ln 9 ≈ 2.197
 
     val truth = Seq((1L, 10L), (2L, 10L), (3L, 20L), (4L, 20L)).toDF("id", "cluster")

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all specs (one JVM-wide session; suites are
@@ -11,8 +13,21 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.build("graft-test", cpus = 4)
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[java.io.File]()
+
+  /** A fresh temp dir, deleted with everything in it after the suite. */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir.toFile
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 
   /** Spark jobs started while `body` runs, with their short call sites. */
   protected def countJobs(body: => Unit): (Int, Seq[String]) = {
@@ -28,13 +43,7 @@ abstract class SparkSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      // listener delivery is async: poll until the count is stable
-      var (prev, stable) = (-1, 0)
-      while (stable < 3) {
-        Thread.sleep(100)
-        val cur = counter.get()
-        if (cur == prev) stable += 1 else { prev = cur; stable = 0 }
-      }
+      Bridge.waitForListeners(spark.sparkContext) // delivery is async
       import scala.jdk.CollectionConverters._
       (counter.get(), sites.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(listener)
