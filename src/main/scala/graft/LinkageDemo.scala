@@ -59,6 +59,31 @@ object LinkageDemo {
       .toDF("unique_id", "cluster", "first_name", "surname", "dob", "gender", "postcode_fake", "occupation")
   }
 
+  /** Blocking (reference: scratch.R:23-29). The last pass is SURVEY
+    * §4's first-initial case: a real-alphabet surname initial is a
+    * tiny-cardinality SKEWED key (five of the fixture's fourteen
+    * surnames start with 'w', so one block carries ~35% of the rows
+    * and ~46% of the pair work) — the shape where AQE's byte-based
+    * skew split can't help a compute-bound pair fan-out. The salt
+    * count is NOT asserted: `recommendSalts` forecasts per-key pair
+    * work from the key counts and picks it before the join runs.
+    */
+  val rules: BlockingRules = BlockingRules(Seq(
+    EquiKeys("surname"), EquiKeys("dob"), EquiKeys("postcode_fake"), EquiKeys("first_name"),
+    ComputedKeys(Seq(
+      ("s1", substring(col("surname_left"), 1, 1), substring(col("surname_right"), 1, 1))))))
+
+  /** Comparators (reference: scratch.R:39-47). */
+  val comparators: Seq[Comparator] =
+    Comparators.exact(Seq("dob", "postcode_fake", "occupation")) ++
+    Comparators.jaroWinkler(Seq("first_name", "surname")) :+
+    Comparators.expression("gender_comparison",
+      when(col("gender_left") === "male" && col("gender_right") === "male", "agree (male)")
+        .when(col("gender_left") === "female" && col("gender_right") === "female", "agree (female)")
+        .when(!coalesce(col("gender_left").isin("female", "male"), lit(false)) ||
+              !coalesce(col("gender_right").isin("female", "male"), lit(false)), null)
+        .otherwise("disagree"))
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.build("graft-linkage-demo")
 
@@ -67,30 +92,6 @@ object LinkageDemo {
     val truth = people.select("unique_id", "cluster")
     val n = data.count()
     println(s"persons: $n records")
-
-    // Blocking (reference: scratch.R:23-29). The last pass is SURVEY
-    // §4's first-initial case: a real-alphabet surname initial is a
-    // tiny-cardinality SKEWED key (five of the fixture's fourteen
-    // surnames start with 'w', so one block carries ~35% of the rows
-    // and ~46% of the pair work) — the shape where AQE's byte-based
-    // skew split can't help a compute-bound pair fan-out. The salt
-    // count is NOT asserted: `recommendSalts` forecasts per-key pair
-    // work from the key counts and picks it before the join runs.
-    val rules = BlockingRules(Seq(
-      EquiKeys("surname"), EquiKeys("dob"), EquiKeys("postcode_fake"), EquiKeys("first_name"),
-      ComputedKeys(Seq(
-        ("s1", substring(col("surname_left"), 1, 1), substring(col("surname_right"), 1, 1))))))
-
-    // Comparators (reference: scratch.R:39-47).
-    val comparators =
-      Comparators.exact(Seq("dob", "postcode_fake", "occupation")) ++
-      Comparators.jaroWinkler(Seq("first_name", "surname")) :+
-      Comparators.expression("gender_comparison",
-        when(col("gender_left") === "male" && col("gender_right") === "male", "agree (male)")
-          .when(col("gender_left") === "female" && col("gender_right") === "female", "agree (female)")
-          .when(!coalesce(col("gender_left").isin("female", "male"), lit(false)) ||
-                !coalesce(col("gender_right").isin("female", "male"), lit(false)), null)
-          .otherwise("disagree"))
 
     // Pattern counts, u-probabilities, EM, scoring and glm calibration
     // (reference: scratch.R:51-139), at the reference's `weight > 5`.

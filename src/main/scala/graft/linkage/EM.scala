@@ -10,8 +10,8 @@ import org.apache.spark.sql.DataFrame
   * The pattern-count table is tiny by construction (≤ ∏ field levels
   * rows — pattern aggregation at scratch.R:51-54 is what makes this
   * driver-local loop correct at 100 TB: one Spark job produces the
-  * counts, pure Scala fits the parameters, a second Spark job applies
-  * the compiled weights).
+  * counts, pure Scala fits the parameters, and [[Linkage.run]] applies
+  * the per-pattern weights to the count table, not to the pairs).
   *
   * Semantics preserved from the reference:
   *   - levels discovered from the data, per field, sorted ascending,
@@ -45,7 +45,11 @@ object EM {
   /** One distinct comparison vector: field → level (None = missing). */
   final case class Pattern(levels: Map[String, Option[String]], n: Long)
 
-  final case class EMTrace(iteration: Int, maxDeltaM: Double, maxDeltaU: Double, lambda: Double)
+  /** One iteration: the largest |Δ| of m and u, the new λ, and the
+    * observed log-likelihood of the parameters it started from.
+    */
+  final case class EMTrace(iteration: Int, maxDeltaM: Double, maxDeltaU: Double,
+      lambda: Double, logLik: Double)
 
   final case class EMResult(
       mProbabilities: SortedMap[String, SortedMap[String, Double]],
@@ -64,6 +68,17 @@ object EM {
     else m + math.log(xs.map(x => math.exp(x - m)).sum)
   }
 
+  /** The most distinct comparison vectors a driver-side EM accepts. */
+  val MaxPatterns = 100000
+
+  /** The message of a broken pattern bound over comparator `fields`. */
+  private[linkage] def patternContract(fields: Seq[String], maxPatterns: Int = MaxPatterns): String =
+    s"collectPatterns: pattern-count table exceeds $maxPatterns rows — " +
+      s"the driver-side EM contract (rows <= product of per-field level " +
+      s"counts, fields = ${fields.mkString(",")}) is broken. A comparator " +
+      "is emitting high-cardinality levels (raw values instead of a " +
+      "small banded set); band it before running EM."
+
   /** Collect a [[Pairs.patternCounts]] result into driver-side patterns.
     * Safe to collect ONLY because row count is bounded by the product
     * of per-field level counts, not by pair count — and that contract
@@ -78,15 +93,10 @@ object EM {
     * fails loudly with the fix (band the comparator) in the message.
     */
   def collectPatterns(patternCounts: DataFrame,
-      maxPatterns: Int = 100000): Seq[Pattern] = {
+      maxPatterns: Int = MaxPatterns): Seq[Pattern] = {
     val fields = patternCounts.columns.filterNot(_ == "n").toSeq
     val rows = patternCounts.take(maxPatterns + 1)
-    require(rows.length <= maxPatterns,
-      s"collectPatterns: pattern-count table exceeds $maxPatterns rows — " +
-        s"the driver-side EM contract (rows <= product of per-field level " +
-        s"counts, fields = ${fields.mkString(",")}) is broken. A comparator " +
-        "is emitting high-cardinality levels (raw values instead of a " +
-        "small banded set); band it before running EM.")
+    require(rows.length <= maxPatterns, patternContract(fields, maxPatterns))
     rows.toSeq.map { row =>
       Pattern(
         fields.map(f => f -> Option(row.getAs[String](f))).toMap,
@@ -165,7 +175,8 @@ object EM {
       val logLambda = math.log(lambda)
       val logOneMinusLambda = math.log1p(-lambda)
 
-      // E-step: P(match | pattern) per distinct pattern.
+      // E-step: P(match | pattern) per distinct pattern; Σ n·log P(γ).
+      var logLik = 0.0
       val probEst: Seq[Double] = patternCounts.map { p =>
         var llM = 0.0
         var llU = 0.0
@@ -177,7 +188,9 @@ object EM {
         }
         val a = logLambda + llM
         val b = logOneMinusLambda + llU
-        math.exp(a - logSumExp(Seq(a, b)))
+        val ll = logSumExp(Seq(a, b))
+        logLik += p.n * ll
+        math.exp(a - ll)
       }
 
       // M-step.
@@ -212,7 +225,7 @@ object EM {
           ls.flatMap { case (l, v) => b(f).get(l).map(old => math.abs(v - old)) }
         }.foldLeft(0.0)(math.max)
 
-      trace += EMTrace(i, maxDelta(newM, m), maxDelta(newU, u), newLambda)
+      trace += EMTrace(i, maxDelta(newM, m), maxDelta(newU, u), newLambda, logLik)
       m = newM
       u = newU
       lambda = newLambda

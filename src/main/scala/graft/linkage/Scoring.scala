@@ -95,53 +95,53 @@ object Scoring {
     * by band, NULL band first.
     *
     * Computed eagerly and returned as a local frame. One job counts the
-    * (band, true_match) pairs ([[countsByValue]], at most
-    * [[MaxDriverRows]]); the driver takes `avg(true_match)` and the row
-    * count per band and orders the bands, instead of an aggregate's two
-    * jobs and a range-partition sample job and distributed sort (which
-    * would add generated classes to every linkage pass,
-    * docs/CODEGEN_CACHE_r17.md). The truth counts are exact integers,
-    * so the average is the aggregate's double.
+    * (band, true_match) pairs
+    * ([[org.apache.spark.sql.graftbridge.Bridge.countRows]], at most
+    * [[MaxDriverRows]]); [[bandRows]] finishes the table on the driver,
+    * instead of an aggregate's two jobs and a range-partition sample job
+    * and distributed sort (which would add generated classes to every
+    * linkage pass, docs/CODEGEN_CACHE_r17.md).
     */
   def precisionByBand(withTruth: DataFrame): DataFrame = {
     val banded = withTruth.select(round(col("weight")).as("weight_band"), col("true_match").cast("double"))
-    val byBand = countsByValue(banded, MaxDriverRows,
+    val byBand = bandRows(Bridge.countRows(banded, MaxDriverRows,
       "precisionByBand keeps one row per distinct rounded weight and truth value; " +
         "the weight column looks like a continuous per-pair score, not a " +
-        "pattern-pure Fellegi-Sunter weight.")
-      .map { case (band, truths) =>
-        val known = truths.filter(_._1 != null)
-        val precision = if (known.isEmpty) null
-          else known.map { case (t, n) => t.asInstanceOf[Double] * n }.sum / known.map(_._2).sum
-        Row(band, precision, truths.map(_._2).sum)
-      }
+        "pattern-pure Fellegi-Sunter weight."))
     val schema = StructType(Seq(banded.schema("weight_band"),
       StructField("precision", DoubleType, nullable = true),
       StructField("n", LongType, nullable = false)))
     withTruth.sparkSession.createDataFrame(java.util.Arrays.asList(byBand: _*), schema)
   }
 
+  /** [[precisionByBand]]'s rows from ((band, truth as 1.0/0.0/NULL),
+    * pairs) counts: per band, `avg(true_match)` over the known truths
+    * and the pair count, ascending by band. The truth counts are exact
+    * integers, so the average is the aggregate's double.
+    */
+  private[linkage] def bandRows(counted: Iterable[(Row, Long)]): Seq[Row] =
+    byValue(counted).map { case (band, truths) =>
+      val known = truths.filter(_._1 != null)
+      val precision = if (known.isEmpty) null
+        else known.map { case (t, n) => t.asInstanceOf[Double] * n }.sum / known.map(_._2).sum
+      Row(band, precision, truths.map(_._2).sum)
+    }
+
   /** The most rows a driver-side table of distinct weights may hold;
     * also [[calibrationStats]]' default bound.
     */
   private val MaxDriverRows = 100000
 
-  /** `keyed`'s (value, truth) rows counted in one
-    * [[org.apache.spark.sql.graftbridge.Bridge.countRows]] job and
-    * grouped by value on the driver: (value, (truth, rows) per truth),
-    * ascending by value, NULL first. A value arrives as the boxed Java
-    * value of its type, normalized as `groupBy` normalizes it, is merged
-    * under Java equality (one NaN) and ordered by its natural order,
-    * which is Spark's.
+  /** ((value, truth), rows) counts as (value, (truth, rows) per truth),
+    * ascending by value, NULL first. A value is the boxed Java value of
+    * its type, normalized as `groupBy` normalizes it, is merged under
+    * Java equality (one NaN) and ordered by its natural order, Spark's.
     */
-  private def countsByValue(keyed: DataFrame, maxRows: Int,
-      contract: String): Seq[(Any, List[(Any, Long)])] = {
-    val byValue = new java.util.HashMap[Any, List[(Any, Long)]]()
-    Bridge.countRows(keyed, maxRows, contract).foreach { case (r, n) =>
-      byValue.merge(r.get(0), List((r.get(1), n)), (a, b) => a ::: b)
-    }
+  private def byValue(counted: Iterable[(Row, Long)]): Seq[(Any, List[(Any, Long)])] = {
+    val grouped = new java.util.HashMap[Any, List[(Any, Long)]]()
+    counted.foreach { case (r, n) => grouped.merge(r.get(0), List((r.get(1), n)), (a, b) => a ::: b) }
     import scala.jdk.CollectionConverters._
-    byValue.asScala.toSeq.sortBy(kv => Option(kv._1))(Ordering.Option(
+    grouped.asScala.toSeq.sortBy(kv => Option(kv._1))(Ordering.Option(
       Ordering.fromLessThan[Any]((x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y) < 0)))
   }
 
@@ -193,7 +193,7 @@ object Scoring {
     * ([[calibrationStats]], boundedness enforced) — see [[fitIrls]]
     * for why second-order beats `spark.ml`'s L-BFGS here. Parity with
     * the unaggregated fit is spec-asserted at ±1e-6 where both
-    * converge (ScoringSpec) and printed side-by-side by the E2E.
+    * converge (ScoringSpec).
     */
   def calibrate(withTruth: DataFrame, weightCol: String = "weight",
       truthCol: String = "true_match"): Calibration =
@@ -222,15 +222,21 @@ object Scoring {
         "is broken; the weight column looks like a continuous per-pair " +
         "score, not a pattern-pure Fellegi-Sunter weight. Band it, or use " +
         "calibrateFull for a distributed per-pair fit."
-    val stats = countsByValue(withTruth
+    val stats = weightStats(Bridge.countRows(withTruth
       .filter(col(truthCol).isNotNull && col(weightCol).isNotNull)
       .select(col(weightCol).cast("double"), col(truthCol).cast("long")),
-      2 * maxDistinct, contract)
+      2 * maxDistinct, contract))
     require(stats.size <= maxDistinct, contract)
-    stats.map { case (w, truths) =>
+    stats
+  }
+
+  /** [[calibrationStats]]' (weight, n, n_true) rows, sorted by weight,
+    * from ((weight, truth as 1/0), pairs) counts with neither NULL.
+    */
+  private[linkage] def weightStats(counted: Iterable[(Row, Long)]): Seq[(Double, Long, Long)] =
+    byValue(counted).map { case (w, truths) =>
       (w.asInstanceOf[Double], truths.map(_._2).sum, truths.map { case (t, n) => t.asInstanceOf[Long] * n }.sum)
     }
-  }
 
   /** Newton/IRLS on the aggregated binomial — the fit that actually
     * CONVERGES where a first-order method cannot: the NCVR-scale E2E's
@@ -320,8 +326,8 @@ object Scoring {
   /** The unaggregated per-pair form of [[calibrate]] — same MLE,
     * O(pairs) per optimizer pass instead of O(distinct weights).
     * Retained as the parity reference (ScoringSpec asserts agreement
-    * at ±1e-6; the E2E's 150k shape prints both); prefer [[calibrate]]
-    * everywhere, and especially at scale.
+    * at ±1e-6) and as the distributed fit [[calibrationStats]] points
+    * to; prefer [[calibrate]] everywhere, and especially at scale.
     */
   def calibrateFull(withTruth: DataFrame, weightCol: String = "weight",
       truthCol: String = "true_match"): Calibration = {
@@ -335,25 +341,13 @@ object Scoring {
       max(when(col("__label") === 0.0, col("__w"))).as("max_false"),
       min(when(col("__label") === 1.0, col("__w"))).as("min_true")).head()
     val sep = r.isNullAt(0) || r.isNullAt(1) || r.getDouble(0) < r.getDouble(1)
-    fitLogistic(rows, weightColName = None, tol = 1e-12).copy(separated = sep)
-  }
-
-  /** Shared single-feature logistic fit: `__w` (feature), `__label`
-    * (0/1), optional frequency weight column. `spark.ml` L-BFGS,
-    * no regularization — the glm(binomial) MLE.
-    */
-  private def fitLogistic(rows: DataFrame, weightColName: Option[String],
-      tol: Double): Calibration = {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
-    val prepared = new VectorAssembler()
-      .setInputCols(Array("__w")).setOutputCol("__features")
-      .transform(rows)
-    val lr = new LogisticRegression()
+    // spark.ml L-BFGS, no regularization: the glm(binomial) MLE.
+    val model = new LogisticRegression()
       .setFeaturesCol("__features").setLabelCol("__label")
-      .setMaxIter(100).setRegParam(0.0).setTol(tol)
-    weightColName.foreach(lr.setWeightCol)
-    val model = lr.fit(prepared)
-    Calibration(model.intercept, model.coefficients(0))
+      .setMaxIter(100).setRegParam(0.0).setTol(1e-12)
+      .fit(new VectorAssembler().setInputCols(Array("__w")).setOutputCol("__features").transform(rows))
+    Calibration(model.intercept, model.coefficients(0), sep)
   }
 }

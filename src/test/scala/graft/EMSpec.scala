@@ -159,6 +159,67 @@ class EMSpec extends SparkSpec {
     assert(one.trace.head.maxDeltaM > 0.2)
   }
 
+  /** EM's ascent property: from the first M-step's parameters on, each
+    * iteration's observed log-likelihood is at least the previous one's,
+    * up to 1e-9 relative. Iteration 1 reads the reference's starting m,
+    * `seq(0.1, 0.8)` over the levels, which sums to more than 1 from
+    * three levels on: not a distribution, so its "likelihood" can exceed
+    * the first fitted one (it does on the three-level fixture below).
+    */
+  private def assertLogLikNonDecreasing(res: EM.EMResult, what: String): Unit = {
+    val lls = res.trace.map(_.logLik)
+    assert(lls.forall(ll => !ll.isNaN && ll <= 0), s"$what: $lls")
+    val fitted = lls.tail
+    fitted.zip(fitted.tail).zipWithIndex.foreach { case ((prev, next), i) =>
+      assert(next >= prev - 1e-9 * math.abs(prev),
+        s"$what: log-likelihood fell from $prev to $next after iteration ${i + 2}: $lls")
+    }
+  }
+
+  test("trace: observed log-likelihood of the starting parameters, non-decreasing where totalPairs is the pattern total") {
+    // The golden fixture's first E-step by hand: λ₀ = 1e-7, m = {a: 0.1,
+    // d: 0.8}, u = {a: 0.1, d: 0.9}.
+    val golden = EM.run(Seq(pat("f", Some("a"), 10), pat("f", Some("d"), 90)), totalPairs = 100.0,
+      uProbabilities = Map("f" -> Map("a" -> 0.1, "d" -> 0.9)), maxIter = 20)
+    val expected = 10 * math.log(1e-7 * 0.1 + (1 - 1e-7) * 0.1) + 90 * math.log(1e-7 * 0.8 + (1 - 1e-7) * 0.9)
+    assert(math.abs(golden.trace.head.logLik - expected) <= 1e-12 * math.abs(expected),
+      s"${golden.trace.head.logLik} vs $expected")
+    assertLogLikNonDecreasing(golden, "golden")
+
+    val twoFields = Seq(
+      Pattern(Map("x" -> Some("agree"), "y" -> Some("agree")), 600),
+      Pattern(Map("x" -> Some("agree"), "y" -> Some("disagree")), 200),
+      Pattern(Map("x" -> Some("disagree"), "y" -> Some("agree")), 300),
+      Pattern(Map("x" -> Some("disagree"), "y" -> Some("disagree")), 9500))
+    val twoFieldsU = Map(
+      "x" -> Map("agree" -> 0.05, "disagree" -> 0.95),
+      "y" -> Map("agree" -> 0.1, "disagree" -> 0.9))
+    val withMissing = Seq(pat("f", Some("agree"), 10), pat("f", Some("disagree"), 80), pat("f", None, 10))
+    val levels = Seq(None, Some("0"), Some("1"), Some("2"))
+    val threeFields = for {
+      (x, i) <- levels.zipWithIndex
+      (y, j) <- levels.zipWithIndex
+      z <- Seq(Some("agree"), Some("disagree"))
+    } yield Pattern(Map("x" -> x, "y" -> y, "z" -> z),
+      1L + (i * 7919L + j * 104729L + (if (z.contains("agree")) 3L else 977L)) % 9973L)
+    val threeFieldsU = Map(
+      "x" -> Map("0" -> 0.6, "1" -> 0.3, "2" -> 0.1),
+      "y" -> Map("0" -> 0.7, "1" -> 0.2, "2" -> 0.1),
+      "z" -> Map("agree" -> 0.05, "disagree" -> 0.95))
+    val fixtures = Seq(
+      ("two fields", twoFields, twoFieldsU),
+      ("missing level", withMissing, Map("f" -> Map("agree" -> 0.1, "disagree" -> 0.9))),
+      ("u floor", Seq(pat("f", Some("rare"), 1), pat("f", Some("common"), 99)), Map("f" -> Map("common" -> 1.0))),
+      ("three levels", Seq(pat("f", Some("a"), 200), pat("f", Some("b"), 300), pat("f", Some("c"), 500)),
+        Map("f" -> Map("a" -> 0.2, "b" -> 0.3, "c" -> 0.5))),
+      ("three fields", threeFields, threeFieldsU))
+    for ((what, patterns, u) <- fixtures)
+      assertLogLikNonDecreasing(EM.run(patterns, patterns.map(_.n).sum.toDouble, u, maxIter = 50), what)
+
+    // A whole linkage pass: EM over its candidates' patterns.
+    assertLogLikNonDecreasing(LinkageFixtures.benchmarkShaped(spark).run().em, "benchmark-shaped pass")
+  }
+
   test("fit is bit-identical whatever order the patterns arrive in") {
     val levels = Seq(None, Some("0"), Some("1"), Some("2"))
     val patterns = for {

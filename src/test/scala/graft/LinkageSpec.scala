@@ -330,46 +330,58 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("linkage pass: a benchmark-shaped pass stays within its job budget") {
-    // Linkage.run on a perfbench-shaped fixture (graft.LinkageE2E's
-    // rules and comparators) with 600 A rows: salt pre-flight, two
-    // computed-key passes, pattern counts, u-probabilities, EM, scoring,
-    // precision bands, calibration.
-    val a = spark.range(1, 601).select(
-        col("id").as("rec_id"),
-        translate(substring(md5(col("id").cast("string")), 1, 12),
-          "0123456789abcdef", "ghijklmnopqrstuv").as("name"),
-        (col("id") % 25).as("nationkey"),
-        round(pmod(xxhash64(col("id")), lit(100000L)).cast("double") / 10.0, 2).as("acctbal"),
-        concat(lit("seg"), (col("id") % 5).cast("string")).as("segment"))
-      .localCheckpoint(true)
-    val b = LinkageE2E.tableB(a).localCheckpoint(true)
-    val truth = a.select(col("rec_id"), col("rec_id").as("cluster"))
-      .union(b.select(col("rec_id"), (col("rec_id") - 1000000000L).as("cluster")))
-    val balKey = (c: org.apache.spark.sql.Column) => floor(c / 1000)
-    val rules = BlockingRules(Seq(
-      ComputedKeys(Seq(("name_pfx", substring(col("name_left"), 1, 2), substring(col("name_right"), 1, 2)))),
-      ComputedKeys(Seq(
-        ("nk", col("nationkey_left"), col("nationkey_right")),
-        ("bal", balKey(col("acctbal_left")), balKey(col("acctbal_right")))))))
-    val comparators = Comparators.jaroWinkler(Seq("name")) ++
-      Comparators.exact(Seq("nationkey", "segment")) :+
-      Comparators.expression("bal_band",
-        when(abs(col("acctbal_left") - col("acctbal_right")) < lit(1.5), "close").otherwise("far"))
+    // Linkage.run on LinkageFixtures.benchmarkShaped: salt pre-flight,
+    // then one count of the candidates by (comparator levels, truth)
+    // and u-probabilities; EM, scoring, precision bands and calibration
+    // read the count table on the driver.
+    val fx = LinkageFixtures.benchmarkShaped(spark)
     def pass(): (Long, Int, Double) = {
-      val res = Linkage.run(a, b, "rec_id", rules,
-        struct(col("nationkey"), balKey(col("acctbal")).as("b")), comparators, truth,
-        uSample = 20000L, emIterations = 5, threshold = 0.0)
+      val res = fx.run()
       (res.candidates, res.bands.length, res.trueTop.toDouble / res.top)
     }
     val (nCand, nBands, precision) = pass() // warm-up
     assert(nCand > 600 && nBands > 1 && precision > 0.9, (nCand, nBands, precision))
-    // Measured 26 jobs. With a two-job global aggregate at each
-    // driver-sized result (salt pre-flight, id domains, u counts,
-    // precision bands, calibration statistics) the same pass took 33;
-    // with a blocking dedup shuffle, a join-based salt pre-flight, a
-    // u-probability window and a range-sorted band table as well, 39.
+    // Measured 13 jobs. The same pass read 26 when it checkpointed the
+    // candidate ids and compared the pairs twice (once for the pattern
+    // counts, once for the per-pair scores, which it checkpointed and
+    // scanned four more times); 33 with a two-job global aggregate at
+    // each driver-sized result (salt pre-flight, id domains, u counts,
+    // precision bands, calibration statistics); 39 with a blocking
+    // dedup shuffle, a join-based salt pre-flight, a u-probability
+    // window and a range-sorted band table as well.
     val (jobs, sites) = countJobs(assert(pass()._1 == nCand))
-    assert(jobs <= 28, s"$jobs jobs: ${sites.mkString(", ")}")
+    assert(jobs <= 15, s"$jobs jobs: ${sites.mkString(", ")}")
+  }
+
+  test("linkage pass: one count of the pairs equals the two-path chain of the phase functions") {
+    for ((name, fx) <- Seq("benchmark-shaped" -> LinkageFixtures.benchmarkShaped(spark),
+        "LinkageDemo" -> LinkageFixtures.demo(spark))) {
+      val res = fx.run()
+      // The chain the pass replaced: checkpointed ids, pattern counts,
+      // EM, then the pairs re-assembled, compared, scored and evaluated.
+      val ids = Blocking.extractBlocks(fx.a, fx.b, fx.id, fx.id, fx.rules,
+        selfLinkage = fx.selfLinkage, hotKeySalts = res.salts).localCheckpoint(true)
+      val candidates = ids.count()
+      val patterns = EM.collectPatterns(Pairs.patternCounts(fx.a, fx.b, fx.id, fx.id, ids, fx.comparators))
+      val u = UProbs.calculateUProbs(fx.a, fx.b, fx.id, fx.id, fx.comparators, size = fx.uSample)
+      val em = EM.run(patterns, totalPairs = candidates.toDouble, uProbabilities = u,
+        maxIter = fx.emIterations)
+      val pairIds = Seq(s"${fx.id}_left", s"${fx.id}_right")
+      val scored = Scoring.attachTruth(Scoring.score(Comparators.doComparisons(
+          Pairs.computePairsDataset(fx.a, fx.b, fx.id, fx.id, ids), fx.comparators, keep = pairIds),
+          em), fx.truth, fx.id, "cluster")
+        .select((pairIds :+ "weight" :+ "true_match").map(col): _*).localCheckpoint(true)
+      val above = scored.filter(col("weight") > fx.threshold)
+
+      assert(res.candidates == candidates, name)
+      def multiset(ps: Seq[EM.Pattern]) = ps.groupMapReduce(_.levels)(_.n)(_ + _)
+      assert(res.patterns.size == patterns.size && multiset(res.patterns) == multiset(patterns), name)
+      assert(res.em == em, name) // bit-identical λ, m, u, weights and trace
+      assert(res.top == above.count() && res.trueTop == above.filter(col("true_match")).count(), name)
+      assert(res.bands == Scoring.precisionByBand(above).collect().toSeq, name)
+      assert(res.calibration == Scoring.calibrate(scored), name)
+      assert(res.scored.exceptAll(scored).isEmpty && scored.exceptAll(res.scored).isEmpty, name)
+    }
   }
 
   test("blocking: ComputedKeys equals the equivalent Predicate pass (J2 rewrite)") {
