@@ -170,48 +170,6 @@ object Etl {
     }
   }
 
-  /** In-place compaction of a SINGLE hive partition: reads just that
-    * partition (partition-pruned scan), coalesces to `targetFiles`,
-    * and dynamic-overwrites ONLY that directory — sibling partitions
-    * are not read, not rewritten, not touched. This is the rolling
-    * maintenance shape for a 100 TB table: compact yesterday's
-    * partition without a full-table rewrite. The `localCheckpoint`
-    * materializes the partition's rows before the write so the read
-    * path and the overwrite path never overlap.
-    */
-  def compactPartition(spark: SparkSession, path: String,
-      partitionSpec: Seq[(String, String)], targetFiles: Int): Unit = {
-    require(partitionSpec.nonEmpty, "compactPartition needs a partition spec")
-    val pred = partitionSpec.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-    spark.read.parquet(path).filter(pred)
-      .coalesce(targetFiles)
-      .localCheckpoint(true)
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionSpec.map(_._1): _*)
-      .mode("overwrite")
-      .parquet(path)
-  }
-
-  /** Key-based incremental merge ("upsert") into a FLAT parquet table:
-    * same-key rows are replaced by `updates`, new keys append. A full
-    * rewrite — the honest MERGE shape without a table format; use
-    * [[upsertPartitioned]] to rewrite only touched partitions of a
-    * hive layout. The merge is one anti-join + union; the
-    * `localCheckpoint` materializes the result before the overwrite so
-    * the read and write paths never overlap.
-    */
-  def upsert(spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty, "upsert needs key columns")
-    val current = spark.read.parquet(path)
-    val survivors = current.join(
-      updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-    survivors.unionByName(updates.select(current.columns.map(col): _*))
-      .localCheckpoint(true)
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** Partition-scoped upsert into a hive-partitioned table: only the
     * partitions PRESENT IN `updates` are read (broadcast semi join on
     * the partition columns — dynamic partition pruning keeps untouched
@@ -222,10 +180,10 @@ object Etl {
     *
     * CONTRACT: a key's partition value must be stable across the merge
     * (or its old partition must also appear in `updates`) — a key that
-    * silently moves partitions would leave its old copy behind. Both
-    * upsert variants take `updates` as given: duplicate keys WITHIN
-    * the update batch are written as-is (dedupe upstream if
-    * last-writer-wins is wanted; a SQL MERGE would raise instead).
+    * silently moves partitions would leave its old copy behind.
+    * `updates` is taken as given: duplicate keys WITHIN the update
+    * batch are written as-is (dedupe upstream if last-writer-wins is
+    * wanted; a SQL MERGE would raise instead).
     */
   def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String]): Unit = {
@@ -450,7 +408,7 @@ object Etl {
       .filterNot(n => n.startsWith("_") || n.startsWith("."))
     require(subdirs.isEmpty,
       s"readIncremental expects a flat file directory; found subdirectories $subdirs " +
-        s"under $path — run per partition (cf. compactPartition) with one ledger each")
+        s"under $path — run per partition directory with one ledger each")
     val dataFiles = entries.filter(_.isFile).map(_.getPath.getName)
       .filterNot(n => n.startsWith("_") || n.startsWith("."))
     require(dataFiles.size <= maxFiles,

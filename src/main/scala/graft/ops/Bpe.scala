@@ -150,47 +150,13 @@ object Bpe {
     (mergeTable, segmented)
   }
 
-  /** Apply an already-learned merge sequence to a single word column
-    * — the NOVEL-WORD path (inference on text whose words were not in
-    * the training corpus). The merge table is a driver-sized model
-    * artifact (M rows, like the IVF centroid table); it is folded
-    * into ONE codegen `aggregate` expression over a literal array, so
-    * encoding stays map-only with no join and no UDF. Returns the
-    * piece array. For words KNOWN to come from the training corpus,
-    * prefer joining `segmented` (vocabulary-sized hash join — the
-    * encodeTokens contract); `BpeSpec` pins that both paths agree on
-    * seen words.
-    */
-  def bpeApplyMerges(
-      word: Column,
-      merges: Seq[(String, String)],
-      sep: String = DefaultSep): Column = {
-    require(sep.length == 1, s"sep must be a single character, got ${sep.length}")
-    merges.foreach { case (a, b) =>
-      require(!a.contains(sep) && !b.contains(sep) && a.nonEmpty && b.nonEmpty,
-        s"merge pair ($a, $b) is empty or contains the separator")
-    }
-    val init = charSym(word, sep)
-    val folded =
-      if (merges.isEmpty) init
-      else {
-        val arr = array(merges.map { case (a, b) =>
-          struct(lit(sep + a + sep + sep + b + sep).as("p"), lit(sep + a + b + sep).as("r"))
-        }: _*)
-        aggregate(arr, init, (acc, m) =>
-          call_function("replace", acc, m.getField("p"), m.getField("r")))
-      }
-    filter(split(folded, sep), x => x =!= "")
-  }
-
   /** Encode documents through a trained segmentation: whitespace
     * pre-tokenization, a vocabulary-sized hash join to the word's
     * piece sequence, and a per-piece explode. Returns one row per
     * emitted piece: `(id…, word_pos, piece_pos, piece)` with 1-based
     * positions — row-level output so a hash compare covers every
-    * piece in order. Words absent from `segmented` are REFUSED loudly
-    * (encode-by-join is the seen-corpus fast path; route novel words
-    * through [[bpeApplyMerges]]).
+    * piece in order. Words absent from `segmented` are REFUSED loudly:
+    * encode-by-join covers the training corpus's words only.
     */
   def bpeEncode(
       docs: DataFrame,
@@ -204,7 +170,7 @@ object Bpe {
       .join(seg.withColumn("__known", lit(true)), Seq("word"), "left")
       .withColumn("pieces",
         when(col("__known").isNull, raise_error(concat(
-          lit("bpeEncode: word not in segmentation (use bpeApplyMerges for novel words): "),
+          lit("bpeEncode: word not in segmentation (encode covers training words only): "),
           col("word"))))
           .otherwise(col("pieces")))
       .select(col(idCol), (col("__wp") + 1).cast("long").as("word_pos"),

@@ -128,7 +128,7 @@ object Graphs {
 
   /** Normalizes an edge list to `(src, dst)`, optionally deduped, and
     * returns (edges, nodes-with-degree, node count). Shared by the
-    * float and exact-integer iterations. `__deg` is NULL for dangling
+    * PageRank iterations. `__deg` is NULL for dangling
     * nodes (no out-edges) — carried inside the rank table so each
     * round can compute the dangling mass without re-joining.
     */
@@ -144,57 +144,21 @@ object Graphs {
     (e, nodesDeg, nodesDeg.count())
   }
 
-  /** One rank update round, shared shape for both arithmetics:
-    * ranks carries (id, rank, __deg); `update` builds the new rank
-    * from (`__in` nullable inbound sum, `__dang` 1-row dangling sum).
+  /** One exact rank update round, shared by the PageRank iterations:
+    * ranks carries (id, rank, __deg); each out-edge carries
+    * `rank div __deg`, and `update` builds the new rank from (`__in`
+    * nullable inbound sum, `__dang` 1-row dangling sum).
     */
-  private def round(e: DataFrame, ranks: DataFrame, share: Column, zero: Column,
-      update: Column, checkpoint: Boolean,
+  private def round(e: DataFrame, ranks: DataFrame, update: Column,
       static: Seq[String] = Seq("__deg")): DataFrame = {
     val dang = ranks.filter(col("__deg").isNull)
-      .agg(coalesce(sum("rank"), zero).as("__dang"))
+      .agg(coalesce(sum("rank"), lit(0L)).as("__dang"))
     val contribs = e.join(ranks.filter(col("__deg").isNotNull), e("src") === ranks("id"))
-      .groupBy(e("dst").as("id")).agg(sum(share).as("__in"))
-    val next = ranks.select(col("id") +: static.map(col): _*)
+      .groupBy(e("dst").as("id")).agg(sum(expr("rank div __deg")).as("__in"))
+    ranks.select(col("id") +: static.map(col): _*)
       .join(contribs, Seq("id"), "left")
       .crossJoin(dang) // 1 row — broadcast nested loop, no shuffle
       .select(col("id") +: update.as("rank") +: static.map(col): _*)
-    if (checkpoint) next.localCheckpoint(true) else next
-  }
-
-  /** PageRank with uniform teleport over an UNWEIGHTED directed edge
-    * list `(src, dst)`. Returns `(id, rank)` for every node appearing
-    * as a source or destination; ranks sum to the node count (the
-    * standard normalization where a rankless graph starts at 1.0 per
-    * node).
-    *
-    * Dangling nodes (no out-edges) redistribute their mass uniformly
-    * each round — without that term the total rank leaks and
-    * comparisons across graphs are meaningless. Duplicate edges count
-    * once (`distinct`): the common corpus-graph convention; pass a
-    * pre-weighted multi-edge variant through `dedupEdges = false` if
-    * multiplicity should weight the walk.
-    */
-  def pageRank(
-      edges: DataFrame,
-      iterations: Int = 10,
-      damping: Double = 0.85,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 8,
-      convergence: Option[Convergence] = None): DataFrame = {
-    require(iterations > 0, s"iterations must be positive, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val (e, nodesDeg, nNodes) = prepare(edges, dedupEdges)
-    val init = nodesDeg.select(col("id"), lit(1.0).as("rank"), col("__deg"))
-    // same association order as the scalar reference implementation:
-    // ((1-d) + d*dang/N) + d*inbound
-    val update = (lit(1.0 - damping) +
-      lit(damping) * col("__dang") / lit(nNodes.toDouble)) +
-      lit(damping) * coalesce(col("__in"), lit(0.0))
-    runRounds(iterations, checkpointEvery, convergence,
-        "pageRank", "id", Seq("rank"), init) { (ranks, _) =>
-      round(e, ranks, col("rank") / col("__deg"), lit(0.0), update, checkpoint = false)
-    }.select("id", "rank")
   }
 
   /** PERSONALIZED PageRank in the same exact scaled-integer arithmetic
@@ -243,8 +207,7 @@ object Graphs {
         s" + (CASE WHEN __seed THEN ${teleSeed}L ELSE 0L END)")
     runRounds(iterations, checkpointEvery, convergence,
         "personalizedPageRankExact", "id", Seq("rank"), init) { (ranks, _) =>
-      round(e, ranks, expr("rank div __deg"), lit(0L), update,
-        checkpoint = false, static = Seq("__deg", "__seed"))
+      round(e, ranks, update, static = Seq("__deg", "__seed"))
     }.select("id", "rank")
   }
 
@@ -308,7 +271,7 @@ object Graphs {
     * sums are order-independent, so the result is bit-identical on
     * ANY engine that implements the same update rule — which is what
     * makes this variant DuckDB-oracle-checkable (a chained-CTE mirror
-    * hashes equal), unlike the float fixpoint whose sums depend on
+    * hashes equal), unlike a float fixpoint, whose sums depend on
     * partitioning.
     *
     * Update rule, applied in this exact order (all `div` integral):
@@ -320,8 +283,7 @@ object Graphs {
     *                 + (dampNum * (inbound + dang div N)) div dampDen
     * }}}
     * Truncation loses < 1 micro-unit per term per round — fine for
-    * ranking/sampling use; use [[pageRank]] when float precision
-    * matters more than cross-engine exactness.
+    * ranking/sampling use.
     */
   def pageRankExact(
       edges: DataFrame,
@@ -342,7 +304,7 @@ object Graphs {
       s"${base}L + (${dampNum}L * (coalesce(__in, 0L) + __dang div ${nNodes}L)) div ${dampDen}L")
     runRounds(iterations, checkpointEvery, convergence,
         "pageRankExact", "id", Seq("rank"), init) { (ranks, _) =>
-      round(e, ranks, expr("rank div __deg"), lit(0L), update, checkpoint = false)
+      round(e, ranks, update)
     }.select("id", "rank")
   }
 
@@ -787,7 +749,7 @@ object Graphs {
     * for unordered pairs sharing at least `minShared` baskets. The
     * market-basket / co-click / co-citation primitive, and the usual
     * way a link graph is DERIVED from raw membership data before
-    * [[pageRank]] / [[Clusters]] run on it.
+    * [[pageRankExact]] / [[Clusters]] run on it.
     *
     * Baskets with more than `maxDegree` distinct items are dropped
     * BEFORE pairing — the standard co-occurrence hygiene: one hub

@@ -126,32 +126,20 @@ object Sampling {
     df.filter(hashBucket(key) < rate)
   }
 
-  /** Deterministic weighted sample of the `k` rows with the smallest
-    * integer priority `u div w` — priority sampling (Duffield, Lund &
-    * Thorup, JACM 2007: take the k largest `w/u`, here inverted to a
-    * floor-div so the arithmetic is integral and engine-exact): a row
-    * with twice the weight is ~twice as likely to make the cut, yet
-    * the selected set is a pure function of the data — same rows on
-    * every engine, layout, and rerun, which `df.sample()` and any
-    * float-pow A-ES implementation cannot promise. Weights must be
-    * positive integers (scale upstream); ties break on `key` asc.
-    *
-    * Plan shape: map-only priority projection + TakeOrderedAndProject
-    * (partial top-k runs map-side) — no window, no global sort, no
-    * shuffle beyond the k-row gather.
-    */
-  def weightedSample(df: DataFrame, key: Column, weight: Column, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    withPriority(df, key, weight)
-      .orderBy(col("priority").asc, col("__wskey").asc)
-      .limit(k)
-      .drop("__wskey", "__w")
-  }
-
-  /** Per-stratum [[weightedSample]]: the `k` smallest-priority rows in
-    * EACH group (keyed window — partitions on the stratum, never a
-    * global sort). The training-mix shape: "500 docs per domain,
+  /** Deterministic weighted sample, per stratum: the `k` rows with the
+    * smallest integer priority `u div w` in EACH group — priority
+    * sampling (Duffield, Lund & Thorup, JACM 2007: take the k largest
+    * `w/u`, here inverted to a floor-div so the arithmetic is integral
+    * and engine-exact): a row with twice the weight is ~twice as
+    * likely to make the cut, yet the selected set is a pure function
+    * of the data — same rows on every engine, layout, and rerun, which
+    * `df.sample()` and any float-pow A-ES implementation cannot
+    * promise. Weights must be positive integers (scale upstream); ties
+    * break on `key` asc. The training-mix shape: "500 docs per domain,
     * quality-weighted".
+    *
+    * Plan shape: map-only priority projection + a keyed window
+    * (partitions on the stratum, never a global sort).
     */
   def weightedSampleByGroup(df: DataFrame, strata: Seq[String], key: Column,
       weight: Column, k: Int): DataFrame = {
@@ -166,13 +154,13 @@ object Sampling {
       .drop("__rn", "__wskey", "__w")
   }
 
-  // Shared priority projection: `u div w` on named columns so the
+  // Priority projection: `u div w` on named columns so the
   // integral `div` sees real longs (conv returns string — cast first).
   private def withPriority(df: DataFrame, key: Column, weight: Column): DataFrame = {
     val w = weight.cast("long")
     df.withColumn("__wskey", key)
       .withColumn("__w", when(w >= 1L, w)
-        .otherwise(raise_error(concat(lit("weightedSample: weight must be >= 1, got "), w))))
+        .otherwise(raise_error(concat(lit("weightedSampleByGroup: weight must be >= 1, got "), w))))
       .withColumn("priority", expr(
         "cast(conv(substring(md5(cast(__wskey as string)), 1, 15), 16, 10) as bigint) div __w"))
   }

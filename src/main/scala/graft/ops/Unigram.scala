@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM subword tokenizer training (Kudo 2018, the SentencePiece
@@ -171,19 +171,6 @@ object Unigram {
         col("__fin.score").as("score_unat"))
   }
 
-  /** Train the unigram LM tokenizer. Returns `(trace, finalVocab)`:
-    * `trace` is `(round, piece, cnt, logp_unat)` for every model state
-    * — round 0 the scored seed, rounds 1..emBeforePrune the EM
-    * states, round emBeforePrune+1 the prune-rescored state, then the
-    * emAfterPrune final EM states — the whole training trajectory as
-    * one hash-checkable frame (the [[Bpe.bpeSql]] merge-trace
-    * discipline); `finalVocab` is the last round's `(piece, cnt,
-    * logp_unat)`.
-    *
-    * Kudo's ACTUAL soft E-step (forward–backward expected counts) is
-    * [[unigramTrainSoft]] — spec-gated rather than oracle-hashed; its
-    * scaladoc states exactly when the two schedules diverge.
-    */
   /** Loud envelope for the driver-side vocab loop state: singles are
     * bounded by the corpus alphabet (≤ #Unicode code points ≈ 1.11M)
     * plus `seedMultiChar` — model-scale by construction, but the
@@ -231,6 +218,15 @@ object Unigram {
     if (r != 0) r else x.length - y.length
   }
 
+  /** Train the unigram LM tokenizer. Returns `(trace, finalVocab)`:
+    * `trace` is `(round, piece, cnt, logp_unat)` for every model state
+    * — round 0 the scored seed, rounds 1..emBeforePrune the EM
+    * states, round emBeforePrune+1 the prune-rescored state, then the
+    * emAfterPrune final EM states — the whole training trajectory as
+    * one hash-checkable frame (the [[Bpe.bpeSql]] merge-trace
+    * discipline); `finalVocab` is the last round's `(piece, cnt,
+    * logp_unat)`.
+    */
   def unigramTrain(
       words0: DataFrame,
       maxPieceLen: Int = 4,
@@ -302,183 +298,6 @@ object Unigram {
       v.map(p => (i.toLong, p.piece, p.cnt, p.logpUnat))
     }.toSeq.toDF("round", "piece", "cnt", "logp_unat")
     (trace, vocabDf(vocab))
-  }
-
-  // ---- soft EM (Kudo 2018 §3's actual E-step; spec-gated) -----------
-
-  /** Unreachable sentinel for the FLOAT log-space DPs: far below any
-    * real log-probability sum (bounded by maxWordLen · ln(1/(total+V))
-    * ≈ −10³), far above double-overflow territory, and `exp` of
-    * anything near it is EXACTLY 0.0 — so unreachable edges contribute
-    * nothing to posteriors without special-casing.
-    */
-  val SoftUnreach: Double = -1e18
-
-  /** log-sum-exp of a double-array column, empty → [[SoftUnreach]];
-    * the max is factored out so the exponentials never all underflow.
-    */
-  private def lse(cands: Column): Column = {
-    val m = array_max(cands)
-    when(size(cands) === 0, lit(SoftUnreach))
-      .otherwise(m + log(aggregate(cands, lit(0.0), (a, x) => a + exp(x - m))))
-  }
-
-  /** Per-word edge lists under a FLOAT-scored vocabulary (`(piece,
-    * logp double)`) — the [[viterbiSegments]] edge build with the
-    * micro-nat integer replaced by the soft path's double.
-    */
-  private def softEdges(words: DataFrame, scoredVocab: DataFrame,
-      maxPieceLen: Int): DataFrame =
-    words
-      .select(col("word"), explode(sequence(lit(1), length(col("word")))).as("__s"))
-      .select(col("word"), col("__s"),
-        explode(sequence(lit(1), lit(maxPieceLen))).as("__l"))
-      .filter(col("__s") + col("__l") - 1 <= length(col("word")))
-      .select(col("word"), col("__s"), (col("__s") + col("__l") - 1).as("__e"),
-        col("word").substr(col("__s"), col("__l")).as("piece"))
-      .join(broadcast(scoredVocab
-        .select(col("piece"), col("logp").cast("double").as("__lp"))), Seq("piece"))
-      .groupBy("word")
-      .agg(collect_list(struct(col("__s").as("s"), col("__e").as("e"),
-        col("__lp").as("lp"), col("piece").as("piece"))).as("__el"))
-
-  /** Forward–backward EXPECTED piece counts — Kudo 2018 §3's actual
-    * soft E-step, which [[unigramTrain]]'s Viterbi hard EM
-    * approximates: every segmentation of every word contributes its
-    * posterior mass, so a word with competing segmentations splits its
-    * frequency fractionally instead of winner-take-all. Returns
-    * `(piece, ecnt double)` with unused vocab pieces kept at 0.0 (the
-    * hard E-step's smoothing contract in [[unigramTrain]]).
-    *
-    * SPEC-GATED, NOT ORACLE-HASHED — deliberately: α/β are float
-    * log-sum-exp chains whose accumulation order is engine- and
-    * partition-dependent, so cross-engine bit-identity is impossible
-    * (the reason [[unigramTrain]] is the hash-checked path; see its
-    * scaladoc). UnigramSpec checks this against an independent
-    * driver-side forward–backward within float tolerance — the
-    * EM.scala discipline for float-valued model math.
-    *
-    * Same distributed shape as the hard E-step: one broadcast vocab
-    * join builds vocabulary-sized edge lists, TWO map-side `aggregate`
-    * DPs per word (forward α, backward β — no UDF, no window, no
-    * driver loop), one posterior explode (≤ maxPieceLen · |word| rows
-    * per word type), one hash aggregate. Unreachable DP cells carry
-    * [[SoftUnreach]]; their posteriors `exp` to exactly 0.0, so no
-    * reachability filtering is needed on the posterior side.
-    */
-  def softEmExpectedCounts(words0: DataFrame, scoredVocab: DataFrame,
-      maxPieceLen: Int): DataFrame = {
-    val words = words0.select(col("word"), col("freq").cast("long").as("freq"))
-    val edges = softEdges(words, scoredVocab, maxPieceLen)
-    val n = length(col("word"))
-    // α as a growing 1-based array: element_at(__a, j+1) = α(j), α(0)=0.
-    val alpha = aggregate(
-      sequence(lit(1), n),
-      array(lit(0.0)),
-      (acc, j) => concat(acc, array(lse(transform(
-        filter(col("__el"), x => x.getField("e") === j &&
-          element_at(acc, x.getField("s")) > lit(SoftUnreach / 2)),
-        x => element_at(acc, x.getField("s")) + x.getField("lp"))))))
-    // β REVERSED: after step i the array is [β(n), β(n−1), …, β(n−i)],
-    // so β(j) = element_at(__brev, n − j + 1); β(n) = 0.
-    val brev = aggregate(
-      sequence(lit(1), n),
-      array(lit(0.0)),
-      (acc, i) => concat(acc, array(lse(transform(
-        filter(col("__el"), x => x.getField("s") === n - i + 1 &&
-          element_at(acc, n - x.getField("e") + 1) > lit(SoftUnreach / 2)),
-        x => x.getField("lp") + element_at(acc, n - x.getField("e") + 1))))))
-    val post = words.join(edges, Seq("word"), "left")
-      .withColumn("__el", coalesce(col("__el"),
-        array().cast("array<struct<s:int,e:int,lp:double,piece:string>>")))
-      .withColumn("__a", alpha)
-      .withColumn("__brev", brev)
-      // Z = α(n); loud refusal on uncoverable words (the
-      // viterbiSegments contract — impossible with a corpus-derived
-      // vocab, mandatory for a hand-supplied one).
-      .withColumn("__z",
-        when(element_at(col("__a"), n + 1) <= lit(SoftUnreach / 2),
-          raise_error(concat(
-            lit("softEmExpectedCounts: word not coverable by the vocabulary: "),
-            col("word"))))
-          .otherwise(element_at(col("__a"), n + 1)))
-      .select(col("word"), col("freq"), col("__a"), col("__brev"), col("__z"),
-        explode(col("__el")).as("__x"))
-      .select(col("__x.piece").as("piece"),
-        (col("freq").cast("double") * exp(
-          element_at(col("__a"), col("__x.s")) + col("__x.lp") +
-            element_at(col("__brev"), length(col("word")) - col("__x.e") + 1) -
-            col("__z"))).as("__p"))
-    val used = post.groupBy("piece").agg(sum("__p").as("__used"))
-    scoredVocab.select("piece").join(used, Seq("piece"), "left")
-      .select(col("piece"), coalesce(col("__used"), lit(0.0)).as("ecnt"))
-  }
-
-  /** Float analogue of [[rescoreSql]]: `logp = ln((ecnt+1)/(total+|V|))`
-    * over expected counts — same add-one smoothing, no micro-nat floor
-    * (the soft path is float end-to-end).
-    */
-  def rescoreSoft(counts: DataFrame): DataFrame = {
-    val stats = counts.agg(sum("ecnt").as("__total"), count(lit(1)).as("__nv"))
-    counts.crossJoin(broadcast(stats))
-      .select(col("piece"), col("ecnt"),
-        log((col("ecnt") + 1.0) / (col("__total") + col("__nv"))).as("logp"))
-  }
-
-  /** [[unigramTrain]] with the SOFT E-step — identical schedule (seed
-    * → emBeforePrune EM rounds → one prune to keepMultiChar multi-char
-    * pieces, singles never pruned → emAfterPrune EM rounds), Kudo's
-    * forward–backward expected counts in place of Viterbi path counts.
-    * Trace rows are `(round, piece, ecnt double, logp double)`.
-    *
-    * WHEN THE TWO SCHEDULES DIVERGE: whenever any word has more than
-    * one segmentation with non-negligible posterior mass. Hard EM
-    * hands the word's whole frequency to the single best path (ties
-    * broken lexicographically), so competing pieces see 0; soft EM
-    * splits the frequency by posterior, so both see fractional counts
-    * — which can flip the prune's count ranking and therefore the
-    * final vocabulary, not just its probabilities. On a corpus whose
-    * words all segment essentially one way the two agree (UnigramSpec
-    * pins both behaviors). This is the SentencePiece-faithful
-    * semantics; [[unigramTrain]] remains the oracle-hashed path.
-    */
-  def unigramTrainSoft(
-      words0: DataFrame,
-      maxPieceLen: Int = 4,
-      seedMultiChar: Int = 64,
-      keepMultiChar: Int = 24,
-      emBeforePrune: Int = 2,
-      emAfterPrune: Int = 1,
-      maxWordLen: Int = 12): (DataFrame, DataFrame) = {
-    require(maxPieceLen >= 1 && seedMultiChar >= 0 && keepMultiChar >= 0 &&
-      emBeforePrune >= 1 && emAfterPrune >= 1 && maxWordLen >= 1,
-      "unigramTrainSoft: all schedule parameters must be positive")
-    val words = checkedWords(words0, maxWordLen).localCheckpoint(true)
-    def ck(df: DataFrame): DataFrame = df.localCheckpoint(true) // model-sized
-    def pruneSoft(v: DataFrame): DataFrame = {
-      val singles = v.filter(length(col("piece")) === 1).select("piece", "ecnt")
-      val multi = v.filter(length(col("piece")) > 1)
-        .orderBy(col("ecnt").desc, col("piece").asc).limit(keepMultiChar)
-        .select("piece", "ecnt")
-      singles.unionByName(multi)
-    }
-    var vocab = ck(rescoreSoft(seedVocab(words, maxPieceLen, seedMultiChar)
-      .select(col("piece"), col("cnt").cast("double").as("ecnt"))))
-    val states = scala.collection.mutable.ArrayBuffer[DataFrame](vocab)
-    (1 to emBeforePrune).foreach { _ =>
-      vocab = ck(rescoreSoft(softEmExpectedCounts(words, vocab, maxPieceLen)))
-      states += vocab
-    }
-    vocab = ck(rescoreSoft(pruneSoft(vocab)))
-    states += vocab
-    (1 to emAfterPrune).foreach { _ =>
-      vocab = ck(rescoreSoft(softEmExpectedCounts(words, vocab, maxPieceLen)))
-      states += vocab
-    }
-    val trace = states.zipWithIndex.map { case (v, i) =>
-      v.select(lit(i.toLong).as("round"), col("piece"), col("ecnt"), col("logp"))
-    }.reduce(_ unionByName _)
-    (trace, vocab)
   }
 
   // ---- DuckDB mirrors (chained CTEs, the bpeSqlRounds discipline) ---

@@ -5,9 +5,8 @@ import graft.ops.Bpe
 
 /** BPE subword tokenization specs: hand-computed merge-sequence
   * goldens (including overlapping runs and ties), single-pass
-  * leftmost semantics of the double-replace rewrite, the novel-word
-  * fold path agreeing with the trained segmentation, the encode join,
-  * and the loud-refusal guards.
+  * leftmost semantics of the double-replace rewrite, the encode join,
+  * the audited model round-trip, and the loud-refusal guards.
   */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
@@ -58,25 +57,6 @@ class BpeSpec extends SparkSpec {
     assert(pieces == Map("ba" -> List("ba"), "bc" -> List("bc")))
   }
 
-  test("bpeApplyMerges: fold path reproduces training segmentation on seen words") {
-    val words = Seq(("banana", 4L), ("bandana", 2L), ("ana", 7L)).toDF("word", "freq")
-    val (mt, seg) = Bpe.bpeTrain(words, merges = 4)
-    val merges = mt.orderBy("merge_no").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    val viaFold = words.select(col("word"),
-        Bpe.bpeApplyMerges(col("word"), merges).as("pieces"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val viaTrain = seg.collect()
-      .map(r => r.getString(0) -> r.getSeq[String](2).toList).toMap
-    assert(viaFold == viaTrain, s"fold path diverged: $viaFold vs $viaTrain")
-    // and a genuinely novel word still segments with the same rules
-    val novel = Seq("bananana").toDF("word")
-      .select(Bpe.bpeApplyMerges(col("word"), merges).as("p"))
-      .collect()(0).getSeq[String](0).toList
-    assert(novel.mkString == "bananana", "pieces must reassemble the word")
-    assert(novel.length > 1 && novel.length < 8, s"neither unmerged nor collapsed: $novel")
-  }
-
   test("bpeEncode: row-level piece stream in (word_pos, piece_pos) order; novel word refuses") {
     val words = Seq(("aaab", 3L), ("ab", 2L)).toDF("word", "freq")
     val (_, seg) = Bpe.bpeTrain(words, merges = 2) // aaab → [aa, ab], ab → [ab]
@@ -105,47 +85,18 @@ class BpeSpec extends SparkSpec {
 
   test("bpe model artifact: merge table round-trips through the audited writer") {
     // the merge table IS the model — persisting it must be lossless
-    // and verified, and a reloaded model must re-segment identically
-    val words = Seq(("banana", 4L), ("bandana", 2L), ("ana", 7L)).toDF("word", "freq")
-    val (mt, seg) = Bpe.bpeTrain(words, merges = 4)
-    val out = tempDir("graft_bpe_model").toString
-    graft.etl.Etl.writeAudited(mt, out,
-      Seq("merge_no", "pair_a", "pair_b", "merged", "pair_count"))
-    val reloaded = graft.etl.Etl.readAudited(spark, out) // verifying reader
-      .orderBy("merge_no").collect()
-      .map(r => (r.getAs[String]("pair_a"), r.getAs[String]("pair_b"))).toSeq
-    val viaReloaded = words.select(col("word"),
-        Bpe.bpeApplyMerges(col("word"), reloaded).as("pieces"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val viaTrain = seg.collect()
-      .map(r => r.getString(0) -> r.getSeq[String](2).toList).toMap
-    assert(viaReloaded == viaTrain, "reloaded model diverged from the trained segmentation")
-  }
-
-  test("bpe streaming encode: stream result equals batch through the merge fold") {
-    // bpeApplyMerges is a pure codegen column — it must compose with
-    // Structured Streaming unchanged (the map-only encode path for
-    // novel words arriving on a stream).
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // and verified: the reloaded table equals the trained one row for row
     val words = Seq(("banana", 4L), ("bandana", 2L), ("ana", 7L)).toDF("word", "freq")
     val (mt, _) = Bpe.bpeTrain(words, merges = 4)
-    val merges = mt.orderBy("merge_no").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    val input = Seq("banana", "bandana", "ana", "bananana")
-    val expected = input.toDF("word")
-      .select(col("word"), Bpe.bpeApplyMerges(col("word"), merges).as("pieces"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    val stream = MemoryStream[String](spark)
-    val q = stream.toDF().toDF("word")
-      .select(col("word"), Bpe.bpeApplyMerges(col("word"), merges).as("pieces"))
-      .writeStream.format("memory").queryName("bpe_out").outputMode("append").start()
-    try {
-      stream.addData(input)
-      q.processAllAvailable()
-      val got = spark.table("bpe_out")
-        .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-      assert(got == expected)
-    } finally q.stop()
+    val cols = Seq("merge_no", "pair_a", "pair_b", "merged", "pair_count")
+    val out = tempDir("graft_bpe_model").toString
+    graft.etl.Etl.writeAudited(mt, out, cols)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).orderBy("merge_no").collect().toSeq
+    val trained = rows(mt)
+    assert(trained.size == 4)
+    assert(rows(graft.etl.Etl.readAudited(spark, out)) == trained, // verifying reader
+      "reloaded model diverged from the trained merge table")
   }
 
   test("bpeTrain: deterministic under repartitioning (pure function of the freq table)") {

@@ -174,38 +174,6 @@ class EtlSpec extends SparkSpec {
       ("b", 3L, 30.0), ("b", 4L, 40.0), ("b", 9L, 90.0), // inserted
       ("c", 5L, 50.0)))                                  // untouched
     assert(bytes(files("c")) == cBefore, "sibling partition was rewritten")
-    // flat-table variant: same semantics over an unpartitioned layout
-    val flat = s"$root/flat"
-    base.select("k", "v").write.parquet(flat)
-    Etl.upsert(spark, flat, Seq((2L, 99.0), (9L, 90.0)).toDF("k", "v"), Seq("k"))
-    val gotFlat = spark.read.parquet(flat)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(gotFlat == Set((1L, 10.0), (2L, 99.0), (3L, 30.0), (4L, 40.0),
-      (5L, 50.0), (9L, 90.0)))
-  }
-
-  test("compactPartition: rewrites ONE partition in place, siblings byte-identical") {
-    val root = tempDir("graft_cmp_inplace").toString
-    val tmp = s"$root/t"
-    val df = (1L to 3000L).map(i => (i % 3, i, s"row_$i")).toDF("p", "id", "payload")
-    df.repartition(20).write.partitionBy("p").parquet(tmp)
-    def partFiles(p: Long) = Option(new java.io.File(s"$tmp/p=$p").listFiles).toSeq.flatten
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    def bytes(fs: Seq[java.io.File]) =
-      fs.map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
-    val sib1Before = bytes(partFiles(1L))
-    val sib2Before = bytes(partFiles(2L))
-    assert(partFiles(0L).size > 3)
-    Etl.compactPartition(spark, tmp, Seq("p" -> "0"), targetFiles = 1)
-    assert(partFiles(0L).size == 1, "target partition not compacted")
-    // siblings: same files, same bytes — never read, never rewritten
-    assert(bytes(partFiles(1L)) == sib1Before)
-    assert(bytes(partFiles(2L)) == sib2Before)
-    // table contents unchanged (partition values read back int — normalize)
-    val got = spark.read.parquet(tmp)
-      .select(col("p").cast("long"), col("id"), col("payload"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(got == df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet)
   }
 
   test("upsertPartitioned is idempotent under batch replay") {

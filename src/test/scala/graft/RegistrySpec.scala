@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[SparkEntry.registry]]'s shape, and the probes' fixed query lists
-  * against it: a stale name would otherwise fail only when the probe
-  * reaches it.
+/** [[SparkEntry.registry]]'s shape, the probes' fixed query lists
+  * against it (a stale name would otherwise fail only when the probe
+  * reaches it), and the reachability scan that keeps `src/main` free of
+  * code no query, main or benchmark reaches.
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -27,5 +28,20 @@ class RegistrySpec extends AnyFunSuite {
     val lists = Seq(Measure.ScaleQueries, Measure.RungDedupQueries, Measure.RungLinkageQueries)
     lists.foreach(l => assert(l.nonEmpty))
     assert(lists.flatten.filterNot(names.toSet).isEmpty)
+  }
+
+  test("src/main holds no unreached code beyond the documented keep-list") {
+    // tools/unreached.sh's header gives the reason for each kept item
+    val keep = Set("SparkEntry.entry", "JaroWinkler.jaro_winkler",
+      "Scoring.Calibration.predict", "Scoring.calibrateFull")
+    val (out, err) = (new StringBuilder, new StringBuilder)
+    val exit = scala.sys.process.Process(Seq("bash", "tools/unreached.sh"))
+      .!(scala.sys.process.ProcessLogger(l => out ++= l + "\n", l => err ++= l + "\n"))
+    assert(exit == 0, s"tools/unreached.sh exited $exit:\n$err")
+    val listed = out.toString.linesIterator.filter(_.nonEmpty)
+      .map(_.split('\t').last).toSet
+    assert(listed -- keep == Set.empty, "unreached code in src/main:\n" +
+      out.toString.linesIterator.filter(l => !keep(l.split('\t').last)).mkString("\n"))
+    assert(keep -- listed == Set.empty, "keep-list items now reached; drop them from the list")
   }
 }

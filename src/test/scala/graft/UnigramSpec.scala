@@ -164,122 +164,6 @@ class UnigramSpec extends SparkSpec {
     assert(cnts("b") == 2L)
   }
 
-  // ---- soft EM (Kudo 2018 §3's actual E-step; the EM.scala
-  // discipline: float model math checked against an independent
-  // driver-side reference within tolerance, never oracle-hashed) ----
-
-  /** Independent driver-side forward–backward: expected piece counts
-    * summed over ALL segmentations, plain Scala, NegativeInfinity for
-    * unreachable (no sentinel arithmetic shared with the engine path).
-    */
-  private def refSoftCounts(words: Seq[(String, Long)],
-      vocab: Map[String, Double], maxPieceLen: Int): Map[String, Double] = {
-    val out = scala.collection.mutable.Map[String, Double]().withDefaultValue(0.0)
-    def lseS(xs: Seq[Double]): Double =
-      if (xs.isEmpty) Double.NegativeInfinity
-      else { val m = xs.max; m + math.log(xs.map(x => math.exp(x - m)).sum) }
-    for ((w, f) <- words) {
-      val n = w.length
-      val edges = for {
-        s <- 1 to n; l <- 1 to maxPieceLen
-        if s + l - 1 <= n
-        p = w.substring(s - 1, s + l - 1)
-        lp <- vocab.get(p)
-      } yield (s, s + l - 1, p, lp)
-      val alpha = Array.fill(n + 1)(Double.NegativeInfinity)
-      alpha(0) = 0.0
-      for (j <- 1 to n) alpha(j) = lseS(edges.collect {
-        case (s, e, _, lp) if e == j && !alpha(s - 1).isNegInfinity =>
-          alpha(s - 1) + lp
-      })
-      val beta = Array.fill(n + 1)(Double.NegativeInfinity)
-      beta(n) = 0.0
-      for (j <- (n - 1) to 0 by -1) beta(j) = lseS(edges.collect {
-        case (s, e, _, lp) if s == j + 1 && !beta(e).isNegInfinity =>
-          lp + beta(e)
-      })
-      val z = alpha(n)
-      for ((s, e, p, lp) <- edges) {
-        val post = alpha(s - 1) + lp + beta(e) - z
-        if (!post.isNegInfinity && !post.isNaN) out(p) += f * math.exp(post)
-      }
-    }
-    out.toMap
-  }
-
-  test("soft E-step matches the driver-side forward-backward within float tolerance") {
-    val words = Seq(("abab", 4L), ("aba", 3L), ("bab", 2L), ("ab", 7L), ("ba", 1L))
-    val v = Unigram.rescoreSoft(
-      Seq(("a", 10.0), ("b", 9.0), ("ab", 6.0), ("ba", 4.0), ("bab", 2.0))
-        .toDF("piece", "ecnt"))
-    val vMap = v.collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    val got = Unigram.softEmExpectedCounts(words.toDF("word", "freq"), v, maxPieceLen = 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val want = refSoftCounts(words, vMap, maxPieceLen = 3)
-    assert(got.keySet == vMap.keySet, "soft counts must cover the whole vocab")
-    got.foreach { case (p, e) =>
-      val w = want.getOrElse(p, 0.0)
-      assert(math.abs(e - w) <= 1e-9 * math.max(1.0, math.abs(w)),
-        s"piece $p: engine $e vs reference $w")
-    }
-    // posterior mass conservation: per-word expected piece counts sum
-    // to expected segmentation lengths, so totals stay in
-    // [freq·1, freq·|word|] summed over words
-    val total = got.values.sum
-    val lo = words.map(_._2.toDouble).sum
-    val hi = words.map { case (w, f) => f.toDouble * w.length }.sum
-    assert(total >= lo - 1e-6 && total <= hi + 1e-6, s"total mass $total outside [$lo, $hi]")
-  }
-
-  test("soft splits ambiguous words fractionally where hard EM is winner-take-all") {
-    // "ab" freq 2 under vocab {a, b, ab} all count 5: segmentations
-    // [ab] and [a,b] both have mass. Hard EM hands the full 2 to the
-    // best path [ab] (one piece, lp > 2·lp since lp < 0); soft EM
-    // must give 'ab' strictly between 0 and 2 and 'a','b' the
-    // complement, equal by symmetry.
-    val words = Seq(("ab", 2L)).toDF("word", "freq")
-    val vHard = vocab("a" -> 5L, "b" -> 5L, "ab" -> 5L)
-    val hard = emCounts(words, vHard, maxPieceLen = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(hard("ab") == 2L && hard("a") == 0L && hard("b") == 0L)
-    val vSoft = Unigram.rescoreSoft(
-      Seq(("a", 5.0), ("b", 5.0), ("ab", 5.0)).toDF("piece", "ecnt"))
-    val soft = Unigram.softEmExpectedCounts(words, vSoft, maxPieceLen = 2)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(soft("ab") > 0.0 && soft("ab") < 2.0, s"ab: ${soft("ab")}")
-    assert(math.abs(soft("a") - soft("b")) < 1e-12)
-    assert(soft("a") > 0.0)
-    // the two paths' masses: 2·P([ab]) + 2·P([a,b]) partitions freq 2
-    assert(math.abs(soft("ab") + soft("a") - 2.0) < 1e-9)
-  }
-
-  test("soft train runs the hard schedule: trace rounds, coverage, prune size") {
-    val words = Seq(("banana", 10L), ("bandana", 5L), ("nab", 7L), ("ban", 9L))
-      .toDF("word", "freq")
-    val (trace, finalVocab) = Unigram.unigramTrainSoft(words,
-      maxPieceLen = 3, seedMultiChar = 8, keepMultiChar = 3,
-      emBeforePrune = 2, emAfterPrune = 1, maxWordLen = 12)
-    val t = trace.collect()
-    val rounds = t.map(_.getLong(0)).distinct.sorted
-    assert(rounds.toSeq == Seq(0L, 1L, 2L, 3L, 4L), "seed, EM, EM, prune, EM")
-    val chars = Set("a", "b", "n", "d")
-    rounds.foreach { r =>
-      val pieces = t.filter(_.getLong(0) == r).map(_.getString(1)).toSet
-      assert(chars.subsetOf(pieces), s"round $r lost a single char")
-    }
-    Seq(3L, 4L).foreach { r =>
-      val multi = t.filter(x => x.getLong(0) == r && x.getString(1).length > 1)
-      assert(multi.length == 3, s"round $r multi-char count ${multi.length}")
-    }
-    val fin = finalVocab.collect().map(_.getString(0)).toSet
-    assert(fin == t.filter(_.getLong(0) == 4L).map(_.getString(1)).toSet)
-    // every round's expected counts are finite and non-negative
-    t.foreach { r =>
-      val e = r.getDouble(2)
-      assert(!e.isNaN && !e.isInfinite && e >= 0.0, s"round ${r.getLong(0)} piece ${r.getString(1)} ecnt $e")
-    }
-  }
-
   test("loud refusals: uncoverable word; null/empty word") {
     val v = vocab("a" -> 1L, "b" -> 1L)
     val e = intercept[Exception] {

@@ -53,7 +53,8 @@ class UrlsProfilingSpec extends SparkSpec {
 
   test("weightedSample: matches an independent Scala computation of the priorities") {
     // Independent reimplementation: md5 hex of the key string, first 15
-    // hex digits as a long, integer-divided by the weight.
+    // hex digits as a long, integer-divided by the weight. One stratum
+    // holds every row, so weightedSampleByGroup's k are the global top k.
     def prio(key: Long, w: Long): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
       val hex = md.digest(key.toString.getBytes("UTF-8"))
@@ -63,8 +64,9 @@ class UrlsProfilingSpec extends SparkSpec {
     val rows = (1L to 200L).map(i => (i, (i % 7) + 1)) // weights 1..7
     val expected = rows.map { case (id, w) => (id, prio(id, w)) }
       .sortBy { case (id, p) => (p, id) }.take(10).map(_._1).toSet
-    val got = Sampling.weightedSample(
-        rows.toDF("id", "w").repartition(5), col("id"), col("w"), k = 10)
+    val got = Sampling.weightedSampleByGroup(
+        rows.toDF("id", "w").withColumn("g", lit(0)).repartition(5),
+        Seq("g"), col("id"), col("w"), k = 10)
       .select("id").as[Long].collect().toSet
     assert(got == expected, s"got $got want $expected")
   }
@@ -80,7 +82,8 @@ class UrlsProfilingSpec extends SparkSpec {
 
   test("weightedSample: a zero weight fails loudly") {
     val ex = intercept[Throwable] {
-      Sampling.weightedSample(Seq((1L, 0L)).toDF("id", "w"), col("id"), col("w"), 1).collect()
+      Sampling.weightedSampleByGroup(Seq((1L, 0L, 0)).toDF("id", "w", "g"), Seq("g"),
+        col("id"), col("w"), 1).collect()
     }
     def msgs(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} ${msgs(t.getCause)}"
