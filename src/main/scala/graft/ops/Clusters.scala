@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -68,21 +67,23 @@ object Clusters {
     * minima) and isolated nodes are absent; see [[resolveDuplicates]]
     * for the full labeling.
     *
-    * Every round checkpoints its edge list and counts it in the same
-    * job. Once that count is at or below [[DriverFinishEdges]] (100,000
-    * edges) the edges are collected ONCE and the driver finishes with
-    * union-find, returning the same star edge list the rounds reach at
-    * their fixpoint: each non-root node paired with its component
-    * minimum under Catalyst's ordering for the id type. Small graphs
-    * therefore run no star round at all, and large ones skip the long
-    * tail of small, late rounds; the job count no longer grows with the
-    * graph's diameter.
+    * A small graph takes ONE job past its input's own shuffles: a
+    * bounded collect (`Bridge.distinctRows`) brings back the distinct
+    * edges if there are at most [[DriverFinishEdges]] (100,000) of
+    * them, and the driver finishes with union-find, returning the same
+    * star edge list the rounds reach at their fixpoint: each non-root
+    * node paired with its component minimum under Catalyst's ordering
+    * for the id type, as a local frame. A task gives up the collect as
+    * soon as its partition passes the budget.
     *
-    * Above the budget the distributed rounds run until the edge set
-    * reaches a fixpoint (checked with `except` — an exact, not
-    * probabilistic, test), the count drops to the budget, or
+    * Above the budget the edges are checkpointed from the same RDD the
+    * collect read, so the input's shuffles do not run again, and the
+    * distributed rounds run until the edge set reaches a fixpoint
+    * (checked with `except` — an exact, not probabilistic, test), the
+    * count drops to the budget (then the driver finishes as above), or
     * `maxRounds` rounds have run, whichever first. `maxRounds` bounds
-    * these distributed rounds only: the driver finish always converges.
+    * these distributed rounds only: the driver finish always converges,
+    * and the job count no longer grows with the graph's diameter.
     * Each round is CHECKPOINTED, not merely persisted: a cached plan
     * still nests every previous round's plan inside its task binary, so
     * task (de)serialization grows exponentially with the round count —
@@ -93,39 +94,53 @@ object Clusters {
     * in `checkpoint(true)`). The "did NOT converge" warning can fire
     * only on this path: when `maxRounds` runs out with more edges left
     * than the budget.
-    */
-  def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 25): DataFrame =
-    connectedComponents(pairs, srcCol, dstCol, maxRounds, DriverFinishEdges)
-
-  /** [[connectedComponents]] with an explicit driver budget; a negative
-    * budget keeps every round distributed.
+    *
+    * Returns the edge list and whether it is star-form (one label per
+    * node): true after a driver finish or converged rounds. A negative
+    * `driverBudget` keeps every round distributed; a budget at or above
+    * the `Int` bound always finishes on the driver.
     */
   private[graft] def connectedComponents(pairs: DataFrame, srcCol: String,
-      dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame = {
+      dstCol: String, maxRounds: Int, driverBudget: Long): (DataFrame, Boolean) = {
+    val input = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    val small = if (driverBudget < 0) None
+      else Bridge.distinctRows(input, math.min(driverBudget, Int.MaxValue.toLong).toInt)
+    small match {
+      case Some(rows) =>
+        log.info(s"connectedComponents: driver finish over ${rows.length} edges")
+        (finishOnDriver(input, rows), true)
+      case None => starRounds(input, maxRounds, driverBudget)
+    }
+  }
+
+  /** The distributed star rounds over `input`'s edges, which may hold
+    * duplicates: the first round's output is distinct.
+    */
+  private def starRounds(input: DataFrame, maxRounds: Int,
+      driverBudget: Long): (DataFrame, Boolean) = {
     // Materialization and the convergence count are ONE job per round
     // (the count is taken from the checkpoint job itself via the
     // bridge). At model-scale edge sets the per-round cost IS
     // scheduled-job overhead, so the loop is down to 1 job/round + the
     // except test only on a count match, and the driver finish cuts
     // the rounds themselves.
-    var (edges, edgeCount, edgeRdd) = Bridge.localCheckpointWithCount(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
+    var (edges, edgeCount, edgeRdd) = Bridge.localCheckpointWithCount(input)
     var round = 0
     var converged = false
     while (!converged && edgeCount > driverBudget && round < maxRounds) {
       // NOTE: one star round per materialization is the measured
       // optimum — both star ops reference their input DataFrame
       // multiple times (or/mins), so fusing two lazy rounds recomputes
-      // the inner round once per outer reference (tried in round 6:
-      // 2.8 s → 4.9 s at sf0.1).
+      // the inner round once per outer reference (measured at sf0.1:
+      // 2.8 s → 4.9 s).
       val (next, nextCount, nextRdd) =
         Bridge.localCheckpointWithCount(smallStar(largeStar(edges)))
       // Star rounds are monotone (labels only decrease), so
       // next ⊆-equality with the previous round IS the fixpoint test:
-      // same count and nothing new ⇒ identical sets.
+      // same count and nothing new ⇒ identical sets. That holds after
+      // the first round too, whose input may repeat edges: its count is
+      // at least the size of its set.
       converged = nextCount == edgeCount &&
         next.except(edges).limit(1).count() == 0
       edgeRdd.unpersist(blocking = false)
@@ -137,22 +152,23 @@ object Clusters {
     if (edgeCount <= driverBudget) {
       log.info(s"connectedComponents: driver finish over $edgeCount edges " +
         s"after $round star rounds")
-      finishOnDriver(edges, edgeRdd)
+      val rows = edgeRdd.collect()
+      edgeRdd.unpersist(blocking = false)
+      (finishOnDriver(edges, rows.toSeq), true)
     } else {
       // An unconverged edge list is not star-form: a node may still
       // carry multiple labels, which would FAN OUT a downstream left
       // join into duplicate rows per id. Warn loudly (callers that need
       // hard failure can raise maxRounds or check themselves);
-      // consumers in this package also aggregate min-per-id
-      // defensively.
+      // [[componentLabels]] aggregates min-per-id in that case.
       if (!converged)
         log.warn(s"connectedComponents did NOT converge within $maxRounds rounds; " +
           "labels may be non-minimal and non-unique per node")
-      edges
+      (edges, converged)
     }
   }
 
-  /** Union-find over the collected edge list. Ids are sorted once with
+  /** Union-find over driver-held edges. Ids are sorted once with
     * Catalyst's ordering for their type, so index order IS value order:
     * union keeps the smaller index as root, which makes every root its
     * component's minimum, and ids are looked up by binary search, so
@@ -161,12 +177,10 @@ object Clusters {
     * `(node, component minimum)` per non-root node, as a local frame
     * with the schema of `edges`.
     */
-  private def finishOnDriver(edges: DataFrame, edgeRdd: RDD[InternalRow]): DataFrame = {
+  private def finishOnDriver(edges: DataFrame, rows: Seq[InternalRow]): DataFrame = {
     val idType = edges.schema.head.dataType
     val ord = TypeUtils.getInterpretedOrdering(idType)
-    val rows = edgeRdd.collect()
-    edgeRdd.unpersist(blocking = false)
-    val ends = rows.flatMap(r => Array(r.get(0, idType), r.get(1, idType)))
+    val ends = rows.toArray.flatMap(r => Array(r.get(0, idType), r.get(1, idType)))
     val sorted = ends.sorted(ord)
     val distinct = sorted.indices
       .filter(i => i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0)
@@ -191,6 +205,11 @@ object Clusters {
     * cluster minimum and a deterministic keep flag (keep = the cluster
     * minimum itself). Ids appearing in no pair become singleton
     * clusters of themselves. Output: (idCol, cluster_id, keep).
+    *
+    * Shape: one left join of `ids` on [[componentLabels]]. After a
+    * driver finish the labels are a local frame (at most
+    * [[DriverFinishEdges]] rows), which the join can broadcast instead
+    * of shuffling `ids`.
     */
   def resolveDuplicates(ids: DataFrame, idCol: String, pairs: DataFrame,
       srcCol: String = "id_a", dstCol: String = "id_b",
@@ -247,18 +266,19 @@ object Clusters {
         (col(idCol) === col("__keep_id")).as("keep"))
   }
 
-  /** `(idCol, __cid)`: one component label per non-root node. The
-    * min-per-id aggregation is a no-op on a converged (star-form) edge
-    * list — one label per node — but guarantees a join on these labels
-    * cannot fan out duplicate id rows if maxRounds was exhausted first;
-    * the groupBy and the join hash-partition on the same key, so the
-    * extra exchange is reused.
+  /** `(idCol, __cid)`: one component label per non-root node. A
+    * star-form edge list (a driver finish or converged rounds) already
+    * holds one label per node and is returned as is; only an
+    * unconverged one (`maxRounds` ran out above the driver budget) is
+    * reduced to its minimum label per id, so a join on these labels
+    * cannot fan out duplicate id rows.
     */
   private def componentLabels(pairs: DataFrame, idCol: String, srcCol: String,
-      dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame =
-    connectedComponents(pairs, srcCol, dstCol, maxRounds, driverBudget)
-      .select(col("src").as(idCol), col("dst").as("__cid"))
-      .groupBy(idCol).agg(min("__cid").as("__cid"))
+      dstCol: String, maxRounds: Int, driverBudget: Long): DataFrame = {
+    val (edges, star) = connectedComponents(pairs, srcCol, dstCol, maxRounds, driverBudget)
+    val labels = edges.select(col("src").as(idCol), col("dst").as("__cid"))
+    if (star) labels else labels.groupBy(idCol).agg(min("__cid").as("__cid"))
+  }
 
   /** RAND INDEX between two clusterings of the same ids — the
     * agreement metric for validating one dedup pass against another
@@ -372,12 +392,13 @@ object Clusters {
       .select(expr(s"__xm div $cellMicro").as("cell_x"),
         expr(s"__ym div $cellMicro").as("cell_y"))
       .groupBy("cell_x", "cell_y").agg(count(lit(1)).as("n_points"))
-    // eager checkpoint: the core grid feeds the probe explode, the
-    // build side, AND the final label join — without it the full
-    // point agg re-executes per consumer.
+    // checkpoint: the core grid feeds the probe explode, the build
+    // side, AND the final label join — without it the full point agg
+    // re-executes per consumer. Lazy, so the first consumer's job (the
+    // neighbor join's broadcast) writes it instead of a job of its own.
     val core = cells.filter(col("n_points") >= minPts)
       .withColumn("cid", col("cell_x") * 1000000L + col("cell_y"))
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val offsets = for { dx <- -1L to 1L; dy <- -1L to 1L if (dx, dy) != ((0L, 0L)) }
       yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
     val probe = core.select(col("cid").as("id_a"),
@@ -389,12 +410,13 @@ object Clusters {
         col("cid").as("id_b")), Seq("cell_x", "cell_y"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    // the label table derives from `core` itself — rename its key so
-    // the join back is unambiguous
-    val labels = resolveDuplicates(core.select(col("cid")), "cid", edges,
-        maxRounds = maxRounds)
-      .select(col("cid").as("__lcid"), col("cluster_id"))
-    core.join(labels, col("cid") === col("__lcid"))
-      .select(col("cell_x"), col("cell_y"), col("n_points"), col("cluster_id"))
+    // one left join labels every core cell; a cell in no edge is its
+    // own cluster. The label table derives from `core` itself — its key
+    // is renamed so the join is unambiguous.
+    val labels = componentLabels(edges, "__lcid", "id_a", "id_b", maxRounds,
+      DriverFinishEdges)
+    core.join(labels, col("cid") === col("__lcid"), "left")
+      .select(col("cell_x"), col("cell_y"), col("n_points"),
+        coalesce(col("__cid"), col("cid")).as("cluster_id"))
   }
 }

@@ -123,6 +123,41 @@ object Bridge {
     out.result()
   }
 
+  /** The distinct rows of `df`'s plan if there are at most `maxRows` of
+    * them, else None, in ONE job ([[foldPartitions]]): each task keeps
+    * its distinct rows in a hash set of Catalyst binary rows and stops
+    * reading its partition as soon as it passes the bound; the driver
+    * merges the sets. Rows are normalized as `distinct` normalizes them
+    * (-0.0 is 0.0, every NaN is one NaN). The job runs over
+    * `df.queryExecution.toRdd`, so a later [[localCheckpointWithCount]]
+    * of the same `df` reuses the plan's shuffle outputs instead of
+    * re-running its shuffles.
+    */
+  def distinctRows(df: DataFrame, maxRows: Int): Option[Seq[InternalRow]] = {
+    val keys = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      NormalizeFloatingNumbers.normalize(BoundReference(i, f.dataType, f.nullable))
+    }
+    val parts = foldPartitions(df) { rows =>
+      val project = UnsafeProjection.create(keys)
+      val seen = new java.util.HashSet[UnsafeRow]()
+      var within = true
+      while (within && rows.hasNext) {
+        val key = project(rows.next())
+        if (!seen.contains(key)) {
+          if (seen.size < maxRows) seen.add(key.copy()) else within = false
+        }
+      }
+      if (within) Some(seen.toArray(new Array[UnsafeRow](0))) else None
+    }
+    if (parts.exists(_.isEmpty)) None
+    else {
+      val merged = new java.util.HashSet[UnsafeRow]()
+      parts.foreach(_.get.foreach(merged.add))
+      if (merged.size > maxRows) None
+      else Some(merged.toArray(new Array[UnsafeRow](0)).toSeq)
+    }
+  }
+
   /** A frame over driver-held rows in Catalyst's internal form (a
     * `LocalRelation`), with the schema of `like`. For loops that finish
     * model-sized state on the driver and hand it back to the plan.

@@ -6,7 +6,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** `Bridge.countRows`, the one-job driver-sized count: the same rows and
-  * counts as `groupBy(all columns).count()`, key normalization included.
+  * counts as `groupBy(all columns).count()`, key normalization included;
+  * and `Bridge.distinctRows`, the one-job bounded collect.
   */
 class BridgeSpec extends SparkSpec {
 
@@ -79,5 +80,22 @@ class BridgeSpec extends SparkSpec {
     assert(Bridge.countRows(onePerTask, 4, "test").map(_._2) == Seq(1L, 1L, 1L, 1L))
     val merged = intercept[IllegalArgumentException](Bridge.countRows(onePerTask, 3, "test"))
     assert(merged.getMessage.contains("more than 3 distinct rows of (id)"))
+  }
+
+  test("distinctRows: the rows of distinct() in one job, or None past maxRows") {
+    val expected = frame.distinct().collect().map(bits).toSet
+    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
+    var got: Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = None
+    val (jobs, sites) = countJobs { got = Bridge.distinctRows(frame, 1000) }
+    assert(jobs == 1, sites)
+    val rows = got.get.map(r => bits(conv(r).asInstanceOf[Row]))
+    assert(rows.size == expected.size && rows.toSet == expected)
+    assert(Bridge.distinctRows(frame, expected.size).isDefined)
+    // past the bound in every task, and only in the driver's merge
+    assert(Bridge.distinctRows(frame, expected.size - 1).isEmpty)
+    val onePerTask = spark.range(0, 4, 1, 4).select(col("id"))
+    assert(Bridge.distinctRows(onePerTask, 4).map(_.map(_.getLong(0)).sorted) == Some(Seq(0L, 1L, 2L, 3L)))
+    assert(Bridge.distinctRows(onePerTask, 3).isEmpty)
+    assert(Bridge.distinctRows(onePerTask.filter(col("id") < 0), 0) == Some(Seq.empty))
   }
 }
