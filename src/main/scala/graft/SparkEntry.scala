@@ -68,17 +68,20 @@ object SparkEntry {
   private val scanSchemas =
     new java.util.concurrent.ConcurrentHashMap[String, (ScanKey, StructType)]()
 
-  /** The [[ScanKey]] of `path` in `s`; None if `path` cannot be listed. */
+  /** The [[ScanKey]] of `path` in `s`; None if `path` cannot be listed.
+    * The walk uses `getFileStatus`/`listStatus`, not `listFiles`: a
+    * `LocatedFileStatus` loads the file's permissions, which the local
+    * file system does by forking `ls -ld` once per file.
+    */
   private def scanKey(s: SparkSession, path: String): Option[ScanKey] = {
+    import org.apache.hadoop.fs.FileStatus
     val p = new org.apache.hadoop.fs.Path(path)
     val files = try {
-      val it = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val b = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(b.result().sorted)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def leaves(f: FileStatus): Seq[FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(leaves) else Seq(f)
+      Some(leaves(fs.getFileStatus(p))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
     } catch { case _: java.io.IOException => None }
     val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
@@ -1437,8 +1440,9 @@ object SparkEntry {
     * the embedding cloud projected to dims 1–2: 0.05-wide cells, core
     * at ≥4 points, components over 8-neighborhood adjacency — the
     * cell-DBSCAN that finds the synthetic centroid blobs without any
-    * per-point O(n²) neighborhood query; the CC rounds run on the
-    * GRID (≈10² cells), never the points.
+    * per-point O(n²) neighborhood query. The core grid (≈10² cells)
+    * comes back in one bounded collect and is clustered on the driver;
+    * nothing past the point aggregate runs on the points.
     */
   private def qGridCluster(s: SparkSession, dir: String): DataFrame =
     graft.ops.Clusters.gridCluster(

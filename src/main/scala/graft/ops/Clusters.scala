@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Duplicate-cluster resolution: candidate pairs → connected
@@ -52,7 +53,8 @@ object Clusters {
   }
 
   /** Edge-list size at or below which [[connectedComponents]] stops the
-    * star rounds and finishes on the driver. Same order as the engine's
+    * star rounds and finishes on the driver, and core-grid size at or
+    * below which [[gridCluster]] clusters on the driver. Same order as the engine's
     * other driver-side limits (`EM.collectPatterns` and
     * `Scoring.calibrationStats` cap their collects at 100,000 rows).
     */
@@ -168,37 +170,47 @@ object Clusters {
     }
   }
 
-  /** Union-find over driver-held edges. Ids are sorted once with
-    * Catalyst's ordering for their type, so index order IS value order:
-    * union keeps the smaller index as root, which makes every root its
-    * component's minimum, and ids are looked up by binary search, so
-    * every key compares by value (binary ids included, which a hash map
-    * would key by array identity). Output: the fixpoint star edge list,
-    * `(node, component minimum)` per non-root node, as a local frame
-    * with the schema of `edges`.
+  /** The star edge list of driver-held edges: `(node, component
+    * minimum)` per non-root node, as a local frame with the schema of
+    * `edges` (see [[unionFind]]).
     */
   private def finishOnDriver(edges: DataFrame, rows: Seq[InternalRow]): DataFrame = {
     val idType = edges.schema.head.dataType
-    val ord = TypeUtils.getInterpretedOrdering(idType)
     val ends = rows.toArray.flatMap(r => Array(r.get(0, idType), r.get(1, idType)))
+    val (ids, root) = unionFind(ends, TypeUtils.getInterpretedOrdering(idType))
+    Bridge.localFrame(edges, ids.indices.collect {
+      case i if root(i) != i => InternalRow(ids(i), ids(root(i)))
+    })
+  }
+
+  /** Union-find over driver-held edges, the endpoints of edge k at
+    * `ends(2k)` and `ends(2k + 1)`. Ids are sorted once with `ord`
+    * (Catalyst's ordering for their type), so index order IS value
+    * order: union keeps the smaller index as root, which makes every
+    * root its component's minimum, and ids are looked up by binary
+    * search, so every key compares by value (binary ids included,
+    * which a hash map would key by array identity). Returns the
+    * distinct ids in order and, per id, the index of its component's
+    * minimum.
+    */
+  private def unionFind(ends: Array[AnyRef],
+      ord: Ordering[Any]): (Array[AnyRef], Array[Int]) = {
     val sorted = ends.sorted(ord)
-    val distinct = sorted.indices
+    val ids = sorted.indices
       .filter(i => i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0)
       .map(sorted).toArray
-    val parent = Array.range(0, distinct.length)
+    val parent = Array.range(0, ids.length)
     def find(i: Int): Int = {
       var x = i
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
     ends.grouped(2).foreach { case Array(a, b) =>
-      val ra = find(java.util.Arrays.binarySearch(distinct, a, ord))
-      val rb = find(java.util.Arrays.binarySearch(distinct, b, ord))
+      val ra = find(java.util.Arrays.binarySearch(ids, a, ord))
+      val rb = find(java.util.Arrays.binarySearch(ids, b, ord))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    Bridge.localFrame(edges, distinct.indices.collect {
-      case i if find(i) != i => InternalRow(distinct(i), distinct(find(i)))
-    })
+    (ids, Array.tabulate(ids.length)(find))
   }
 
   /** Full duplicate resolution: every id in `ids` labeled with its
@@ -377,13 +389,29 @@ object Clusters {
     *
     * Scale shape: one (cell_x, cell_y) hash agg over the points —
     * map-side partial, GRID-sized output (bounded by the coordinate
-    * extent, not the row count); the 8-neighbor self-join and the
-    * [[connectedComponents]] rounds run on the grid, never the
+    * extent, not the row count). A core grid of at most
+    * [[DriverFinishEdges]] cells comes back in ONE bounded collect
+    * (`Bridge.distinctRows`, one job past the aggregate's shuffle);
+    * the driver finds the 8-neighbor edges by hash lookup on
+    * (cell_x, cell_y), runs union-find and returns a local frame.
+    * Above the budget — a fine grid over a large corpus — the core
+    * grid is checkpointed from the same RDD the collect read, so the
+    * point aggregate does not run again, and the 8-neighbor self-join
+    * and the [[connectedComponents]] rounds run on the grid, never the
     * points. Output: (cell_x, cell_y, n_points, cluster_id) per core
-    * cell, cluster_id = the component's minimum cell id.
+    * cell, cluster_id = the component's minimum cell id (NULL for a
+    * cell with a NULL coordinate, which has no neighbors).
     */
   def gridCluster(df: DataFrame, x: Column, y: Column, cellMicro: Long,
-      minPts: Long, maxRounds: Int = 25): DataFrame = {
+      minPts: Long, maxRounds: Int = 25): DataFrame =
+    gridCluster(df, x, y, cellMicro, minPts, maxRounds, DriverFinishEdges)
+
+  /** [[gridCluster]] with an explicit driver budget: core cells for
+    * the collect, edges for [[connectedComponents]]. A negative budget
+    * keeps every step distributed.
+    */
+  private[graft] def gridCluster(df: DataFrame, x: Column, y: Column, cellMicro: Long,
+      minPts: Long, maxRounds: Int, driverBudget: Long): DataFrame = {
     require(cellMicro >= 10, s"cellMicro must be >= 10, got $cellMicro")
     require(minPts >= 1, s"minPts must be >= 1, got $minPts")
     val cells = df.select(
@@ -392,13 +420,51 @@ object Clusters {
       .select(expr(s"__xm div $cellMicro").as("cell_x"),
         expr(s"__ym div $cellMicro").as("cell_y"))
       .groupBy("cell_x", "cell_y").agg(count(lit(1)).as("n_points"))
-    // checkpoint: the core grid feeds the probe explode, the build
-    // side, AND the final label join — without it the full point agg
-    // re-executes per consumer. Lazy, so the first consumer's job (the
-    // neighbor join's broadcast) writes it instead of a job of its own.
     val core = cells.filter(col("n_points") >= minPts)
       .withColumn("cid", col("cell_x") * 1000000L + col("cell_y"))
-      .localCheckpoint(false)
+    val small = if (driverBudget < 0) None
+      else Bridge.distinctRows(core, math.min(driverBudget, Int.MaxValue.toLong).toInt)
+    small match {
+      case Some(rows) =>
+        log.info(s"gridCluster: driver finish over ${rows.length} core cells")
+        gridOnDriver(core, rows)
+      case None =>
+        // the core grid feeds the probe explode, the build side AND the
+        // final label join; the checkpoint reads the RDD the collect
+        // read, so the point aggregate's shuffle does not run again
+        val (grid, _, _) = Bridge.localCheckpointWithCount(core)
+        gridRounds(grid, maxRounds, driverBudget)
+    }
+  }
+
+  /** [[gridCluster]]'s driver finish over the collected core grid
+    * `(cell_x, cell_y, n_points, cid)`: the same edges, labels and
+    * output the distributed path computes, as a local frame.
+    */
+  private def gridOnDriver(core: DataFrame, rows: Seq[InternalRow]): DataFrame = {
+    // a cell with a NULL coordinate has a NULL cid and no neighbors
+    val cids = rows.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+      (r.getLong(0), r.getLong(1)) -> r.getLong(3) }.toMap
+    val edges = for {
+      ((cx, cy), a) <- cids.toSeq
+      dx <- -1L to 1L; dy <- -1L to 1L
+      b <- cids.get((cx + dx, cy + dy)).toSeq if a < b
+    } yield (a, b)
+    val ends = edges.toArray.flatMap { case (a, b) => Array[AnyRef](Long.box(a), Long.box(b)) }
+    val (ids, root) = unionFind(ends, TypeUtils.getInterpretedOrdering(LongType))
+    val label = ids.indices.map(i => ids(i) -> ids(root(i))).toMap
+    Bridge.localFrame(
+      core.select(col("cell_x"), col("cell_y"), col("n_points"), col("cid").as("cluster_id")),
+      rows.map { r =>
+        val Seq(cx, cy, n, cid) = (0 to 3).map(r.get(_, LongType))
+        InternalRow(cx, cy, n, label.getOrElse(cid, cid))
+      })
+  }
+
+  /** [[gridCluster]] above the driver budget: the 8-neighbor self-join
+    * and [[connectedComponents]] over the checkpointed core grid.
+    */
+  private def gridRounds(core: DataFrame, maxRounds: Int, driverBudget: Long): DataFrame = {
     val offsets = for { dx <- -1L to 1L; dy <- -1L to 1L if (dx, dy) != ((0L, 0L)) }
       yield struct(lit(dx).as("dx"), lit(dy).as("dy"))
     val probe = core.select(col("cid").as("id_a"),
@@ -413,8 +479,7 @@ object Clusters {
     // one left join labels every core cell; a cell in no edge is its
     // own cluster. The label table derives from `core` itself — its key
     // is renamed so the join is unambiguous.
-    val labels = componentLabels(edges, "__lcid", "id_a", "id_b", maxRounds,
-      DriverFinishEdges)
+    val labels = componentLabels(edges, "__lcid", "id_a", "id_b", maxRounds, driverBudget)
     core.join(labels, col("cid") === col("__lcid"), "left")
       .select(col("cell_x"), col("cell_y"), col("n_points"),
         coalesce(col("__cid"), col("cid")).as("cluster_id"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Clusters
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Duplicate-cluster resolution specs: transitive closure over
   * candidate pairs, deterministic min-id canonical choice, singleton
@@ -161,6 +162,79 @@ class ClustersSpec extends SparkSpec {
     assert(jobs(3) == jobs(40))
   }
 
+  /** `gridCluster`'s rows, in a canonical order, and whether they came
+    * from the driver finish (a local frame).
+    */
+  private def gridRows(pts: org.apache.spark.sql.DataFrame, minPts: Long,
+      driverBudget: Long): (Seq[Seq[Any]], Boolean) = {
+    import org.apache.spark.sql.functions.col
+    val out = Clusters.gridCluster(pts, col("x"), col("y"), cellMicro = 50000L,
+      minPts = minPts, maxRounds = 200, driverBudget = driverBudget)
+    val local = out.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (out.collect().map(_.toSeq).toSeq.sortBy(_.mkString(",")), local)
+  }
+
+  test("gridCluster: the driver finish equals the distributed path") {
+    // cell c spans [c·0.05 − 1, (c+1)·0.05 − 1); `at(c)` is its center
+    def at(c: Int): Double = (c * 50000 + 25000) / 1e6 - 1.0
+    val blob = Seq.fill(4)((0.011, 0.011)) ++ Seq.fill(4)((0.061, 0.011)) ++
+      Seq.fill(4)((0.51, 0.51)) ++ Seq.fill(2)((-0.29, -0.29))
+    // cells touch only at corners: one component through diagonals
+    val diagonal = (0 until 12).flatMap(c => Seq.fill(4)((at(c), at(c))))
+    val random = for (seed <- Seq(1, 2)) yield {
+      val rnd = new scala.util.Random(seed)
+      Seq.fill(300)((rnd.nextDouble() * 0.6 - 0.3, rnd.nextDouble() * 0.6 - 0.3))
+    }
+    val fixtures: Seq[(String, org.apache.spark.sql.DataFrame, Long)] =
+      Seq(("blob", blob.toDF("x", "y"), 4L),
+        ("diagonal", diagonal.toDF("x", "y"), 4L),
+        ("random 1", random(0).toDF("x", "y"), 3L),
+        ("random 2", random(1).toDF("x", "y"), 2L),
+        ("minPts 1", random(0).toDF("x", "y"), 1L),
+        // a NULL coordinate makes a core cell with a NULL cell id
+        ("nulls", (blob.map { case (x, y) => (Option(x), Option(y)) } ++
+          Seq.fill(4)((Option.empty[Double], Option(0.011))) ++
+          Seq.fill(4)((Option.empty[Double], Option.empty[Double])))
+          .toDF("x", "y"), 4L))
+    for ((name, pts, minPts) <- fixtures) {
+      val (driver, local) = gridRows(pts, minPts, Clusters.DriverFinishEdges)
+      val (rounds, roundsLocal) = gridRows(pts, minPts, -1L)
+      val (fallback, fallbackLocal) = gridRows(pts, minPts, 2L)
+      assert(local && !roundsLocal && !fallbackLocal, name)
+      assert(driver.size > 2, s"$name: ${driver.size} core cells")
+      assert(driver == rounds, s"$name: driver finish diverged")
+      assert(fallback == rounds, s"$name: over-budget fallback diverged")
+      if (name == "diagonal") assert(driver.map(_(3)).distinct.size == 1)
+      if (name == "nulls") assert(driver.count(_(3) == null) == 2)
+    }
+  }
+
+  test("gridCluster: an over-budget collect re-runs no point aggregate") {
+    // the points come from a named RDD, so the stages that compute them
+    // are the point aggregate's shuffle-map stages
+    val rnd = new scala.util.Random(7)
+    val pts = spark.sparkContext
+      .parallelize(Seq.fill(400)((rnd.nextDouble() * 0.6 - 0.3, rnd.nextDouble() * 0.6 - 0.3)), 4)
+      .setName("grid-points").toDF("x", "y")
+    val aggStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "grid-points")) aggStages.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      // budget 2 overflows the core-grid collect; the checkpoint, the
+      // rounds and the final action read the grid, not the points
+      val (got, local) = gridRows(pts, 3L, 2L)
+      Bridge.waitForListeners(spark.sparkContext)
+      assert(!local)
+      assert(aggStages.get() == 1)
+      got
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows.size > 2 && rows == gridRows(pts, 3L, Clusters.DriverFinishEdges)._1)
+  }
+
   test("gridCluster: q_grid_cluster at sf0.01 stays within its job budget") {
     // The benchmark's ops_jobs input, read through the registry as the
     // benchmark reads it: construction plus one action over the result.
@@ -168,16 +242,12 @@ class ClustersSpec extends SparkSpec {
     def run(): Long = SparkEntry.queries("q_grid_cluster")(spark, dir).collect().length.toLong
     val rows = run() // warm-up: infers the table's schema once
     assert(rows > 0)
-    // Measured 5 jobs (6 under the benchmark's one-row digest action):
-    // the point aggregate, the neighbor join's broadcast of the core
-    // grid (which writes its checkpoint), one bounded collect of the
-    // edges with a driver finish, and the final label join with its
-    // broadcast of the local labels. It read 11 with a schema job per
-    // scan, an eager core checkpoint, an edge `distinct` shuffle, an
-    // edge checkpoint, its collect, and a min-per-id label aggregate
-    // with a second join against the core.
+    // Measured 2 jobs (4 under the benchmark's one-row digest action):
+    // the point aggregate's shuffle and one bounded collect of the core
+    // grid, which the driver clusters into a local frame the action
+    // reads without a job.
     val (jobs, sites) = countJobs(assert(run() == rows))
-    assert(jobs <= 7, s"$jobs jobs: ${sites.mkString(", ")}")
+    assert(jobs <= 2, s"$jobs jobs: ${sites.mkString(", ")}")
   }
 
   test("connectedComponents: empty pair list → all singletons") {
