@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.linkage._
 
@@ -122,9 +123,8 @@ object LinkageE2E {
     // NCVR production scale (scratch.R:142-156: ~8M voters × 2
     // snapshots). Default 10 keeps the standing 150k × 135k shape.
     val repl = sys.env.getOrElse("SPARK_GRAFT_E2E_REPL", "10").toInt
-    val a = tableA(spark, baseDir, repl).localCheckpoint(true)
-    val b = tableB(a).localCheckpoint(true)
-    val (nA, nB) = (a.count(), b.count())
+    val (a, nA, _) = Bridge.localCheckpointWithCount(tableA(spark, baseDir, repl))
+    val (b, nB, _) = Bridge.localCheckpointWithCount(tableB(a))
     println(s"A: $nA records; B: $nB records; cross space ${nA * nB} pairs")
 
     val truth = a.select(col("rec_id"), col("rec_id").as("cluster"))

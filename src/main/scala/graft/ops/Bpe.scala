@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * touched ONCE to build the frequency table). The pair aggregate is
   * a keyed shuffle over (pair a, pair b); the merge rewrite is a
   * map-only literal replace, so between checkpoints a round's plan
-  * grows by one projection, not a subtree — `checkpointEvery = 8`
-  * bounds the replace-chain depth codegen sees.
+  * grows by one projection, not a subtree — a checkpoint every 8
+  * merges (`MergeEvery`) bounds the replace-chain depth codegen sees.
   *
   * Symbols are represented as a string with DOUBLED separators at
   * every boundary (`␟␟a␟␟b␟␟c␟␟` for symbols [a,b,c], `sep` =
@@ -59,6 +59,9 @@ object Bpe {
 
   /** Default symbol separator: U+001F (unit separator). */
   val DefaultSep = "\u001f"
+
+  /** Merges between checkpoints of the word table (see the object doc). */
+  private val MergeEvery = 8
 
   /** Seed symbol string for one word: doubled-separator-bounded
     * single characters (`ab` → `␟␟a␟␟b␟␟`).
@@ -99,8 +102,7 @@ object Bpe {
   def bpeTrain(
       words: DataFrame,
       merges: Int,
-      sep: String = DefaultSep,
-      checkpointEvery: Int = 8): (DataFrame, DataFrame) = {
+      sep: String = DefaultSep): (DataFrame, DataFrame) = {
     require(merges > 0, s"merges must be positive, got $merges")
     require(sep.length == 1, s"sep must be a single character, got ${sep.length}")
     val cols = words.columns
@@ -112,35 +114,28 @@ object Bpe {
           col(cols(0)))))
         .otherwise(col(cols(0))).as("word"),
       col(cols(1)).cast("long").as("freq"))
-    var state = checked
+    val init = checked
       .withColumn("sym", charSym(col("word"), sep))
       .localCheckpoint(true)
     val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    var exhausted = false
-    var i = 1
-    while (i <= merges && !exhausted) {
+    val state = Rounds.run("bpeTrain", merges, MergeEvery, init) { cur =>
       // 1-row argmax collect: count DESC, pair ASC — the LPA
       // struct-min idiom; the round's ONLY job. A null struct means
       // the corpus is out of adjacent pairs — stop, the merge table
       // truncates (its row count is part of the model).
-      val row = pairCounts(state, sep)
+      val row = pairCounts(cur, sep)
         .agg(min(struct((-col("c")).as("nc"), col("a"), col("b"))).as("m"))
         .select(col("m.a"), col("m.b"), (-col("m.nc")).as("c"))
         .head()
-      if (row.isNullAt(0)) exhausted = true
+      if (row.isNullAt(0)) None
       else {
         val (a, b, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        learned += ((i, a, b, a + b, c))
+        learned += ((learned.length + 1, a, b, a + b, c))
         // literal single-replace rewrite — map-only, no join
-        val next = state.withColumn("sym",
+        Some(cur.withColumn("sym",
           call_function("replace", col("sym"),
-            lit(sep + a + sep + sep + b + sep), lit(sep + a + b + sep)))
-        state =
-          if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < merges)
-            next.localCheckpoint(true)
-          else next
+            lit(sep + a + sep + sep + b + sep), lit(sep + a + b + sep))))
       }
-      i += 1
     }
     import session.implicits._
     val mergeTable = learned.toSeq

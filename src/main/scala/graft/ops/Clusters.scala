@@ -60,6 +60,12 @@ object Clusters {
     */
   private[graft] val DriverFinishEdges: Long = 100000L
 
+  /** Star rounds the public operators run above the driver budget
+    * before they stop unconverged and warn (see [[connectedComponents]]);
+    * convergence takes O(log n) rounds.
+    */
+  private val MaxRounds = 25
+
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Connected components over an undirected pair list. Input: any
@@ -160,9 +166,8 @@ object Clusters {
     } else {
       // An unconverged edge list is not star-form: a node may still
       // carry multiple labels, which would FAN OUT a downstream left
-      // join into duplicate rows per id. Warn loudly (callers that need
-      // hard failure can raise maxRounds or check themselves);
-      // [[componentLabels]] aggregates min-per-id in that case.
+      // join into duplicate rows per id. Warn loudly; [[componentLabels]]
+      // aggregates min-per-id in that case.
       if (!converged)
         log.warn(s"connectedComponents did NOT converge within $maxRounds rounds; " +
           "labels may be non-minimal and non-unique per node")
@@ -224,9 +229,8 @@ object Clusters {
     * of shuffling `ids`.
     */
   def resolveDuplicates(ids: DataFrame, idCol: String, pairs: DataFrame,
-      srcCol: String = "id_a", dstCol: String = "id_b",
-      maxRounds: Int = 25): DataFrame =
-    resolveDuplicates(ids, idCol, pairs, srcCol, dstCol, maxRounds, DriverFinishEdges)
+      srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame =
+    resolveDuplicates(ids, idCol, pairs, srcCol, dstCol, MaxRounds, DriverFinishEdges)
 
   /** [[resolveDuplicates]] with an explicit driver budget (see
     * [[connectedComponents]]).
@@ -255,9 +259,8 @@ object Clusters {
     * key the aggregate hash-partitioned on — the exchange is reused.
     */
   def resolveDuplicatesBy(ids: DataFrame, idCol: String, quality: Column,
-      pairs: DataFrame, srcCol: String = "id_a", dstCol: String = "id_b",
-      maxRounds: Int = 25): DataFrame = {
-    val labels = componentLabels(pairs, idCol, srcCol, dstCol, maxRounds,
+      pairs: DataFrame, srcCol: String = "id_a", dstCol: String = "id_b"): DataFrame = {
+    val labels = componentLabels(pairs, idCol, srcCol, dstCol, MaxRounds,
       DriverFinishEdges)
     val labeled = ids
       .join(labels, Seq(idCol), "left")
@@ -403,8 +406,8 @@ object Clusters {
     * cell with a NULL coordinate, which has no neighbors).
     */
   def gridCluster(df: DataFrame, x: Column, y: Column, cellMicro: Long,
-      minPts: Long, maxRounds: Int = 25): DataFrame =
-    gridCluster(df, x, y, cellMicro, minPts, maxRounds, DriverFinishEdges)
+      minPts: Long): DataFrame =
+    gridCluster(df, x, y, cellMicro, minPts, MaxRounds, DriverFinishEdges)
 
   /** [[gridCluster]] with an explicit driver budget: core cells for
     * the collect, edges for [[connectedComponents]]. A negative budget

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Iterative link-analysis over edge lists — the second graph
   * workload (after [[Clusters]]' connected components) a corpus
@@ -17,114 +18,47 @@ import org.apache.spark.sql.functions._
   * inside the rank table, so the dangling sum is a filter+agg over
   * the rank table, not a second evaluation of the join.
   *
-  * Rounds checkpoint periodically (`checkpointEvery`); the right
-  * default depends on how many times the loop state is REFERENCED
-  * per round. PageRank's rank table is consumed once per round (the
-  * `round()` helper's three reads collapse into one reused exchange),
-  * so lazy lineage stays linear and every-8 wins: a `localCheckpoint`
-  * materialization is the EXPENSIVE part of a round (the .rdd
-  * conversion path bypasses AQE: measured at sf0.1/5 rounds, fully
-  * lazy ≈ 2.1 s vs 3.8 s with per-round checkpoints), while a
-  * fully-lazy 50-round lineage blows up Catalyst planning. But loops
-  * whose state feeds TWO differently-keyed operators per round (BFS /
-  * shortest paths / k-core / label propagation) double their lazy
-  * plan every round — exchange reuse can't merge subtrees partitioned
-  * on different keys — and default to `checkpointEvery = 4` (tower
-  * depth ≤ 2^4 between cuts; measured best-of-sweep on the sf0.1
-  * fixtures: 8-round k-core 12.2 s lazy → 2.5-3 s, while 4-round
-  * label propagation keeps its fully-lazy 1 s instead of 6 s with
-  * per-round cuts). No loop checkpoints its FINAL round — the result
-  * is consumed immediately, so a last-round materialization (which
-  * the .rdd path runs WITHOUT AQE) is pure waste: measured 57 s vs
-  * 2.5 s on 8-round k-core checkpointing at round 8 vs not.
-  * `checkpointEvery <= 0` never checkpoints (plan inspection, small
-  * iteration counts).
-  *
-  * Every loop accepts an optional [[Convergence]]: piggybacked on the
-  * periodic checkpoint materializations, it counts changed state rows
-  * per span, stops early at a fixpoint, and warns LOUDLY when the
-  * fixed round count exhausts unconverged — the guard rail for sizing
-  * `rounds` on a small fixture and running 100× deeper graphs.
+  * Rounds run on [[Rounds.run]], which checkpoints every k-th round
+  * and never the last. Each loop's k is a constant below, chosen by
+  * how many times the loop state is REFERENCED per round.
   */
 object Graphs {
 
-  /** Convergence telemetry for the fixed-round iterative loops
-    * (round-6 verdict task): every loop here runs a FIXED round count
-    * with no per-round driver action — correct and cheap, but at 100×
-    * scale graph diameter grows, and a fixed unroll sized on a small
-    * fixture can silently under-iterate (k-core peeling that
-    * cascades to fixpoint by round 6 at sf0.1 will under-peel a
-    * deeper graph and say nothing). Telemetry piggybacks on the
-    * periodic `localCheckpoint` — ALREADY a materialization — reading
-    * ONE tiny keyed-diff count per checkpoint span (never per round):
-    * the number of state rows that differ from the previous
-    * checkpoint. Zero changes across a span means the deterministic
-    * synchronous update hit a fixpoint (or an exact cycle — either
-    * way, further rounds reproduce it), so stopping early is sound;
-    * when rounds exhaust with state still moving, a LOUD
-    * `NOT CONVERGED` warning fires through `log`. With telemetry on,
-    * the final round is also materialized (the closing diff would
-    * otherwise force the lazy tail to compute twice). Disabled
-    * (`None`, the default): not one extra job, not one extra
-    * checkpoint — the ClustersSpec per-round callsite assertion
-    * stays exact.
+  /** PageRank's (and PPR's) rank table is consumed once per round (the
+    * `round()` helper's three reads collapse into one reused exchange),
+    * so lazy lineage stays linear and every-8 wins: a `localCheckpoint`
+    * materialization is the EXPENSIVE part of a round (the .rdd
+    * conversion path bypasses AQE: measured at sf0.1/5 rounds, fully
+    * lazy ≈ 2.1 s vs 3.8 s with per-round checkpoints), while a
+    * fully-lazy 50-round lineage blows up Catalyst planning.
     */
-  final case class Convergence(
-      earlyStop: Boolean = true,
-      log: String => Unit = m => System.err.println(m))
+  private val RankEvery = 8
 
-  /** Exact count of state rows that differ between two loop states
-    * keyed by `key`: appeared, disappeared, or changed in any of
-    * `stateCols` (null-safe). One keyed join + count over two
-    * already-materialized states — the whole telemetry cost.
+  /** BFS, shortest paths, temporal BFS, k-core and label propagation
+    * feed their state to TWO differently-keyed operators per round, so
+    * the lazy plan doubles every round (exchange reuse can't merge
+    * subtrees partitioned on different keys): a cut every 4 rounds
+    * keeps the tower depth ≤ 2^4. Measured best-of-sweep on the sf0.1
+    * fixtures: 8-round k-core 12.2 s lazy → 2.5-3 s, while 4-round
+    * label propagation keeps its fully-lazy 1 s instead of 5-6 s with
+    * per-round cuts (the .rdd materialization costs more than the 2^4
+    * tower).
     */
-  private def changedRows(prev: DataFrame, cur: DataFrame,
-      key: String, stateCols: Seq[String]): Long = {
-    val p = prev.select(col(key) +: stateCols.map(c => col(c).as(s"__p_$c")): _*)
-    val c = cur.select(col(key) +: stateCols.map(col): _*)
-    p.join(c, Seq(key), "full_outer")
-      .filter(!stateCols.map(s => col(s) <=> col(s"__p_$s")).reduce(_ && _))
-      .count()
-  }
+  private val TwiceReadEvery = 4
 
-  /** Shared driver for the fixed-round loops: periodic checkpointing
-    * (never the final round unless telemetry needs it) + optional
-    * convergence telemetry. `step(state, i)` builds round `i`'s state
-    * from round `i-1`'s; `stateCols` are the per-`key` columns whose
-    * stability defines convergence.
+  /** `hitsExact` reads its score table about six times a round (`auth`
+    * feeds both `hubRaw` and the final join, and `normalize` reads each
+    * raw table twice), so an uncut 4-round unroll holds ~6⁴ copies of a
+    * round, and AQE's re-planning of that plan, not data, dominates. On
+    * 4 cores, `ClustersSpec`'s three random 4-round digraphs (25 nodes
+    * each) took 270 s in all at every 4 rounds, 33 s at every 3, 16 s
+    * at every 2 and 9 s at every round, with identical results: each
+    * checkpoint materializes its tower through the `.rdd` path without
+    * AQE, so a deeper tower costs more per cut. The price is an eager
+    * checkpoint per round: `q_hits` (3 rounds, sf0.1) went from 11 jobs
+    * to 37.
     */
-  private def runRounds(
-      rounds: Int, checkpointEvery: Int, conv: Option[Convergence],
-      opName: String, key: String, stateCols: Seq[String],
-      init: DataFrame)(step: (DataFrame, Int) => DataFrame): DataFrame = {
-    var cur = init
-    var lastCk: Option[(Int, DataFrame)] = None
-    var stopped = false
-    var i = 1
-    while (i <= rounds && !stopped) {
-      val next = step(cur, i)
-      val ckPeriodic = checkpointEvery > 0 && i % checkpointEvery == 0 && i < rounds
-      val ck = ckPeriodic || (conv.isDefined && i == rounds)
-      cur = if (ck) next.localCheckpoint(true) else next
-      if (ck) conv.foreach { t =>
-        val (j, prev) = lastCk.getOrElse((0, init))
-        lastCk = Some((i, cur))
-        val changed = changedRows(prev, cur, key, stateCols)
-        t.log(s"[graft] $opName round $i/$rounds: $changed state rows changed since round $j")
-        if (changed == 0L && i < rounds) {
-          t.log(s"[graft] $opName converged by round $i/$rounds" +
-            (if (t.earlyStop) " — stopping early" else ""))
-          if (t.earlyStop) stopped = true
-        }
-        if (changed > 0L && i == rounds)
-          t.log(s"[graft] WARNING: $opName NOT CONVERGED after $rounds rounds — " +
-            s"$changed state rows still changed since round $j; the fixed round " +
-            "count under-iterates this graph, increase rounds")
-      }
-      i += 1
-    }
-    cur
-  }
+  private val HitsEvery = 1
 
   /** Normalizes an edge list to `(src, dst)`, optionally deduped, and
     * returns (edges, nodes-with-degree, node count). Shared by the
@@ -140,8 +74,9 @@ object Graphs {
       .union(e.select(col("dst").as("id")))
       .distinct()
     val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("__deg"))
-    val nodesDeg = nodes.join(outDeg, Seq("id"), "left").localCheckpoint(true)
-    (e, nodesDeg, nodesDeg.count())
+    val (nodesDeg, nNodes, _) =
+      Bridge.localCheckpointWithCount(nodes.join(outDeg, Seq("id"), "left"))
+    (e, nodesDeg, nNodes)
   }
 
   /** One exact rank update round, shared by the PageRank iterations:
@@ -185,9 +120,7 @@ object Graphs {
       dampNum: Long = 85L,
       dampDen: Long = 100L,
       scale: Long = 1000000L,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 8,
-      convergence: Option[Convergence] = None): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < dampNum < dampDen, got $dampNum/$dampDen")
     require(scale > 0, s"scale must be positive, got $scale")
@@ -205,9 +138,8 @@ object Graphs {
       s"(${dampNum}L * (coalesce(__in, 0L) + " +
         s"(CASE WHEN __seed THEN __dang div ${nSeeds}L ELSE 0L END))) div ${dampDen}L" +
         s" + (CASE WHEN __seed THEN ${teleSeed}L ELSE 0L END)")
-    runRounds(iterations, checkpointEvery, convergence,
-        "personalizedPageRankExact", "id", Seq("rank"), init) { (ranks, _) =>
-      round(e, ranks, update, static = Seq("__deg", "__seed"))
+    Rounds.run("personalizedPageRankExact", iterations, RankEvery, init) { ranks =>
+      Some(round(e, ranks, update, static = Seq("__deg", "__seed")))
     }.select("id", "rank")
   }
 
@@ -291,9 +223,7 @@ object Graphs {
       dampNum: Long = 85L,
       dampDen: Long = 100L,
       scale: Long = 1000000L,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 8,
-      convergence: Option[Convergence] = None): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(dampNum > 0 && dampNum < dampDen, s"need 0 < dampNum < dampDen, got $dampNum/$dampDen")
     require(scale > 0, s"scale must be positive, got $scale")
@@ -302,9 +232,8 @@ object Graphs {
     val init = nodesDeg.select(col("id"), lit(scale).as("rank"), col("__deg"))
     val update = expr(
       s"${base}L + (${dampNum}L * (coalesce(__in, 0L) + __dang div ${nNodes}L)) div ${dampDen}L")
-    runRounds(iterations, checkpointEvery, convergence,
-        "pageRankExact", "id", Seq("rank"), init) { (ranks, _) =>
-      round(e, ranks, update)
+    Rounds.run("pageRankExact", iterations, RankEvery, init) { ranks =>
+      Some(round(e, ranks, update))
     }.select("id", "rank")
   }
 
@@ -329,19 +258,14 @@ object Graphs {
     * Scale shape: per round, ONE join labels⋈edges (hash-partitioned
     * on the node id), one (node,label) count aggregate, one struct-min
     * argmax aggregate on the node — no window over the corpus, no
-    * driver action inside the loop. `checkpointEvery` defaults to
-    * EVERY round: `labels` is referenced twice per round (contribs
-    * join + carry-forward left join), so the lazy plan doubles each
-    * round — `checkpointEvery` defaults to 4, which keeps the common
-    * 4-round call fully lazy (measured ~1 s vs 5-6 s with per-round
-    * cuts: the .rdd materialization path costs more than the 2^4
-    * tower); see [[bfsDistances]].
+    * driver action inside the loop. `labels` is referenced twice per
+    * round (contribs join + carry-forward left join), so the lazy plan
+    * doubles each round and a checkpoint cuts it every 4 rounds, which
+    * keeps the common 4-round call fully lazy (`TwiceReadEvery`).
     */
   def labelPropagation(
       edges: DataFrame,
       rounds: Int,
-      checkpointEvery: Int = 4,
-      convergence: Option[Convergence] = None,
       assumeSymDeduped: Boolean = false): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val cols = edges.columns
@@ -359,8 +283,7 @@ object Graphs {
         .distinct().localCheckpoint(true)
     val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "labelPropagation", "id", Seq("lbl"), init) { (labels, _) =>
+    Rounds.run("labelPropagation", rounds, TwiceReadEvery, init) { labels =>
       val contribs = sym.join(labels.select(col("id").as("src"), col("lbl")), Seq("src"))
         .groupBy(col("dst").as("id"), col("lbl")).agg(count(lit(1)).as("__c"))
       // argmax(count) with min-label tie-break as ONE struct-min agg —
@@ -368,8 +291,8 @@ object Graphs {
       val best = contribs.groupBy("id")
         .agg(min(struct((-col("__c")).as("nc"), col("lbl").as("l"))).as("__b"))
         .select(col("id"), col("__b.l").as("__newl"))
-      labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__newl"), col("lbl")).as("lbl"))
+      Some(labels.join(best, Seq("id"), "left")
+        .select(col("id"), coalesce(col("__newl"), col("lbl")).as("lbl")))
     }.select(col("id"), col("lbl").as("community"))
   }
 
@@ -392,28 +315,25 @@ object Graphs {
     * action inside the loop. Unlike [[pageRankExact]]'s rank table
     * (referenced once per round, so lazy lineage stays linear and
     * every-8 wins), `dist` is referenced TWICE per round (the relax
-    * join and the union), so the lazy plan doubles each round —
-    * `checkpointEvery` defaults to 4 (see the object doc's sweep).
+    * join and the union), so the lazy plan doubles each round and a
+    * checkpoint cuts it every 4 rounds (`TwiceReadEvery`).
     */
   def bfsDistances(
       edges: DataFrame,
       seeds: DataFrame,
       rounds: Int,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 4,
-      convergence: Option[Convergence] = None): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).as("src"), col(cols(1)).as("dst"))
     val e = (if (dedupEdges) e0.distinct() else e0).localCheckpoint(true)
     val init = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .select(col("id"), lit(0L).as("dist"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "bfsDistances", "id", Seq("dist"), init) { (dist, _) =>
+    Rounds.run("bfsDistances", rounds, TwiceReadEvery, init) { dist =>
       val next = e.join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
         .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-      dist.unionByName(next)
-        .groupBy("id").agg(min("dist").as("dist"))
+      Some(dist.unionByName(next)
+        .groupBy("id").agg(min("dist").as("dist")))
     }
   }
 
@@ -435,17 +355,15 @@ object Graphs {
     * Scale shape: per round ONE dist⋈edges hash join + one min agg,
     * both keyed on the node id; no driver action in the loop.
     * `dist` is referenced twice per round (relax join + union), so
-    * the lazy plan doubles per round — `checkpointEvery` defaults to
-    * 4; see [[bfsDistances]]. `rounds` is the caller's hop
-    * radius — relaxation is monotone and idempotent past the fixpoint,
-    * so extra rounds are no-ops (the [[kCore]] fixed-unroll argument).
+    * a checkpoint cuts the plan every 4 rounds; see [[bfsDistances]].
+    * `rounds` is the caller's hop radius — relaxation is monotone and
+    * idempotent past the fixpoint, so extra rounds are no-ops (the
+    * [[kCore]] fixed-unroll argument).
     */
   def shortestPaths(
       edges: DataFrame,
       seeds: DataFrame,
-      rounds: Int,
-      checkpointEvery: Int = 4,
-      convergence: Option[Convergence] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val cols = edges.columns
     val e = edges
@@ -457,12 +375,11 @@ object Graphs {
       .localCheckpoint(true)
     val init = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .select(col("id"), lit(0L).as("dist"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "shortestPaths", "id", Seq("dist"), init) { (dist, _) =>
+    Rounds.run("shortestPaths", rounds, TwiceReadEvery, init) { dist =>
       val relaxed = e.join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
+      Some(dist.unionByName(relaxed)
+        .groupBy("id").agg(min("dist").as("dist")))
     }
   }
 
@@ -503,17 +420,15 @@ object Graphs {
     *
     * Shape: per round one arrival⋈edges hash join (filtered by the
     * time guard BEFORE the aggregate) + one min agg, keyed on the node
-    * id. `arrival` feeds the relax join and the union —
-    * `checkpointEvery` defaults to 4 (see [[bfsDistances]]).
+    * id. `arrival` feeds the relax join and the union, so a
+    * checkpoint cuts the plan every 4 rounds (see [[bfsDistances]]).
     */
   def temporalBfs(
       edges: DataFrame,
       seeds: DataFrame,
       rounds: Int,
       startTime: Long = Long.MinValue,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 4,
-      convergence: Option[Convergence] = None): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).as("src"), col(cols(1)).as("dst"),
@@ -524,14 +439,13 @@ object Graphs {
     val e = (if (dedupEdges) e0.distinct() else e0).localCheckpoint(true)
     val init = seeds.select(col(seeds.columns.head).as("id")).distinct()
       .select(col("id"), lit(startTime).as("arrival"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "temporalBfs", "id", Seq("arrival"), init) { (arrival, _) =>
+    Rounds.run("temporalBfs", rounds, TwiceReadEvery, init) { arrival =>
       val relaxed = e
         .join(arrival.select(col("id").as("src"), col("arrival")), Seq("src"))
         .filter(col("t") >= col("arrival"))
         .select(col("dst").as("id"), col("t").as("arrival"))
-      arrival.unionByName(relaxed)
-        .groupBy("id").agg(min("arrival").as("arrival"))
+      Some(arrival.unionByName(relaxed)
+        .groupBy("id").agg(min("arrival").as("arrival")))
     }
   }
 
@@ -570,14 +484,11 @@ object Graphs {
     * alive set, both keyed on the node id) + one count agg; the alive
     * set only ever shrinks, so round cost is non-increasing.
     * `alive` is referenced TWICE per round (src- and dst-side joins),
-    * so the lazy plan doubles each round — `checkpointEvery` defaults
-    * to 4: measured at sf0.1/8 rounds, fully lazy 12.2 s vs 2.5-3 s
-    * (same rows); see [[bfsDistances]] and the object doc's sweep.
+    * so a checkpoint cuts the plan every 4 rounds (`TwiceReadEvery`:
+    * at sf0.1/8 rounds, fully lazy 12.2 s vs 2.5-3 s, same rows).
     */
   def kCore(
-      edges: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int = 4,
-      convergence: Option[Convergence] = None): DataFrame = {
+      edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val cols = edges.columns
@@ -586,17 +497,15 @@ object Graphs {
       .filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(true)
     // loop state is (id, deg) of the current survivor set — deg rides
-    // along so the final state IS the result and a stable (id, deg)
-    // span is exactly the peeling fixpoint the telemetry watches
+    // along so the final state IS the result
     val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"), lit(null).cast("long").as("deg"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "kCore", "id", Seq("deg"), init) { (alive, _) =>
-      sym
+    Rounds.run("kCore", rounds, TwiceReadEvery, init) { alive =>
+      Some(sym
         .join(alive.select(col("id").as("src")), Seq("src"))
         .join(alive.select(col("id").as("dst")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
+        .filter(col("deg") >= k))
     }
   }
 
@@ -655,36 +564,23 @@ object Graphs {
     * Scale shape: per round two hash joins (edges ⋈ scores, keyed on
     * the node id) + two keyed sum aggregates + two 1-row totals folded
     * in via broadcast cross join. No driver action inside the loop; the
-    * node count is the one pre-loop action (shared with
-    * [[pageRankExact]]'s `prepare`). `checkpointEvery` defaults to 1,
-    * not the object doc's 4: a round reads the score table about six
-    * times (`auth` feeds both `hubRaw` and the final join, and
-    * `normalize` reads each raw table twice), so an uncut 4-round
-    * unroll holds ~6⁴ copies of a round, and AQE's re-planning of that
-    * plan, not data, dominates. On 4 cores, `ClustersSpec`'s three
-    * random 4-round digraphs (25 nodes each) took 270 s in all at
-    * every 4 rounds, 33 s at every 3, 16 s at every 2 and 9 s at every
-    * round, with identical results: each checkpoint materializes its
-    * tower through the `.rdd` path without AQE, so a deeper tower costs
-    * more per cut. The price is an eager checkpoint per round: `q_hits`
-    * (3 rounds, sf0.1) went from 11 jobs to 37.
+    * node count comes from the job that checkpoints the node table.
+    * A round reads the score table about six times, so every round but
+    * the last is checkpointed (`HitsEvery`).
     */
   def hitsExact(
       edges: DataFrame,
       rounds: Int,
       scale: Long = 1000000L,
-      dedupEdges: Boolean = true,
-      checkpointEvery: Int = 1,
-      convergence: Option[Convergence] = None): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     require(scale > 0, s"scale must be positive, got $scale")
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).as("src"), col(cols(1)).as("dst"))
     val e = (if (dedupEdges) e0.distinct() else e0).localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
-    val target = nodes.count() * scale // Σ after each normalization
+    val (nodes, nNodes, _) = Bridge.localCheckpointWithCount(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
+    val target = nNodes * scale // Σ after each normalization
     val dec = "decimal(38,0)"
     def normalize(raw: DataFrame, outName: String): DataFrame = {
       // __raw is decimal(38,0); the total must be too — a LongType sum
@@ -696,8 +592,7 @@ object Graphs {
           .as(outName))
     }
     val init = nodes.select(col("id"), lit(scale).as("auth"), lit(scale).as("hub"))
-    runRounds(rounds, checkpointEvery, convergence,
-        "hitsExact", "id", Seq("auth", "hub"), init) { (scores, _) =>
+    Rounds.run("hitsExact", rounds, HitsEvery, init) { scores =>
       val authRaw = nodes
         .join(e.join(scores.select(col("id").as("src"), col("hub")), Seq("src"))
           .groupBy(col("dst").as("id")).agg(sum(col("hub").cast(dec)).as("__s")), Seq("id"), "left")
@@ -708,7 +603,7 @@ object Graphs {
           .groupBy(col("src").as("id")).agg(sum(col("auth").cast(dec)).as("__s")), Seq("id"), "left")
         .select(col("id"), coalesce(col("__s"), lit(0L).cast(dec)).as("__raw"))
       val hub = normalize(hubRaw, "hub")
-      auth.join(hub, Seq("id"))
+      Some(auth.join(hub, Seq("id")))
     }.select("id", "auth", "hub")
   }
 

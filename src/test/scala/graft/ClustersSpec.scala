@@ -278,25 +278,39 @@ class ClustersSpec extends SparkSpec {
       (6L, 6L, true)))
   }
 
-  test("pageRankExact: matches an independent scalar integer iteration") {
-    // A toy graph with a dangling node (5); expected values from a
-    // driver-side simulation of the documented update rule (all
-    // divisions integral floor-div on non-negative operands — bit-exact,
-    // no tolerance needed).
-    val edgeList = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L), (3L, 5L))
-    val (scale, dampNum, dampDen, iters) = (1000000L, 85L, 100L, 5)
-    val out = edgeList.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+  /** Driver-side fold of the documented (personalized) PageRank update
+    * rule over distinct edges, at scale 1e6 and damping 85/100 (all
+    * divisions integral floor-div on non-negative operands — bit-exact,
+    * no tolerance needed). No seeds means plain PageRank.
+    */
+  private def simulateRanks(edgeList: Seq[(Long, Long)], iters: Int,
+      seeds: Seq[Long] = Nil): Map[Long, Long] = {
+    val (scale, dampNum, dampDen) = (1000000L, 85L, 100L)
+    val out = edgeList.groupBy(_._1).view.mapValues(_.size).toMap
     val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).distinct
-    val n = nodes.size.toLong
+    val (n, k) = (nodes.size.toLong, seeds.size.toLong)
     val base = ((dampDen - dampNum) * scale) / dampDen
+    val teleSeed = if (k == 0) 0L else (((dampDen - dampNum) * n * scale) / k) / dampDen
     var rank = nodes.map(_ -> scale).toMap
     for (_ <- 1 to iters) {
       val dang = nodes.filterNot(out.contains).map(rank).sum
       val inbound = edgeList.groupBy(_._2).view.mapValues(
-        _.map { case (s, _) => rank(s) / out(s).size }.sum).toMap
-      rank = nodes.map(nd =>
-        nd -> (base + (dampNum * (inbound.getOrElse(nd, 0L) + dang / n)) / dampDen)).toMap
+        _.map { case (s, _) => rank(s) / out(s) }.sum).toMap
+      rank = nodes.map { nd =>
+        val in = inbound.getOrElse(nd, 0L)
+        nd -> (if (k == 0) base + (dampNum * (in + dang / n)) / dampDen
+          else if (seeds.contains(nd)) (dampNum * (in + dang / k)) / dampDen + teleSeed
+          else (dampNum * in) / dampDen)
+      }.toMap
     }
+    rank
+  }
+
+  test("pageRankExact: matches an independent scalar integer iteration") {
+    // A toy graph with a dangling node (5)
+    val edgeList = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L), (3L, 5L))
+    val iters = 5
+    val rank = simulateRanks(edgeList, iters)
     val got = graft.ops.Graphs.pageRankExact(edgeList.toDF("src", "dst"), iterations = iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == rank)
@@ -313,52 +327,24 @@ class ClustersSpec extends SparkSpec {
     // integer iteration must equal the driver-side fold EXACTLY (no
     // tolerance) — any divergence in div order, dangling handling, or
     // dedup shows up as a hard mismatch.
-    val (scale, dampNum, dampDen, iters) = (1000000L, 85L, 100L, 4)
+    val iters = 4
     for (seed <- Seq(3, 7, 42)) {
       val rnd = new scala.util.Random(seed)
       val edgeList = (for (_ <- 1 to 90) yield {
         val a = rnd.nextInt(30).toLong; val b = rnd.nextInt(30).toLong
         if (a == b) None else Some((a, b))
       }).flatten.distinct
-      val out = edgeList.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).distinct
-      val n = nodes.size.toLong
-      val base = ((dampDen - dampNum) * scale) / dampDen
-      var rank = nodes.map(_ -> scale).toMap
-      for (_ <- 1 to iters) {
-        val dang = nodes.filterNot(out.contains).map(rank).sum
-        val inbound = edgeList.groupBy(_._2).view.mapValues(
-          _.map { case (s, _) => rank(s) / out(s).size }.sum).toMap
-        rank = nodes.map(nd =>
-          nd -> (base + (dampNum * (inbound.getOrElse(nd, 0L) + dang / n)) / dampDen)).toMap
-      }
       val got = graft.ops.Graphs.pageRankExact(edgeList.toDF("src", "dst"), iterations = iters)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == rank, s"seed $seed diverged")
+      assert(got == simulateRanks(edgeList, iters), s"seed $seed diverged")
     }
   }
 
   test("personalizedPageRankExact: matches a scalar simulation; mass flows to seeds") {
     val edgeList = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L), (3L, 5L))
     val seeds = Seq(1L, 4L)
-    val (scale, dampNum, dampDen, iters) = (1000000L, 85L, 100L, 5)
-    val out = edgeList.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).distinct
-    val n = nodes.size.toLong
-    val k = seeds.size.toLong
-    val teleSeed = (((dampDen - dampNum) * n * scale) / k) / dampDen
-    var rank = nodes.map(_ -> scale).toMap
-    for (_ <- 1 to iters) {
-      val dang = nodes.filterNot(out.contains).map(rank).sum
-      val inbound = edgeList.groupBy(_._2).view.mapValues(
-        _.map { case (s, _) => rank(s) / out(s).size }.sum).toMap
-      rank = nodes.map { nd =>
-        val isSeed = seeds.contains(nd)
-        nd -> ((dampNum * (inbound.getOrElse(nd, 0L) +
-          (if (isSeed) dang / k else 0L))) / dampDen +
-          (if (isSeed) teleSeed else 0L))
-      }.toMap
-    }
+    val iters = 5
+    val rank = simulateRanks(edgeList, iters, seeds)
     val got = graft.ops.Graphs.personalizedPageRankExact(
         edgeList.toDF("src", "dst"), seeds.toDF("id"), iterations = iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -419,7 +405,7 @@ class ClustersSpec extends SparkSpec {
     val badSites = (sites2 ++ sites4).filter(s =>
       (s.startsWith("head") || s.startsWith("collect")) && s.contains("Graphs"))
     assert(badSites.isEmpty, s"per-round driver action reappeared: $badSites")
-    // With periodic checkpointing (default every 5) these 2- and
+    // With periodic checkpointing (every 8 rounds) these 2- and
     // 4-iteration runs are fully lazy: the marginal cost of 2 extra
     // rounds is their AQE stage-jobs only (measured ~4/round; the
     // pre-fix per-round-action shape measured 12+). Bound 10 keeps
@@ -479,6 +465,11 @@ class ClustersSpec extends SparkSpec {
     assert(rev == got)
     // k above the max degree empties the graph
     assert(graft.ops.Graphs.kCore(edges, k = 7, rounds = 5).count() == 0L)
+    // the 12-node path's 2-core is empty, but peeling takes one end
+    // node per round: 2 rounds leave a remnant, 16 reach the fixpoint
+    val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    assert(graft.ops.Graphs.kCore(path, k = 2, rounds = 2).count() > 0L)
+    assert(graft.ops.Graphs.kCore(path, k = 2, rounds = 16).count() == 0L)
   }
 
   /** Driver-side fold of hitsExact's documented update rule in BigInt
@@ -549,69 +540,105 @@ class ClustersSpec extends SparkSpec {
     assert(got == exp)
   }
 
-  test("convergence telemetry: early-stop on a converged graph, identical result") {
-    import graft.ops.Graphs
-    // star graph: diameter 1 from the center — BFS converges at round 1,
-    // a 10-round fixed unroll wastes 9. Telemetry (checkpoint every 2)
-    // sees a zero-change span at round 4 and stops there.
-    val star = (2L to 30L).map(c => (1L, c)).toDF("src", "dst")
-    val seeds = Seq(1L).toDF("id")
-    val logs = scala.collection.mutable.ArrayBuffer[String]()
-    val conv = Graphs.Convergence(earlyStop = true, log = logs += _)
-    val got = Graphs.bfsDistances(star, seeds, rounds = 10,
-        checkpointEvery = 2, convergence = Some(conv))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = Graphs.bfsDistances(star, seeds, rounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want, "early-stopped result diverged from the full unroll")
-    assert(logs.exists(_.contains("converged by round")), s"no convergence line in: $logs")
-    assert(logs.exists(_.contains("stopping early")), s"no early stop in: $logs")
-    assert(!logs.exists(_.contains("NOT CONVERGED")), s"false warning in: $logs")
-    // rounds 6..10 never ran: no change line mentions a round past 4
-    assert(!logs.exists(_.contains("round 6/")), s"loop kept running: $logs")
+  /** Driver-side fold of the fixed-round relaxations (BFS, shortest
+    * paths, temporal BFS) from seed node 1 at 0: each round, every
+    * reached `u` offers `v` the value `via(dist(u), w)` along edge
+    * `(u, v, w)`; the min wins.
+    */
+  private def simulateRelax(edges: Seq[(Long, Long, Long)], rounds: Int)(
+      via: (Long, Long) => Option[Long]): Map[Long, Long] =
+    (1 to rounds).foldLeft(Map(1L -> 0L)) { (d, _) =>
+      val offers = for ((u, v, w) <- edges; du <- d.get(u); dv <- via(du, w)) yield v -> dv
+      (d.toSeq ++ offers).groupMapReduce(_._1)(_._2)(math.min)
+    }
+
+  /** Driver-side synchronous label propagation: the most frequent
+    * neighbor label wins, ties to the smallest.
+    */
+  private def simulateLpa(edgeList: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val adj = (edgeList ++ edgeList.map(_.swap)).distinct.groupMap(_._1)(_._2)
+    (1 to rounds).foldLeft(adj.keys.map(n => n -> n).toMap) { (lbl, _) =>
+      adj.map { case (n, ns) =>
+        n -> ns.groupBy(lbl).iterator.map { case (l, xs) => (-xs.size, l) }.min._2 }
+    }
   }
 
-  test("convergence telemetry: loud warning on an under-iterated deep path") {
-    import graft.ops.Graphs
-    // path 1→2→…→12 has diameter 11; 3 rounds reach only node 4 — the
-    // silent under-iteration the round-6 verdict flagged. With
-    // telemetry the final span still moves and the warning fires.
-    val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
-    val seeds = Seq(1L).toDF("id")
-    val logs = scala.collection.mutable.ArrayBuffer[String]()
-    val conv = Graphs.Convergence(earlyStop = true, log = logs += _)
-    val got = Graphs.bfsDistances(path, seeds, rounds = 3,
-        checkpointEvery = 2, convergence = Some(conv))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 4L).map(i => i -> (i - 1)).toMap) // truncated reach, as documented
-    assert(logs.exists(_.contains("NOT CONVERGED")), s"missing warning in: $logs")
-    // same shape through kCore: a 12-path's 2-core is empty but peeling
-    // cascades one node per round — 2 rounds under-peel and must warn
-    val logs2 = scala.collection.mutable.ArrayBuffer[String]()
-    val core = Graphs.kCore(path, k = 2, rounds = 2, checkpointEvery = 1,
-      convergence = Some(Graphs.Convergence(log = logs2 += _)))
-    assert(core.count() > 0) // under-peeled remnant — exactly the hazard
-    assert(logs2.exists(_.contains("NOT CONVERGED")), s"missing kCore warning in: $logs2")
-    // and with enough rounds the same telemetry reports convergence
-    val logs3 = scala.collection.mutable.ArrayBuffer[String]()
-    val core2 = Graphs.kCore(path, k = 2, rounds = 16, checkpointEvery = 2,
-      convergence = Some(Graphs.Convergence(log = logs3 += _)))
-    assert(core2.count() == 0)
-    assert(logs3.exists(_.contains("converged by round")), s"no early stop in: $logs3")
-    assert(!logs3.exists(_.contains("NOT CONVERGED")), s"false warning in: $logs3")
+  /** Driver-side BPE training: `(pair_a, pair_b, pair_count)` per merge. */
+  private def simulateBpe(words: Seq[(String, Long)], merges: Int): Seq[(String, String, Long)] = {
+    def merge(s: List[String], a: String, b: String): List[String] = s match {
+      case x :: y :: rest if x == a && y == b => (a + b) :: merge(rest, a, b)
+      case x :: rest => x :: merge(rest, a, b)
+      case Nil => Nil
+    }
+    var segs = words.map { case (w, f) => (w.map(_.toString).toList, f) }
+    (1 to merges).flatMap { _ =>
+      val counts = segs.flatMap { case (s, f) => s.zip(s.tail).map(_ -> f) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      counts.minByOption { case ((a, b), c) => (-c, a, b) }.map { case ((a, b), c) =>
+        segs = segs.map { case (s, f) => (merge(s, a, b), f) }
+        (a, b, c)
+      }
+    }
   }
 
-  test("convergence telemetry disabled: bit-identical ranks, no telemetry jobs") {
-    import graft.ops.Graphs
-    val edges = (1L to 120L).map(i => (i % 17, i % 11)).toDF("src", "dst")
-    val off = Graphs.pageRankExact(edges, iterations = 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val logs = scala.collection.mutable.ArrayBuffer[String]()
-    val on = Graphs.pageRankExact(edges, iterations = 6,
-        convergence = Some(Graphs.Convergence(earlyStop = false, log = logs += _)))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(on == off, "telemetry changed the answer")
-    assert(logs.nonEmpty)
+  test("fixed-round loops checkpoint on their cadence, never the last round") {
+    import graft.ops.{Bpe, Graphs}
+    def longs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rankEdges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L), (3L, 5L))
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val coreEdges = k4 ++ Seq((4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))
+    val hubs = Seq((1L, 10L), (1L, 11L), (2L, 11L), (2L, 12L))
+    // a 12-node path with weights and times: BFS, shortest paths and
+    // temporal BFS still move at round 8
+    val path = (1L to 11L).map(i => (i, i + 1, i % 3 + 1))
+    val hops = path.map(e => (e._1, e._2))
+    val timed = (1L to 11L).map(i => (i, i + 1, i / 2))
+    val words = Seq("lower" -> 5L, "lowest" -> 2L, "newer" -> 6L, "wider" -> 3L,
+      "banana" -> 4L, "bandana" -> 3L, "abracadabra" -> 2L)
+    var got = Map.empty[String, Any]
+    val (_, sites) = countJobs {
+      got = Map(
+        "pageRankExact" -> longs(Graphs.pageRankExact(rankEdges.toDF("src", "dst"), iterations = 9)),
+        "personalizedPageRankExact" -> longs(Graphs.personalizedPageRankExact(
+          rankEdges.toDF("src", "dst"), Seq(1L, 4L).toDF("id"), iterations = 9)),
+        "kCore" -> longs(Graphs.kCore(coreEdges.toDF("src", "dst"), k = 3, rounds = 8)),
+        "labelPropagation" -> longs(Graphs.labelPropagation(hops.toDF("src", "dst"), rounds = 8)),
+        "bfsDistances" -> longs(Graphs.bfsDistances(hops.toDF("src", "dst"),
+          Seq(1L).toDF("id"), rounds = 8)),
+        "shortestPaths" -> longs(Graphs.shortestPaths(path.toDF("src", "dst", "w"),
+          Seq(1L).toDF("id"), rounds = 8)),
+        "temporalBfs" -> longs(Graphs.temporalBfs(timed.toDF("src", "dst", "t"),
+          Seq(1L).toDF("id"), rounds = 8, startTime = 0L)),
+        "hitsExact" -> Graphs.hitsExact(hubs.toDF("src", "dst"), rounds = 3).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap,
+        "bpeTrain" -> Bpe.bpeTrain(words.toDF("word", "freq"), merges = 12)._1
+          .orderBy("merge_no").collect()
+          .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq)
+    }
+    // Rounds.run labels each checkpoint's jobs "<loop> round i/n"
+    val Site = """(\w+) round (\d+)/\d+""".r
+    val seen = sites.collect { case Site(loop, i) => loop -> i.toInt }
+      .distinct.groupMap(_._1)(_._2).view.mapValues(_.sorted).toMap
+    assert(seen == Map(
+      "pageRankExact" -> Seq(8), "personalizedPageRankExact" -> Seq(8),
+      "kCore" -> Seq(4), "labelPropagation" -> Seq(4), "bfsDistances" -> Seq(4),
+      "shortestPaths" -> Seq(4), "temporalBfs" -> Seq(4),
+      "hitsExact" -> Seq(1, 2), "bpeTrain" -> Seq(8)))
+    val last = Map("pageRankExact" -> 9, "personalizedPageRankExact" -> 9, "hitsExact" -> 3,
+      "bpeTrain" -> 12).withDefaultValue(8)
+    assert(seen.forall { case (loop, rounds) => !rounds.contains(last(loop)) })
+    assert(got == Map(
+      "pageRankExact" -> simulateRanks(rankEdges, 9),
+      "personalizedPageRankExact" -> simulateRanks(rankEdges, 9, seeds = Seq(1L, 4L)),
+      "kCore" -> Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L),
+      "labelPropagation" -> simulateLpa(hops, 8),
+      "bfsDistances" -> simulateRelax(path, 8)((d, _) => Some(d + 1)),
+      "shortestPaths" -> simulateRelax(path, 8)((d, w) => Some(d + w)),
+      "temporalBfs" -> simulateRelax(timed, 8)((d, t) => Option.when(t >= d)(t)),
+      "hitsExact" -> simulateHits(hubs, rounds = 3),
+      "bpeTrain" -> simulateBpe(words, 12)))
+    assert(simulateBpe(words, 12).size == 12, "the corpus must not run out of pairs")
   }
 
   test("linkPredict: path graph predicts the closing pair, hub cap mutes hubs") {

@@ -128,6 +128,11 @@ class UrlsProfilingSpec extends SparkSpec {
     // node 6 is 1 hop from seed 5 (not 5 hops from seed 1); node 4 is
     // beyond 2 rounds of seed 1 and absent.
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 5L -> 0L, 6L -> 1L))
+    // 3 rounds down the 12-node path 1→2→…→12 reach exactly nodes 1–4
+    val path = (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst")
+    val reach = Graphs.bfsDistances(path, Seq(1L).toDF("id"), rounds = 3)
+      .as[(Long, Long)].collect().toMap
+    assert(reach == (1L to 4L).map(i => i -> (i - 1)).toMap)
   }
 
   test("bfsDistances: directed — no backward reach without symmetrized edges") {
